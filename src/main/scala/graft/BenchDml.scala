@@ -239,7 +239,7 @@ object BenchDml {
       name -> timed.flatten.filter(_.name == name).map(_.sec) }.toMap
 
     // SPARK_GRAFT_DML_ORACLE=false skips the DuckDB side — for A/B
-    // harnesses (tools/Exp18) that only compare Spark variants
+    // harnesses that only compare Spark variants
     val oracle =
       if (!sys.env.getOrElse("SPARK_GRAFT_DML_ORACLE", "true").toBoolean) Map.empty[String, Double]
       else oracleDml(sfDir, cpus,

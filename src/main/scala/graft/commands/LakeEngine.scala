@@ -154,10 +154,7 @@ final class LakeEngine(
     * each touched file. Correctness is untouched: the prefilter is
     * implied by "cond is not true", and the exact filter still runs. */
   def delete(table: LakeTable, conditionSql: String): CommitMetrics = {
-    val keepHint =
-      if (spark.conf.get("graft.dml.keepPrefilter", "true").toBoolean)
-        Pred.toColumn(Pred.notTrue(PredSql.compile(spark, conditionSql, table.schema)))
-      else lit(true)
+    val keepHint = Pred.toColumn(Pred.notTrue(PredSql.compile(spark, conditionSql, table.schema)))
     rewriteTouched(table, conditionSql) { (rows, cond) =>
       rows.filter(keepHint).filter(!coalesce(cond, lit(false)))
         .select(table.schema.fieldNames.map(col).toSeq: _*)
@@ -200,15 +197,6 @@ final class LakeEngine(
     new TableScan(spark, table, explicitFiles = Some(files)).toDF()
   }
 
-  /** File-level change-data-capture between two snapshots: rows of files
-    * REMOVED in the range surface as `_change_type = 'delete'`, rows of
-    * files ADDED as `'insert'` — valid across ANY snapshot chain,
-    * including the overwrite/delete commits [[readIncremental]] must
-    * refuse. Copy-on-write granularity caveat (same as Iceberg's
-    * changelog scan without row lineage): a rewritten file re-emits its
-    * unchanged rows as a delete+insert pair; consumers reconciling net
-    * state apply deletes before inserts. Metadata cost is O(changed
-    * files) — shared manifest chunks are never read. */
   /** File-level CDC between two snapshots, rows tagged `_change_type`
     * insert/delete and attributed by `_commit_snapshot_id`. Fast path:
     * one endpoint manifest net-diff (touches only the non-shared chunks
@@ -312,18 +300,18 @@ final class LakeEngine(
       operationTypeColumn = Some(operationTypeColumn),
       deleteOperationValue = deleteOperationValue))
 
-  /** Shared two-phase rewrite: prune candidates -> probe actually-touched
-    * files -> rebuild only those. */
-  /** @param modifiedCols columns the rebuild may change — when none of
+  /** Shared copy-on-write rewrite: prune candidates by stats -> classify
+    * by row-group footers -> row-probe the still-ambiguous files ->
+    * rebuild only the touched files -> commit.
+    *
+    * @param modifiedCols columns the rebuild may change — when none of
     *   them is a sort column (DELETE changes none; most UPDATEs touch
     *   value columns only) and the table is unpartitioned, the rewrite
-    *   takes the PASSTHROUGH path: scan the touched files with exactly
-    *   one split per file (an isolated `newSession` pins
-    *   maxPartitionBytes/openCostInBytes to the largest touched file,
-    *   so Spark's bin-packer can neither split a file nor pack two
-    *   together), rebuild, and write with the partitioning preserved —
-    *   zero exchange, zero sort, each task rewriting one file whose
-    *   rows are already in the file's own sort order. This is the
+    *   takes the PASSTHROUGH path: scan the touched files in a
+    *   [[LakeEngine.perFileSession]] (no split ever mixes two files),
+    *   rebuild, and write with the partitioning preserved — zero
+    *   exchange, zero sort, each task rewriting a slice of one file
+    *   whose rows are already in the file's own sort order. This is the
     *   reference's per-file COPY flow (commands/Update.java:129-238
     *   rewrites file-by-file) and the shape that scales: a CoW DELETE
     *   touching K files is K independent tasks on any cluster size.
@@ -332,6 +320,7 @@ final class LakeEngine(
   private def rewriteTouched(table: LakeTable, conditionSql: String,
       modifiedCols: Set[String] = Set.empty)(
       rebuild: (DataFrame, Column) => DataFrame): CommitMetrics = {
+    import LakeEngine.timed
     val fromSnapshot = table.metadata.currentSnapshotId
     val pred = PredSql.compile(spark, conditionSql, table.schema)
     val cond = expr(conditionSql)
@@ -350,7 +339,7 @@ final class LakeEngine(
     // a range DML on a sort-clustered table that is 2 files however
     // many the range covers.
     val evaluator = new StatsEvaluator(table.schema, table.metadata.specsById)
-    val (sureTouched0, ambiguous0) =
+    val (sureByFile, ambiguousByFile) =
       candidates.partition(f => evaluator.provablyAll(pred, f))
     // Row-group-granular probe (round 16, after Exp26-r15 put the row
     // probe at 0.52 s of the 0.96 s sf10 delete wall vs a 0.178 s bare
@@ -369,273 +358,25 @@ final class LakeEngine(
     // (Opaque subtrees harden to false in provablyAll / true in
     // mayContain), and group stats go through the same canonical codec
     // as the write-time harvest.
-    val (sureTouched, ambiguous) =
-      if (ambiguous0.isEmpty ||
-          !spark.conf.get("graft.dml.rowGroupProbe", "true").toBoolean)
-        (sureTouched0, ambiguous0)
-      else {
-        val tRg0 = System.nanoTime()
-        val groupsByPath = LakeWriter.rowGroupStats(spark, table, ambiguous0)
-        if (sys.env.contains("GRAFT_PROBE_TIMING"))
-          System.err.println(f"[probe] rowGroupStats ${ambiguous0.size} files " +
-            f"${(System.nanoTime() - tRg0) / 1e9}%.3f s")
-        val extraSure = scala.collection.mutable.ArrayBuffer.empty[FileEntry]
-        val stillAmbiguous = scala.collection.mutable.ArrayBuffer.empty[FileEntry]
-        ambiguous0.foreach { f =>
-          groupsByPath.get(f.path).flatten match {
-            case None => stillAmbiguous += f // footer unreadable: row-probe
-            case Some(groups) =>
-              val may = groups.filter(g => evaluator.mayContain(pred, g))
-              if (sys.env.contains("GRAFT_PROBE_TIMING"))
-                System.err.println(s"[probe] rg-classify ${f.path.split('/').last}: " +
-                  s"groups=${groups.size} may=${may.size} " +
-                  s"sureAll=${may.count(g => evaluator.provablyAll(pred, g))} " +
-                  s"sampleStats=${groups.headOption.map(_.stats.take(2))}")
-              if (may.isEmpty) () // provably untouched, drop entirely
-              else if (may.exists(g => evaluator.provablyAll(pred, g)))
-                extraSure += f
-              else stillAmbiguous += f
-          }
-        }
-        (sureTouched0 ++ extraSure, stillAmbiguous.toSeq)
+    val groupsByPath = timed("dml.rowGroupStats")(
+      LakeWriter.rowGroupStats(spark, table, ambiguousByFile))
+    val (sureByGroup, ambiguous) = ambiguousByFile.flatMap { f =>
+      groupsByPath.get(f.path).flatten match {
+        case None => Some((f, false)) // footer unreadable: row-probe
+        case Some(groups) =>
+          val may = groups.filter(g => evaluator.mayContain(pred, g))
+          if (may.isEmpty) None // provably untouched: dropped
+          else Some((f, may.exists(g => evaluator.provablyAll(pred, g))))
       }
-    // redundant pushable prefilter ahead of the exact 3VL match: the
-    // coalesce wrapper alone reaches parquet as NO filter, so without
-    // this the probe decodes every row of every candidate file just to
-    // list touched ones; with it, parquet's row-group stats and page
-    // indexes skip the non-matching ranges (Pred.mayTrue is implied by
-    // the exact condition, so the touched set is unchanged)
-    // the probe needs FILE identity only — scan without the metadata
-    // columns (no row_index generation) and read the file via
-    // input_file_name(), normalizing the file:/ URI form on the DRIVER
-    // over the <= #files collected strings instead of the old
-    // per-surviving-row regexp_replace (Exp26: the file-column assembly
-    // was ~0.2 s of the 0.71 s sf10 probe)
-    /** One rewrite execution over `touchedEntries`; when `observeAmb` is
-      * non-empty, per-file matched-row counts for those files are
-      * collected DURING the rewrite job via `Dataset.observe` (a
-      * CollectMetrics node — accumulator-backed, zero extra pass; task
-      * retries can only inflate a count, and the decision below is
-      * count>0, so retry inflation is harmless). Returns the staged
-      * files plus the observed counts (None = metrics never arrived). */
-    def execRewrite(sureEntries: Seq[FileEntry],
-        observeAmb: Seq[FileEntry]): (Seq[FileEntry], Option[Seq[Long]]) = {
-      val touchedEntries = sureEntries ++ observeAmb
-      val passthrough = table.metadata.partitionSpec.isEmpty &&
-        !table.metadata.sortOrder.exists(sf => modifiedCols.contains(sf.column)) &&
-        touchedEntries.forall(_.sizeBytes > 0)
-      val scanSession =
-        if (!passthrough) spark
-        else {
-          // The passthrough split plan (round 14): tasks must never MIX
-          // files (each output file inherits one input's sort run), but
-          // one-task-per-FILE starves the cluster when a DML touches
-          // fewer files than there are cores — the round-13 sf10 delete
-          // ran 3 tasks on 32 threads while the columnar oracle used all
-          // of them. Splitting a touched file at row-group boundaries
-          // keeps every guarantee (each slice is a consecutive, sorted,
-          // stats-tight run of one file) and restores the parallelism:
-          // maxPartitionBytes targets cores/files splits per file (8 MB
-          // slice floor so small files keep single-task rewrites), while
-          // openCostInBytes pinned to the SPLIT SIZE makes any cross-file
-          // packing overflow the bin (first chunk's length + open cost
-          // already exceeds maxPartitionBytes) — splits stay single-file
-          // whatever the file sizes. At 100 TB scale a DML touches >=
-          // cores files and this degrades to exactly the old
-          // one-task-per-file plan.
-          val s2 = spark.newSession()
-          // newSession() starts from defaults, not the parent's runtime
-          // conf — copy it so the rewrite scan/write run under the same
-          // settings as the planning scans (same fix as Merge's fork)
-          spark.conf.getAll.foreach { case (k, v) =>
-            if (s2.conf.isModifiable(k) && s2.conf.getOption(k) != Some(v))
-              s2.conf.set(k, v)
-          }
-          val maxSz = touchedEntries.map(_.sizeBytes).max
-          val splitsPerFile =
-            if (!spark.conf.get("graft.dml.splitPassthrough", "true").toBoolean) 1L
-            else math.max(1L,
-              spark.sparkContext.defaultParallelism.toLong / touchedEntries.size)
-          val split = math.max(maxSz / splitsPerFile + 1L, 8L << 20)
-          s2.conf.set("spark.sql.files.maxPartitionBytes", split.toString)
-          s2.conf.set("spark.sql.files.openCostInBytes", split.toString)
-          s2
-        }
-      // Two scan branches, unioned: the provably-touched files scan
-      // plainly (the rebuild's pushable prefilter reaches their parquet
-      // readers — for a range DELETE the interior files' fully-deleted
-      // groups are skipped without decoding, the round-14 behavior),
-      // while the ambiguous files carry the CollectMetrics node. The
-      // metrics node is a deliberate pushdown BARRIER over exactly those
-      // files: the observed counts must see the pre-filter rows (a
-      // DELETE's rebuild drops the very rows being counted), and only
-      // the boundary files pay the full decode. `_metadata.file_path`
-      // is a deterministic metadata attribute (observed metrics reject
-      // input_file_name), compared against the manifest path's plausible
-      // URI renderings — cheap equality, no per-row regexp.
-      val (rowsIn, obsOpt) =
-        if (observeAmb.isEmpty)
-          (new TableScan(scanSession, table,
-            explicitFiles = Some(touchedEntries)).toDF(), None)
-        else {
-          val obs = new org.apache.spark.sql.Observation(
-            s"graft-probe-${java.util.UUID.randomUUID().toString.take(8)}")
-          val fp = col("_metadata.file_path")
-          val metrics = observeAmb.zipWithIndex.map { case (f, i) =>
-            val hp = new org.apache.hadoop.fs.Path(f.path)
-            val forms = Seq(f.path, s"file:${f.path}", s"file://${f.path}",
-              hp.toString, hp.toUri.toString).distinct
-            coalesce(sum(when(coalesce(cond, lit(false)) &&
-              fp.isin(forms.map(lit(_)): _*), 1L)), lit(0L)).as(s"m$i")
-          }
-          val ambScan = new TableScan(scanSession, table,
-            explicitFiles = Some(observeAmb)).toDF()
-            .observe(obs, metrics.head, metrics.tail: _*)
-          val combined =
-            if (sureEntries.isEmpty) ambScan
-            else new TableScan(scanSession, table,
-              explicitFiles = Some(sureEntries)).toDF().unionAll(ambScan)
-          (combined, Some(obs))
-        }
-      val rebuilt = rebuild(rowsIn, cond)
-      val tW0 = System.nanoTime()
-      val newFiles =
-        if (passthrough)
-          LakeWriter.write(scanSession, table, rebuilt, preserveDistribution = true)
-        else LakeWriter.write(spark, table, rebuilt,
-          clusterBounds = LakeWriter.clusterBoundsOf(table, touchedEntries))
-      if (sys.env.contains("GRAFT_PROBE_TIMING"))
-        System.err.println(f"[probe] rewriteWrite ${touchedEntries.size} files -> " +
-          f"${newFiles.size} ${(System.nanoTime() - tW0) / 1e9}%.3f s")
-      val observed = obsOpt.flatMap { obs =>
-        // the write action completed, so the metrics are normally
-        // already present; poll briefly rather than block forever on a
-        // listener-delivery quirk (None -> caller falls back to a probe)
-        // getOrEmpty is private[sql] (public bytecode — same reflective
-        // reach as BloomPrune's ExpressionUtils); get() would block
-        // forever if delivery failed, which is the one case this guards
-        val getOrEmpty = obs.getClass.getMethod("getOrEmpty")
-        def poll(): Map[String, Any] =
-          getOrEmpty.invoke(obs).asInstanceOf[Map[String, Any]]
-        val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-        var m = poll()
-        while (m.isEmpty && System.nanoTime() < deadline) {
-          Thread.sleep(10); m = poll()
-        }
-        if (m.isEmpty) None
-        else Some(observeAmb.indices.map(i =>
-          m(s"m$i").asInstanceOf[java.lang.Number].longValue()).toSeq)
-      }
-      (newFiles, observed)
-    }
-
-    def commitTouched(newFiles: Seq[FileEntry], touchedEntries: Seq[FileEntry]): CommitMetrics = {
-      val tC0 = System.nanoTime()
-      val m = table.commit(CommitOp.Overwrite(newFiles, touchedEntries.map(_.path).toSet,
-        fromSnapshotId = fromSnapshot, conflictFilter = Some(pred),
-        removeHints = touchedEntries))
-      if (sys.env.contains("GRAFT_PROBE_TIMING"))
-        System.err.println(f"[probe] commit ${(System.nanoTime() - tC0) / 1e9}%.3f s")
-      m
-    }
-
-    def rowProbe(ambFiles: Seq[FileEntry]): Set[String] = {
-      // redundant pushable prefilter ahead of the exact 3VL match: the
-      // coalesce wrapper alone reaches parquet as NO filter, so without
-      // this the probe decodes every row of every candidate file just to
-      // list touched ones; with it, parquet's row-group stats and page
-      // indexes skip the non-matching ranges (Pred.mayTrue is implied by
-      // the exact condition, so the touched set is unchanged)
-      // the probe needs FILE identity only — scan without the metadata
-      // columns (no row_index generation) and read the file via
-      // input_file_name(), normalizing the file:/ URI form on the DRIVER
-      // over the <= #files collected strings instead of the old
-      // per-surviving-row regexp_replace (Exp26: the file-column assembly
-      // was ~0.2 s of the 0.71 s sf10 probe)
-      val tPr0 = System.nanoTime()
-      val probeDf = new TableScan(spark, table, explicitFiles = Some(ambFiles)).toDF()
-        .filter(Pred.toColumn(Pred.mayTrue(pred)))
-        .filter(coalesce(cond, lit(false)))
-        .select(input_file_name().as("_f"))
-      // single-stage distinct: a `.distinct()` would add an exchange +
-      // final-agg stage just to dedupe <= #files strings — instead each
-      // task dedupes its own run (input_file_name is constant per file
-      // chunk, so a last-seen check does almost all the work) and the
-      // driver unions the <= #files results. One stage, no shuffle.
-      val probed = probeDf.queryExecution.toRdd.mapPartitions { it =>
-        val seen = scala.collection.mutable.LinkedHashSet.empty[String]
-        var last: String = null
-        while (it.hasNext) {
-          val f = it.next().getUTF8String(0).toString
-          if (f != last) { seen += f; last = f }
-        }
-        seen.iterator
-      }.collect().map(LakeEngine.canonFile).toSet
-      if (sys.env.contains("GRAFT_PROBE_TIMING"))
-        System.err.println(f"[probe] rowProbe ${ambFiles.size} files " +
-          f"${(System.nanoTime() - tPr0) / 1e9}%.3f s")
-      probed
-    }
-
-    // Fused probe (round 16, verdict #1 shape b): when stats already
-    // prove SOME files touched, the rewrite job is happening regardless —
-    // so instead of paying a separate probe scan over the ambiguous
-    // files (a second full read of exactly the boundary files, plus a
-    // whole job's fixed cost), scan them WITH the rewrite and collect
-    // per-file matched-row counts as observed metrics of that same job.
-    // Ambiguous files that turn out untouched (rare for the range-DML
-    // shape: a boundary file of a stats-candidate range almost always
-    // contains matches) force a REDO without them — the speculative
-    // staging is abandoned uncommitted (vacuum-class garbage), bounded
-    // by the eligibility guard: ambiguous bytes <= provably-touched
-    // bytes, so the worst case re-writes at most 2x the certain volume.
-    // No-match DMLs never enter (sureTouched empty -> classic probe
-    // which commits nothing), and the commit still lists ONLY files
-    // that truly contain matching rows — reference write-amplification
-    // semantics (commands/Delete.java:121-207) are preserved exactly.
-    //
-    // DEFAULT OFF — measured negative (round 16, tools/Exp37, sf10
-    // interleaved A/B x3 runs): the CollectMetrics node is a pushdown
-    // barrier over the ambiguous files, so the DELETE's pushable
-    // prefilter no longer skips their fully-deleted ranges and the
-    // fused rewrite decodes the boundary files in full with the match
-    // counters evaluated interpreted — rewriteWrite 0.46-0.62 s
-    // (classic) vs 0.94-1.32 s (fused) on the same pass schedule, more
-    // than the ~0.15-0.20 s single-stage probe job it eliminates
-    // (delete walls: fused worse in 2 of 3 runs, update worse in 2 of
-    // 3). The shape is kept behind the flag because the trade reverses
-    // when the probe's job floor dominates (many tiny ambiguous files
-    // on a high-latency store).
-    val fuseEligible = ambiguous.nonEmpty && sureTouched.nonEmpty &&
-      spark.conf.get("graft.dml.fusedProbe", "false").toBoolean &&
-      ambiguous.size <= 64 &&
-      ambiguous.map(_.sizeBytes).sum <= sureTouched.map(_.sizeBytes).sum
-
-    if (fuseEligible) {
-      val (newFiles, observed) = execRewrite(sureTouched, ambiguous)
-      observed match {
-        case Some(counts) if counts.forall(_ > 0) =>
-          // every speculation confirmed
-          return commitTouched(newFiles, sureTouched ++ ambiguous)
-        case Some(counts) =>
-          // some ambiguous file had no matching rows: abandon the staged
-          // write, redo with the exact touched set
-          val matched = ambiguous.zip(counts).collect { case (f, c) if c > 0 => f }
-          val (redoFiles, _) = execRewrite(sureTouched ++ matched, Seq.empty)
-          return commitTouched(redoFiles, sureTouched ++ matched)
-        case None =>
-          // metrics lost: abandon the staged write, classic probe path
-          if (sys.env.contains("GRAFT_PROBE_TIMING"))
-            System.err.println("[probe] observe metrics missing — falling back")
-      }
-    }
-
-    val probed = if (ambiguous.isEmpty) Set.empty[String] else rowProbe(ambiguous)
+    }.partition(_._2) match { case (sure, amb) => (sure.map(_._1), amb.map(_._1)) }
+    val probed =
+      if (ambiguous.isEmpty) Set.empty[String]
+      else timed("dml.rowProbe")(rowProbe(table, ambiguous, pred, cond))
     // intersect on the CANONICAL rendering: manifest paths and
     // runtime file strings may disagree on URI form for non-file
     // schemes ("gcache:///x" vs "gcache:/x") even when they name the
     // same object
-    val touched = sureTouched.map(f => LakeEngine.canonFile(f.path)).toSet ++ probed
+    val touched = (sureByFile ++ sureByGroup).map(f => LakeEngine.canonFile(f.path)).toSet ++ probed
     if (touched.isEmpty)
       return CommitMetrics(fromSnapshot.getOrElse(0L), 0, 0, 0, 0, 0)
     val touchedEntries =
@@ -649,8 +390,52 @@ final class LakeEngine(
           s"(probe ${touched.size}, matched ${touchedEntries.size}): " +
           touched.diff(touchedEntries.map(f => LakeEngine.canonFile(f.path)).toSet)
             .take(3).mkString(", "))
-    val (newFiles, _) = execRewrite(touchedEntries, Seq.empty)
-    commitTouched(newFiles, touchedEntries)
+    val passthrough = table.metadata.partitionSpec.isEmpty &&
+      !table.metadata.sortOrder.exists(sf => modifiedCols.contains(sf.column)) &&
+      touchedEntries.forall(_.sizeBytes > 0)
+    val session = if (passthrough) LakeEngine.perFileSession(spark, touchedEntries) else spark
+    val rebuilt = rebuild(new TableScan(session, table, explicitFiles = Some(touchedEntries)).toDF(), cond)
+    val newFiles = timed("dml.rewrite") {
+      if (passthrough) LakeWriter.write(session, table, rebuilt, preserveDistribution = true)
+      else LakeWriter.write(spark, table, rebuilt,
+        clusterBounds = LakeWriter.clusterBoundsOf(table, touchedEntries))
+    }
+    timed("dml.commit")(table.commit(CommitOp.Overwrite(newFiles,
+      touchedEntries.map(_.path).toSet, fromSnapshotId = fromSnapshot,
+      conflictFilter = Some(pred), removeHints = touchedEntries)))
+  }
+
+  /** Canonical paths of the `files` holding at least one row matching
+    * `cond`. A redundant pushable prefilter ([[graft.scan.Pred.mayTrue]],
+    * implied by the exact condition) runs ahead of the exact 3VL match:
+    * the coalesce wrapper alone reaches parquet as NO filter, so without
+    * it the probe decodes every row of every file; with it, parquet's
+    * row-group stats and page indexes skip the non-matching ranges. The
+    * probe needs FILE identity only — it scans without the metadata
+    * columns (no row_index generation), reads the file via
+    * input_file_name(), and normalizes the URI form on the DRIVER over
+    * the <= #files collected strings (Exp26: the per-row file-column
+    * assembly was ~0.2 s of the 0.71 s sf10 probe). */
+  private def rowProbe(table: LakeTable, files: Seq[FileEntry], pred: Pred,
+      cond: Column): Set[String] = {
+    val probeDf = new TableScan(spark, table, explicitFiles = Some(files)).toDF()
+      .filter(Pred.toColumn(Pred.mayTrue(pred)))
+      .filter(coalesce(cond, lit(false)))
+      .select(input_file_name().as("_f"))
+    // single-stage distinct: a `.distinct()` would add an exchange +
+    // final-agg stage just to dedupe <= #files strings — instead each
+    // task dedupes its own run (input_file_name is constant per file
+    // chunk, so a last-seen check does almost all the work) and the
+    // driver unions the <= #files results. One stage, no shuffle.
+    probeDf.queryExecution.toRdd.mapPartitions { it =>
+      val seen = scala.collection.mutable.LinkedHashSet.empty[String]
+      var last: String = null
+      while (it.hasNext) {
+        val f = it.next().getUTF8String(0).toString
+        if (f != last) { seen += f; last = f }
+      }
+      seen.iterator
+    }.collect().map(LakeEngine.canonFile).toSet
   }
 }
 
@@ -667,4 +452,46 @@ object LakeEngine {
       catch { case scala.util.control.NonFatal(_) => s }
     if (norm.startsWith("file:")) norm.replaceFirst("^file:/+", "/") else norm
   }
+
+  /** Scan/write session for a copy-on-write rewrite that keeps each
+    * input file's rows together: tasks must never MIX files (each output
+    * file inherits one input's sort run). One task per FILE starves the
+    * cluster when a rewrite touches fewer files than there are cores
+    * (round 13: a sf10 delete ran 3 tasks on 32 threads), so a touched
+    * file splits at row-group boundaries — each slice is a consecutive,
+    * sorted, stats-tight run of one file. maxPartitionBytes targets
+    * cores/files splits per file (8 MB slice floor so small files keep
+    * single-task rewrites), while openCostInBytes pinned to the SPLIT
+    * SIZE makes any cross-file packing overflow the bin, so splits stay
+    * single-file whatever the file sizes. When a rewrite touches >=
+    * cores files this is exactly one task per file. */
+  private[commands] def perFileSession(spark: SparkSession,
+      entries: Seq[FileEntry]): SparkSession = {
+    val s2 = spark.newSession()
+    // newSession() starts from defaults, NOT the parent's runtime conf —
+    // without this copy the rewrite could run under different settings
+    // (session timezone, legacy parquet flags, caller overrides) than the
+    // planning scans that decided which rows to keep
+    spark.conf.getAll.foreach { case (k, v) =>
+      if (s2.conf.isModifiable(k) && s2.conf.getOption(k) != Some(v))
+        s2.conf.set(k, v)
+    }
+    val splitsPerFile =
+      math.max(1L, spark.sparkContext.defaultParallelism.toLong / entries.size)
+    val split = math.max(entries.map(_.sizeBytes).max / splitsPerFile + 1L, 8L << 20)
+    s2.conf.set("spark.sql.files.maxPartitionBytes", split.toString)
+    s2.conf.set("spark.sql.files.openCostInBytes", split.toString)
+    s2
+  }
+
+  /** Phase timer for the copy-on-write commands: with GRAFT_MERGE_TIMING
+    * set, prints each phase's elapsed seconds to stderr. Zero-cost when
+    * unset. */
+  private[commands] def timed[A](phase: String)(body: => A): A =
+    if (!sys.env.contains("GRAFT_MERGE_TIMING")) body
+    else {
+      val t0 = System.nanoTime()
+      try body
+      finally System.err.println(f"[timing] $phase ${(System.nanoTime() - t0) / 1e9}%.3fs")
+    }
 }

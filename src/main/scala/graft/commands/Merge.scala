@@ -33,13 +33,22 @@ object Merge {
       maxDelta: Option[Double] = None,
       nullReplacement: Option[Any] = None)
 
+  /** Options both SCD merges share. */
+  sealed trait ScdOptions {
+    def keyCols: Seq[String]
+    def tableFilterSql: String
+    def valueSpecs: Map[String, ValueColumnSpec]
+    def operationTypeColumn: Option[String] // changes mode marker column
+    def deleteOperationValue: String
+  }
+
   final case class Scd1Options(
       keyCols: Seq[String],
       valueCols: Option[Seq[String]] = None, // default: all non-key columns
       tableFilterSql: String = "true",
       valueSpecs: Map[String, ValueColumnSpec] = Map.empty,
-      operationTypeColumn: Option[String] = None, // changes mode marker column
-      deleteOperationValue: String = "D")
+      operationTypeColumn: Option[String] = None,
+      deleteOperationValue: String = "D") extends ScdOptions
 
   final case class Scd2Options(
       keyCols: Seq[String],
@@ -51,50 +60,35 @@ object Merge {
       tableFilterSql: String = "true",
       valueSpecs: Map[String, ValueColumnSpec] = Map.empty,
       operationTypeColumn: Option[String] = None,
-      deleteOperationValue: String = "D")
+      deleteOperationValue: String = "D") extends ScdOptions
 
   private val OpCol = "__op"
   private val SrcOpCol = "__src_op"
   private val SPresent = "__s_present"
+  private val CloseCol = "__close"
 
-  /** Join-strategy toggles, default ON, overridable via system
-    * properties (tools/Exp18 A/Bs both shapes in one JVM).
+  /** Join strategies (the Exp18 and Exp32 decisions).
     *
-    * `diffShj` builds the CHANGES-mode diff join's hash table from the
-    * batch-proportional source side instead of sort-merging — under SMJ
-    * both diff sides sort, and the touched-file side is table-scale.
-    * Snapshot mode keeps SMJ: there the source is table-scale too, and
-    * Spark's shuffled-hash build does NOT spill (a too-big build side
-    * fails with "can't acquire N bytes to build hash relation" rather
-    * than degrading), so hashing is only safe from the side that is
-    * batch-proportional by construction. `rewriteShj` is the same
-    * choice for the rewrite's (_file,_pos) anti/outer join: hash the
-    * bounded actioned-key pairs (16 B/row), stream the rebuilt files.
+    * The CHANGES-mode diff join and the general MERGE join build their
+    * hash table from the batch-proportional source side
+    * (`shuffle_hash`) instead of sort-merging — under SMJ both diff
+    * sides sort, and the touched-file side is table-scale. Snapshot
+    * mode leaves the join unhinted: there the source is table-scale
+    * too, and Spark's shuffled-hash build does NOT spill (a too-big
+    * build side fails with "can't acquire N bytes to build hash
+    * relation" rather than degrading), so hashing is only safe from
+    * the side that is batch-proportional by construction. Exp18 (sf1,
+    * arms interleaved, n=9/arm) measured scd1 min 2.30→2.05 s and scd2
+    * 2.57→2.16 s, at the local-mode noise floor; the choice rests on
+    * the structural ground that never sorting the table-scale side is
+    * what survives a 100× scale-up.
     *
-    * Measured (Exp18, sf1, arms interleaved to cancel within-JVM
-    * drift, n=9/arm): scd1 min 2.30→2.05 s, scd2 min 2.57→2.16 s —
-    * but a knob-INSENSITIVE scenario (update) moved −13% between the
-    * same arms, so the local-mode effect is at the noise floor. The
-    * default is ON on the structural ground: never sorting the
-    * table-scale side is what survives a 100× scale-up, and the build
-    * side's per-partition footprint is batch-bytes / shuffle-partitions
-    * — bounded by a knob every real deployment sizes anyway. */
-  private def knob(name: String, default: Boolean): Boolean =
-    sys.props.get(s"graft.merge.$name").map(_.toBoolean).getOrElse(default)
-  private def shj(df: DataFrame, on: Boolean): DataFrame =
-    if (on) df.hint("shuffle_hash") else df
-
-  /** Phase wall-clock decomposition (the LakeEngine GRAFT_PROBE_TIMING
-    * pattern applied to merges): set GRAFT_MERGE_TIMING to print each
-    * phase's elapsed seconds to stderr. Zero-cost when unset. */
-  private def mtimed[A](phase: String)(body: => A): A =
-    if (!sys.env.contains("GRAFT_MERGE_TIMING")) body
-    else {
-      val t0 = System.nanoTime()
-      try body
-      finally System.err.println(
-        f"[merge-timing] $phase ${(System.nanoTime() - t0) / 1e9}%.3fs")
-    }
+    * The rewrite's (_file,_pos) actioned-key list BROADCASTS when the
+    * probe's byte estimate fits [[RewriteBroadcastMax]]: the full-width
+    * rebuilt-file rows then stream scan->join->write with no exchange
+    * (Exp32, sf10: scd1 9.04→8.51 s). Past the budget the keys hash
+    * (`shuffle_hash`, 16 B/row build side) against the streamed files. */
+  private val RewriteBroadcastMax = 64L << 20
 
   private def tp(c: String) = s"t_$c"
   private def sp(c: String) = s"s_$c"
@@ -115,151 +109,16 @@ object Merge {
   // ===================================================================
   def scd1(engine: LakeEngine, table: LakeTable, source: DataFrame,
       opts: Scd1Options): CommitMetrics = {
-    val spark = engine.spark
     val schema = table.schema
     val fromSnapshot = table.metadata.currentSnapshotId
-    val changesMode = opts.operationTypeColumn.isDefined
     opts.keyCols.foreach(k => require(schema.fieldNames.contains(k), s"unknown key column $k"))
     val valueCols = opts.valueCols.getOrElse(schema.fieldNames.toSeq.filterNot(opts.keyCols.contains))
-
-    val boundaryPred =
-      if (opts.tableFilterSql.trim.equalsIgnoreCase("true")) AlwaysTrue
-      else PredSql.compile(spark, opts.tableFilterSql, schema)
-    val boundaryCol = expr(opts.tableFilterSql)
-
-    // source projected to table schema (+ op marker in changes mode).
-    // In changes mode the source is PINNED (lazy local checkpoint) so
-    // the key-prune collect below and the diff join see the same rows —
-    // the same soundness device the general MERGE uses (see [[merge]]).
-    val source0 = if (changesMode) source.localCheckpoint(eager = false) else source
-    val sWithOp = opts.operationTypeColumn match {
-      case Some(oc) =>
-        val in = source0.columns.toSet
-        source0.select(schema.fields.map { f =>
-          (if (in.contains(f.name)) col(f.name) else lit(null)).cast(f.dataType).as(f.name)
-        }.toSeq :+ col(oc).cast("string").as(SrcOpCol): _*)
-      case None => LakeWriter.castProjection(source0, schema)
-        .withColumn(SrcOpCol, lit(null).cast("string"))
-    }
-    val sBounded =
-      if (Pred.isTrue(boundaryPred)) sWithOp
-      else sWithOp.filter(coalesce(boundaryCol, lit(false)))
-    val s = sBounded.toDF(sBounded.columns.map(sp).toSeq: _*)
-      .withColumn(SPresent, lit(true))
-
-    // target rows inside the boundary, with file identity; changes mode
-    // additionally skips files that provably contain no source key
-    val prunePred = mtimed("scd1.keyPrune") {
-      if (changesMode) scdKeyPrunePred(sBounded, opts.keyCols, schema)
-      else AlwaysTrue
-    }
-    val scanPred = if (Pred.isTrue(prunePred)) boundaryPred else And(boundaryPred, prunePred)
-    val scan0 = new TableScan(spark, table, scanPred, withFileColumns = true)
-    val candidates = mtimed("scd1.planFiles")(scan0.planFiles())
-    // round 21 (diffProbe attack): in changes mode the key-prune ranges
-    // ride the DIFF scan as its residual predicate — they reach the
-    // parquet reader as PushedFilters, so row groups of candidate files
-    // that provably hold no source key are skipped before the join. Rows
-    // outside the ranges can't match any source key (the ranges are a
-    // superset of the source keys) and would be op N, which the
-    // changes-mode diff drops anyway; snapshot mode has prunePred ==
-    // AlwaysTrue and keeps the full scan (absent keys become deletes).
-    val target = new TableScan(spark, table, pred = residualOf(prunePred),
-      explicitFiles = Some(candidates), withFileColumns = true).toDF()
-      .filter(coalesce(boundaryCol, lit(false)))
-    val t = target.toDF(target.columns.map(tp).toSeq: _*)
-
-    val joinCond = opts.keyCols.map(k => col(tp(k)) <=> col(sp(k))).reduce(_ && _)
-    val tPresent = col(tp("_file")).isNotNull
-    val sPresent = coalesce(col(SPresent), lit(false))
-    val isDelete = col(sp(SrcOpCol)) === lit(opts.deleteOperationValue)
-    val differs = valueCols.map(c => differsExpr(c, opts.valueSpecs.get(c)))
-      .foldLeft(lit(false))(_ || _)
-
-    val op =
-      if (!changesMode)
-        when(!tPresent, "I").when(!sPresent, "D").when(differs, "U").otherwise("N")
-      else
-        when(!tPresent && !isDelete, "I")
-          .when(!tPresent && isDelete, "X") // delete for a missing key: no-op
-          .when(sPresent && isDelete, "D")
-          .when(sPresent && differs, "U")
-          .when(sPresent, "NS") // matched, no change: keep target row untouched
-          .otherwise("N")
-
-    // after op is computed the target's VALUE columns are dead — only
-    // its row identity (_file,_pos) plus the source side feed the probe,
-    // the anti-join keys and the upserts, so project them away before
-    // the diff is persisted (halves the cached width)
-    val joined = t.join(shj(s, changesMode && knob("diffShj", true)), joinCond, "full_outer")
-    // In CHANGES mode a target row with no source match is op N —
-    // untouched by every downstream consumer (the probe counts matches
-    // among source-present rows only, upserts are I/U, removed keys are
-    // U/D), so drop it AT THE JOIN: the source-present filter lets
-    // Catalyst eliminate the dead outer side (full_outer -> right_outer,
-    // the unmatched-target rows are never even emitted) and the persisted
-    // diff shrinks from O(candidate-file rows) to O(source). Snapshot
-    // mode keeps every target row — absent keys become deletes there.
-    val joinedKept = if (changesMode && knob("diffDropUnmatched", true))
-      joined.filter(coalesce(col(SPresent), lit(false))) else joined
-    val diff = joinedKept
-      .withColumn(OpCol, op)
-      .select(col(OpCol) +: col(tp("_file")) +: col(tp("_pos")) +:
-        (schema.fieldNames.map(c => col(sp(c))).toSeq :+ col(SPresent)): _*)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val probe = mtimed("scd1.diffProbe")(probeCardinalityAndModified(
-        diff, tPresent, sPresent,
-        tp("_file"), tp("_pos"), col(OpCol).isin("U", "D")))
-      val modified = probe.modified
-      val upserts = diff.filter(col(OpCol).isin("I", "U"))
-        .select(schema.fieldNames.map(c => col(sp(c)).as(c)).toSeq: _*)
-
-      if (modified.isEmpty && upserts.isEmpty)
-        return CommitMetrics(fromSnapshot.getOrElse(0L), 0, 0, 0, 0, 0)
-
-      // rebuild modified files: every original row except replaced/deleted ones
-      val entries = candidates.filter(f => modified.contains(f.path))
-      val removedKeys = diff.filter(col(OpCol).isin("U", "D"))
-        .select(col(tp("_file")).as("_file"), col(tp("_pos")).as("_pos"))
-      val (keysSide, keysBroadcast) = rewriteSide(removedKeys, probe)
-      val newFiles = mtimed("scd1.rewrite") {
-        if (modified.nonEmpty && splitRewriteOk(table, entries, keysBroadcast, Set.empty)) {
-          // split rewrite: retained rows stream per file (no exchange,
-          // no sort), upserts cluster separately — see [[splitRewriteOk]]
-          val s2 = perFileSession(spark, entries)
-          val full = new TableScan(s2, table, explicitFiles = Some(entries),
-            withFileColumns = true).toDF()
-          val retained = full.join(keysSide, Seq("_file", "_pos"), "left_anti")
-            .select(schema.fieldNames.map(col).toSeq: _*)
-          val rebuilt = mtimed("scd1.rewrite.rebuilt")(
-            LakeWriter.write(s2, table, retained, preserveDistribution = true))
-          // cluster the appended rows by the touched files' bounds too:
-          // update-keyed rows unavoidably overlap their rebuilt file,
-          // but inserts beyond every bound get their own tail file
-          // instead of one wide file spanning both
-          val appended = if (upserts.isEmpty) Seq.empty
-            else mtimed("scd1.rewrite.appended")(LakeWriter.write(spark, table, upserts,
-              clusterBounds = LakeWriter.clusterBoundsOf(table, entries)))
-          rebuilt ++ appended
-        } else {
-          val retained =
-            if (modified.isEmpty) None
-            else {
-              val full = new TableScan(spark, table, explicitFiles = Some(entries),
-                withFileColumns = true).toDF()
-              Some(full.join(keysSide, Seq("_file", "_pos"), "left_anti")
-                .select(schema.fieldNames.map(col).toSeq: _*))
-            }
-          val newData = retained.map(_.unionByName(upserts)).getOrElse(upserts)
-          val bounds = LakeWriter.clusterBoundsOf(table, entries)
-          LakeWriter.write(spark, table, newData, clusterBounds = bounds)
-        }
-      }
-      mtimed("scd1.commit")(table.commit(CommitOp.Overwrite(newFiles, modified,
-        fromSnapshotId = fromSnapshot, conflictFilter = Some(boundaryPred),
-        removeHints = entries)))
-    } finally diff.unpersist()
+    val d = scdDiff(engine.spark, table, source, opts, valueCols, "scd1", lit(true))
+    scdRewrite(engine.spark, table, fromSnapshot, d, "scd1", Set.empty, d.boundaryPred)(
+      newRows = _.select(schema.fieldNames.map(c => col(sp(c)).as(c)).toSeq: _*),
+      // every original row except replaced/deleted ones
+      rebuild = (full, keys) => full.join(keys, Seq("_file", "_pos"), "left_anti")
+        .select(schema.fieldNames.map(col).toSeq: _*))
   }
 
   // ===================================================================
@@ -270,7 +129,6 @@ object Merge {
     val spark = engine.spark
     val schema = table.schema
     val fromSnapshot = table.metadata.currentSnapshotId
-    val changesMode = opts.operationTypeColumn.isDefined
     val effTs = opts.effectiveTimestamp
     val startC = opts.effectiveStartCol
     val endC = opts.effectiveEndCol
@@ -281,45 +139,94 @@ object Merge {
     val scdCols = Set(startC, endC) ++ opts.currentFlagCol
     val changeCols = opts.changeCols.getOrElse(
       schema.fieldNames.toSeq.filterNot(c => opts.keyCols.contains(c) || scdCols.contains(c)))
-
-    val boundaryPred =
-      if (opts.tableFilterSql.trim.equalsIgnoreCase("true")) AlwaysTrue
-      else PredSql.compile(spark, opts.tableFilterSql, schema)
-    val boundaryCol = expr(opts.tableFilterSql)
+    val boundaryPred = boundaryPredOf(spark, opts.tableFilterSql, schema)
     val effLit = lit(effTs).cast(schema(startC).dataType)
 
-    // diff scope: the WHOLE boundary (the guard below is never
-    // key-pruned — the chronology check must see every boundary row's
-    // interval, not just the rows this batch touches)
-    val guardCandidates = mtimed("scd2.planFiles")(new TableScan(spark, table,
-      boundaryPred, withFileColumns = true).planFiles())
-
-    // out-of-order guard (reference dao/scd2_merge.xml:4-11).
-    // Stats-first (round 14): a violating row needs startC >= eff or a
-    // non-null endC >= eff, and both columns carry footer min/max — so
-    // files whose recorded maxima sit below the effective timestamp are
+    // out-of-order guard (reference dao/scd2_merge.xml:4-11), never
+    // key-pruned: the chronology check must see every boundary row's
+    // interval, not just the rows this batch touches. Stats-first
+    // (round 14): a violating row needs startC >= eff or a non-null
+    // endC >= eff, and both columns carry footer min/max — so files
+    // whose recorded maxima sit below the effective timestamp are
     // pruned METADATA-ONLY, which in the chronological steady state
     // (every stored interval predates each new batch) is ALL of them:
     // the guard costs zero data read instead of a full column-pruned
     // boundary scan per merge. Survivors get the same predicate as a
     // pushable row-group prefilter ahead of the exact 3VL check.
     val violationPred = Or(Ge(startC, effTs), Ge(endC, effTs))
-    mtimed("scd2.orderGuard") {
+    LakeEngine.timed("scd2.orderGuard") {
       val guardFiles = new TableScan(spark, table,
         And(boundaryPred, violationPred), withFileColumns = true).planFiles()
       val outOfOrder = new TableScan(spark, table,
         explicitFiles = Some(guardFiles), withFileColumns = true).toDF()
         .filter(col(startC) >= effLit ||
           (col(endC).isNotNull && col(endC) >= effLit)) // pushable: skips clean groups
-        .filter(coalesce(boundaryCol, lit(false)))
+        .filter(coalesce(expr(opts.tableFilterSql), lit(false)))
       if (!outOfOrder.isEmpty)
         throw new OutOfOrderMergeException(
           s"target has rows with $startC/$endC >= effective timestamp $effTs; " +
             "apply changes in chronological order")
     }
 
-    // source projected to table schema; pinned in changes mode so the
-    // key-prune collect and the diff join see the same rows (see scd1)
+    // the diff compares against the CURRENT (open) version of each key
+    val d = scdDiff(spark, table, source, opts, changeCols, "scd2", col(endC).isNull)
+    // conflict filter mirrors the reference scan filter: boundary OR still-open rows
+    val conflict = Or(boundaryPred, Or(IsNull(endC), Ge(endC, effTs)))
+    scdRewrite(spark, table, fromSnapshot, d, "scd2", Set(endC) ++ opts.currentFlagCol, conflict)(
+      // new versions for I/U rows: start = effTs, end = NULL, flag = true
+      newRows = _.select(schema.fieldNames.map {
+        case `startC` => effLit.as(startC)
+        case `endC`   => lit(null).cast(schema(endC).dataType).as(endC)
+        case c if opts.currentFlagCol.contains(c) => lit(true).cast(schema(c).dataType).as(c)
+        case c        => col(sp(c)).as(c)
+      }.toSeq: _*),
+      // close U/D current rows, keep everything else (history rows and
+      // out-of-boundary rows included, via the (_file,_pos) match)
+      rebuild = (full, keys) => full.join(keys, Seq("_file", "_pos"), "left_outer")
+        .select(schema.fieldNames.map {
+          case `endC` => when(col(CloseCol), effLit).otherwise(col(endC)).as(endC)
+          case c if opts.currentFlagCol.contains(c) =>
+            when(col(CloseCol), lit(false).cast(schema(c).dataType))
+              .otherwise(col(c)).as(c)
+          case c => col(c)
+        }.toSeq: _*))
+  }
+
+  private def boundaryPredOf(spark: SparkSession, filterSql: String,
+      schema: org.apache.spark.sql.types.StructType): Pred =
+    if (filterSql.trim.equalsIgnoreCase("true")) AlwaysTrue
+    else PredSql.compile(spark, filterSql, schema)
+
+  /** A persisted SCD diff: one row per target/source key pairing, the op
+    * in [[OpCol]], the target's row identity and the source's columns. */
+  private final case class ScdDiff(boundaryPred: Pred, candidates: Seq[FileEntry],
+      diff: DataFrame)
+
+  /** The diff both SCD merges run on: the source projected to the table
+    * schema and bounded by the table filter, null-safe key joined (J3) to
+    * the boundary's target rows that pass `targetFilter`, and each pair
+    * classified:
+    *
+    *  - snapshot mode: I (new key), D (key absent from the source),
+    *    U (a `compareCols` value differs), N (unchanged)
+    *  - changes mode: I, X (delete of a missing key: no-op), D, U,
+    *    NS (matched, no change: target row untouched), N (no source row)
+    *
+    * After classification the target's value columns are dead — only its
+    * row identity (_file,_pos) plus the source side feed the probe, the
+    * rewrite keys and the new rows — so they are projected away before
+    * the diff is persisted (halves the cached width). */
+  private def scdDiff(spark: SparkSession, table: LakeTable, source: DataFrame,
+      opts: ScdOptions, compareCols: Seq[String], label: String,
+      targetFilter: Column): ScdDiff = {
+    val schema = table.schema
+    val changesMode = opts.operationTypeColumn.isDefined
+    val boundaryPred = boundaryPredOf(spark, opts.tableFilterSql, schema)
+    val boundaryCol = expr(opts.tableFilterSql)
+
+    // In changes mode the source is PINNED (lazy local checkpoint) so the
+    // key-prune collect below and the diff join see the same rows — the
+    // same soundness device the general MERGE uses (see [[merge]]).
     val source0 = if (changesMode) source.localCheckpoint(eager = false) else source
     val sWithOp = opts.operationTypeColumn match {
       case Some(oc) =>
@@ -336,29 +243,35 @@ object Merge {
     val s = sBounded.toDF(sBounded.columns.map(sp).toSeq: _*)
       .withColumn(SPresent, lit(true))
 
-    // diff scope: changes mode skips files provably holding no source key
-    val prunePred = mtimed("scd2.keyPrune") {
+    // changes mode additionally skips files that provably contain no
+    // source key; snapshot mode scans the whole boundary (absent keys
+    // become deletes)
+    val prunePred = LakeEngine.timed(s"$label.keyPrune") {
       if (changesMode) scdKeyPrunePred(sBounded, opts.keyCols, schema)
       else AlwaysTrue
     }
-    val candidates =
-      if (Pred.isTrue(prunePred)) guardCandidates
-      else new TableScan(spark, table, And(boundaryPred, prunePred),
-        withFileColumns = true).planFiles()
-    // key-prune ranges as the diff scan's pushed residual — see scd1
-    val current = new TableScan(spark, table, pred = residualOf(prunePred),
+    val scanPred = if (Pred.isTrue(prunePred)) boundaryPred else And(boundaryPred, prunePred)
+    val candidates = LakeEngine.timed(s"$label.planFiles")(
+      new TableScan(spark, table, scanPred, withFileColumns = true).planFiles())
+    // round 21 (diffProbe attack): in changes mode the key-prune ranges
+    // ride the DIFF scan as its residual predicate — they reach the
+    // parquet reader as PushedFilters, so row groups of candidate files
+    // that provably hold no source key are skipped before the join. Rows
+    // outside the ranges can't match any source key (the ranges are a
+    // superset of the source keys) and would be op N, which the
+    // changes-mode diff drops anyway.
+    val target = new TableScan(spark, table, pred = residualOf(prunePred),
       explicitFiles = Some(candidates), withFileColumns = true).toDF()
       .filter(coalesce(boundaryCol, lit(false)))
-      .filter(col(endC).isNull)
-    val t = current.toDF(current.columns.map(tp).toSeq: _*)
+      .filter(targetFilter)
+    val t = target.toDF(target.columns.map(tp).toSeq: _*)
 
     val joinCond = opts.keyCols.map(k => col(tp(k)) <=> col(sp(k))).reduce(_ && _)
     val tPresent = col(tp("_file")).isNotNull
     val sPresent = coalesce(col(SPresent), lit(false))
     val isDelete = col(sp(SrcOpCol)) === lit(opts.deleteOperationValue)
-    val differs = changeCols.map(c => differsExpr(c, opts.valueSpecs.get(c)))
+    val differs = compareCols.map(c => differsExpr(c, opts.valueSpecs.get(c)))
       .foldLeft(lit(false))(_ || _)
-
     val op =
       if (!changesMode)
         when(!tPresent, "I").when(!sPresent, "D").when(differs, "U").otherwise("N")
@@ -370,84 +283,55 @@ object Merge {
           .when(sPresent, "NS")
           .otherwise("N")
 
-    // same width reduction as scd1: target value columns are dead after
-    // op classification; and in changes mode the same unmatched-target
-    // drop (op N rows feed nothing downstream — see scd1)
-    val joined = t.join(shj(s, changesMode && knob("diffShj", true)), joinCond, "full_outer")
-    val joinedKept = if (changesMode && knob("diffDropUnmatched", true))
-      joined.filter(coalesce(col(SPresent), lit(false))) else joined
-    val diff = joinedKept
+    // In CHANGES mode a target row with no source match is op N —
+    // untouched by every downstream consumer (the probe counts matches
+    // among source-present rows only, new rows are I/U, rewritten keys
+    // are U/D), so drop it AT THE JOIN: the source-present filter lets
+    // Catalyst eliminate the dead outer side (full_outer -> right_outer,
+    // the unmatched-target rows are never even emitted) and the persisted
+    // diff shrinks from O(candidate-file rows) to O(source). Snapshot
+    // mode keeps every target row — absent keys become deletes there.
+    val joined =
+      if (changesMode) t.join(s.hint("shuffle_hash"), joinCond, "full_outer").filter(sPresent)
+      else t.join(s, joinCond, "full_outer")
+    val diff = joined
       .withColumn(OpCol, op)
       .select(col(OpCol) +: col(tp("_file")) +: col(tp("_pos")) +:
         (schema.fieldNames.map(c => col(sp(c))).toSeq :+ col(SPresent)): _*)
       .persist(StorageLevel.MEMORY_AND_DISK)
+    ScdDiff(boundaryPred, candidates, diff)
+  }
+
+  /** Applies a persisted SCD diff: probe cardinality and the files
+    * holding U/D rows, rewrite those files through `rebuild` (given
+    * their full scan and the (_file,_pos,[[CloseCol]]) keys of the U/D
+    * rows), append `newRows` of the I/U rows, commit under `conflict`.
+    * Only files containing U/D rows are rebuilt (write-amplification
+    * control); the diff is unpersisted on every exit. */
+  private def scdRewrite(spark: SparkSession, table: LakeTable,
+      fromSnapshot: Option[Long], d: ScdDiff, label: String,
+      modifiedCols: Set[String], conflict: Pred)(
+      newRows: DataFrame => DataFrame,
+      rebuild: (DataFrame, DataFrame) => DataFrame): CommitMetrics =
     try {
-      val probe = mtimed("scd2.diffProbe")(probeCardinalityAndModified(
-        diff, tPresent, sPresent,
+      val diff = d.diff
+      val probe = LakeEngine.timed(s"$label.diffProbe")(probeCardinalityAndModified(
+        diff, col(tp("_file")).isNotNull, coalesce(col(SPresent), lit(false)),
         tp("_file"), tp("_pos"), col(OpCol).isin("U", "D")))
       val modified = probe.modified
-
-      // new versions for I/U rows: start = effTs, end = NULL, flag = true
-      val newVersions0 = diff.filter(col(OpCol).isin("I", "U"))
-        .select(schema.fieldNames.map {
-          case `startC` => effLit.as(startC)
-          case `endC`   => lit(null).cast(schema(endC).dataType).as(endC)
-          case c if opts.currentFlagCol.contains(c) => lit(true).cast(schema(c).dataType).as(c)
-          case c        => col(sp(c)).as(c)
-        }.toSeq: _*)
-
-      if (modified.isEmpty && newVersions0.isEmpty)
+      val added = newRows(diff.filter(col(OpCol).isin("I", "U")))
+      if (modified.isEmpty && added.isEmpty)
         return CommitMetrics(fromSnapshot.getOrElse(0L), 0, 0, 0, 0, 0)
-
-      // rebuild modified files: close U/D current rows, keep everything else
-      // (history rows and out-of-boundary rows included, via (_file,_pos) match)
-      val entries = candidates.filter(f => modified.contains(f.path))
-      val closingKeys = diff.filter(col(OpCol).isin("U", "D"))
-        .select(col(tp("_file")).as("_file"), col(tp("_pos")).as("_pos"),
-          lit(true).as("__close"))
-      val (keysSide, keysBroadcast) = rewriteSide(closingKeys, probe)
-      def closeRewrite(full: DataFrame): DataFrame =
-        full.join(keysSide, Seq("_file", "_pos"), "left_outer")
-          .select(schema.fieldNames.map {
-            case `endC` => when(col("__close"), effLit).otherwise(col(endC)).as(endC)
-            case c if opts.currentFlagCol.contains(c) =>
-              when(col("__close"), lit(false).cast(schema(c).dataType))
-                .otherwise(col(c)).as(c)
-            case c => col(c)
-          }.toSeq: _*)
-      val scdCols: Set[String] = Set(endC) ++ opts.currentFlagCol
-      val newFiles = mtimed("scd2.rewrite") {
-        if (modified.nonEmpty && splitRewriteOk(table, entries, keysBroadcast, scdCols)) {
-          // split rewrite: closing is a map-side column rewrite over the
-          // per-file scan (no exchange, no sort); new versions cluster
-          // separately — see [[splitRewriteOk]]
-          val s2 = perFileSession(spark, entries)
-          val full = new TableScan(s2, table, explicitFiles = Some(entries),
-            withFileColumns = true).toDF()
-          val rebuilt = mtimed("scd2.rewrite.rebuilt")(
-            LakeWriter.write(s2, table, closeRewrite(full),
-              preserveDistribution = true))
-          val appended = if (newVersions0.isEmpty) Seq.empty
-            else mtimed("scd2.rewrite.appended")(LakeWriter.write(spark, table, newVersions0,
-              clusterBounds = LakeWriter.clusterBoundsOf(table, entries)))
-          rebuilt ++ appended
-        } else {
-          val rebuilt =
-            if (modified.isEmpty) None
-            else Some(closeRewrite(new TableScan(spark, table,
-              explicitFiles = Some(entries), withFileColumns = true).toDF()))
-          val newData = rebuilt.map(_.unionByName(newVersions0)).getOrElse(newVersions0)
-          val bounds = LakeWriter.clusterBoundsOf(table, entries)
-          LakeWriter.write(spark, table, newData, clusterBounds = bounds)
-        }
-      }
-      // conflict filter mirrors the reference scan filter: boundary OR still-open rows
-      val conflict = Or(boundaryPred, Or(IsNull(endC), Ge(endC, effTs)))
-      mtimed("scd2.commit")(table.commit(CommitOp.Overwrite(newFiles, modified,
+      val entries = d.candidates.filter(f => modified.contains(f.path))
+      val keys = diff.filter(col(OpCol).isin("U", "D"))
+        .select(col(tp("_file")).as("_file"), col(tp("_pos")).as("_pos"), lit(true).as(CloseCol))
+      val (keysSide, keysBroadcast) = rewriteSide(keys, probe)
+      val newFiles = LakeEngine.timed(s"$label.rewrite")(rewriteFiles(spark, table,
+        entries, keysBroadcast, modifiedCols, rebuild(_, keysSide), Some(added), label))
+      LakeEngine.timed(s"$label.commit")(table.commit(CommitOp.Overwrite(newFiles, modified,
         fromSnapshotId = fromSnapshot, conflictFilter = Some(conflict),
         removeHints = entries)))
-    } finally diff.unpersist()
-  }
+    } finally d.diff.unpersist()
 
   // ===================================================================
   // General MERGE (ANSI MERGE INTO shape — beyond the reference's SCD
@@ -541,9 +425,8 @@ object Merge {
     // (no snapshot mode), so the same build-from-source choice applies;
     // and without a BY SOURCE clause an unmatched target row can take no
     // action (op -1) — drop it at the join like the changes-mode SCDs
-    val joined = target.join(shj(s, knob("diffShj", true)), expr(onSql), "full_outer")
-    val joinedKept = if (notMatchedBySource.isEmpty && knob("diffDropUnmatched", true))
-      joined.filter(coalesce(col(SPresent), lit(false))) else joined
+    val joined = target.join(s.hint("shuffle_hash"), expr(onSql), "full_outer")
+    val joinedKept = if (notMatchedBySource.isEmpty) joined.filter(sP) else joined
     val diff = joinedKept
       .withColumn(OpCol, op)
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -586,39 +469,10 @@ object Merge {
       val actionedKeys = diff.filter(actioned)
         .select(col(s"$targetAlias.$FileC").as(FileC), col(s"$targetAlias.$PosC").as(PosC))
       val (keysSide, keysBroadcast) = rewriteSide(actionedKeys, probe)
-      val changed = (updated.toSeq ++ inserted.toSeq)
-        .reduceOption(_.unionByName(_))
-      val newFiles =
-        if (modified.nonEmpty && splitRewriteOk(table, entries, keysBroadcast, Set.empty)) {
-          // split rewrite: retained rows stream per file, the changed
-          // rows cluster separately — see [[splitRewriteOk]]
-          val s2 = perFileSession(spark, entries)
-          val full = new TableScan(s2, table, explicitFiles = Some(entries),
-            withFileColumns = true).toDF()
-          val retained = full.join(keysSide, Seq(FileC, PosC), "left_anti")
-            .select(schema.fieldNames.toSeq.map(col): _*)
-          val rebuilt = LakeWriter.write(s2, table, retained, preserveDistribution = true)
-          val appended = changed.filterNot(_.isEmpty)
-            .map(d => LakeWriter.write(spark, table, d,
-              clusterBounds = LakeWriter.clusterBoundsOf(table, entries)))
-            .getOrElse(Seq.empty)
-          rebuilt ++ appended
-        } else {
-          val retained =
-            if (modified.isEmpty) None
-            else {
-              val full = new TableScan(spark, table, explicitFiles = Some(entries),
-                withFileColumns = true).toDF()
-              Some(full.join(keysSide, Seq(FileC, PosC), "left_anti")
-                .select(schema.fieldNames.toSeq.map(col): _*))
-            }
-          val pieces = (retained.toSeq ++ changed.toSeq)
-          if (pieces.isEmpty)
-            return CommitMetrics(fromSnapshot.getOrElse(0L), 0, 0, 0, 0, 0)
-          val newData = pieces.reduce(_.unionByName(_))
-          val bounds = LakeWriter.clusterBoundsOf(table, entries)
-          LakeWriter.write(spark, table, newData, clusterBounds = bounds)
-        }
+      val changed = (updated.toSeq ++ inserted.toSeq).reduceOption(_.unionByName(_))
+      val newFiles = rewriteFiles(spark, table, entries, keysBroadcast, Set.empty,
+        _.join(keysSide, Seq(FileC, PosC), "left_anti").select(schema.fieldNames.toSeq.map(col): _*),
+        changed, "merge")
       if (newFiles.isEmpty && modified.isEmpty)
         return CommitMetrics(fromSnapshot.getOrElse(0L), 0, 0, 0, 0, 0)
       // the key-bound predicate is also the conflict scope: a concurrent
@@ -725,7 +579,6 @@ object Merge {
     * superset of the source keys, so dropping non-matching rows stays
     * sound. Any unexpected pred shape returns AlwaysTrue (no residual). */
   private[commands] def residualOf(pred: Pred, maxRanges: Int = MaxResidualRanges): Pred = {
-    def lv(a: Any) = a.asInstanceOf[Number].longValue
     // collect (lo, hi) leaves and an optional IsNull; bail on anything else
     var col: String = null
     var hasNull = false
@@ -741,23 +594,38 @@ object Merge {
       case _ => false
     }
     if (!walk(pred) || ranges.isEmpty) return AlwaysTrue
-    val sorted = ranges.sortBy(r => lv(r._1)).toSeq
-    val out = scala.collection.mutable.ArrayBuffer[(Any, Any)](sorted.head)
-    if (sorted.length > maxRanges) {
-      // keep only the maxRanges-1 largest gaps as splits
-      val keep = sorted.sliding(2).zipWithIndex.collect {
-        case (scala.collection.Seq((_, e), (s, _)), i) => (lv(s) - lv(e), i)
+    rangesPred(col, coarsen(ranges.sortBy(r => longOf(r._1)).toSeq, maxRanges), hasNull)
+  }
+
+  private def longOf(a: Any): Long = a.asInstanceOf[Number].longValue
+
+  /** Merge `ranges` (disjoint, sorted by lower bound) down to at most
+    * `maxRanges` by closing the smallest inter-range gaps first — only
+    * the `maxRanges - 1` largest gaps stay splits. Coverage only widens,
+    * so the result is still a superset of the input's keys. */
+  private[commands] def coarsen(ranges: Seq[(Any, Any)], maxRanges: Int): Seq[(Any, Any)] =
+    if (ranges.length <= maxRanges) ranges
+    else {
+      val keepGaps = ranges.sliding(2).zipWithIndex.collect {
+        case (scala.collection.Seq((_, e), (s, _)), i) => (longOf(s) - longOf(e), i)
       }.toSeq.sortBy(-_._1).take(maxRanges - 1).map(_._2).toSet
-      sorted.zipWithIndex.drop(1).foreach { case ((a, b), i) =>
-        if (keep.contains(i - 1)) out += ((a, b))
+      val out = scala.collection.mutable.ArrayBuffer.empty[(Any, Any)]
+      ranges.zipWithIndex.foreach { case ((a, b), i) =>
+        if (out.isEmpty || keepGaps.contains(i - 1)) out += ((a, b))
         else out(out.length - 1) = (out.last._1, b)
       }
-    } else out ++= sorted.drop(1)
-    val base = out.map { case (a, b) =>
-      if (a == b) Eq(col, a) else And(Ge(col, a), Le(col, b)): Pred
-    }.reduceLeft[Pred](Or.apply)
-    if (hasNull) Or(base, IsNull(col)) else base
+      out.toSeq
+    }
+
+  /** `k` in any of `ranges` (a point range as Eq), OR `k IS NULL` when
+    * `withNull` (the null-safe key join matches null to null). */
+  private def rangesPred(k: String, ranges: Seq[(Any, Any)], withNull: Boolean): Pred = {
+    val base = ranges.map { case (a, b) =>
+      if (a == b) Eq(k, a) else And(Ge(k, a), Le(k, b)): Pred
+    }.reduceLeftOption[Pred](Or.apply).getOrElse(AlwaysFalse)
+    if (withNull) Or(base, IsNull(k)) else base
   }
+
   /** Bucket count for the distributed range compaction: fine enough to
     * find every gap wider than span/4096, coarse enough that the
     * per-bucket (min, max) collect stays a few-thousand-row metadata
@@ -806,15 +674,13 @@ object Merge {
         min(col(k)).as("mn"), max(col(k)).as("mx"),
         max(when(col(k).isNull, 1).otherwise(0)).as("hasNull")).head()
       val hasNull = !mm.isNullAt(2) && mm.getInt(2) == 1
-      def withNull(base: Pred): Pred = if (hasNull) Or(base, IsNull(k)) else base
       if (mm.isNullAt(0)) // empty source or all-null keys
-        return withNull(AlwaysFalse)
-      def lv(a: Any) = a.asInstanceOf[Number].longValue
-      val (mn, mx) = (lv(mm.get(0)), lv(mm.get(1)))
+        return rangesPred(k, Seq.empty, hasNull)
+      val (mn, mx) = (longOf(mm.get(0)), longOf(mm.get(1)))
       val span = try Math.subtractExact(mx, mn) catch {
         case _: ArithmeticException => return AlwaysTrue // > Long range: rare, keep full scan
       }
-      if (span <= 0) return withNull(Eq(k, mm.get(0)))
+      if (span <= 0) return rangesPred(k, Seq((mm.get(0), mm.get(0))), hasNull)
       // bucket width: ceil(span+1 / PruneBuckets), >= 1
       val width = math.max(span / PruneBuckets + 1L, 1L)
       // floor of the double division is monotone in the key (double
@@ -835,25 +701,7 @@ object Merge {
           runs(runs.length - 1) = (b, runs.last._2, bmx)
         else runs += ((b, bmn, bmx))
       }
-      val ranges0 = runs.toSeq.map { case (_, a, b) => (a, b) }
-      val ranges =
-        if (ranges0.length <= MaxPruneRanges) ranges0
-        else {
-          // close the smallest gaps first until within the cap
-          val keepGaps = ranges0.sliding(2).zipWithIndex.collect {
-            case (scala.collection.Seq((_, e), (s, _)), i) => (lv(s) - lv(e), i)
-          }.toSeq.sortBy(-_._1).take(MaxPruneRanges - 1).map(_._2).toSet
-          val out = scala.collection.mutable.ArrayBuffer.empty[(Any, Any)]
-          ranges0.zipWithIndex.foreach { case ((a, b), i) =>
-            if (out.isEmpty || keepGaps.contains(i - 1)) out += ((a, b))
-            else out(out.length - 1) = (out.last._1, b)
-          }
-          out.toSeq
-        }
-      val base = ranges.map { case (a, b) =>
-        if (a == b) Eq(k, a) else And(Ge(k, a), Le(k, b)): Pred
-      }.reduceLeft[Pred](Or.apply)
-      withNull(base) // null-safe key join: null matches null
+      rangesPred(k, coarsen(runs.toSeq.map { case (_, a, b) => (a, b) }, MaxPruneRanges), hasNull)
     } else {
       val rows = source.select(keyCols.map(col): _*).distinct()
         .limit(MaxPruneKeys + 1).collect()
@@ -880,9 +728,6 @@ object Merge {
   private def probeCardinalityAndModified(diff: DataFrame, tPresent: Column,
       sPresent: Column, fileCol: String, posCol: String,
       modifiedCond: Column): ProbeResult = {
-    if (sys.env.contains("GRAFT_MERGE_DEBUG_PLAN"))
-      System.err.println("[merge-plan] diff executed plan:\n" +
-        diff.queryExecution.executedPlan.treeString)
     val rows = diff.filter(tPresent)
       .groupBy(col(fileCol), col(posCol))
       .agg(
@@ -905,73 +750,62 @@ object Merge {
 
   private final case class ProbeResult(modified: Set[String], actionedKeyBytes: Long)
 
-  /** Join-side wrapper for the rewrite's (_file,_pos) actioned-key list.
-    * The SHJ default still SHUFFLES the full-width rebuilt-file rows on
-    * (_file,_pos) just to meet a key list that is batch-proportional by
-    * construction — at sf10 that exchange is most of the rewrite wall.
-    * When the probe's exact byte estimate fits the budget, BROADCAST the
-    * key list instead: the full-width side then streams scan->join->
-    * clustered write with no exchange before the write's own clustering.
-    * Past the budget (one knob, a real cluster sizes it like any
-    * broadcast cap) the shape degrades to the spill-free shuffled hash
-    * as before. */
-  private def rewriteSide(keys: DataFrame, probe: ProbeResult): (DataFrame, Boolean) = {
-    val cap = sys.props.get("graft.merge.rewriteBroadcastMax")
-      .map(org.apache.spark.network.util.JavaUtils.byteStringAsBytes)
-      .getOrElse(64L << 20)
-    if (knob("rewriteBroadcast", true) && probe.actionedKeyBytes > 0 &&
-        probe.actionedKeyBytes <= cap)
+  /** Join side for the rewrite's (_file,_pos) actioned-key list —
+    * broadcast within [[RewriteBroadcastMax]] by the probe's exact byte
+    * estimate, shuffled-hash past it (see the join-strategy note at the
+    * top). Returns the side and whether it broadcast. */
+  private def rewriteSide(keys: DataFrame, probe: ProbeResult): (DataFrame, Boolean) =
+    if (probe.actionedKeyBytes > 0 && probe.actionedKeyBytes <= RewriteBroadcastMax)
       (broadcast(keys), true)
-    else (shj(keys, knob("rewriteShj", true)), false)
-  }
+    else (keys.hint("shuffle_hash"), false)
 
-  /** Split-rewrite eligibility (round 15): with the actioned keys
-    * BROADCAST, the retained-row rebuild is a map-side join over the
-    * modified files' scan — partitioning and intra-file order survive,
-    * so those full-width rows can be written back PER FILE with zero
-    * exchange and zero sort (LakeEngine's DML passthrough shape), while
-    * the batch-proportional new rows cluster separately. This is the
-    * reference's own flow: rewrite the touched files, append the new
-    * data as its own files. Ineligible when the table is partitioned,
-    * when the rebuild touches a sort column (per-file order would not
-    * survive), or when the keys didn't broadcast (an SHJ exchanges and
-    * re-partitions the full-width rows anyway). */
-  private def splitRewriteOk(table: LakeTable, entries: Seq[FileEntry],
-      keysBroadcast: Boolean, modifiedCols: Set[String]): Boolean = {
-    // the split saves the retained rows' cluster EXCHANGE + sort at the
-    // price of a second write job and a forked scan session — fixed
-    // costs that dominate when the rebuilt volume is tiny (measured at
-    // sf0.1: scd walls +60% with the split always-on, -19% at sf10).
-    // Engage only past a rebuilt-bytes floor, like the probe split.
-    val minBytes = sys.props.get("graft.merge.splitRewriteMinBytes")
-      .map(org.apache.spark.network.util.JavaUtils.byteStringAsBytes)
-      .getOrElse(64L << 20)
-    knob("splitRewrite", true) && keysBroadcast &&
-      table.metadata.partitionSpec.isEmpty && entries.nonEmpty &&
+  /** Rebuilt-bytes floor of the split rewrite. The split saves the
+    * retained rows' cluster EXCHANGE + sort at the price of a second
+    * write job and a forked scan session — fixed costs that dominate
+    * when the rebuilt volume is tiny (measured at sf0.1: scd walls +60%
+    * with the split always-on, -19% at sf10). Lowered only by specs that
+    * pin the split's file layout on test-sized tables. */
+  @volatile private[commands] var splitRewriteMinBytes: Long = 64L << 20
+
+  /** Writes the rewrite of `entries` — `rebuild` over their full scan
+    * (with file columns) — plus the `added` rows, and returns the staged
+    * files.
+    *
+    * Split rewrite (round 15): with the actioned keys BROADCAST, the
+    * rebuild is a map-side join over the modified files' scan —
+    * partitioning and intra-file order survive, so those full-width rows
+    * are written back PER FILE ([[LakeEngine.perFileSession]]) with zero
+    * exchange and zero sort, while the batch-proportional added rows
+    * cluster separately. This is the reference's own flow: rewrite the
+    * touched files, append the new data as its own files. Ineligible
+    * below [[splitRewriteMinBytes]], when the table is partitioned, when
+    * the rebuild touches a sort column (per-file order would not
+    * survive), or when the keys didn't broadcast (a shuffled hash join
+    * re-partitions the full-width rows anyway); then everything unions
+    * into one clustered write. Both shapes cluster by the touched files'
+    * bounds, so inserts beyond every bound get their own tail file. */
+  private def rewriteFiles(spark: SparkSession, table: LakeTable, entries: Seq[FileEntry],
+      keysBroadcast: Boolean, modifiedCols: Set[String], rebuild: DataFrame => DataFrame,
+      added: Option[DataFrame], label: String): Seq[FileEntry] = {
+    def rebuilt(session: SparkSession): DataFrame = rebuild(new TableScan(session, table,
+      explicitFiles = Some(entries), withFileColumns = true).toDF())
+    val bounds = LakeWriter.clusterBoundsOf(table, entries)
+    val split = keysBroadcast && entries.nonEmpty &&
+      table.metadata.partitionSpec.isEmpty &&
       entries.forall(_.sizeBytes > 0) &&
-      entries.map(_.sizeBytes).sum >= minBytes &&
+      entries.map(_.sizeBytes).sum >= splitRewriteMinBytes &&
       !table.metadata.sortOrder.exists(sf => modifiedCols.contains(sf.column))
-  }
-
-  /** Per-file-split scan session for passthrough rewrites: one split
-    * per (slice of a) touched file, no cross-file packing — the same
-    * bin-packing pin as LakeEngine's DML passthrough. */
-  private def perFileSession(spark: SparkSession, entries: Seq[FileEntry]): SparkSession = {
-    val s2 = spark.newSession()
-    // newSession() starts from defaults, NOT the parent's runtime conf —
-    // without this copy the split-rewrite's scan/write could run under
-    // different settings (session timezone, legacy parquet flags, caller
-    // overrides) than the probe/diff scans that decided which rows keep.
-    spark.conf.getAll.foreach { case (k, v) =>
-      if (s2.conf.isModifiable(k) && s2.conf.getOption(k) != Some(v))
-        s2.conf.set(k, v)
+    if (split) {
+      val s2 = LakeEngine.perFileSession(spark, entries)
+      val kept = LakeEngine.timed(s"$label.rewrite.rebuilt")(
+        LakeWriter.write(s2, table, rebuilt(s2), preserveDistribution = true))
+      val appended = added.filterNot(_.isEmpty).map(d => LakeEngine.timed(s"$label.rewrite.appended")(
+        LakeWriter.write(spark, table, d, clusterBounds = bounds)))
+      kept ++ appended.getOrElse(Seq.empty)
+    } else {
+      val pieces = (if (entries.isEmpty) None else Some(rebuilt(spark))).toSeq ++ added
+      if (pieces.isEmpty) Seq.empty
+      else LakeWriter.write(spark, table, pieces.reduce(_.unionByName(_)), clusterBounds = bounds)
     }
-    val maxSz = entries.map(_.sizeBytes).max
-    val splitsPerFile =
-      math.max(1L, spark.sparkContext.defaultParallelism.toLong / entries.size)
-    val split = math.max(maxSz / splitsPerFile + 1L, 8L << 20)
-    s2.conf.set("spark.sql.files.maxPartitionBytes", split.toString)
-    s2.conf.set("spark.sql.files.openCostInBytes", split.toString)
-    s2
   }
 }

@@ -26,7 +26,8 @@ final class TableScan(
     allowFullTableScan: Boolean = true,
     sizeLimitMiB: Option[Long] = None,
     withFileColumns: Boolean = false,
-    // DML rebuild path: scan exactly these files (no pruning, no residual)
+    // scan exactly these files (no file pruning); `pred` still applies as
+    // the row residual, AlwaysTrue for rebuild scans that keep every row
     explicitFiles: Option[Seq[FileEntry]] = None) {
 
   val FileCol = "_file"

@@ -1,22 +1,15 @@
 package graft.tools
 
 import graft._
-import graft.commands.LakeEngine
-import graft.format._
-import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
-/** Round-14 sf10 measurement of the three changes this round landed:
+/** Round-14 sf10 measurement of two read-side changes:
   *
   *  1. `sim_kmeans` rewrite (native argmin kernel + fused update) vs
   *     the recorded 57.5 s wall.
   *  2. Bloom semi-join prefilter inside the REGISTRY q5/q3 (on/off via
   *     `graft.bloom.semijoin`), exec-only, plans prepared once.
-  *  3. DELETE keep-prefilter pushdown (`graft.dml.keepPrefilter`):
-  *     BenchDml's dml_delete scenario (8-file date-sorted orders, 15%
-  *     date-range DELETE), interleaved A/B on fresh metadata clones.
   */
 object Exp23 {
   def main(args: Array[String]): Unit = {
@@ -73,66 +66,6 @@ object Exp23 {
       val ts = times(name)
       println(f"== exp23 $name%-12s min ${ts.min}%.3f  " +
         f"passes ${ts.map(t => f"$t%.3f").mkString(", ")}")
-    }
-
-    // ---- dml_delete A/B (BenchDml's scenario shape) ----
-    val root = Files.createTempDirectory("graft-exp23-")
-    try {
-      val orders = Tables.orders(spark, sfDir)
-      val stats = orders.agg(
-        min(col("o_orderdate")), max(col("o_orderdate")), count(lit(1))).head()
-      val (minD, maxD) =
-        (stats.getAs[java.time.LocalDateTime](0), stats.getAs[java.time.LocalDateTime](1))
-      val n = stats.getLong(2)
-      val dSpanSec = java.time.Duration.between(minD, maxD).getSeconds
-      val fmt = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")
-      val d1s = minD.plusSeconds((dSpanSec * 0.30).toLong).withNano(0).format(fmt)
-      val d2s = minD.plusSeconds((dSpanSec * 0.45).toLong).withNano(0).format(fmt)
-      val delCond = s"o_orderdate >= TIMESTAMP_NTZ'$d1s' AND o_orderdate < TIMESTAMP_NTZ'$d2s'"
-      val catalog = new LakeCatalog(root.toString)
-      val engine = new LakeEngine(spark, catalog)
-      val base = catalog.createTable("orders_del", orders.schema,
-        sortOrder = Seq(SortField("o_orderdate")),
-        properties = Map("write.max-records-per-file" -> math.max(n / 8, 1L).toString))
-      engine.insert(base, orders)
-      def copyTree(src: Path, dst: Path): Unit = {
-        import scala.jdk.CollectionConverters._
-        Files.walk(src).iterator().asScala.foreach { p =>
-          val t = dst.resolve(src.relativize(p))
-          if (Files.isDirectory(p)) Files.createDirectories(t)
-          else { Files.createDirectories(t.getParent); Files.copy(p, t) }
-        }
-      }
-      var runIdx = 0
-      def freshClone(): LakeTable = {
-        runIdx += 1
-        val loc = root.resolve(s"run-$runIdx")
-        copyTree(Paths.get(base.location, "metadata"), loc.resolve("metadata"))
-        Files.createDirectories(loc.resolve("data"))
-        LakeTable.load(loc.toString)
-      }
-      val dtimes = scala.collection.mutable.Map.empty[String, List[Double]]
-        .withDefaultValue(Nil)
-      for (round <- 0 to passes; on <- Seq(true, false)) {
-        spark.conf.set("graft.dml.keepPrefilter", on.toString)
-        val t = freshClone()
-        val t0 = System.nanoTime()
-        engine.delete(t, delCond)
-        val sec = (System.nanoTime() - t0) / 1e9
-        spark.conf.unset("graft.dml.keepPrefilter")
-        val name = if (on) "del_prefilter" else "del_plain"
-        if (round > 0) dtimes(name) = dtimes(name) :+ sec
-        System.gc()
-      }
-      Seq("del_prefilter", "del_plain").foreach { name =>
-        val ts = dtimes(name)
-        println(f"== exp23 $name%-13s min ${ts.min}%.3f  " +
-          f"passes ${ts.map(t => f"$t%.3f").mkString(", ")}")
-      }
-    } finally {
-      import scala.jdk.CollectionConverters._
-      Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(Files.delete)
     }
     spark.stop()
   }

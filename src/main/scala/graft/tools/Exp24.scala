@@ -13,8 +13,7 @@ import org.apache.spark.sql.functions._
   *  - kmeans with the native fixed-point conversion kernel
   *    (graft_to_fixed) on top of the argmin/vecsum rewrite.
   *  - dml_delete / dml_update under the NEW write layout (32 MB row
-  *    groups) with the split passthrough, 2x2: split on/off x keep
-  *    prefilter on/off, interleaved on fresh metadata clones.
+  *    groups), interleaved on fresh metadata clones.
   *  - q_date_extract / q13 floor probes: bare scan+count of the same
   *    columns, so the residual over the floor is attributable.
   */
@@ -127,28 +126,19 @@ object Exp24 {
         Files.createDirectories(loc.resolve("data"))
         LakeTable.load(loc.toString)
       }
-      val arms = Seq(
-        ("del_split_pf", baseDel, true, true, true),
-        ("del_split_nopf", baseDel, true, false, true),
-        ("del_1task", baseDel, false, true, true),
-        ("upd_split", baseUpd, true, true, false),
-        ("upd_1task", baseUpd, false, true, false))
+      val arms = Seq(("delete", baseDel, true), ("update", baseUpd, false))
       val dtimes = scala.collection.mutable.Map.empty[String, List[Double]]
         .withDefaultValue(Nil)
-      for (round <- 0 to passes; (name, base, split, pf, isDel) <- arms) {
-        spark.conf.set("graft.dml.splitPassthrough", split.toString)
-        spark.conf.set("graft.dml.keepPrefilter", pf.toString)
+      for (round <- 0 to passes; (name, base, isDel) <- arms) {
         val t = freshClone(base)
         val t0 = System.nanoTime()
         if (isDel) engine.delete(t, delCond)
         else engine.update(t, updCond, Map("o_totalprice" -> "o_totalprice + 1.0"))
         val sec = (System.nanoTime() - t0) / 1e9
-        spark.conf.unset("graft.dml.splitPassthrough")
-        spark.conf.unset("graft.dml.keepPrefilter")
         if (round > 0) dtimes(name) = dtimes(name) :+ sec
         System.gc()
       }
-      arms.foreach { case (name, _, _, _, _) =>
+      arms.foreach { case (name, _, _) =>
         val ts = dtimes(name)
         println(f"== exp24 $name%-14s min ${ts.min}%.3f  " +
           f"passes ${ts.map(t => f"$t%.3f").mkString(", ")}")

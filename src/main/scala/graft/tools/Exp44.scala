@@ -17,8 +17,9 @@ import org.apache.spark.sql.functions._
   * then:
   *  - phase-times each merge via GRAFT_MERGE_TIMING (set it when
   *    launching) — keyPrune / planFiles / diffProbe / rewrite / commit;
-  *  - A/Bs the forked-session split rewrite (graft.merge.splitRewrite)
-  *    on THIS dataset, arms interleaved, min-of-N.
+  *  - A/Bs the interior-bound cluster split target
+  *    (graft.write.clusterSplitTargetBytes) on THIS dataset, arms
+  *    interleaved, min-of-N.
   *
   * Run: GRAFT_MERGE_TIMING=1 SPARK_GRAFT_SF_DIR=/tmp/sf10 \
   *        sbt -batch "runMain graft.tools.Exp44"

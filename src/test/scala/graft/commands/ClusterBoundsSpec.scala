@@ -78,22 +78,20 @@ class ClusterBoundsSpec extends SparkSpec {
   }
 
   test("changes-mode scd1 (clustered fallback): inserts land in the tail bucket, ranges stay disjoint") {
-    // pin the CLUSTERED rewrite (the splitRewrite fallback for SHJ keys
-    // / partitioned tables): one write, disjoint ranges everywhere
-    sys.props("graft.merge.splitRewrite") = "false"
-    try {
-      val t2 = scd1Scenario(
-        java.nio.file.Files.createTempDirectory("graft-cb2-").toString)
-      assertNonOverlapping(keyRanges(t2, "k"))
-      checkScd1End(t2)
-    } finally sys.props.remove("graft.merge.splitRewrite")
+    // the CLUSTERED rewrite (test-sized files sit under the split
+    // rewrite's rebuilt-bytes floor): one write, disjoint ranges everywhere
+    val t2 = scd1Scenario(
+      java.nio.file.Files.createTempDirectory("graft-cb2-").toString)
+    assertNonOverlapping(keyRanges(t2, "k"))
+    checkScd1End(t2)
   }
 
   test("changes-mode scd1 (split rewrite): rebuilt files stay disjoint, new rows in their own files") {
     // drop the rebuilt-bytes floor so the split engages on test-sized data
-    sys.props("graft.merge.splitRewriteMinBytes") = "0"
+    val floor = Merge.splitRewriteMinBytes
+    Merge.splitRewriteMinBytes = 0L
     try splitScenario()
-    finally sys.props.remove("graft.merge.splitRewriteMinBytes")
+    finally Merge.splitRewriteMinBytes = floor
   }
 
   private def splitScenario(): Unit = {

@@ -4,12 +4,10 @@ import graft.SparkSpec
 import graft.format._
 import org.apache.spark.sql.functions._
 
-/** Round-16 pin for the fused DML probe (verdict #1 shape b): when
-  * stats prove some candidates touched, ambiguous candidates ride the
-  * rewrite scan speculatively with per-file matched-row counts
-  * observed in the same job — and a speculated file that had NO
-  * matching rows is NEVER swapped by the commit (redo path), so the
-  * reference's rewrite-only-touched-files contract holds exactly. */
+/** Pins the DML probe on a mixed candidate set: some files provably
+  * touched by stats, some ambiguous. An ambiguous candidate that holds
+  * NO matching row is NEVER swapped by the commit, so the reference's
+  * rewrite-only-touched-files contract holds exactly. */
 class FusedProbeSpec extends SparkSpec {
 
   /** Table with three single-commit files:
@@ -38,27 +36,23 @@ class FusedProbeSpec extends SparkSpec {
   }
 
   test("fused path commits only truly-touched files; untouched speculation is redone away") {
-    for (fused <- Seq(true, false)) {
-      val dir = java.nio.file.Files.createTempDirectory("graft-fused-").toString
-      val (engine, t) = mkTable(dir)
-      val (pathA, pathB, pathC) =
-        (fileByMinK(t, 0), fileByMinK(t, 200), fileByMinK(t, 300))
-      // A provably-all (range covers 0..99 entirely, no nulls), B
-      // ambiguous-with-matches (210 inside 200..249), C ambiguous-no-
-      // matches (310 inside C's 300..340 stats range, but no row = 310)
-      spark.conf.set("graft.dml.fusedProbe", fused.toString)
-      try engine.delete(t, "(k >= 0 AND k <= 99) OR (k >= 205 AND k <= 215) OR k = 310")
-      finally spark.conf.unset("graft.dml.fusedProbe")
-      val after = LakeTable.load(t.location)
-      val paths = after.currentFiles().map(_.path).toSet
-      assert(!paths.contains(pathA), s"A must be rewritten (fused=$fused)")
-      assert(!paths.contains(pathB), s"B must be rewritten (fused=$fused)")
-      assert(paths.contains(pathC),
-        s"C contains no matching rows and must SURVIVE the commit untouched (fused=$fused)")
-      val left = engine.scan(after).toDF().orderBy("k").collect().map(_.getLong(0)).toSeq
-      assert(left == ((200L to 204L) ++ (216L to 249L) ++ Seq(300L, 320L, 340L)),
-        s"wrong surviving rows (fused=$fused)")
-    }
+    val dir = java.nio.file.Files.createTempDirectory("graft-fused-").toString
+    val (engine, t) = mkTable(dir)
+    val (pathA, pathB, pathC) =
+      (fileByMinK(t, 0), fileByMinK(t, 200), fileByMinK(t, 300))
+    // A provably-all (range covers 0..99 entirely, no nulls), B
+    // ambiguous-with-matches (210 inside 200..249), C ambiguous-no-
+    // matches (310 inside C's 300..340 stats range, but no row = 310)
+    engine.delete(t, "(k >= 0 AND k <= 99) OR (k >= 205 AND k <= 215) OR k = 310")
+    val after = LakeTable.load(t.location)
+    val paths = after.currentFiles().map(_.path).toSet
+    assert(!paths.contains(pathA), "A must be rewritten")
+    assert(!paths.contains(pathB), "B must be rewritten")
+    assert(paths.contains(pathC),
+      "C contains no matching rows and must SURVIVE the commit untouched")
+    val left = engine.scan(after).toDF().orderBy("k").collect().map(_.getLong(0)).toSeq
+    assert(left == ((200L to 204L) ++ (216L to 249L) ++ Seq(300L, 320L, 340L)),
+      "wrong surviving rows")
   }
 
   test("fused path with all speculations confirmed commits in one pass") {
@@ -66,9 +60,7 @@ class FusedProbeSpec extends SparkSpec {
     val (engine, t) = mkTable(dir)
     val pathC = fileByMinK(t, 300)
     // covers A fully, B partially with real matches; C not a candidate
-    spark.conf.set("graft.dml.fusedProbe", "true")
-    try engine.delete(t, "k >= 0 AND k <= 220")
-    finally spark.conf.unset("graft.dml.fusedProbe")
+    engine.delete(t, "k >= 0 AND k <= 220")
     val after = LakeTable.load(t.location)
     assert(after.currentFiles().map(_.path).toSet.contains(pathC))
     val left = engine.scan(after).toDF().orderBy("k").collect().map(_.getLong(0)).toSeq
@@ -79,9 +71,7 @@ class FusedProbeSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-fused3-").toString
     val (engine, t) = mkTable(dir)
     val pathC = fileByMinK(t, 300)
-    spark.conf.set("graft.dml.fusedProbe", "true")
-    try engine.update(t, "(k >= 0 AND k <= 99) OR k = 310", Map("v" -> "-1"))
-    finally spark.conf.unset("graft.dml.fusedProbe")
+    engine.update(t, "(k >= 0 AND k <= 99) OR k = 310", Map("v" -> "-1"))
     val after = LakeTable.load(t.location)
     assert(after.currentFiles().map(_.path).toSet.contains(pathC),
       "C has no k=310 row and must survive untouched")

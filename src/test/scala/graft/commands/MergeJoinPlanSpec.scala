@@ -72,14 +72,14 @@ class MergeJoinPlanSpec extends SparkSpec {
         col("id").as("k"), lit(99.0).as("v"), lit("U").as("op"))
       .unionByName(spark.range(10000, 10010).select(
         col("id").as("k"), lit(5.0).as("v"), lit("I").as("op")))
-    // the split rewrite runs its per-file scan in a forked session whose
-    // listener bus this capture can't see — pin the join shapes on the
-    // clustered fallback (ClusterBoundsSpec pins the split's file layout)
-    sys.props("graft.merge.splitRewrite") = "false"
-    val plans = try capturePlans(dir) {
+    // test-sized files sit under Merge.splitRewriteMinBytes, so the
+    // rewrite takes the clustered shape whose plans this capture sees
+    // (the split rewrite's per-file scan runs in a forked session;
+    // ClusterBoundsSpec pins the split's file layout)
+    val plans = capturePlans(dir) {
       Merge.scd1(engine, t, src, Merge.Scd1Options(
         keyCols = Seq("k"), operationTypeColumn = Some("op")))
-    } finally sys.props.remove("graft.merge.splitRewrite")
+    }
     assert(plans.exists(p => p.contains("ShuffledHashJoin") && p.contains("RightOuter")),
       s"no shuffled-hash right-outer diff join in any captured plan:\n${plans.mkString("\n---\n")}")
     assert(!plans.exists(_.contains("FullOuter")),

@@ -25,6 +25,22 @@ class ScdPruneSpec extends SparkSpec {
     (engine, t)
   }
 
+  private def rangesOf(p: Pred): Seq[(Long, Long)] = p match {
+    case Or(l, r) => rangesOf(l) ++ rangesOf(r)
+    case And(Ge(_, a), Le(_, b)) =>
+      Seq((a.asInstanceOf[Number].longValue, b.asInstanceOf[Number].longValue))
+    case Eq(_, a) =>
+      val v = a.asInstanceOf[Number].longValue; Seq((v, v))
+    case other => fail(s"unexpected pred node $other")
+  }
+
+  private def assertCovers(p: Pred, keys: Seq[Long], maxRanges: Int): Unit = {
+    val rs = rangesOf(p)
+    assert(rs.nonEmpty && rs.length <= maxRanges, s"${rs.length} ranges: $rs")
+    keys.foreach(k => assert(rs.exists { case (a, b) => k >= a && k <= b },
+      s"key $k not covered by $rs"))
+  }
+
   test("scdKeyPrunePred compacts clustered keys into ranges and planFiles drops untouched files") {
     val dir = java.nio.file.Files.createTempDirectory("graft-scdprune1-").toString
     val (_, t) = mkTable(dir)
@@ -33,13 +49,7 @@ class ScdPruneSpec extends SparkSpec {
       .unionByName(spark.range(10000, 10010).select(col("id").as("k")))
     val pred = Merge.scdKeyPrunePred(src, Seq("k"), t.schema)
     // structure: a bounded Or-tree of ranges, not an In-list
-    def countRanges(p: Pred): Int = p match {
-      case Or(l, r) => countRanges(l) + countRanges(r)
-      case And(_: Ge, _: Le) => 1
-      case _: Eq => 1
-      case other => fail(s"unexpected pred node $other")
-    }
-    assert(countRanges(pred) == 2)
+    assert(rangesOf(pred).length == 2)
     val planned = new TableScan(spark, t, pred, withFileColumns = true).planFiles()
     assert(planned.size == 1, s"expected 1 may-match file, got ${planned.size}")
   }
@@ -74,15 +84,7 @@ class ScdPruneSpec extends SparkSpec {
     val src = spark.range(0, 600000).select((col("id") * 2 + 1200).as("k"))
       .unionByName(spark.range(0, 600000).select((col("id") * 2 + 100000000L).as("k")))
     val pred = Merge.scdKeyPrunePred(src, Seq("k"), t.schema)
-    def ranges(p: Pred): Seq[(Long, Long)] = p match {
-      case Or(l, r) => ranges(l) ++ ranges(r)
-      case And(Ge(_, a), Le(_, b)) =>
-        Seq((a.asInstanceOf[Number].longValue, b.asInstanceOf[Number].longValue))
-      case Eq(_, a) =>
-        val v = a.asInstanceOf[Number].longValue; Seq((v, v))
-      case other => fail(s"unexpected pred node $other")
-    }
-    val rs = ranges(pred)
+    val rs = rangesOf(pred)
     assert(rs.length == 2, s"expected 2 ranges, got $rs")
     assert(rs.contains((1200L, 1200L + 599999 * 2)))
     assert(rs.contains((100000000L, 100000000L + 599999 * 2)))
@@ -94,18 +96,7 @@ class ScdPruneSpec extends SparkSpec {
     val keys = (0 until 100).map(i => i.toLong * 1000)
     val pred = keys.map(k => Eq("k", k): Pred).reduceLeft[Pred](Or.apply)
     val resid = Merge.residualOf(pred)
-    def ranges(p: Pred): Seq[(Long, Long)] = p match {
-      case Or(l, r) => ranges(l) ++ ranges(r)
-      case And(Ge(_, a), Le(_, b)) =>
-        Seq((a.asInstanceOf[Number].longValue, b.asInstanceOf[Number].longValue))
-      case Eq(_, a) =>
-        val v = a.asInstanceOf[Number].longValue; Seq((v, v))
-      case other => fail(s"unexpected pred node $other")
-    }
-    val rs = ranges(resid)
-    assert(rs.length <= 4, s"residual not capped: $rs")
-    keys.foreach(k => assert(rs.exists { case (a, b) => k >= a && k <= b },
-      s"key $k not covered by residual $rs"))
+    assertCovers(resid, keys, 4)
     // null-safe: IsNull rides through
     val residNull = Merge.residualOf(Or(pred, IsNull("k")))
     def hasIsNull(p: Pred): Boolean = p match {
@@ -117,6 +108,75 @@ class ScdPruneSpec extends SparkSpec {
     // unexpected shapes degrade to AlwaysTrue, never a wrong residual
     assert(Merge.residualOf(In("k", Seq(1, 2))) == AlwaysTrue)
     assert(Merge.residualOf(AlwaysTrue) == AlwaysTrue)
+  }
+
+  test("coarsening: IntegerType keys of mixed sign at the Int extremes under ANSI") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+    // 100 clusters spread over the whole Int range (more runs than the
+    // 64-range file-prune cap) plus both extremes and a cluster around 0:
+    // the bucket arithmetic subtracts the Int.MinValue minimum from
+    // Int.MaxValue-scale keys, which must not overflow under ANSI
+    val step = (1L << 32) / 100
+    val keys = ((0 until 100).map(i => Int.MinValue.toLong + i * step) ++
+      Seq(Int.MinValue + 1L, -1L, 0L, 1L, Int.MaxValue - 1L, Int.MaxValue.toLong)).distinct
+    val schema = StructType(Seq(StructField("k", IntegerType)))
+    val src = spark.createDataFrame(
+      spark.sparkContext.parallelize(keys.map(k => Row(k.toInt)), 2), schema)
+    val prev = spark.conf.getOption("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try {
+      val pred = Merge.scdKeyPrunePred(src, Seq("k"), schema)
+      assert(rangesOf(pred).length == 64, s"expected the 64-range cap: ${rangesOf(pred)}")
+      assertCovers(pred, keys, 64)
+      val resid = Merge.residualOf(pred)
+      assertCovers(resid, keys, 4)
+      // the residual as the diff scan applies it: a row filter on the
+      // Int column that keeps every source key
+      assert(src.filter(Pred.toColumn(resid)).count() == keys.size)
+    } finally prev match {
+      case Some(v) => spark.conf.set("spark.sql.ansi.enabled", v)
+      case None => spark.conf.unset("spark.sql.ansi.enabled")
+    }
+  }
+
+  test("coarsening: a one-key source (span 0) prunes to that key and rewrites one file") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-scdprune5-").toString
+    val (engine, t) = mkTable(dir)
+    val src = spark.range(1500, 1501).select(
+      col("id").as("k"), lit(99.0).as("v"), lit("U").as("op"))
+    val pred = Merge.scdKeyPrunePred(src, Seq("k"), t.schema)
+    assert(pred == Eq("k", 1500L))
+    assert(Merge.coarsen(Seq((1500L, 1500L)), 4) == Seq((1500L, 1500L)))
+    assert(Merge.residualOf(pred) == pred)
+    val before = t.currentFiles().map(_.path).toSet
+    Merge.scd1(engine, t, src, Merge.Scd1Options(
+      keyCols = Seq("k"), operationTypeColumn = Some("op")))
+    val t2 = LakeTable.load(t.location)
+    assert((before -- t2.currentFiles().map(_.path).toSet).size == 1)
+    val out = engine.scan(t2).toDF()
+    assert(out.count() == 4000L)
+    assert(out.filter(col("v") === 99.0).select("k").collect().map(_.getLong(0)).toSeq == Seq(1500L))
+  }
+
+  test("coarsening: a changes source empty after the boundary filter commits nothing") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-scdprune6-").toString
+    val (engine, t) = mkTable(dir)
+    val empty = spark.range(0, 0).select(col("id").as("k"))
+    assert(Merge.scdKeyPrunePred(empty, Seq("k"), t.schema) == AlwaysFalse)
+    // no range to coarsen: the residual degrades to no row filter
+    assert(Merge.residualOf(AlwaysFalse) == AlwaysTrue)
+    val head = t.metadata.currentSnapshotId
+    val files = t.currentFiles().map(_.path).toSet
+    // every source key lies outside the boundary k < 1000
+    val src = spark.range(2000, 2100).select(
+      col("id").as("k"), lit(99.0).as("v"), lit("U").as("op"))
+    val m = Merge.scd1(engine, t, src, Merge.Scd1Options(keyCols = Seq("k"),
+      tableFilterSql = "k < 1000", operationTypeColumn = Some("op")))
+    assert(m.addedFiles == 0 && m.removedFiles == 0)
+    val after = LakeTable.load(t.location)
+    assert(after.metadata.currentSnapshotId == head)
+    assert(after.currentFiles().map(_.path).toSet == files)
   }
 
   test("snapshot-mode scd1 keeps the full scan (absent keys become deletes)") {
