@@ -250,27 +250,6 @@ object Dedup {
       .select(col("p.a").as("id_a"), col("p.b").as("id_b"),
         lit(1.0).as("jaccard"))
       .where(lit(1.0) >= lit(threshold))
-    if (sys.env.contains("GRAFT_LSH_TIMING") &&
-        !sys.props.contains("graft.lsh.timing.off")) {
-      // Exp38 decomposition hook: force each stage once, in dependency
-      // order, so the lazy checkpoints pin shared prefixes and each
-      // printed delta attributes ONE stage's own work. Debug-only: the
-      // extra actions change the measured query, so this path never
-      // runs in the bench.
-      def t(name: String)(a: => Long): Unit = {
-        val t0 = System.nanoTime()
-        val n = a
-        System.err.println(f"[lsh] $name%-12s n=$n%-10d ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      }
-      t("kept")(kept.count())
-      t("base")(base.count())
-      t("buckets")(buckets.count())
-      t("cand")(cand.count())
-      t("repPairs")(repPairs.count())
-      t("mem")(mem.count())
-      t("expanded")(expanded.count())
-      t("internal")(internal.count())
-    }
     expanded.unionByName(internal)
   }
 

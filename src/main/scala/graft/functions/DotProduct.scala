@@ -107,30 +107,9 @@ object GraftFunctions {
       // sets, level 2 merges them) — see q_distinct_agg
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(
         "graft_distinct_set", exprs => ExactDistinctSet(exprs(0)), "scala_udf")
-      // fused triple-distinct (one buffer + one update dispatch per row
-      // for q_distinct_agg's three key columns); 4th arg: emit sets
-      // (two-level level 1) vs counts (one-level) — see ExactDistinctTriple
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_distinct_triple", exprs => {
-          // clean analysis error on misuse (ADVICE r20): wrong arity or a
-          // non-literal/non-boolean 4th arg must not surface as
-          // IndexOutOfBounds/ClassCastException during analysis
-          if (exprs.length != 4)
-            throw new IllegalArgumentException(
-              s"graft_distinct_triple expects 4 arguments (k1, k2, k3, emitSets), got ${exprs.length}")
-          val emit = exprs(3) match {
-            case org.apache.spark.sql.catalyst.expressions.Literal(b: Boolean, BooleanType) => b
-            case other => throw new IllegalArgumentException(
-              s"graft_distinct_triple expects a boolean literal 4th argument, got ${other.sql}")
-          }
-          ExactDistinctTriple(exprs(0), exprs(1), exprs(2), emitSets = emit)
-        }, "scala_udf")
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(
         "graft_count_distinct_merge",
         exprs => ExactCountDistinctMerge(exprs(0)), "scala_udf")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_distinct_set_merge",
-        exprs => ExactDistinctSetMerge(exprs(0)), "scala_udf")
       // bounded exact bucket collection (count + smallest-cap member
       // list in one buffer) — the LSH skew guard, see Dedup.cappedBuckets
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(

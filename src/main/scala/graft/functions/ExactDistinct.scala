@@ -403,8 +403,8 @@ final class AdaptiveLongSet {
 }
 
 object AdaptiveLongSet {
-  /** Distinct keys seen before judging density (tunable for tests). */
-  val ConvertAt: Int = Integer.getInteger("graft.distinct.convertAt", 4096)
+  /** Distinct keys seen before judging density. */
+  val ConvertAt: Int = 4096
   /** Hash-table slot ceiling (2^30: the last power of two whose resize
     * arithmetic fits an Int). Reaching it (~805 M distinct keys in ONE
     * group's buffer) fails with a clear message instead of hanging. */
@@ -421,8 +421,8 @@ object AdaptiveLongSet {
     * early bitmap is too cold-sparse and loses it back. Transient
     * worst case 128 B/key, still hard-capped by [[MaxWords]] (16 MiB
     * per buffer) and gated on ConvertAt, with the revert path bounding
-    * adversarial streams. Tunable: graft.distinct.maxBitsPerKey. */
-  val MaxBitsPerKey: Int = Integer.getInteger("graft.distinct.maxBitsPerKey", 1024)
+    * adversarial streams. */
+  val MaxBitsPerKey: Int = 1024
   /** Hard cap on bitmap footprint: 2^21 words = 16 MiB = 128M key span.
     * Past this even a dense set stays hashed — bounded buffer memory
     * beats bitmap speed once the span stops fitting in cache anyway. */
@@ -568,165 +568,6 @@ case class ExactDistinctSet(
   override def withNewInputAggBufferOffset(o: Int): ExactDistinctSet =
     copy(inputAggBufferOffset = o)
   override protected def withNewChildInternal(newChild: Expression): ExactDistinctSet =
-    copy(child = newChild)
-}
-
-/** Fused triple-distinct buffer: three [[AdaptiveLongSet]]s plus a
-  * last-value memo per slot. The memo turns the clustered-scan shape
-  * (lineitem rows arrive ordered by orderkey, so a buffer sees the same
-  * orderkey in runs) into a single long compare instead of a set probe.
-  */
-final class TripleDistinctBuffer {
-  val sets = Array(new AdaptiveLongSet(), new AdaptiveLongSet(), new AdaptiveLongSet())
-  // last-value memo needs an explicit "seen" flag: NO long constant is a
-  // safe "no last yet" marker (a leading real value equal to the marker
-  // would be silently skipped — caught by ExactDistinctSpec)
-  private val last = new Array[Long](3)
-  private val seen = new Array[Boolean](3)
-  def add(i: Int, v: Long): Unit =
-    if (!seen(i) || v != last(i)) { seen(i) = true; last(i) = v; sets(i).add(v) }
-  def serialize(): Array[Byte] = {
-    val parts = sets.map(_.serialize())
-    val out = new Array[Byte](4 * 3 + parts.map(_.length).sum)
-    val bb = java.nio.ByteBuffer.wrap(out)
-    parts.foreach { p => bb.putInt(p.length); bb.put(p) }
-    out
-  }
-}
-object TripleDistinctBuffer {
-  def deserialize(bytes: Array[Byte]): TripleDistinctBuffer = {
-    val b = new TripleDistinctBuffer
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    var i = 0
-    while (i < 3) {
-      val p = new Array[Byte](bb.getInt); bb.get(p)
-      b.sets(i) = AdaptiveLongSet.deserialize(p)
-      i += 1
-    }
-    b
-  }
-}
-
-/** ONE aggregate maintaining the three distinct sets of
-  * `q_distinct_agg` (suppkey, partkey, orderkey) in a single buffer:
-  * one update dispatch and one buffer indirection per input row instead
-  * of three (round-20 Exp49: the per-row distinct-set work is ~1.5 s of
-  * the 2.0 s sf10 wall over a 0.57 s scan+group floor; fusing attacks
-  * the per-row constant — guide §1.2 step 2, per-task work).
-  *
-  * `emitSets` selects the output shape:
-  *   true  — struct(ss BINARY, ps BINARY, no BIGINT): level 1 of the
-  *           two-level salted plan (orderkey emitted as a plain count —
-  *           the salt makes per-cell orderkey sets disjoint, so level 2
-  *           sums them);
-  *   false — struct(n1, n2, n3 BIGINT) (the distinct counts of k1/k2/k3;
-  *           callers select t.n1/t.n2/t.n3): the one-level plan.
-  */
-case class ExactDistinctTriple(
-    k1: Expression, k2: Expression, k3: Expression,
-    emitSets: Boolean,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[TripleDistinctBuffer] {
-
-  override def children: Seq[Expression] = Seq(k1, k2, k3)
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val bad = children.map(_.dataType).filterNot {
-      case ByteType | ShortType | IntegerType | LongType | DateType => true
-      case _ => false
-    }
-    if (bad.isEmpty) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_distinct_triple needs integral columns, got ${bad.map(_.sql).mkString(", ")}")
-  }
-  override def dataType: DataType =
-    if (emitSets) StructType(Seq(StructField("ss", BinaryType, nullable = false),
-      StructField("ps", BinaryType, nullable = false),
-      StructField("no", LongType, nullable = false)))
-    else StructType(Seq(StructField("n1", LongType, nullable = false),
-      StructField("n2", LongType, nullable = false),
-      StructField("n3", LongType, nullable = false)))
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_distinct_triple"
-
-  override def createAggregationBuffer(): TripleDistinctBuffer = new TripleDistinctBuffer
-
-  override def update(b: TripleDistinctBuffer, input: InternalRow): TripleDistinctBuffer = {
-    val v1 = k1.eval(input)
-    if (v1 != null) b.add(0, v1.asInstanceOf[Number].longValue())
-    val v2 = k2.eval(input)
-    if (v2 != null) b.add(1, v2.asInstanceOf[Number].longValue())
-    val v3 = k3.eval(input)
-    if (v3 != null) b.add(2, v3.asInstanceOf[Number].longValue())
-    b
-  }
-
-  override def merge(b: TripleDistinctBuffer, o: TripleDistinctBuffer): TripleDistinctBuffer = {
-    var i = 0
-    while (i < 3) { b.sets(i).union(o.sets(i)); i += 1 }
-    b
-  }
-
-  override def eval(b: TripleDistinctBuffer): Any =
-    if (emitSets)
-      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-        Array[Any](b.sets(0).serialize(), b.sets(1).serialize(), b.sets(2).size))
-    else
-      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-        Array[Any](b.sets(0).size, b.sets(1).size, b.sets(2).size))
-
-  override def serialize(b: TripleDistinctBuffer): Array[Byte] = b.serialize()
-  override def deserialize(bytes: Array[Byte]): TripleDistinctBuffer =
-    TripleDistinctBuffer.deserialize(bytes)
-
-  override def withNewMutableAggBufferOffset(o: Int): ExactDistinctTriple =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): ExactDistinctTriple =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): ExactDistinctTriple =
-    copy(k1 = newChildren(0), k2 = newChildren(1), k3 = newChildren(2))
-}
-
-/** Union of serialized [[AdaptiveLongSet]] values, evaluated back to a
-  * serialized set (BINARY -> BINARY): the mid-level of a three-level
-  * distinct re-aggregation, where per-partition partial sets are merged
-  * per (key, salt) cell while the final count still needs the set
-  * contents one level up. */
-case class ExactDistinctSetMerge(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[AdaptiveLongSet]
-  with UnaryLike[Expression] {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_distinct_set_merge needs a serialized set (binary), got ${t.sql}")
-  }
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_distinct_set_merge"
-
-  override def createAggregationBuffer(): AdaptiveLongSet = new AdaptiveLongSet()
-  override def update(b: AdaptiveLongSet, input: InternalRow): AdaptiveLongSet = {
-    val v = child.eval(input)
-    if (v != null) b.union(AdaptiveLongSet.deserialize(v.asInstanceOf[Array[Byte]]))
-    b
-  }
-  override def merge(b: AdaptiveLongSet, other: AdaptiveLongSet): AdaptiveLongSet = {
-    b.union(other); b
-  }
-  override def eval(b: AdaptiveLongSet): Any = b.serialize()
-  override def serialize(b: AdaptiveLongSet): Array[Byte] = b.serialize()
-  override def deserialize(bytes: Array[Byte]): AdaptiveLongSet =
-    AdaptiveLongSet.deserialize(bytes)
-  override def withNewMutableAggBufferOffset(o: Int): ExactDistinctSetMerge =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): ExactDistinctSetMerge =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(newChild: Expression): ExactDistinctSetMerge =
     copy(child = newChild)
 }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.execution.{ColumnarToRowExec, FileSourceScanExec, InputAdapter, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.functions.{DoubleUnscaled, TripleDistinctBuffer}
+import graft.functions.DoubleUnscaled
 
 /** Columnar-batch aggregate kernels for the per-row-constant class
   * (round 21; guide §1.2 step 2 "per-task work" + §4 "prefer batch
@@ -18,15 +18,18 @@ import graft.functions.{DoubleUnscaled, TripleDistinctBuffer}
   * bucket), or a TypedImperativeAggregate pays an eval + Number-box +
   * set-insert dispatch per row. DuckDB runs the same aggregations
   * vectorized over its decoded column chunks, which is the 2.0-2.6x gap
-  * the floor pins left standing.
+  * the floor pins left standing. The q_distinct_agg variant measured a
+  * wash (its cost is the distinct-set inserts and merges themselves,
+  * which a batch loop keeps identical) and is not carried; kernels
+  * exist for q_date_extract and q_events_hourly.
   *
   * These kernels run the partial aggregation BATCH-AT-A-TIME over the
   * parquet reader's own [[org.apache.spark.sql.vectorized.ColumnarBatch]]
   * vectors (`scan.executeColumnar()` — no ColumnarToRow materialization,
   * no per-row UnsafeRow), into flat primitive accumulators (an
-  * open-addressing long->slot map with parallel cnt/sum arrays, or the
-  * existing [[TripleDistinctBuffer]] sets). The FINAL aggregation stays
-  * the engine's own distributed plan over the tiny per-partition
+  * open-addressing long->slot map with parallel cnt/sum arrays). The
+  * FINAL aggregation stays the engine's own distributed plan over the
+  * tiny per-partition
   * partials — identical Catalyst expressions ([[dsumFinal]] reuses
   * dsum's exact sum-of-unscaled-longs finish), so results are
   * bit-identical and the 163-gate oracle pins them.
@@ -311,103 +314,5 @@ object BatchKernels {
         .select(
           expr("cast(timestamp_micros(b * 3600000000) as timestamp_ntz)").as("hour"),
           col("event_type"), col("n"), col("sum_value"))
-    }
-
-  /** q_distinct_agg kernel: lineitem scanned columnar, the three
-    * distinct sets maintained per (returnflag, salt(orderkey)) cell in
-    * [[TripleDistinctBuffer]]s (salt = orderkey & 7: any consistent
-    * partition of orderkeys keeps per-cell orderkey sets disjoint, which
-    * is all the two-level merge needs), partials merged by the engine's
-    * own set-merge aggregates. `base` must be lineitem projected to
-    * (l_returnflag STRING, l_suppkey, l_partkey, l_orderkey BIGINT). */
-  def distinctTriple(base: DataFrame): Option[DataFrame] =
-    scanOf(base, Seq(StringType, LongType, LongType, LongType)).map { case (scan, idx) =>
-      val spark = base.sparkSession
-      val (iFlag, iSupp, iPart, iOrd) = (idx(0), idx(1), idx(2), idx(3))
-      val rdd = scan.executeColumnar().mapPartitions { it =>
-        // returnflag values are 1-byte strings ("A"/"N"/"R"): index cells
-        // by first byte; anything longer falls back to a string map
-        val byByte = new Array[Array[TripleDistinctBuffer]](256)
-        val byStr = new java.util.HashMap[String, Array[TripleDistinctBuffer]]()
-        var sawNullFlag = false // flag null => group key null: keep a cell
-        var nullCell: Array[TripleDistinctBuffer] = null
-        def newCells(): Array[TripleDistinctBuffer] = {
-          val a = new Array[TripleDistinctBuffer](8)
-          var i = 0; while (i < 8) { a(i) = new TripleDistinctBuffer; i += 1 }
-          a
-        }
-        val names = new java.util.HashMap[Integer, String]()
-        while (it.hasNext) {
-          val b = it.next()
-          val flagV = b.column(iFlag); val suppV = b.column(iSupp)
-          val partV = b.column(iPart); val ordV = b.column(iOrd)
-          val rows = b.numRows()
-          var i = 0
-          while (i < rows) {
-            var cells: Array[TripleDistinctBuffer] = null
-            if (flagV.isNullAt(i)) {
-              if (nullCell == null) { nullCell = newCells(); sawNullFlag = true }
-              cells = nullCell
-            } else {
-              val f = flagV.getUTF8String(i)
-              if (f.numBytes() == 1) {
-                val b0 = f.getByte(0) & 0xff
-                var a = byByte(b0)
-                if (a == null) { a = newCells(); byByte(b0) = a; names.put(b0, f.toString) }
-                cells = a
-              } else {
-                val fs = f.toString
-                var a = byStr.get(fs)
-                if (a == null) { a = newCells(); byStr.put(fs, a) }
-                cells = a
-              }
-            }
-            // salt on orderkey; a null orderkey (never in TPC-H, handled
-            // anyway) lands in cell 0 and adds nothing for that key
-            val ordNull = ordV.isNullAt(i)
-            val ord = if (ordNull) 0L else ordV.getLong(i)
-            val c = cells((ord & 7).toInt)
-            if (!suppV.isNullAt(i)) c.add(0, suppV.getLong(i))
-            if (!partV.isNullAt(i)) c.add(1, partV.getLong(i))
-            if (!ordNull) c.add(2, ord)
-            i += 1
-          }
-        }
-        val out = Vector.newBuilder[Row]
-        def emit(flag: String, cells: Array[TripleDistinctBuffer]): Unit = {
-          var s = 0
-          while (s < 8) {
-            val b = cells(s)
-            out += Row(flag, s, b.sets(0).serialize(), b.sets(1).serialize(),
-              b.sets(2).serialize())
-            s += 1
-          }
-        }
-        byByte.indices.foreach { b0 =>
-          if (byByte(b0) != null) emit(names.get(b0), byByte(b0))
-        }
-        byStr.forEach((fs, cells) => emit(fs, cells))
-        if (sawNullFlag) emit(null, nullCell)
-        out.result().iterator
-      }
-      val schema = StructType(Seq(
-        StructField("l_returnflag", StringType), StructField("_salt", IntegerType),
-        StructField("ss", BinaryType), StructField("ps", BinaryType),
-        StructField("os", BinaryType)))
-      graft.functions.GraftFunctions.register(spark)
-      // level 1 merges per-(flag, salt): supp/part sets stay sets (they
-      // overlap across salts), but the orderkey sets are DISJOINT across
-      // salts by construction, so they finish to a COUNT here — shipping
-      // the merged multi-million-key orderkey set into level 2 a second
-      // time measured 2.2x slower at sf10 (Exp50 first cut)
-      spark.createDataFrame(rdd, schema)
-        .groupBy("l_returnflag", "_salt")
-        .agg(call_function("graft_distinct_set_merge", col("ss")).as("ss"),
-          call_function("graft_distinct_set_merge", col("ps")).as("ps"),
-          call_function("graft_count_distinct_merge", col("os")).as("no"))
-        .groupBy("l_returnflag")
-        .agg(call_function("graft_count_distinct_merge", col("ss")).as("n_supp"),
-          call_function("graft_count_distinct_merge", col("ps")).as("n_part"),
-          sum("no").as("n_ord"))
     }
 }

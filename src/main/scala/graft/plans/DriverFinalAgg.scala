@@ -78,15 +78,6 @@ object DriverFinalAgg {
         None
     }
 
-  /** The physical plan below the final-agg exchange (diagnostics). */
-  def partialPlanOf(df: DataFrame): Option[SparkPlan] = strip(df.queryExecution.executedPlan) match {
-    case f: HashAggregateExec => strip(f.child) match {
-      case sh: ShuffleExchangeExec => Some(sh.child)
-      case _ => None
-    }
-    case _ => None
-  }
-
   private def strip(p: SparkPlan): SparkPlan = p match {
     case w: WholeStageCodegenExec => strip(w.child)
     case i: InputAdapter => strip(i.child)

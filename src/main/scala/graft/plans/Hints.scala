@@ -34,7 +34,7 @@ object Hints {
     df.queryExecution.optimizedPlan.stats.sizeInBytes
 
   /** Cap for the MEASURED broadcast path (see [[broadcastIfSmall]]'s
-    * `countOnFail`); "0" disables it. Deliberately looser than
+    * `countOnFail`). Deliberately looser than
     * `spark.sql.autoBroadcastJoinThreshold`: that knob guards against
     * Catalyst's blind size ESTIMATES (which without CBO can be off by
     * orders of magnitude in either direction), while this one gates an
@@ -44,57 +44,28 @@ object Hints {
     * 128 MB raw stays under ~400 MB per executor — small against the
     * multi-GB executor heaps any 100 TB deployment runs, and far
     * cheaper than re-shuffling a fact table that is 3-4 orders of
-    * magnitude larger than the build side.
-    *
-    * DEFAULT UNSET ("0"): on a single-JVM local[32] "cluster" at
-    * sf10-class volumes the rescue is a measured NEGATIVE
-    * (tools/Exp21, sf10, exec-only with the count amortized at plan
-    * time: q5 2.55 s broadcast vs 2.34 s shuffled-hash, q3 2.16 vs
-    * 1.67, isolated orders join 2.00 vs 1.72) — a shuffle there is an
-    * in-memory copy, while every one of 32 threads contends on the
-    * single shared broadcast hash relation that also costs a
-    * per-execution collect+build. The economics invert as the fact
-    * side grows (sf50: q3 -12%, q5 tie — same probe, same box) and
-    * far earlier on a real cluster, where the fact-side exchange
-    * crosses the network. When UNSET, the fact-volume auto-engage
-    * ([[autoEngageFactBytes]]) applies; set this explicitly (e.g.
-    * `128MB`) to force the measured path at any volume, or `0`/`-1` to
-    * disable the measured path including auto-engage. An explicit `0`
-    * is a DISABLE, not "unset": operators who set the historical
-    * documented disable value must never be silently routed into the
-    * auto-engage path (round-20 ADVICE). Returns None when unset,
-    * Some(bytes) when set (unparseable values behave as disable). */
-  def measuredBroadcastThreshold(df: DataFrame): Option[Long] =
-    df.sparkSession.conf.getOption("graft.broadcast.measuredThreshold").map { v =>
-      try org.apache.spark.network.util.JavaUtils.byteStringAsBytes(v)
-      catch { case _: NumberFormatException => -1L }
-    }
+    * magnitude larger than the build side. */
+  val MeasuredCapBytes: Long = 128L << 20
 
   /** Fact-volume floor above which the measured-broadcast rescue
-    * engages AUTOMATICALLY when the operator left
-    * `graft.broadcast.measuredThreshold` unset (round 19, from the
-    * sf50 trend line). Exp21's single-JVM A/B made the rescue a
-    * measured negative at sf10 (fact ~1 GB: q5 2.55 s broadcast vs
-    * 2.34 s shuffled-hash) but the sign INVERTS as the fact side
-    * grows: at sf50 (fact ~4.9 GB) the same interleaved A/B read q3
-    * static-SHJ 6.14 s vs measured-broadcast 5.39 s (-12%) and q5
-    * ~tie — one build + many probes beats re-exchanging the fact even
-    * where the exchange is only an in-memory copy, and on a real
-    * cluster (where it crosses the network) the crossover comes far
-    * earlier. Callers that know their fact side pass it via
-    * [[broadcastIfSmall]]'s `factSide`; when its size estimate clears
-    * this floor the measured path engages with
-    * [[AutoMeasuredCapBytes]] as the cap. "0" disables auto-engage;
-    * an explicit `graft.broadcast.measuredThreshold` always wins. */
-  def autoEngageFactBytes(df: DataFrame): Long =
-    try org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-      df.sparkSession.conf.get("graft.broadcast.autoEngageFactBytes", "4g"))
-    catch { case _: NumberFormatException => -1L }
-
-  /** Measured cap used by the auto-engaged rescue: 128 MB of exact
-    * measured bytes builds to a ~400 MB executor hash relation — the
-    * documented cluster guidance for the explicit knob. */
-  val AutoMeasuredCapBytes: Long = 128L << 20
+    * engages (round 19, from the sf50 trend line); below it the gate
+    * stays closed. On a single-JVM local[32] "cluster" at sf10-class
+    * volumes the rescue is a measured NEGATIVE (tools/Exp21, sf10,
+    * exec-only with the count amortized at plan time: q5 2.55 s
+    * broadcast vs 2.34 s shuffled-hash, q3 2.16 vs 1.67, isolated
+    * orders join 2.00 vs 1.72) — a shuffle there is an in-memory copy,
+    * while every one of 32 threads contends on the single shared
+    * broadcast hash relation that also costs a per-execution
+    * collect+build. The sign INVERTS as the fact side grows: at sf50
+    * (fact ~4.9 GB) the same interleaved A/B read q3 static-SHJ 6.14 s
+    * vs measured-broadcast 5.39 s (-12%) and q5 ~tie — one build +
+    * many probes beats re-exchanging the fact even where the exchange
+    * is only an in-memory copy, and on a real cluster (where it crosses
+    * the network) the crossover comes far earlier. Callers that know
+    * their fact side pass it via [[broadcastIfSmall]]'s `factSide`;
+    * when its size estimate clears this floor the measured path
+    * engages with [[MeasuredCapBytes]] as the cap. */
+  private val AutoEngageFactBytes: Long = 4L << 30
 
   /** Broadcast `df` iff the size estimate of `bound` (a plan whose row
     * set provably contains `df`'s, e.g. the pre-join filtered side of a
@@ -121,7 +92,8 @@ object Hints {
     * embeds a join that is expensive to run twice). On static-gate
     * failure it is COUNTed — one real Spark job, paid only on the
     * failure path — and `df` broadcasts anyway if
-    * rows x defaultSize(df.schema) fits [[measuredBroadcastThreshold]].
+    * rows x defaultSize(df.schema) fits [[MeasuredCapBytes]] and the
+    * caller's `factSide` clears [[AutoEngageFactBytes]].
     * This is the selectivity information a cost-based optimizer reads
     * from table statistics, bought at the price of one scan of the
     * small side: at sf10 the one-year orders slice in q5 is ~37 MB of
@@ -139,27 +111,12 @@ object Hints {
     val threshold = autoBroadcastThreshold(df)
     if (threshold > 0 && sizeEstimate(bound) <= threshold) broadcast(df)
     else {
-      // Cap for the measured second chance: the operator's explicit
-      // graft.broadcast.measuredThreshold when set; otherwise the
-      // fact-volume auto-engage (see [[autoEngageFactBytes]]) — a
-      // caller-supplied fact side whose size estimate clears the floor
-      // is exactly the shape where the sf50 trend line shows the
-      // rescue catching the static shuffled-hash arm.
-      val cap =
-        if (threshold <= 0) -1L // session disabled broadcasting entirely
-        else measuredBroadcastThreshold(df) match {
-          // explicitly set: the operator's value wins outright — a set
-          // "0" (the documented disable) or "-1" keeps the gate closed
-          // and never falls through to auto-engage
-          case Some(explicit) => explicit
-          case None =>
-            val floor = autoEngageFactBytes(df)
-            if (floor > 0 && factSide.exists(f => sizeEstimate(f) >= floor))
-              AutoMeasuredCapBytes
-            else 0L
-        }
-      val measuredFit = cap > 0 && countOnFail.exists { proxy =>
-        measuredBytes(df.schema, proxy).exists(_ <= cap)
+      // measured second chance only when broadcasting is enabled and
+      // the caller's fact side is past the sf50-trend floor
+      val engaged = threshold > 0 &&
+        factSide.exists(f => sizeEstimate(f) >= AutoEngageFactBytes)
+      val measuredFit = engaged && countOnFail.exists { proxy =>
+        measuredBytes(df.schema, proxy).exists(_ <= MeasuredCapBytes)
       }
       if (measuredFit) broadcast(df)
       else if (hashFallback) df.hint("shuffle_hash")

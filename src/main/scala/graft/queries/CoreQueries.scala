@@ -114,10 +114,7 @@ object CoreQueries {
         // A/B, bit-identical results): bloom on 1.02-1.26 s vs off
         // 1.46-3.23 s — the build amortizes well past the Exp22
         // sf0.1-class volumes, so no fact-volume gate is warranted.
-        val lp =
-          if (s.conf.get("graft.bloom.semijoin", "true").toBoolean)
-            graft.plans.BloomPrune.pruned(l, col("l_orderkey"), oj, col("o_orderkey"))
-          else l
+        val lp = graft.plans.BloomPrune.pruned(l, col("l_orderkey"), oj, col("o_orderkey"))
         lp.join(graft.plans.Hints.broadcastIfSmall(oj, bound = ojBound,
             countOnFail = Some(oj), factSide = Some(l)),
             col("l_orderkey") === col("o_orderkey"))
@@ -181,15 +178,13 @@ object CoreQueries {
         // matters at 1000 executors, where pruned rows never hit the
         // network. Advisory-only: false positives pass, the join stays
         // exact, and BloomPrune degrades to a no-op past its key cap.
-        val l =
-          if (s.conf.get("graft.bloom.semijoin", "true").toBoolean)
-            graft.plans.BloomPrune.pruned(l0, col("l_orderkey"), o, col("o_orderkey"))
-          else l0
+        val l = graft.plans.BloomPrune.pruned(l0, col("l_orderkey"), o, col("o_orderkey"))
         // countOnFail: past the static bound, the one-year slice is an
         // exact ~2M-row/16B count (~34 MB at sf10) — broadcastable for
         // the price of one pushed-filter orders scan, keeping the fact
         // path exchange-free. Both proxies are scan+filter plans.
-        // (measuredThreshold defaults OFF locally — see Hints scaladoc)
+        // (the measured path engages only past a 4 GB fact side — see
+        // Hints scaladoc)
         //
         // JOIN ORDER (round 15, tools/Exp33): the ASIA dim keeps only
         // ~20% of suppliers and it BROADCASTS — joining it to lineitem
@@ -527,9 +522,9 @@ object CoreQueries {
         // Catalyst's own size estimate.
         graft.functions.GraftFunctions.register(s)
         val l = Tables.lineitem(s, d)
-        // NOT adopted (round 21): the columnar-batch variant of this
-        // aggregation (BatchKernels.distinctTriple, same shape as the
-        // adopted q_date_extract/q_events_hourly kernels) measured a
+        // NOT adopted (round 21): a columnar-batch variant of this
+        // aggregation (same shape as the adopted
+        // q_date_extract/q_events_hourly kernels) measured a
         // WASH at sf10 — Exp50 min-of-7: kernel 2.228 s vs this salted
         // plan 2.286 s — because the cost is the distinct-SET inserts
         // and merges themselves (Exp49's pin), which the kernel keeps

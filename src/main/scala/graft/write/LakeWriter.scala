@@ -7,11 +7,13 @@ import java.util.UUID
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.BlockMetaData
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
 
 /** Write pipeline (SURVEY §7.1.4; mirrors reference S6–S8 + D10):
   * cast-projection to table schema (P9) -> partition transform columns ->
@@ -141,9 +143,6 @@ object LakeWriter extends Serializable {
             // an over-estimate just takes the sampling path, an
             // under-estimate writes one larger sorted file — correct
             // either way.
-            val singleFileBytes = org.apache.spark.network.util.JavaUtils
-              .byteStringAsBytes(spark.conf.get(
-                "graft.write.singleFileThreshold", "32MB"))
             val est = sizeHintBytes.getOrElse(
               withParts.queryExecution.optimizedPlan.stats.sizeInBytes)
             // Trusted caller hint (the streaming sink measures its
@@ -155,7 +154,7 @@ object LakeWriter extends Serializable {
             // large append) would silently serialize the whole
             // scan+compute into one task — an exchange caps a wrong
             // estimate at one small shuffle instead.
-            if (est <= singleFileBytes) {
+            if (est <= SingleFileBytes) {
               if (sizeHintBytes.isDefined) withParts.coalesce(1)
               else withParts.repartition(1)
             }
@@ -189,14 +188,10 @@ object LakeWriter extends Serializable {
       // a file 4-8 independently skippable/rewritable slices (DuckDB's
       // own layout runs ~122k-row groups for the same reason).
       .option("parquet.block.size", props.getOrElse("write.parquet.row-group-size-bytes", (32 * 1024 * 1024).toString))
-    // zstd compression level for written parquet (parquet-mr default 3).
-    // Storage property, not a semantic one: the logical rows are
-    // identical at any level. Settable per table
-    // (write.parquet.zstd-level) or process-wide for A/Bs
-    // (-Dgraft.write.zstdLevel=N) — see tools/Exp51.
-    props.get("write.parquet.zstd-level")
-      .orElse(sys.props.get("graft.write.zstdLevel"))
-      .foreach(v => w = w.option("parquet.compression.codec.zstd.level", v))
+    // zstd stays at parquet-mr's default level 3: level 1 measured
+    // slower on both write-bound paths in round 21 (Exp51 sf50 scd1
+    // 13.19 vs 15.27 s; Exp53 sink addBatch +12%) — the sorted write is
+    // not encode-bound, and level 1 writes more bytes
     props.get("write.max-records-per-file").foreach(v => w = w.option("maxRecordsPerFile", v))
     // `graft.write.bloom-columns` = comma list: parquet row-group bloom
     // filters for high-cardinality point-lookup columns — min/max pruning
@@ -215,6 +210,16 @@ object LakeWriter extends Serializable {
   }
 
   private val MaxClusterBuckets = 64
+
+  /** Size estimate at or under which a sorted unpartitioned write skips
+    * range clustering and writes one file (see [[write]]). */
+  private val SingleFileBytes: Long = 32L << 20
+
+  /** Per-task byte target of [[clusterBoundsOf]]'s interior splits: a
+    * touched file adds one bound per target-sized slice (at most 8).
+    * Lowered only by specs that pin the split bounds on test-sized
+    * tables. */
+  @volatile private[write] var clusterSplitTargetBytes: Long = 8L << 20
 
   /** Upper bounds of the FIRST sort column across a rewrite's touched
     * files (canonical stats strings), for [[write]]'s `clusterBounds` —
@@ -244,10 +249,7 @@ object LakeWriter extends Serializable {
           val interior: Seq[String] = (st.flatMap(_.min), mx) match {
             case (Some(lo), Some(hi)) if integerCanonical(dt) && f.sizeBytes > 0 =>
               try {
-                val target = sys.props.get("graft.write.clusterSplitTargetBytes")
-                  .map(org.apache.spark.network.util.JavaUtils.byteStringAsBytes)
-                  .getOrElse(8L << 20)
-                val n = math.min(math.max(f.sizeBytes / target, 1L), 8L)
+                val n = math.min(math.max(f.sizeBytes / clusterSplitTargetBytes, 1L), 8L)
                 val (blo, bhi) = (BigInt(lo), BigInt(hi))
                 (1L until n).map(i => (blo + (bhi - blo) * i / n).toString)
                   .filterNot(b => b == lo || b == hi)
@@ -382,79 +384,104 @@ object LakeWriter extends Serializable {
     val files = listed.sortBy(_._1).toSeq
     if (files.isEmpty) return Seq.empty
 
-    // Configuration is not serializable; ship its entries and rebuild per task
-    val confEntries = conf.iterator().asScala.map(e => (e.getKey, e.getValue)).toArray
-    def harvestPart(iter: Iterator[(String, Long)]): Iterator[FileEntry] = {
-      val tconf = new Configuration(false)
-      confEntries.foreach { case (k, v) => tconf.set(k, v) }
-      iter.map { case (pathStr, len) =>
-        val partition: Map[String, String] = {
-          val segs = pathStr.stripPrefix(stagingStr).split('/').filter(_.nonEmpty)
-          spec.map { pf =>
-            val needle = s"${partColName(pf)}="
-            val seg = segs.find(_.startsWith(needle)).getOrElse(
-              throw new IllegalStateException(s"no partition dir for ${pf.name} in $pathStr"))
-            pf.name -> unescapePath(seg.stripPrefix(needle))
-          }.toMap
-        }
-        val reader = ParquetFileReader.open(
-          HadoopInputFile.fromPath(new HPath(pathStr), tconf))
-        try {
-          val blocks = reader.getFooter.getBlocks.asScala
-          val rowCount = blocks.map(_.getRowCount).sum
-          val statsByCol = scala.collection.mutable.Map[String, (Option[String], Option[String], Long)]()
-          blocks.foreach { b =>
-            b.getColumns.asScala.foreach { cc =>
-              val dotPath = cc.getPath.toDotString
-              if (!dotPath.contains('.') && idByName.contains(dotPath)) {
-                val st = cc.getStatistics
-                val dt = typeByName(dotPath)
-                val (mn, mx, nulls) =
-                  if (st == null || st.isEmpty) (None, None, 0L)
-                  else {
-                    val n = if (st.isNumNullsSet) st.getNumNulls else 0L
-                    if (!st.hasNonNullValue) (None, None, n)
-                    else (statToCanon(st.genericGetMin.asInstanceOf[AnyRef], dt, isMin = true),
-                      statToCanon(st.genericGetMax.asInstanceOf[AnyRef], dt, isMin = false), n)
-                  }
-                val prev = statsByCol.getOrElse(dotPath, (None: Option[String], None: Option[String], 0L))
-                statsByCol(dotPath) = (
-                  mergeBound(prev._1, mn, dt, isMin = true),
-                  mergeBound(prev._2, mx, dt, isMin = false),
-                  prev._3 + nulls)
-              }
-            }
-          }
-          val nanCounts = countNans(reader, floatColNames)
-          val stats = statsByCol.flatMap { case (name, (mn, mx, nc)) =>
-            idByName.get(name).filter(_ > 0).map(id =>
-              id.toString -> ColumnStats(mn, mx, nc, nanCount = nanCounts.get(name)))
-          }.toMap
-          FileEntry(pathStr, partition, rowCount, len, schemaId, stats, specId)
-        } finally reader.close()
+    def harvestFile(tconf: Configuration, file: (String, Long)): FileEntry = {
+      val (pathStr, len) = file
+      val partition: Map[String, String] = {
+        val segs = pathStr.stripPrefix(stagingStr).split('/').filter(_.nonEmpty)
+        spec.map { pf =>
+          val needle = s"${partColName(pf)}="
+          val seg = segs.find(_.startsWith(needle)).getOrElse(
+            throw new IllegalStateException(s"no partition dir for ${pf.name} in $pathStr"))
+          pf.name -> unescapePath(seg.stripPrefix(needle))
+        }.toMap
       }
+      val reader = ParquetFileReader.open(
+        HadoopInputFile.fromPath(new HPath(pathStr), tconf))
+      try {
+        val blocks = reader.getFooter.getBlocks.asScala
+        val rowCount = blocks.map(_.getRowCount).sum
+        val statsByCol = scala.collection.mutable.Map[String, (Option[String], Option[String], Long)]()
+        blocks.foreach { b =>
+          groupStats(b, typeByName).foreach { case (name, (mn, mx, nulls)) =>
+            val dt = typeByName(name)
+            val prev = statsByCol.getOrElse(name, (None: Option[String], None: Option[String], 0L))
+            statsByCol(name) = (
+              mergeBound(prev._1, mn, dt, isMin = true),
+              mergeBound(prev._2, mx, dt, isMin = false),
+              prev._3 + nulls)
+          }
+        }
+        val nanCounts = countNans(reader, floatColNames)
+        val stats = statsByCol.flatMap { case (name, (mn, mx, nc)) =>
+          idByName.get(name).filter(_ > 0).map(id =>
+            id.toString -> ColumnStats(mn, mx, nc, nanCount = nanCounts.get(name)))
+        }.toMap
+        FileEntry(pathStr, partition, rowCount, len, schemaId, stats, specId)
+      } finally reader.close()
     }
-    // few-file commits (a streaming micro-batch, a small DML) read their
-    // footers straight on the driver — a whole Spark job's scheduling
-    // overhead for <= 4 footer opens costs more than the opens (Exp34:
-    // ~100 ms of a ~600 ms micro-batch trigger); past that the footer IO
-    // fans out across executors as before
     // drop zero-row files (an empty cluster bucket can still emit a
     // part file): their EMPTY stats would conservatively match every
     // conflict filter / scan predicate, turning a disjoint-key
     // concurrent merge into a spurious serializable conflict. The file
     // itself stays on disk unreferenced — vacuum's job, like any other
     // uncommitted write garbage.
-    val driverMax = spark.conf.get("graft.harvest.driverMaxFiles", "4").toInt
-    val entries =
-      if (files.size <= driverMax) harvestPart(files.iterator).toSeq
-      else {
-        val slices = math.max(1, math.min(files.size, spark.sparkContext.defaultParallelism))
-        spark.sparkContext.parallelize(files, slices)
-          .mapPartitions(harvestPart).collect().toSeq
-      }
-    entries.filter(_.recordCount > 0).sortBy(_.path)
+    footerFanOut(spark, conf, files, HarvestDriverMaxFiles)(harvestFile)
+      .filter(_.recordCount > 0).sortBy(_.path)
   }
+
+  /** Few-file commits (a streaming micro-batch, a small DML) read their
+    * footers on the driver up to this many files: a whole Spark job's
+    * scheduling overhead for <= 4 footer opens costs more than the opens
+    * (Exp34: ~100 ms of a ~600 ms micro-batch trigger). */
+  private val HarvestDriverMaxFiles = 4
+
+  /** Driver-side footer reads for [[rowGroupStats]] up to this many
+    * files — a DML's ambiguous set is normally the few boundary files
+    * of a range. */
+  private val ProbeDriverMaxFiles = 8
+
+  /** Runs `read` over `items` with a Hadoop conf rebuilt from `conf`'s
+    * entries (Configuration is not serializable): on the driver when
+    * there are at most `driverMax` items, else as one `parallelize` job
+    * so footer IO fans out across executors — at 10^5–10^6 files that
+    * is what keeps a commit or probe off a serial driver loop. */
+  private def footerFanOut[A: ClassTag, B: ClassTag](spark: SparkSession,
+      conf: Configuration, items: Seq[A], driverMax: Int)(
+      read: (Configuration, A) => B): Seq[B] = {
+    val confEntries = conf.iterator().asScala.map(e => (e.getKey, e.getValue)).toArray
+    def readPart(iter: Iterator[A]): Iterator[B] = {
+      val tconf = new Configuration(false)
+      confEntries.foreach { case (k, v) => tconf.set(k, v) }
+      iter.map(read(tconf, _))
+    }
+    if (items.size <= driverMax) readPart(items.iterator).toSeq
+    else {
+      val slices = math.max(1, math.min(items.size, spark.sparkContext.defaultParallelism))
+      spark.sparkContext.parallelize(items, slices).mapPartitions(readPart).collect().toSeq
+    }
+  }
+
+  /** One row group's footer statistics for the top-level columns named
+    * in `typeByName`, decoded to canonical (min, max, nullCount) — the
+    * decode shared by [[harvest]] (merged per file) and
+    * [[rowGroupStats]] (kept per group). */
+  private def groupStats(b: BlockMetaData, typeByName: Map[String, DataType])
+      : Seq[(String, (Option[String], Option[String], Long))] =
+    b.getColumns.asScala.toSeq.flatMap { cc =>
+      val name = cc.getPath.toDotString
+      if (name.contains('.')) None
+      else typeByName.get(name).map { dt =>
+        val st = cc.getStatistics
+        name -> (
+          if (st == null || st.isEmpty) (None, None, 0L)
+          else {
+            val n = if (st.isNumNullsSet) st.getNumNulls else 0L
+            if (!st.hasNonNullValue) (None, None, n)
+            else (statToCanon(st.genericGetMin.asInstanceOf[AnyRef], dt, isMin = true),
+              statToCanon(st.genericGetMax.asInstanceOf[AnyRef], dt, isMin = false), n)
+          })
+      }
+    }
 
   /** Row-group-granular stats for already-committed files: per ROW GROUP
     * of each input file, a synthetic [[FileEntry]] carrying that group's
@@ -468,63 +495,34 @@ object LakeWriter extends Serializable {
     * re-derived per group (that would read the float pages — the very
     * IO this path avoids); [[graft.scan.StatsEvaluator]] treats a
     * missing nanCount conservatively. Footer IO is one driver-side open
-    * per file up to `graft.probe.driverMaxFiles` (default 8; a DML's
-    * ambiguous set is normally the few boundary files of a range), then
-    * fans out as a Spark job exactly like [[harvest]] — at 100 TB a
-    * wide ambiguous set parallelizes across executors. Files whose
-    * footer read fails map to None (caller falls back to the row probe). */
+    * per file up to [[ProbeDriverMaxFiles]], then fans out as a Spark
+    * job exactly like [[harvest]] — at 100 TB a wide ambiguous set
+    * parallelizes across executors. Files whose footer read fails map
+    * to None (caller falls back to the row probe). */
   def rowGroupStats(spark: SparkSession, table: LakeTable,
       files: Seq[FileEntry]): Map[String, Option[Seq[FileEntry]]] = {
     if (files.isEmpty) return Map.empty
     val schema = table.schema
     val idByName = schema.fields.map(f => f.name -> FieldIds.of(f)).toMap
     val typeByName = schema.fields.map(f => f.name -> f.dataType).toMap
-    val conf = spark.sessionState.newHadoopConf()
-    val confEntries = conf.iterator().asScala.map(e => (e.getKey, e.getValue)).toArray
-    def readPart(iter: Iterator[FileEntry]): Iterator[(String, Option[Seq[FileEntry]])] = {
-      val tconf = new Configuration(false)
-      confEntries.foreach { case (k, v) => tconf.set(k, v) }
-      iter.map { fe =>
-        fe.path -> (try {
-          val reader = ParquetFileReader.open(
-            HadoopInputFile.fromPath(new HPath(fe.path), tconf))
-          try {
-            val groups = reader.getFooter.getBlocks.asScala.toSeq.map { b =>
-              val stats = b.getColumns.asScala.flatMap { cc =>
-                val dotPath = cc.getPath.toDotString
-                if (dotPath.contains('.') || !idByName.contains(dotPath)) None
-                else {
-                  val st = cc.getStatistics
-                  val dt = typeByName(dotPath)
-                  val (mn, mx, nulls) =
-                    if (st == null || st.isEmpty) (None, None, 0L)
-                    else {
-                      val n = if (st.isNumNullsSet) st.getNumNulls else 0L
-                      if (!st.hasNonNullValue) (None, None, n)
-                      else (statToCanon(st.genericGetMin.asInstanceOf[AnyRef], dt, isMin = true),
-                        statToCanon(st.genericGetMax.asInstanceOf[AnyRef], dt, isMin = false), n)
-                    }
-                  idByName.get(dotPath).filter(_ > 0).map(id =>
-                    id.toString -> ColumnStats(mn, mx, nulls))
-                }
-              }.toMap
-              FileEntry(fe.path, fe.partition, b.getRowCount, b.getCompressedSize,
-                fe.schemaId, stats, fe.specId)
-            }
-            Some(groups)
-          } finally reader.close()
-        } catch { case scala.util.control.NonFatal(_) => None })
-      }
-    }
-    val driverMax = spark.conf.get("graft.probe.driverMaxFiles", "8").toInt
-    val out =
-      if (files.size <= driverMax) readPart(files.iterator).toSeq
-      else {
-        val slices = math.max(1, math.min(files.size, spark.sparkContext.defaultParallelism))
-        spark.sparkContext.parallelize(files, slices)
-          .mapPartitions(readPart).collect().toSeq
-      }
-    out.toMap
+    def readGroups(tconf: Configuration, fe: FileEntry): (String, Option[Seq[FileEntry]]) =
+      fe.path -> (try {
+        val reader = ParquetFileReader.open(
+          HadoopInputFile.fromPath(new HPath(fe.path), tconf))
+        try {
+          val groups = reader.getFooter.getBlocks.asScala.toSeq.map { b =>
+            val stats = groupStats(b, typeByName).flatMap { case (name, (mn, mx, nulls)) =>
+              idByName.get(name).filter(_ > 0).map(id =>
+                id.toString -> ColumnStats(mn, mx, nulls))
+            }.toMap
+            FileEntry(fe.path, fe.partition, b.getRowCount, b.getCompressedSize,
+              fe.schemaId, stats, fe.specId)
+          }
+          Some(groups)
+        } finally reader.close()
+      } catch { case scala.util.control.NonFatal(_) => None })
+    footerFanOut(spark, spark.sessionState.newHadoopConf(), files,
+      ProbeDriverMaxFiles)(readGroups).toMap
   }
 
   /** Dummy record assembly for [[ColumnReadStoreImpl]] — values are read

@@ -7,14 +7,14 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.plans.BatchKernels
 
 /** Round-21 columnar-batch aggregate kernels: the adopted
-  * q_date_extract / q_events_hourly rewrites (plus the measured-but-not-
-  * adopted distinctTriple) must produce BIT-IDENTICAL results to the row
-  * plans they replace, on the fixtures AND on adversarial data the
-  * fixtures don't exercise (null group keys, null values, pre-epoch
-  * timestamps, round-half-up tie doubles, NaN/Infinity). The engagement
-  * gate must refuse any plan that isn't the bare columnar scan the
-  * kernel expects (filters, computed projections), and must engage
-  * under BOTH AQE settings (verify runs AQE-default, bench AQE-off).
+  * q_date_extract / q_events_hourly rewrites must produce BIT-IDENTICAL
+  * results to the row plans they replace, on the fixtures AND on
+  * adversarial data the fixtures don't exercise (null group keys, null
+  * values, pre-epoch timestamps, round-half-up tie doubles,
+  * NaN/Infinity). The engagement gate must refuse any plan that isn't
+  * the bare columnar scan the kernel expects (filters, computed
+  * projections), and must engage under BOTH AQE settings (verify runs
+  * AQE-default, bench AQE-off).
   */
 class BatchKernelsSpec extends AnyFunSuite {
 
@@ -136,21 +136,6 @@ class BatchKernelsSpec extends AnyFunSuite {
         (sum(call_function("graft_dunscaled", col("o_totalprice").cast(DoubleType), lit(2)))
           .cast(DecimalType(38, 0)) / lit(100L)).cast(DoubleType).as("total"))
       .orderBy("y", "m")
-    assert(rows(kernel) == rows(row))
-  }
-
-  test("distinctTriple kernel (ledgered, not adopted) still matches") {
-    graft.functions.GraftFunctions.register(spark)
-    val l = Tables.lineitem(spark, sfDir)
-    val kernel = BatchKernels.distinctTriple(
-      l.select(col("l_returnflag"), col("l_suppkey"),
-        col("l_partkey"), col("l_orderkey"))).get
-      .orderBy("l_returnflag")
-    val row = l.groupBy("l_returnflag")
-      .agg(countDistinct(col("l_suppkey")).as("n_supp"),
-        countDistinct(col("l_partkey")).as("n_part"),
-        countDistinct(col("l_orderkey")).as("n_ord"))
-      .orderBy("l_returnflag")
     assert(rows(kernel) == rows(row))
   }
 }

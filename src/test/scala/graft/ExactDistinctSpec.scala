@@ -126,73 +126,6 @@ class ExactDistinctSpec extends SparkSpec {
     assert(got.toSeq == expect.toSeq)
   }
 
-  test("fused triple distinct matches countDistinct in both output shapes") {
-    // round-20 Exp49 arm: one buffer + one update dispatch per row.
-    // Measured a WASH vs the registry two-level shape at sf10 (min
-    // 2.04 vs 2.10 s), so no query adopted it — but the function is a
-    // registered surface and must stay value-correct.
-    GraftFunctions.register(spark)
-    val l = Tables.lineitem(spark, sf)
-    val expect = l.groupBy("l_returnflag")
-      .agg(countDistinct(col("l_suppkey")).as("a"),
-        countDistinct(col("l_partkey")).as("b"),
-        countDistinct(col("l_orderkey")).as("c"))
-      .orderBy("l_returnflag").collect().map(_.toSeq)
-    // counts shape (one-level)
-    val one = l.groupBy("l_returnflag")
-      .agg(call_function("graft_distinct_triple",
-        col("l_suppkey"), col("l_partkey"), col("l_orderkey"), lit(false)).as("t"))
-      .select(col("l_returnflag"), col("t.n1"), col("t.n2"), col("t.n3"))
-      .orderBy("l_returnflag").collect().map(_.toSeq)
-    assert(one.toSeq == expect.toSeq)
-    // sets shape (two-level salted: disjoint orderkey cells sum; supp/part
-    // sets union through graft_count_distinct_merge)
-    val two = l.groupBy(col("l_returnflag"),
-        pmod(xxhash64(col("l_orderkey")), lit(8)).as("_salt"))
-      .agg(call_function("graft_distinct_triple",
-        col("l_suppkey"), col("l_partkey"), col("l_orderkey"), lit(true)).as("t"))
-      .groupBy("l_returnflag")
-      .agg(call_function("graft_count_distinct_merge", col("t.ss")).as("a"),
-        call_function("graft_count_distinct_merge", col("t.ps")).as("b"),
-        sum("t.no").as("c"))
-      .orderBy("l_returnflag").collect().map(_.toSeq)
-    assert(two.toSeq == expect.toSeq)
-  }
-
-  test("triple buffer last-value memo: runs, nulls, zeros, round-trip") {
-    import graft.functions.TripleDistinctBuffer
-    val b = new TripleDistinctBuffer
-    // clustered runs (the memo's target shape) and interleaved repeats
-    Seq(5L, 5L, 5L, 7L, 7L, 5L, 0L, 0L, 9L).foreach(v => b.add(2, v))
-    assert(b.sets(2).size == 4) // {5,7,0,9}
-    // memo slot 0 starts at 0L: a real leading 0 must still be counted
-    b.add(0, 0L); b.add(0, 0L)
-    assert(b.sets(0).size == 1)
-    val rt = TripleDistinctBuffer.deserialize(b.serialize())
-    assert(rt.sets(0).size == 1 && rt.sets(1).size == 0 && rt.sets(2).size == 4)
-    // post-deserialize memo reset: adding a value present pre-round-trip
-    // stays idempotent
-    rt.add(2, 9L)
-    assert(rt.sets(2).size == 4)
-  }
-
-  test("graft_distinct_set_merge: binary -> binary union parity") {
-    GraftFunctions.register(spark)
-    import spark.implicits._
-    val df = Seq(("a", 1L), ("a", 2L), ("a", 2L), ("b", 2L), ("b", 3L))
-      .toDF("k", "v")
-    // level 1: per (k, salt) sets; mid-level: merge back to sets per k;
-    // top: count — must equal the direct distinct count
-    val got = df.groupBy(col("k"), pmod(col("v"), lit(2)).as("_s"))
-      .agg(call_function("graft_distinct_set", col("v")).as("s"))
-      .groupBy("k")
-      .agg(call_function("graft_distinct_set_merge", col("s")).as("s"))
-      .groupBy("k")
-      .agg(call_function("graft_count_distinct_merge", col("s")).as("n"))
-      .orderBy("k").collect().map(r => (r.getString(0), r.getLong(1)))
-    assert(got.toSeq == Seq(("a", 2L), ("b", 2L)))
-  }
-
   test("set survives resize and serialization round-trip") {
     val s = new LongOpenHashSet(4)
     val vals = (1L to 10000L).map(_ * 2654435761L) :+ 0L :+ Long.MinValue :+ Long.MaxValue

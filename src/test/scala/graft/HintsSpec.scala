@@ -16,6 +16,15 @@ class HintsSpec extends SparkSpec {
     spark.range(0, 1000).toDF("k")
   }
 
+  // sf50-shape stats: 1G rows x 8B = 8 GiB estimate (never executed),
+  // past the 4 GB fact floor that engages the measured path
+  private def bigFact = spark.range(0, 1L << 30).toDF("k")
+
+  // a side whose MEASURED bytes exceed the 128 MB cap: one long column
+  // is 24 B/row (8 B value + 8 B slot + 8 B null bitset), so this is
+  // 1.5x the cap; counting a range is cheap
+  private def overCapSide = spark.range(0, Hints.MeasuredCapBytes / 16).toDF("k")
+
   test("gate pass: small bound broadcasts") {
     val dim = spark.range(0, 100).toDF("k")
     val fact = spark.range(0, 1000).toDF("k")
@@ -42,18 +51,15 @@ class HintsSpec extends SparkSpec {
   test("measured path: exact count rescues a side the static gate rejects") {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1") // static gate must fail
-    spark.conf.set("graft.broadcast.measuredThreshold", "128MB") // default-off: opt in
     try {
       val fact = spark.range(0, 1000).toDF("k")
-      // 100 rows x 8B long = 800B, far under the 128MB measured cap
+      // 100 rows x 8B long = 800B, far under the 128MB measured cap;
+      // the sf50-shape fact side engages the measured path
       val side = Hints.broadcastIfSmall(bigSide.limit(100), bound = bigSide,
-        countOnFail = Some(bigSide.limit(100)))
+        countOnFail = Some(bigSide.limit(100)), factSide = Some(bigFact))
       val plan = fact.join(side, "k").queryExecution.executedPlan.toString
       assert(plan.contains("BroadcastHashJoin"), s"measured count did not broadcast:\n$plan")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      spark.conf.unset("graft.broadcast.measuredThreshold")
-    }
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
   test("measured path is OFF by default (local negative, tools/Exp21)") {
@@ -71,14 +77,11 @@ class HintsSpec extends SparkSpec {
   test("auto-engage: sf50-shape fact volume flips the measured rescue on") {
     // Round 19: the Exp21 sf50 trend line (q3 broadcast -12%, q5 ~tie
     // vs the sf10 negative) wired the rescue to engage automatically
-    // when the caller's fact side clears graft.broadcast.autoEngageFactBytes
-    // (default 4g) and no explicit measuredThreshold is set.
+    // when the caller's fact side clears the 4 GB fact floor.
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1") // static gate fails
     try {
       val fact = spark.range(0, 1000).toDF("k")
-      // sf50-shape stats: 1G rows x 8B = 8 GiB estimate, never executed
-      val bigFact = spark.range(0, 1L << 30).toDF("k")
       val side = Hints.broadcastIfSmall(bigSide.limit(100), bound = bigSide,
         countOnFail = Some(bigSide.limit(100)), factSide = Some(bigFact))
       val plan = fact.join(side, "k").queryExecution.executedPlan.toString
@@ -93,74 +96,7 @@ class HintsSpec extends SparkSpec {
       val plan2 = fact.join(side2, "k").queryExecution.executedPlan.toString
       assert(plan2.contains("ShuffledHashJoin"),
         s"sf1-shape fact flipped the rescue (below-crossover regression):\n$plan2")
-
-      // explicit -1 disables the measured path INCLUDING auto-engage
-      spark.conf.set("graft.broadcast.measuredThreshold", "-1")
-      val side3 = Hints.broadcastIfSmall(bigSide.limit(100), bound = bigSide,
-        countOnFail = Some(bigSide.limit(100)), factSide = Some(bigFact))
-      val plan3 = fact.join(side3, "k").queryExecution.executedPlan.toString
-      assert(plan3.contains("ShuffledHashJoin"),
-        s"measuredThreshold=-1 did not veto auto-engage:\n$plan3")
-
-      // auto floor set to 0 disables auto-engage
-      spark.conf.unset("graft.broadcast.measuredThreshold")
-      spark.conf.set("graft.broadcast.autoEngageFactBytes", "0")
-      val side4 = Hints.broadcastIfSmall(bigSide.limit(100), bound = bigSide,
-        countOnFail = Some(bigSide.limit(100)), factSide = Some(bigFact))
-      val plan4 = fact.join(side4, "k").queryExecution.executedPlan.toString
-      assert(plan4.contains("ShuffledHashJoin"),
-        s"autoEngageFactBytes=0 did not disable auto-engage:\n$plan4")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      spark.conf.unset("graft.broadcast.measuredThreshold")
-      spark.conf.unset("graft.broadcast.autoEngageFactBytes")
-    }
-  }
-
-  test("explicit measuredThreshold=0 is a DISABLE, not unset (no auto-engage)") {
-    // Round-20 ADVICE: "0" was the historical documented disable value;
-    // treating an explicit 0 as "unset" silently routed it into the 4g
-    // auto-engage path, flipping plans the operator had pinned off.
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1") // static gate fails
-    spark.conf.set("graft.broadcast.measuredThreshold", "0")
-    try {
-      val fact = spark.range(0, 1000).toDF("k")
-      val bigFact = spark.range(0, 1L << 30).toDF("k") // clears the 4g floor
-      val side = Hints.broadcastIfSmall(bigSide.limit(100), bound = bigSide,
-        countOnFail = Some(bigSide.limit(100)), factSide = Some(bigFact))
-      val plan = fact.join(side, "k").queryExecution.executedPlan.toString
-      assert(plan.contains("ShuffledHashJoin"),
-        s"explicit measuredThreshold=0 fell through to auto-engage:\n$plan")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      spark.conf.unset("graft.broadcast.measuredThreshold")
-    }
-  }
-
-  test("blank-string measuredThreshold is a DISABLE, never a crash or auto-engage (round 21)") {
-    // Round-21 adversarial sweep (verdict item 8): a blank value — an
-    // operator templating `--conf graft.broadcast.measuredThreshold=$X`
-    // with X unset — must behave like the documented unparseable-value
-    // semantics (disable), not throw at plan time and not fall through
-    // to auto-engage as if unset.
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
-    spark.conf.set("graft.broadcast.measuredThreshold", "")
-    try {
-      assert(Hints.measuredBroadcastThreshold(bigSide) == Some(-1L),
-        "blank threshold should parse to the disable sentinel")
-      val fact = spark.range(0, 1000).toDF("k")
-      val bigFact = spark.range(0, 1L << 30).toDF("k") // clears the 4g floor
-      val side = Hints.broadcastIfSmall(bigSide.limit(100), bound = bigSide,
-        countOnFail = Some(bigSide.limit(100)), factSide = Some(bigFact))
-      val plan = fact.join(side, "k").queryExecution.executedPlan.toString
-      assert(plan.contains("ShuffledHashJoin"),
-        s"blank measuredThreshold fell through to auto-engage:\n$plan")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      spark.conf.unset("graft.broadcast.measuredThreshold")
-    }
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
   test("auto-engage pathological stats: empty-relation fact never engages") {
@@ -199,19 +135,15 @@ class HintsSpec extends SparkSpec {
       // small measured side -> rescue fires (engage happened, cap passed)
       assert(plan.contains("BroadcastHashJoin"),
         s"inflated estimate did not reach the measured gate:\n$plan")
-      // same inflated fact, but a side whose measured bytes exceed a
-      // 64-byte cap standing in for the auto cap: the measured gate must
-      // REFUSE — an absurd estimate can never bypass the byte cap
-      spark.conf.set("graft.broadcast.measuredThreshold", "64")
-      val side2 = Hints.broadcastIfSmall(bigSide, bound = bigSide,
-        countOnFail = Some(bigSide), factSide = Some(inflated))
+      // same inflated fact, but a side whose measured bytes exceed the
+      // 128 MB cap: the measured gate must REFUSE — an absurd estimate
+      // can never bypass the byte cap
+      val side2 = Hints.broadcastIfSmall(overCapSide, bound = bigSide,
+        countOnFail = Some(overCapSide), factSide = Some(inflated))
       val plan2 = fact.join(side2, "k").queryExecution.executedPlan.toString
       assert(plan2.contains("ShuffledHashJoin"),
         s"inflated estimate bypassed the measured cap:\n$plan2")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      spark.conf.unset("graft.broadcast.measuredThreshold")
-    }
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
   test("measured count runs ONCE at build time, never per execution") {
@@ -220,7 +152,6 @@ class HintsSpec extends SparkSpec {
     // plan (the bench's prepared-statement shape) must not re-count.
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
-    spark.conf.set("graft.broadcast.measuredThreshold", "128MB")
     val jobCount = new java.util.concurrent.atomic.AtomicLong(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
@@ -243,7 +174,8 @@ class HintsSpec extends SparkSpec {
       val small = spark.range(0, 100).toDF("k")
       var side: org.apache.spark.sql.DataFrame = null
       val buildJobs = jobsDuring {
-        side = Hints.broadcastIfSmall(small, bound = bigSide, countOnFail = Some(small))
+        side = Hints.broadcastIfSmall(small, bound = bigSide, countOnFail = Some(small),
+          factSide = Some(bigFact))
       }
       assert(buildJobs >= 1, "measured count never ran a Spark job at build time")
       val joined = spark.range(0, 1000).toDF("k").join(side, "k")
@@ -255,51 +187,44 @@ class HintsSpec extends SparkSpec {
     } finally {
       spark.sparkContext.removeSparkListener(listener)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      spark.conf.unset("graft.broadcast.measuredThreshold")
     }
   }
 
   test("measured path: string bytes are measured, not defaultSize-guessed") {
-    // 200 rows x ~20KB strings = ~4MB real payload; StringType.defaultSize
-    // (20B flat) would claim ~5KB and pass a 64KB cap. The measured gate
-    // must see the real bytes and refuse the broadcast.
+    // 200 rows x 1MB strings = 200MB real payload; StringType.defaultSize
+    // (20B flat) would claim ~10KB and pass the 128MB cap. The measured
+    // gate must see the real bytes and refuse the broadcast.
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
-    spark.conf.set("graft.broadcast.measuredThreshold", "64KB")
     try {
       val fat = spark.range(0, 200).select(col("id").as("k"),
-        concat_ws("", (1 to 100).map(_ => lit("x" * 200)): _*).as("payload"))
+        repeat(lit("x"), 1 << 20).as("payload"))
       val fact = spark.range(0, 1000).toDF("k")
-      val side = Hints.broadcastIfSmall(fat, bound = fat, countOnFail = Some(fat))
+      val side = Hints.broadcastIfSmall(fat, bound = fat, countOnFail = Some(fat),
+        factSide = Some(bigFact))
       val plan = fact.join(side, "k").queryExecution.executedPlan.toString
       assert(plan.contains("ShuffledHashJoin"),
         s"string-heavy side broadcast past the measured cap:\n$plan")
       // and a genuinely small string side still rescues
       val thin = spark.range(0, 50).select(col("id").as("k"), lit("s").as("payload"))
-      val side2 = Hints.broadcastIfSmall(thin, bound = bigSide, countOnFail = Some(thin))
+      val side2 = Hints.broadcastIfSmall(thin, bound = bigSide, countOnFail = Some(thin),
+        factSide = Some(bigFact))
       val plan2 = fact.join(side2, "k").queryExecution.executedPlan.toString
       assert(plan2.contains("BroadcastHashJoin"), s"thin string side not rescued:\n$plan2")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      spark.conf.unset("graft.broadcast.measuredThreshold")
-    }
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
   test("measured path: count above the cap still degrades to shuffled-hash") {
     val prevT = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
-    spark.conf.set("graft.broadcast.measuredThreshold", "64") // 64 BYTES: 1000x8B fails
     try {
       val fact = spark.range(0, 1000).toDF("k")
-      val side = Hints.broadcastIfSmall(bigSide, bound = bigSide,
-        countOnFail = Some(bigSide))
+      val side = Hints.broadcastIfSmall(overCapSide, bound = bigSide,
+        countOnFail = Some(overCapSide), factSide = Some(bigFact))
       val plan = fact.join(side, "k").queryExecution.executedPlan.toString
       assert(plan.contains("ShuffledHashJoin"), s"over-cap count still broadcast:\n$plan")
       assert(!plan.contains("SortMergeJoin"), s"sort-merge survived:\n$plan")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevT)
-      spark.conf.unset("graft.broadcast.measuredThreshold")
-    }
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevT)
   }
 
   test("measured path: disabled broadcast (threshold<=0) skips the count entirely") {

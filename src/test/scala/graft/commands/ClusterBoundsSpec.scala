@@ -140,8 +140,7 @@ class ClusterBoundsSpec extends SparkSpec {
     assert(LakeWriter.clusterBoundsOf(t, files).get.size == files.size)
     // force the gate open: target below the file size adds interior
     // bounds between each file's (min, max), capped at 8 splits/file
-    sys.props("graft.write.clusterSplitTargetBytes") = "1"
-    try {
+    graft.write.LakeWriterSeams.withClusterSplitTargetBytes(1L) {
       val bounds = LakeWriter.clusterBoundsOf(t, files).get
       assert(bounds.size == files.size * 8, s"expected 8 splits/file, got $bounds")
       val id = FieldIds.of(t.schema("k")).toString
@@ -158,7 +157,7 @@ class ClusterBoundsSpec extends SparkSpec {
       val out = engine.scan(t2).toDF()
       assert(out.filter(col("v") === -2.0).count() === 6000L)
       assert(out.count() === 8000L)
-    } finally sys.props.remove("graft.write.clusterSplitTargetBytes")
+    }
   }
 
   test("clusterBoundsOf declines descending and unsupported sort shapes") {
