@@ -41,9 +41,9 @@ object Maintenance {
     * data files and manifests stranded by commit retries that lost the
     * optimistic race, or by crashed writers. `graceMs` protects in-flight
     * writes — only files older than it are touched (pass 0 in tests).
-    * The default is 24h because staged files are written BEFORE their
-    * commit lands (distributed stats harvest can run long on huge
-    * batches): the grace must exceed the longest possible write-to-commit
+    * The default is 24h because data files are written at their final
+    * paths BEFORE their commit lands (a write job over a huge batch can
+    * run long): the grace must exceed the longest possible write-to-commit
     * gap or cleanup deletes files an imminent commit references (Iceberg
     * defaults this guard to 3 days for the same reason).
     * Returns the deleted paths; `dryRun` reports them without deleting

@@ -3,7 +3,7 @@ package graft.format
 import java.nio.file.Path
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path => HPath}
 
 /** [[CommitStore]] over a Hadoop `FileSystem` — the third live binding
   * of the metadata-IO seam (reference analog: the HadoopFileIO side of
@@ -61,7 +61,16 @@ final class HadoopCommitStore(conf: Configuration) extends CommitStore {
           "for the metadata plane (conditional PUT is the store's own " +
           "primitive); data files may still ride gcache://.")
     val trustedRename = HadoopCommitStore.atomicRenameSchemes(scheme)
-    val fs = fsOf(dst)
+    // a checksummed FS (file://'s LocalFileSystem) renames the file and
+    // its .crc sidecar as two separate steps, so two cross-process
+    // racers can leave one's bytes under the other's checksum: a version
+    // that fails its checksum on every read. Commit through the raw FS
+    // instead — one rename, no sidecar; checksummed readers accept a
+    // file that has no .crc.
+    val fs = fsOf(dst) match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case other => other
+    }
     if (fs.exists(dst)) return false // cheap fast path; rename re-checks
     val tmp = hPath(metadataDir,
       s".tmp-${java.util.UUID.randomUUID().toString.take(12)}")

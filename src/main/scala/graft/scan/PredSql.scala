@@ -41,6 +41,12 @@ object PredSql {
       case Gt(k, v)  => Gt(k, c(k, v)); case Ge(k, v) => Ge(k, c(k, v))
       case graft.scan.In(k, vs)    => graft.scan.In(k, vs.map(c(k, _)))
       case NotIn(k, vs)            => NotIn(k, vs.map(c(k, _)))
+      // prefix pruning compares the stats strings themselves: sound only
+      // on a plain (binary-collated) string column — `k LIKE '1%'` on an
+      // integer k matches 10..19 in a file whose string-ordered bounds
+      // "9".."100" would exclude it
+      case graft.scan.StartsWith(k, s) if !types.get(k).contains(StringType) =>
+        Opaque(s"startswith($k, '${s.replace("'", "''")}')")
       case other => other
     }
   }
@@ -115,9 +121,21 @@ object PredSql {
         case (Some(c), Some(s: String)) => graft.scan.StartsWith(c, s)
         case _ => Opaque(e.sql)
       }
+    // the parser yields LIKE as Like and startswith(...) unresolved; only
+    // a literal `<prefix>%` pattern is a prefix test
+    case Like(a: UnresolvedAttribute, Literal(p: UTF8String, _), esc) =>
+      likePrefix(p.toString, esc).map(graft.scan.StartsWith(a.name, _)).getOrElse(Opaque(e.sql))
+    case UnresolvedFunction(parts, Seq(a: UnresolvedAttribute, Literal(p: UTF8String, _)),
+        false, None, _, _, _) if fn(parts) == "startswith" =>
+      graft.scan.StartsWith(a.name, p.toString)
+    // the parser keeps BETWEEN as the `between` function: it is the
+    // conjunction of its two bounds under 3VL too, and NOT BETWEEN
+    // negates through the Not case above
+    case UnresolvedFunction(parts, Seq(v, lo, hi), false, None, _, _, _) if fn(parts) == "between" =>
+      graft.scan.And(convert(GreaterThanOrEqual(v, lo)), convert(LessThanOrEqual(v, hi)))
     case IsNaN(a)      => attr(a).map(IsNan.apply).getOrElse(Opaque(e.sql))
     case Not(IsNaN(a)) => attr(a).map(NotNan.apply).getOrElse(Opaque(e.sql))
-    case UnresolvedFunction(parts, Seq(a), _, _, _, _, _) if parts.mkString(".") == "isnan" =>
+    case UnresolvedFunction(parts, Seq(a), _, _, _, _, _) if fn(parts) == "isnan" =>
       attr(a).map(IsNan.apply).getOrElse(Opaque(e.sql))
     case a: UnresolvedAttribute => Eq(a.name, true) // bare boolean column
     case other => Opaque(other.sql)
@@ -139,6 +157,17 @@ object PredSql {
         case (Some(c), Some(v)) => if (v == null) Opaque(orig.sql) else flipped(c, v)
         case _ => Opaque(orig.sql)
       }
+    }
+
+  private def fn(parts: Seq[String]): String = parts.mkString(".").toLowerCase(java.util.Locale.ROOT)
+
+  /** The prefix of a LIKE pattern that is exactly `<prefix>%`: no other
+    * wildcard and no escape character anywhere before the final `%`. */
+  private def likePrefix(pattern: String, escape: Char): Option[String] =
+    if (!pattern.endsWith("%")) None
+    else {
+      val prefix = pattern.dropRight(1)
+      if (prefix.exists(ch => ch == '%' || ch == '_' || ch == escape)) None else Some(prefix)
     }
 
   private def seqLits(es: Seq[CExpr]): Option[Seq[Any]] = {

@@ -22,9 +22,12 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *   SELECT * FROM lake.`orders$branch_dev` / lake.`orders$tag_v1`
   *   SELECT * FROM lake.`orders$snapshots` / `orders$files` / `orders$history`
   *
-  * resolve to pruning [[TableScan]] plans, time travel included
-  * (reference suffix grammar: SqlQueryProcessor.java:371-402), plus
-  * Iceberg-style metadata introspection relations.
+  * resolve to [[TableScan]] plans over every file of the referenced
+  * snapshot, time travel included (reference suffix grammar:
+  * SqlQueryProcessor.java:371-402), plus Iceberg-style metadata
+  * introspection relations. The relation carries no predicate, so a
+  * query's WHERE clause prunes no files from its manifest stats; it
+  * reaches only the parquet reader's row-group and page filters.
   *
   * SQL DML routes to the engine's copy-on-write commands:
   *

@@ -365,8 +365,8 @@ private[streaming] final class LakeDsv2Table(location: String,
       maxBytesPerTrigger = LakeDsv2.positiveOption(options, "maxBytesPerTrigger"))
 
   /** Batch write via the V1Write fallback: the DataFrame-level insert
-    * reuses the transactional LakeWriter/commit path (distributed stats
-    * harvest, partition layout, atomic snapshot) instead of
+    * reuses the transactional LakeWriter/commit path (per-task footer
+    * stats, partition layout, atomic snapshot) instead of
     * reimplementing parquet writers at the DSv2 executor level.
     * `df.write.format("graft-lake").option("path", loc).mode(...)`:
     * append = insert commit, overwrite = strict full overwrite. */

@@ -2,7 +2,6 @@ package graft.write
 
 import graft.format._
 import graft.transforms.Transform
-import java.nio.file.{Files, Path, Paths}
 import java.util.UUID
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
@@ -10,6 +9,10 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.BlockMetaData
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.FileFormatWriter
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
@@ -17,8 +20,11 @@ import scala.reflect.ClassTag
 
 /** Write pipeline (SURVEY §7.1.4; mirrors reference S6–S8 + D10):
   * cast-projection to table schema (P9) -> partition transform columns ->
-  * clustering repartition -> sorted write to a staged dir -> parquet footer
-  * stats harvest -> FileEntry list for the commit.
+  * clustering repartition -> sorted write, each task putting its parquet
+  * files at their final paths under `data/` and reading their footer
+  * stats as it commits ([[FooterCommitProtocol]]) -> FileEntry list for
+  * the table commit, which is metadata only: no staging directory,
+  * rename, listing or driver-side footer read.
   *
   * Scale design: one Spark job does the whole write; parallelism is tasks
   * (not the reference's partitionWriterThreadPool). Partitioned tables
@@ -116,7 +122,7 @@ object LakeWriter extends Serializable {
     val ClusterCol = "__graft_cluster"
     if (preserveDistribution && spec.isEmpty) {
       // passthrough: partitions and order arrive write-ready (scaladoc)
-      return finishWrite(spark, table, withParts, props, spec)
+      return finishWrite(table, withParts, props, spec)
     }
     val bucketed = clusterBounds.filter(_ => spec.isEmpty && sortExprs.nonEmpty)
       .flatMap(bs => boundsBucketExpr(table, bs))
@@ -168,17 +174,45 @@ object LakeWriter extends Serializable {
       else if (spec.isEmpty) distributed.sortWithinPartitions(sortExprs: _*)
       else distributed.sortWithinPartitions(spec.map(pf => col(partColName(pf))) ++ sortExprs: _*)
     val sorted = if (bucketed.isDefined) sorted0.drop(ClusterCol) else sorted0
-    finishWrite(spark, table, sorted, props, spec)
+    finishWrite(table, sorted, props, spec)
   }
 
-  /** Staging write + distributed footer harvest, shared by the
-    * clustered and passthrough paths. */
-  private def finishWrite(spark: SparkSession, table: LakeTable,
-      sorted: DataFrame, props: Map[String, String],
-      spec: Seq[graft.format.PartitionField]): Seq[FileEntry] = {
-    val staging = table.dataDir.resolve(s"stage-${UUID.randomUUID().toString.take(8)}")
-    var w = sorted.write.mode("overwrite")
-      .option("compression", props.getOrElse("write.parquet.compression", "zstd"))
+  /** Direct write shared by the clustered and passthrough paths: Spark's
+    * `FileFormatWriter` runs the plan with [[FooterCommitProtocol]], so
+    * each task writes its files at their final paths under `data/` and
+    * reports their footer stats as its commit message — the commit needs
+    * no staging directory, rename, listing or driver-side footer read.
+    * The write gets its own SQL execution (as a `DataFrameWriter` save
+    * would) and its options go through this write's Hadoop conf only;
+    * the session's commit protocol setting is never touched. */
+  private def finishWrite(table: LakeTable, sorted: DataFrame,
+      props: Map[String, String], spec: Seq[PartitionField]): Seq[FileEntry] = {
+    val session = sorted.sparkSession.asInstanceOf[ClassicSession]
+    val options = writeOptions(props)
+    val hadoopConf = session.sessionState.newHadoopConfWithOptions(options)
+    val dir = new HPath(table.dataDir.toString)
+    val dataDir = dir.getFileSystem(hadoopConf).makeQualified(dir).toString
+    val committer = new FooterCommitProtocol(
+      dataDir, UUID.randomUUID().toString, EntryLayout.of(table))
+    val qe = sorted.queryExecution
+    // the optimized plan's attributes, as a DataFrameWriter save writes:
+    // their nullability (constant-folded casts are non-null) decides
+    // each column's required/optional parquet repetition
+    val output = qe.optimizedPlan.output
+    val partAttrs = spec.map(pf => output.find(_.name == partColName(pf)).get)
+    SQLExecution.withNewExecutionId(qe, Some("graft lake write")) {
+      FileFormatWriter.write(session, qe.executedPlan, new ParquetFileFormat, committer,
+        FileFormatWriter.OutputSpec(dataDir, Map.empty, output), hadoopConf,
+        partAttrs, None, Nil, options)
+    }
+    committer.entries.sortBy(_.path)
+  }
+
+  /** Parquet writer options from the table properties; they reach the
+    * writer both as data-source options and as this write's Hadoop conf. */
+  private def writeOptions(props: Map[String, String]): Map[String, String] = {
+    val base = Map(
+      "compression" -> props.getOrElse("write.parquet.compression", "zstd"),
       // 32 MB default row groups (vs parquet-mr's 128 MB): row-group
       // stats/page-index pruning and the CoW rewrite's intra-file
       // parallelism both work at GROUP granularity, and 128 MB buffered
@@ -187,26 +221,22 @@ object LakeWriter extends Serializable {
       // well above the size where per-group overhead shows while giving
       // a file 4-8 independently skippable/rewritable slices (DuckDB's
       // own layout runs ~122k-row groups for the same reason).
-      .option("parquet.block.size", props.getOrElse("write.parquet.row-group-size-bytes", (32 * 1024 * 1024).toString))
+      "parquet.block.size" ->
+        props.getOrElse("write.parquet.row-group-size-bytes", (32 * 1024 * 1024).toString))
     // zstd stays at parquet-mr's default level 3: level 1 measured
     // slower on both write-bound paths in round 21 (Exp51 sf50 scd1
     // 13.19 vs 15.27 s; Exp53 sink addBatch +12%) — the sorted write is
     // not encode-bound, and level 1 writes more bytes
-    props.get("write.max-records-per-file").foreach(v => w = w.option("maxRecordsPerFile", v))
+    val maxRecords = props.get("write.max-records-per-file").map("maxRecordsPerFile" -> _)
     // `graft.write.bloom-columns` = comma list: parquet row-group bloom
     // filters for high-cardinality point-lookup columns — min/max pruning
     // can't help an equality probe inside a file's range, a bloom can
     // (the parquet reader consults it automatically; at 100 TB this is
     // the per-file complement to stats-based file pruning)
-    props.get("graft.write.bloom-columns").foreach { cols =>
-      cols.split(',').map(_.trim).filter(_.nonEmpty).foreach { c =>
-        w = w.option(s"parquet.bloom.filter.enabled#$c", "true")
-      }
-    }
-    if (spec.nonEmpty) w = w.partitionBy(spec.map(partColName): _*)
-    w.parquet(staging.toString)
-
-    harvest(spark, table, staging)
+    val blooms = props.get("graft.write.bloom-columns").toSeq
+      .flatMap(_.split(',').map(_.trim).filter(_.nonEmpty))
+      .map(c => s"parquet.bloom.filter.enabled#$c" -> "true")
+    base ++ maxRecords ++ blooms
   }
 
   private val MaxClusterBuckets = 64
@@ -346,94 +376,74 @@ object LakeWriter extends Serializable {
     case other => throw new IllegalArgumentException(s"no cluster literal for $other")
   }
 
-  /** S8: footer stats harvest, distributed. One recursive listing of the
-    * staging dir on the driver (Hadoop FileSystem API, so any FS impl —
-    * a handful of listing RPCs, not one per file), then footer reads fan
-    * out as a Spark job: at 10^5–10^6 files a commit parallelizes footer
-    * IO across executors instead of serializing on the driver, which
-    * receives only the bounded FileEntry rows. Per-file NaN counts for
-    * float/double columns (Iceberg nanValueCounts — parquet footers
-    * don't carry them) are counted INSIDE the same task through the same
-    * `ParquetFileReader` open, reading only those columns' pages via a
-    * projected requested-schema — one read-back job per commit instead
-    * of the two this used to take (reference
-    * BaseDataFileWriter.java:353-484 collects these inline in its
-    * writer, which Spark's parquet sink doesn't expose; the fused
-    * harvest is the closest a post-hoc pass can get). */
-  def harvest(spark: SparkSession, table: LakeTable, staging: Path): Seq[FileEntry] = {
-    val schema = table.schema
-    val idByName = schema.fields.map(f => f.name -> FieldIds.of(f)).toMap
-    val typeByName = schema.fields.map(f => f.name -> f.dataType).toMap
-    val floatColNames = schema.fields.collect {
-      case f if f.dataType == FloatType || f.dataType == DoubleType => f.name
-    }
-    val spec = table.metadata.partitionSpec
-    val schemaId = table.metadata.currentSchemaId
-    val specId = table.metadata.currentSpecId
-    val stagingStr = plainPath(staging.toString)
+  /** What a write task needs to turn the files it wrote into
+    * [[FileEntry]] rows: the table's column types and field ids, its
+    * float/double columns (for NaN counts), each partition field's name
+    * with its directory column, and the schema/spec ids the entries
+    * record. */
+  private[write] final case class EntryLayout(
+      typeByName: Map[String, DataType], idByName: Map[String, Int],
+      floatColNames: Array[String], partCols: Seq[(String, String)],
+      schemaId: Int, specId: Int)
 
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = new HPath(staging.toString).getFileSystem(conf)
-    val listed = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    val fit = fs.listFiles(new HPath(staging.toString), true)
-    while (fit.hasNext) {
-      val st = fit.next()
-      if (st.isFile && st.getPath.getName.endsWith(".parquet"))
-        listed += ((plainPath(st.getPath.toString), st.getLen))
+  private[write] object EntryLayout {
+    def of(table: LakeTable): EntryLayout = {
+      val fields = table.schema.fields.toSeq
+      EntryLayout(
+        fields.map(f => f.name -> f.dataType).toMap,
+        fields.map(f => f.name -> FieldIds.of(f)).toMap,
+        fields.collect { case f if f.dataType == FloatType || f.dataType == DoubleType => f.name }.toArray,
+        table.metadata.partitionSpec.map(pf => pf.name -> partColName(pf)),
+        table.metadata.currentSchemaId, table.metadata.currentSpecId)
     }
-    val files = listed.sortBy(_._1).toSeq
-    if (files.isEmpty) return Seq.empty
-
-    def harvestFile(tconf: Configuration, file: (String, Long)): FileEntry = {
-      val (pathStr, len) = file
-      val partition: Map[String, String] = {
-        val segs = pathStr.stripPrefix(stagingStr).split('/').filter(_.nonEmpty)
-        spec.map { pf =>
-          val needle = s"${partColName(pf)}="
-          val seg = segs.find(_.startsWith(needle)).getOrElse(
-            throw new IllegalStateException(s"no partition dir for ${pf.name} in $pathStr"))
-          pf.name -> unescapePath(seg.stripPrefix(needle))
-        }.toMap
-      }
-      val reader = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new HPath(pathStr), tconf))
-      try {
-        val blocks = reader.getFooter.getBlocks.asScala
-        val rowCount = blocks.map(_.getRowCount).sum
-        val statsByCol = scala.collection.mutable.Map[String, (Option[String], Option[String], Long)]()
-        blocks.foreach { b =>
-          groupStats(b, typeByName).foreach { case (name, (mn, mx, nulls)) =>
-            val dt = typeByName(name)
-            val prev = statsByCol.getOrElse(name, (None: Option[String], None: Option[String], 0L))
-            statsByCol(name) = (
-              mergeBound(prev._1, mn, dt, isMin = true),
-              mergeBound(prev._2, mx, dt, isMin = false),
-              prev._3 + nulls)
-          }
-        }
-        val nanCounts = countNans(reader, floatColNames)
-        val stats = statsByCol.flatMap { case (name, (mn, mx, nc)) =>
-          idByName.get(name).filter(_ > 0).map(id =>
-            id.toString -> ColumnStats(mn, mx, nc, nanCount = nanCounts.get(name)))
-        }.toMap
-        FileEntry(pathStr, partition, rowCount, len, schemaId, stats, specId)
-      } finally reader.close()
-    }
-    // drop zero-row files (an empty cluster bucket can still emit a
-    // part file): their EMPTY stats would conservatively match every
-    // conflict filter / scan predicate, turning a disjoint-key
-    // concurrent merge into a spurious serializable conflict. The file
-    // itself stays on disk unreferenced — vacuum's job, like any other
-    // uncommitted write garbage.
-    footerFanOut(spark, conf, files, HarvestDriverMaxFiles)(harvestFile)
-      .filter(_.recordCount > 0).sortBy(_.path)
   }
 
-  /** Few-file commits (a streaming micro-batch, a small DML) read their
-    * footers on the driver up to this many files: a whole Spark job's
-    * scheduling overhead for <= 4 footer opens costs more than the opens
-    * (Exp34: ~100 ms of a ~600 ms micro-batch trigger). */
-  private val HarvestDriverMaxFiles = 4
+  /** S8: the [[FileEntry]] of one file a write task just closed, read
+    * from its footer inside the task ([[FooterCommitProtocol.commitTask]])
+    * — the reference collects these inline in its writer
+    * (BaseDataFileWriter.java:353-484). Per-column (min, max, nulls) come
+    * from the row-group statistics; NaN counts for float/double columns
+    * (Iceberg nanValueCounts — parquet footers don't carry them) are
+    * counted through the same `ParquetFileReader` open, reading only
+    * those columns' pages. `partDir` is the file's partition directory
+    * relative to `data/` as Spark named it (`__p_<name>=<escaped>`). */
+  private[write] def footerEntry(conf: Configuration, path: String,
+      partDir: Option[String], layout: EntryLayout): FileEntry = {
+    val partition: Map[String, String] = {
+      val segs = partDir.toSeq.flatMap(_.split('/')).filter(_.nonEmpty)
+      layout.partCols.map { case (name, dirCol) =>
+        val needle = s"$dirCol="
+        val seg = segs.find(_.startsWith(needle)).getOrElse(
+          throw new IllegalStateException(s"no partition dir for $name in $path"))
+        name -> unescapePath(seg.stripPrefix(needle))
+      }.toMap
+    }
+    val input = HadoopInputFile.fromPath(new HPath(path), conf)
+    val reader = ParquetFileReader.open(input)
+    try {
+      val typeByName = layout.typeByName
+      val blocks = reader.getFooter.getBlocks.asScala
+      val rowCount = blocks.map(_.getRowCount).sum
+      val statsByCol = scala.collection.mutable.Map[String, (Option[String], Option[String], Long)]()
+      blocks.foreach { b =>
+        groupStats(b, typeByName).foreach { case (name, (mn, mx, nulls)) =>
+          val dt = typeByName(name)
+          val prev = statsByCol.getOrElse(name, (None: Option[String], None: Option[String], 0L))
+          statsByCol(name) = (
+            mergeBound(prev._1, mn, dt, isMin = true),
+            mergeBound(prev._2, mx, dt, isMin = false),
+            prev._3 + nulls)
+        }
+      }
+      val nanCounts = countNans(reader, layout.floatColNames)
+      val stats = statsByCol.flatMap { case (name, (mn, mx, nc)) =>
+        layout.idByName.get(name).filter(_ > 0).map(id =>
+          id.toString -> ColumnStats(mn, mx, nc, nanCount = nanCounts.get(name)))
+      }.toMap
+      FileEntry(plainPath(path), partition, rowCount, input.getLength,
+        layout.schemaId, stats, layout.specId)
+    } finally reader.close()
+  }
 
   /** Driver-side footer reads for [[rowGroupStats]] up to this many
     * files — a DML's ambiguous set is normally the few boundary files
@@ -442,11 +452,12 @@ object LakeWriter extends Serializable {
 
   /** Runs `read` over `items` with a Hadoop conf rebuilt from `conf`'s
     * entries (Configuration is not serializable): on the driver when
-    * there are at most `driverMax` items, else as one `parallelize` job
-    * so footer IO fans out across executors — at 10^5–10^6 files that
-    * is what keeps a commit or probe off a serial driver loop. */
+    * there are at most [[ProbeDriverMaxFiles]] items, else as one
+    * `parallelize` job so footer IO fans out across executors — at
+    * 10^5–10^6 files that is what keeps a probe off a serial driver
+    * loop. */
   private def footerFanOut[A: ClassTag, B: ClassTag](spark: SparkSession,
-      conf: Configuration, items: Seq[A], driverMax: Int)(
+      conf: Configuration, items: Seq[A])(
       read: (Configuration, A) => B): Seq[B] = {
     val confEntries = conf.iterator().asScala.map(e => (e.getKey, e.getValue)).toArray
     def readPart(iter: Iterator[A]): Iterator[B] = {
@@ -454,7 +465,7 @@ object LakeWriter extends Serializable {
       confEntries.foreach { case (k, v) => tconf.set(k, v) }
       iter.map(read(tconf, _))
     }
-    if (items.size <= driverMax) readPart(items.iterator).toSeq
+    if (items.size <= ProbeDriverMaxFiles) readPart(items.iterator).toSeq
     else {
       val slices = math.max(1, math.min(items.size, spark.sparkContext.defaultParallelism))
       spark.sparkContext.parallelize(items, slices).mapPartitions(readPart).collect().toSeq
@@ -463,7 +474,7 @@ object LakeWriter extends Serializable {
 
   /** One row group's footer statistics for the top-level columns named
     * in `typeByName`, decoded to canonical (min, max, nullCount) — the
-    * decode shared by [[harvest]] (merged per file) and
+    * decode shared by [[footerEntry]] (merged per file) and
     * [[rowGroupStats]] (kept per group). */
   private def groupStats(b: BlockMetaData, typeByName: Map[String, DataType])
       : Seq[(String, (Option[String], Option[String], Long))] =
@@ -486,7 +497,7 @@ object LakeWriter extends Serializable {
   /** Row-group-granular stats for already-committed files: per ROW GROUP
     * of each input file, a synthetic [[FileEntry]] carrying that group's
     * footer min/max/nullCount under the same canonical encoding as the
-    * write-time harvest — so [[graft.scan.StatsEvaluator]] evaluates
+    * write-time [[footerEntry]] — so [[graft.scan.StatsEvaluator]] evaluates
     * predicates at group granularity with zero format change (the
     * manifests keep file-level stats only). Used by the DML probe: a
     * file-level-ambiguous candidate whose groups either all exclude the
@@ -496,23 +507,21 @@ object LakeWriter extends Serializable {
     * IO this path avoids); [[graft.scan.StatsEvaluator]] treats a
     * missing nanCount conservatively. Footer IO is one driver-side open
     * per file up to [[ProbeDriverMaxFiles]], then fans out as a Spark
-    * job exactly like [[harvest]] — at 100 TB a wide ambiguous set
+    * job ([[footerFanOut]]) — at 100 TB a wide ambiguous set
     * parallelizes across executors. Files whose footer read fails map
     * to None (caller falls back to the row probe). */
   def rowGroupStats(spark: SparkSession, table: LakeTable,
       files: Seq[FileEntry]): Map[String, Option[Seq[FileEntry]]] = {
     if (files.isEmpty) return Map.empty
-    val schema = table.schema
-    val idByName = schema.fields.map(f => f.name -> FieldIds.of(f)).toMap
-    val typeByName = schema.fields.map(f => f.name -> f.dataType).toMap
+    val layout = EntryLayout.of(table)
     def readGroups(tconf: Configuration, fe: FileEntry): (String, Option[Seq[FileEntry]]) =
       fe.path -> (try {
         val reader = ParquetFileReader.open(
           HadoopInputFile.fromPath(new HPath(fe.path), tconf))
         try {
           val groups = reader.getFooter.getBlocks.asScala.toSeq.map { b =>
-            val stats = groupStats(b, typeByName).flatMap { case (name, (mn, mx, nulls)) =>
-              idByName.get(name).filter(_ > 0).map(id =>
+            val stats = groupStats(b, layout.typeByName).flatMap { case (name, (mn, mx, nulls)) =>
+              layout.idByName.get(name).filter(_ > 0).map(id =>
                 id.toString -> ColumnStats(mn, mx, nulls))
             }.toMap
             FileEntry(fe.path, fe.partition, b.getRowCount, b.getCompressedSize,
@@ -521,8 +530,7 @@ object LakeWriter extends Serializable {
           Some(groups)
         } finally reader.close()
       } catch { case scala.util.control.NonFatal(_) => None })
-    footerFanOut(spark, spark.sessionState.newHadoopConf(), files,
-      ProbeDriverMaxFiles)(readGroups).toMap
+    footerFanOut(spark, spark.sessionState.newHadoopConf(), files)(readGroups).toMap
   }
 
   /** Dummy record assembly for [[ColumnReadStoreImpl]] — values are read
@@ -539,8 +547,9 @@ object LakeWriter extends Serializable {
     * ALREADY-OPEN footer reader: `setRequestedSchema` restricts row-group
     * reads to just those columns' pages, then a definition-level walk
     * counts NaNs (top-level primitives: one value slot per row). Runs
-    * inside the distributed harvest task, so a commit makes exactly one
-    * pass over its new files. The per-value loop is slower per byte than
+    * in the write task's commit ([[footerEntry]]), right after the file
+    * closes, so a write reads its new files back exactly once and on the
+    * executor that wrote them. The per-value loop is slower per byte than
     * Spark's vectorized reader, but it replaces an entire extra job +
     * second file open + shuffle, and it touches only the float/double
     * pages — a net win at every scale measured (and skipped entirely for

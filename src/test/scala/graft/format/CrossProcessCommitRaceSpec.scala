@@ -106,6 +106,7 @@ class CrossProcessCommitRaceSpec extends AnyFunSuite {
 
   test("HadoopCommitStore on file://: survivors are always claimed winners") {
     val (winners, errs, dir) = race("hadoop")
+    val store = new HadoopCommitStore(new org.apache.hadoop.conf.Configuration())
     try {
       assert(errs.isEmpty, s"unexpected worker errors: $errs")
       var doubleWins = 0
@@ -118,6 +119,10 @@ class CrossProcessCommitRaceSpec extends AnyFunSuite {
         // the win — a loser's bytes never silently become the version
         assert(w.contains(survivingWriter(dir, v)),
           s"version $v: surviving content is a LOSER's — silent commit loss")
+        // and it reads back through the store: no racer's checksum
+        // sidecar is left over a winner's bytes
+        assert(new String(store.readBytes(dir, s"v$v.json"), "UTF-8") ==
+          Files.readString(dir.resolve(s"v$v.json")), s"version $v: unreadable through the store")
       }
       // informational: the documented local-FS inverse window
       info(s"hadoop/file:// double-win versions: $doubleWins / $Rounds " +
