@@ -226,13 +226,9 @@ final class LakeEngine(
       throw new ValidationException(s"no snapshot $id")))
     // ascending (from, to] commit chain, None when from isn't an ancestor
     def chainFrom(f: Snapshot): Option[List[Snapshot]] = {
-      var chain = List.empty[Snapshot]
-      var cur: Option[Snapshot] = Some(to)
-      while (cur.exists(_.id != f.id)) {
-        chain = cur.get :: chain
-        cur = cur.get.parentId.flatMap(m.snapshotById)
-      }
-      if (cur.isDefined) Some(chain) else None
+      val (range, rest) = m.lineage(to.id).span(_.id != f.id)
+      val chain = range.toList.reverse
+      if (rest.hasNext) Some(chain) else None
     }
     val pieces: Seq[(String, Long, Seq[FileEntry])] =
       from.filter(f => f.id != to.id).flatMap(chainFrom) match {

@@ -83,12 +83,11 @@ object Maintenance {
     deleted.toSeq
   }
 
-  /** Rewrite the manifest list into consolidated chunks under the
-    * table's current codec (Iceberg `rewrite_manifests`): metadata
-    * defragmentation and json -> gzip/binary migration for existing
-    * tables, zero data-file IO. Incremental reads across the rewrite
-    * boundary fail fast (the snapshot is a "replace", not an append) —
-    * the same contract as compaction. */
+  /** Rewrite the manifest list into consolidated chunks (Iceberg
+    * `rewrite_manifests`): metadata defragmentation for existing tables,
+    * zero data-file IO. Incremental reads across the rewrite boundary
+    * fail fast (the snapshot is a "replace", not an append) — the same
+    * contract as compaction. */
   def rewriteManifests(table: LakeTable, targetEntriesPerChunk: Int = 100000): CommitMetrics =
     table.commit(CommitOp.RewriteManifests(targetEntriesPerChunk))
 

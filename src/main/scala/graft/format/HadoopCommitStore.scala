@@ -131,12 +131,6 @@ final class HadoopCommitStore(conf: Configuration) extends CommitStore {
     false // unreachable
   }
 
-  override def publishHint(metadataDir: Path, version: Int): Unit = {
-    val p = hPath(metadataDir, "version-hint.txt")
-    val out = fsOf(p).create(p, true)
-    try out.write(version.toString.getBytes("UTF-8")) finally out.close()
-  }
-
   override def writeBytes(metadataDir: Path, name: String, bytes: Array[Byte]): Unit = {
     val p = hPath(metadataDir, name)
     val out = fsOf(p).create(p, true)

@@ -105,10 +105,6 @@ trait CommitStore {
     * @return false when `name` already exists (the commit lost the race;
     *         caller refreshes and retries). */
   def putIfAbsent(metadataDir: Path, name: String, content: String): Boolean
-  /** Best-effort pointer to the latest version for O(1) discovery;
-    * correctness never depends on it. Object stores typically no-op
-    * (they list) or write an unconditional hint object. */
-  def publishHint(metadataDir: Path, version: Int): Unit = ()
 
   // ---- metadata byte IO ---------------------------------------------
   // Every OTHER metadata access (manifest chunks, version files,
@@ -156,7 +152,7 @@ trait CommitStore {
 }
 
 /** Local-FS store: exclusive hard link (atomic on POSIX) is the
-  * conditional put; a plain hint file accelerates version discovery. */
+  * conditional put; version discovery lists the metadata directory. */
 object LocalCommitStore extends CommitStore {
   override def putIfAbsent(metadataDir: Path, name: String, content: String): Boolean = {
     val tmp = metadataDir.resolve(s".tmp-${Random.alphanumeric.take(8).mkString}.json")
@@ -167,72 +163,6 @@ object LocalCommitStore extends CommitStore {
     } catch {
       case _: java.nio.file.FileAlreadyExistsException => false
     } finally Files.deleteIfExists(tmp)
-  }
-  override def publishHint(metadataDir: Path, version: Int): Unit =
-    Files.writeString(metadataDir.resolve("version-hint.txt"), version.toString)
-}
-
-/** Compact binary manifest encoding (`graft.manifest.codec = binary`,
-  * suffix `.gmf`): length-prefixed fields, deflate-compressed. At ~10^6
-  * files per table, JSON parse cost and byte size dominate metadata
-  * reads (Iceberg uses Avro for exactly this reason); the binary form
-  * parses with no object mapping and compresses tighter than
-  * gzipped JSON because the repetitive field names are gone. */
-object ManifestBinaryCodec {
-  private val Magic = 0x474d4631 // "GMF1"
-
-  def write(files: Seq[FileEntry]): Array[Byte] = {
-    val bytes = new java.io.ByteArrayOutputStream()
-    val out = new java.io.DataOutputStream(new java.util.zip.DeflaterOutputStream(bytes))
-    def str(s: String): Unit = { val b = s.getBytes(UTF_8); out.writeInt(b.length); out.write(b) }
-    def optStr(s: Option[String]): Unit = s match {
-      case Some(v) => out.writeBoolean(true); str(v)
-      case None => out.writeBoolean(false)
-    }
-    out.writeInt(Magic)
-    out.writeInt(files.size)
-    files.foreach { f =>
-      str(f.path)
-      out.writeInt(f.partition.size)
-      f.partition.foreach { case (k, v) => str(k); str(v) }
-      out.writeLong(f.recordCount)
-      out.writeLong(f.sizeBytes)
-      out.writeInt(f.schemaId)
-      out.writeInt(f.specId)
-      out.writeInt(f.stats.size)
-      f.stats.foreach { case (k, s) =>
-        str(k); optStr(s.min); optStr(s.max); out.writeLong(s.nullCount)
-        s.nanCount match {
-          case Some(n) => out.writeBoolean(true); out.writeLong(n)
-          case None => out.writeBoolean(false)
-        }
-      }
-    }
-    out.close()
-    bytes.toByteArray
-  }
-
-  def read(raw: Array[Byte]): Seq[FileEntry] = {
-    val in = new java.io.DataInputStream(new java.util.zip.InflaterInputStream(
-      new java.io.ByteArrayInputStream(raw)))
-    def str(): String = { val n = in.readInt(); val b = new Array[Byte](n); in.readFully(b); new String(b, UTF_8) }
-    def optStr(): Option[String] = if (in.readBoolean()) Some(str()) else None
-    require(in.readInt() == Magic, "not a graft binary manifest")
-    val n = in.readInt()
-    (0 until n).map { _ =>
-      val path = str()
-      val partition = (0 until in.readInt()).map(_ => str() -> str()).toMap
-      val recordCount = in.readLong()
-      val sizeBytes = in.readLong()
-      val schemaId = in.readInt()
-      val specId = in.readInt()
-      val stats = (0 until in.readInt()).map { _ =>
-        val k = str()
-        k -> ColumnStats(optStr(), optStr(), in.readLong(),
-          if (in.readBoolean()) Some(in.readLong()) else None)
-      }.toMap
-      FileEntry(path, partition, recordCount, sizeBytes, schemaId, stats, specId)
-    }
   }
 }
 
@@ -249,23 +179,14 @@ object ManifestCache {
   private[this] val map =
     new java.util.LinkedHashMap[String, Seq[FileEntry]](256, 0.75f, true)
   private[this] var total: Long = 0L
-  @volatile private[this] var capacity: Long = 4L * 1000 * 1000
+  private[this] val capacity: Long = 4L * 1000 * 1000
   private[this] var hitN: Long = 0L
   private[this] var missN: Long = 0L
 
   def hits: Long = lock.synchronized(hitN)
   def misses: Long = lock.synchronized(missN)
 
-  def setCapacity(maxEntries: Long): Unit = lock.synchronized {
-    capacity = maxEntries; evict()
-  }
-
   def clear(): Unit = lock.synchronized { map.clear(); total = 0L }
-
-  /** Probe without touching hit/miss counters or LRU order. */
-  def contains(path: Path): Boolean = lock.synchronized {
-    map.containsKey(path.toAbsolutePath.normalize.toString)
-  }
 
   def getOrLoad(path: Path)(load: => Seq[FileEntry]): Seq[FileEntry] = {
     val key = path.toAbsolutePath.normalize.toString
@@ -342,15 +263,12 @@ object CommitOp {
   /** Drop expired snapshots from the log (history trim; data-file cleanup
     * is the caller's job once the commit lands). */
   final case class ExpireSnapshots(ids: Set[Long]) extends CommitOp
-  /** Set/remove table properties (e.g. switch graft.manifest.codec on a
-    * live table — existing chunks keep their encoding, new ones use the
-    * new codec; readers dispatch per chunk). */
+  /** Set/remove table properties. */
   final case class SetProperties(set: Map[String, String],
       remove: Set[String] = Set.empty) extends CommitOp
   /** Rewrite the head's manifest list into consolidated chunks of
-    * `targetEntriesPerChunk` under the table's CURRENT codec — metadata
-    * defragmentation / codec migration; data files untouched (Iceberg
-    * rewrite_manifests). */
+    * `targetEntriesPerChunk` — metadata defragmentation; data files
+    * untouched (Iceberg rewrite_manifests). */
   final case class RewriteManifests(targetEntriesPerChunk: Int = 100000) extends CommitOp
 }
 
@@ -377,23 +295,8 @@ class LakeTable private (
       store.readBytes(Paths.get(location, "metadata"), ref.path)))
   }
 
-  /** Data-file paths of one chunk — the projected-read fast path.
-    * Columnar (parquet) chunks decode only the `path` column; other
-    * codecs (and chunks already parsed into the cache) fall back to the
-    * full parse. Orphan cleanup / snapshot expiry walk EVERY manifest of
-    * EVERY snapshot needing nothing else, which at 10^6-file scale is
-    * the difference between reading one column chunk and the whole
-    * stats payload. */
-  def readManifestPaths(ref: ManifestRef): Seq[String] = {
-    val p = Paths.get(location, "metadata", ref.path)
-    if (ref.path.endsWith(".parquet") && !ManifestCache.contains(p))
-      ManifestParquetCodec.readPaths(
-        store.readBytes(Paths.get(location, "metadata"), ref.path))
-    else readManifest(ref).map(_.path)
-  }
-
-  /** Paths of every data file a snapshot references (projected read). */
-  def manifestPaths(s: Snapshot): Seq[String] = s.manifests.flatMap(readManifestPaths)
+  /** Paths of every data file a snapshot references. */
+  def manifestPaths(s: Snapshot): Seq[String] = manifest(s).map(_.path)
 
   def currentFiles(ref: TableRef = TableRef.Head): Seq[FileEntry] =
     snapshot(ref).map(manifest).getOrElse(Seq.empty)
@@ -411,17 +314,15 @@ class LakeTable private (
     val from = fromSnapshotId.map(id => meta.snapshotById(id).getOrElse(
       throw new ValidationException(s"no snapshot $id")))
     // walk to -> from, validating the chain is append-only and connected
-    var cur: Option[Snapshot] = Some(to)
-    while (cur.exists(s => !fromSnapshotId.contains(s.id))) {
-      val s = cur.get
+    val (range, rest) = meta.lineage(toSnapshotId).span(s => !fromSnapshotId.contains(s.id))
+    range.foreach { s =>
       if (s.operation != "append")
         throw new ValidationException(
           s"incremental read crosses non-append snapshot ${s.id} (${s.operation})")
-      cur = s.parentId.flatMap(meta.snapshotById)
-      if (cur.isEmpty && fromSnapshotId.isDefined)
-        throw new ValidationException(
-          s"snapshot $fromSnapshotId is not an ancestor of $toSnapshotId")
     }
+    if (fromSnapshotId.isDefined && !rest.hasNext)
+      throw new ValidationException(
+        s"snapshot $fromSnapshotId is not an ancestor of $toSnapshotId")
     val fromChunks = from.map(_.manifests.map(_.path).toSet).getOrElse(Set.empty)
     // Paths needing filtering can only come from `from`-chunks ABSENT from
     // `to`'s list (a list-compaction rewrote them into a fresh chunk that
@@ -451,9 +352,7 @@ class LakeTable private (
       val curV = LakeTable.currentVersion(location, store)
       val cur = LakeTable.loadMetaAt(location, curV, store)
       val (next, metrics) = applyOp(cur, op, t0)
-      val metaDir = Paths.get(location, "metadata")
-      if (store.putIfAbsent(metaDir, s"v${curV + 1}.json", Json.write(next))) {
-        store.publishHint(metaDir, curV + 1)
+      if (store.putIfAbsent(Paths.get(location, "metadata"), s"v${curV + 1}.json", Json.write(next))) {
         meta = next
         val finalMetrics = metrics.copy(elapsedMs = System.currentTimeMillis() - t0)
         emitCommitEvent(op, cur, finalMetrics, attempt + 1)
@@ -502,35 +401,10 @@ class LakeTable private (
       case Some(b) => m.refs.get(b).filter(_.isBranch).flatMap(r => m.snapshotById(r.snapshotId))
     }
 
-  private def newManifest(m: TableMetadata, files: Seq[FileEntry], sid: Long): ManifestRef = {
-    // Chunk encoding (`graft.manifest.codec`): at ~10^6-file table sizes
-    // raw-JSON manifest size and parse cost dominate metadata reads
-    // (Iceberg uses Avro for the same reason); gzip cuts the bytes ~10x
-    // while keeping chunks greppable tooling-side after gunzip. Codec
-    // comes from the COMMIT's metadata (a concurrent SetProperties must
-    // win over this instance's cached view).
-    val codec = m.properties.getOrElse("graft.manifest.codec", "json")
-    val suffix = codec match {
-      case "json"    => ".json"
-      case "gzip"    => ".json.gz"
-      case "binary"  => ".gmf"
-      case "parquet" => ".parquet"
-      case other  => throw new ValidationException(
-        s"unknown graft.manifest.codec '$other' (json | gzip | binary | parquet)")
-    }
+  private def newManifest(files: Seq[FileEntry], sid: Long): ManifestRef = {
     // unique per attempt: a lost optimistic race must not reuse a name
-    val name = s"manifest-$sid-${Random.alphanumeric.take(8).mkString}$suffix"
-    val bytes = codec match {
-      case "binary"  => ManifestBinaryCodec.write(files)
-      case "parquet" => ManifestParquetCodec.write(files)
-      case "gzip" =>
-        val bos = new java.io.ByteArrayOutputStream()
-        val out = new java.util.zip.GZIPOutputStream(bos)
-        try out.write(Json.write(files).getBytes(UTF_8)) finally out.close()
-        bos.toByteArray
-      case _ => Json.write(files).getBytes(UTF_8)
-    }
-    store.writeBytes(Paths.get(location, "metadata"), name, bytes)
+    val name = s"manifest-$sid-${Random.alphanumeric.take(8).mkString}.json"
+    store.writeBytes(Paths.get(location, "metadata"), name, Json.write(files).getBytes(UTF_8))
     // partition summary for scan-time chunk pruning: only meaningful when
     // every entry shares a spec; fields exceeding the cardinality cap are
     // dropped (a near-unique field can't skip chunks anyway)
@@ -557,7 +431,7 @@ class LakeTable private (
     if (list.size <= maxCount) return list
     val (small, large) = list.partition(_.entryCount < mergeMin)
     if (small.size <= 1) list
-    else large :+ newManifest(m, small.flatMap(readManifest), sid)
+    else large :+ newManifest(small.flatMap(readManifest), sid)
   }
 
   private def applyOp(m: TableMetadata, op: CommitOp, t0: Long): (TableMetadata, CommitMetrics) = op match {
@@ -566,7 +440,7 @@ class LakeTable private (
       val baseList = head.map(_.manifests).getOrElse(Seq.empty)
       val sid = newSnapshotId(m)
       val list = compactList(m,
-        if (files.isEmpty) baseList else baseList :+ newManifest(m, files, sid), sid)
+        if (files.isEmpty) baseList else baseList :+ newManifest(files, sid), sid)
       val snap = Snapshot(sid, head.map(_.id), System.currentTimeMillis(), "append", list,
         Map("added-files" -> files.size.toString,
           "added-records" -> files.map(_.recordCount).sum.toString,
@@ -609,7 +483,7 @@ class LakeTable private (
           else {
             removed ++= hit
             val kept = entries.filterNot(f => removePaths.contains(f.path))
-            if (kept.isEmpty) None else Some(newManifest(m, kept, sid))
+            if (kept.isEmpty) None else Some(newManifest(kept, sid))
           }
         }
       }
@@ -620,7 +494,7 @@ class LakeTable private (
         throw new ValidationException(
           s"cannot overwrite: ${missing.size} file(s) no longer in table (concurrently rewritten?): ${missing.take(3)}")
       val list = compactList(m,
-        if (files.isEmpty) keptList else keptList :+ newManifest(m, files, sid), sid)
+        if (files.isEmpty) keptList else keptList :+ newManifest(files, sid), sid)
       val snap = Snapshot(sid, head.map(_.id), System.currentTimeMillis(),
         if (!dataChange) "replace"
         else if (files.isEmpty) "delete" else "overwrite", list,
@@ -673,14 +547,7 @@ class LakeTable private (
       // protection; Iceberg splits these as rollback_to_snapshot
       // (checked) vs set_current_snapshot (explicitly unchecked).
       m.currentSnapshotId.foreach { head =>
-        def onLineage(from: Long, to: Long): Boolean = {
-          var cur = m.snapshotById(from)
-          while (cur.isDefined) {
-            if (cur.get.id == to) return true
-            cur = cur.get.parentId.flatMap(m.snapshotById)
-          }
-          false
-        }
+        def onLineage(from: Long, to: Long): Boolean = m.lineage(from).exists(_.id == to)
         if (!onLineage(head, snapshotId) && !onLineage(snapshotId, head))
           throw new ValidationException(
             s"snapshot $snapshotId is not on main's lineage (head $head); " +
@@ -699,13 +566,7 @@ class LakeTable private (
       // ancestry walk: main's head must be an ancestor of the branch head
       // (fast-forward never rewrites history)
       m.currentSnapshotId.foreach { head =>
-        var cur: Option[Snapshot] = Some(target)
-        var ok = false
-        while (cur.isDefined && !ok) {
-          if (cur.get.id == head) ok = true
-          else cur = cur.get.parentId.flatMap(m.snapshotById)
-        }
-        if (!ok) throw new ValidationException(
+        if (!m.lineage(target.id).exists(_.id == head)) throw new ValidationException(
           s"branch $branch (snapshot ${target.id}) does not descend from " +
             s"main's head $head; fast-forward would lose commits")
       }
@@ -713,11 +574,6 @@ class LakeTable private (
         CommitMetrics(target.id, 0, 0, 0, 0, 0))
 
     case CommitOp.SetProperties(set, remove) =>
-      set.get("graft.manifest.codec").foreach {
-        case "json" | "gzip" | "binary" | "parquet" => ()
-        case other => throw new ValidationException(
-          s"unknown graft.manifest.codec '$other' (json | gzip | binary | parquet)")
-      }
       (m.copy(properties = m.properties ++ set -- remove),
         CommitMetrics(m.currentSnapshotId.getOrElse(0L), 0, 0, 0, 0, 0))
 
@@ -725,7 +581,7 @@ class LakeTable private (
       val head = headOf(m, None)
       val sid = newSnapshotId(m)
       val files = head.map(s => s.manifests.flatMap(readManifest)).getOrElse(Seq.empty)
-      val list = files.grouped(math.max(target, 1)).map(newManifest(m, _, sid)).toSeq
+      val list = files.grouped(math.max(target, 1)).map(newManifest(_, sid)).toSeq
       val snap = Snapshot(sid, head.map(_.id), System.currentTimeMillis(), "replace", list,
         Map("rewritten-manifests" -> head.map(_.manifests.size).getOrElse(0).toString))
       (advance(m, snap, None),
@@ -754,8 +610,7 @@ class LakeTable private (
         // without this, two merges racing into a brand-new table both
         // see no base snapshot, skip validation entirely, and
         // double-insert the same keys (caught by ConcurrencyStressSpec)
-        val chain = Iterator.iterate(Option(h))(s => s.flatMap(_.parentId).flatMap(m.snapshotById))
-          .takeWhile(s => s.isDefined && !s.exists(ss => from.contains(ss.id))).flatten.toSeq
+        val chain = m.lineage(h.id).takeWhile(s => !from.contains(s.id)).toSeq
         val fromEntries = from.flatMap(m.snapshotById).map(manifest).getOrElse(Seq.empty)
         val fromPaths = fromEntries.map(_.path).toSet
         val headManifest = manifest(h)
@@ -914,17 +769,13 @@ object LakeTable {
     root
   }
 
+  /** Manifest chunks are JSON arrays of [[FileEntry]]; a chunk in any
+    * other encoding is refused by name rather than fed to the parser. */
   private[format] def parseManifest(name: String, bytes: Array[Byte]): Seq[FileEntry] = {
-    if (name.endsWith(".gmf")) ManifestBinaryCodec.read(bytes)
-    else if (name.endsWith(".parquet")) ManifestParquetCodec.read(bytes)
-    else {
-      val text =
-        if (name.endsWith(".gz")) {
-          val in = new java.util.zip.GZIPInputStream(new java.io.ByteArrayInputStream(bytes))
-          try new String(in.readAllBytes(), UTF_8) finally in.close()
-        } else new String(bytes, UTF_8)
-      Json.mapper.readValue(text, classOf[Array[FileEntry]]).toSeq
-    }
+    if (!name.endsWith(".json"))
+      throw new ValidationException(
+        s"unsupported manifest chunk $name: only .json manifest chunks are readable")
+    Json.mapper.readValue(new String(bytes, UTF_8), classOf[Array[FileEntry]]).toSeq
   }
 
   /** Net file-level delta between two snapshots: (added, removed) file
@@ -969,10 +820,8 @@ object LakeTable {
     store.prepareTable(Paths.get(location))
     val meta = TableMetadata(FormatVersion, location, Map("1" -> withIds.json), 1, lastId,
       Map("0" -> partitionSpec), 0, sortOrder, properties, Seq.empty, None, Map.empty)
-    val metaDir = Paths.get(location, "metadata")
-    if (!store.putIfAbsent(metaDir, "v1.json", Json.write(meta)))
+    if (!store.putIfAbsent(Paths.get(location, "metadata"), "v1.json", Json.write(meta)))
       throw new ValidationException(s"table already exists at $location (lost create race)")
-    store.publishHint(metaDir, 1)
     new LakeTable(location, meta, store)
   }
 }

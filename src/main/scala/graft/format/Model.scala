@@ -103,6 +103,14 @@ final case class TableMetadata(
     snapshots.iterator.map(s => s.id -> s).toMap
   def snapshotById(id: Long): Option[Snapshot] = snapshotIndex.get(id)
 
+  /** Snapshot `id`, then its parents newest first, stopping at the root
+    * or at the first parent that has expired (empty for an unknown id).
+    * Every ancestry question (rollback and fast-forward checks, conflict
+    * validation, incremental and CDC ranges) walks this one chain. */
+  def lineage(id: Long): Iterator[Snapshot] =
+    Iterator.iterate(snapshotById(id))(_.flatMap(_.parentId).flatMap(snapshotById))
+      .takeWhile(_.isDefined).flatten
+
   def currentSnapshot: Option[Snapshot] = currentSnapshotId.flatMap(snapshotById)
 
   /** Time-travel resolution (mirrors reference SqlQueryProcessor.java:371-402). */

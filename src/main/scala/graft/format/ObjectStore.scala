@@ -19,8 +19,7 @@ import java.util.concurrent.ConcurrentHashMap
   * [[ObjectStoreCommitStore]] adapts a client to the [[CommitStore]]
   * seam, keying objects as `<metadata-dir>/<name>`. Version discovery
   * lists the prefix (S3 LIST is strongly consistent since 2020, so a
-  * committed version is immediately visible); the version hint is an
-  * unconditional object, best-effort by design.
+  * committed version is immediately visible).
   *
   * [[InMemoryObjectStore]] implements the client with exact conditional-
   * PUT atomicity (ConcurrentHashMap.putIfAbsent) so the whole table
@@ -145,8 +144,6 @@ final class ObjectStoreCommitStore(client: ObjectStoreClient) extends CommitStor
 
   override def putIfAbsent(metadataDir: Path, name: String, content: String): Boolean =
     client.putIfNoneMatch(key(metadataDir, name), content.getBytes("UTF-8"))
-  override def publishHint(metadataDir: Path, version: Int): Unit =
-    client.put(key(metadataDir, "version-hint.txt"), version.toString.getBytes("UTF-8"))
   override def writeBytes(metadataDir: Path, name: String, bytes: Array[Byte]): Unit =
     client.put(key(metadataDir, name), bytes)
   override def readBytes(metadataDir: Path, name: String): Array[Byte] =

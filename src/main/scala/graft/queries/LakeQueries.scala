@@ -778,15 +778,12 @@ object LakeQueries {
     // ------------------------------------------------------------------
     Q("lake_rewrite_manifests",
       (s, d) => {
-        // metadata defragmentation + codec migration (Iceberg
-        // rewrite_manifests): fragmenting appends under the default
-        // json codec, a live switch to the parquet manifest codec
-        // (mixed chunks coexist), then one rewrite consolidates the
-        // manifest list onto the new codec with ZERO data-file IO. The
-        // gate hash-verifies the data is invariant; chunk counts and
-        // codec suffixes are pinned by ManifestSpec. A pruned read
-        // after the rewrite proves the consolidated parquet manifests
-        // still serve stats-based file skipping.
+        // metadata defragmentation (Iceberg rewrite_manifests):
+        // fragmenting appends, then one rewrite consolidates the
+        // manifest list with ZERO data-file IO. The gate hash-verifies
+        // the data is invariant; chunk counts are pinned by
+        // ManifestSpec. A pruned read after the rewrite proves the
+        // consolidated manifests still serve stats-based file skipping.
         val (e, _) = freshEngine(s, "rwm")
         val orders = Tables.orders(s, d)
         val t = e.catalog.createTable("orders_rwm", orders.schema,
@@ -794,7 +791,6 @@ object LakeQueries {
         (0 until 4).foreach { i =>
           e.insert(t, orders.filter(col("o_orderkey") % 4 === i))
         }
-        t.refresh().setProperties(Map("graft.manifest.codec" -> "parquet"))
         graft.commands.Maintenance.rewriteManifests(t.refresh())
         e.scan(t.refresh(),
           "o_orderdate >= TIMESTAMP_NTZ'1997-01-01 00:00:00'")
@@ -804,7 +800,7 @@ object LakeQueries {
         SELECT * FROM orders
         WHERE o_orderdate >= TIMESTAMP '1997-01-01'
         ORDER BY o_orderkey"""),
-      doc = "manifest rewrite + codec migration: consolidated parquet manifests still prune; data invariant"),
+      doc = "manifest rewrite: consolidated manifests still prune; data invariant"),
 
     // ------------------------------------------------------------------
     Q("sql_ddl_lifecycle",

@@ -306,7 +306,9 @@ final class StatsEvaluator(schema: StructType, specsById: Map[Int, Seq[Partition
     case Gt(c, v)    => boundAll(f, c, v, upper = false, strict = true)
     case Ge(c, v)    => boundAll(f, c, v, upper = false, strict = false)
     case In(c, vs)   => vs.exists(v => provablyAll(Eq(c, v), f))
-    case NotIn(c, vs) => vs.forall(v => !mayContain(Eq(c, v), f)) && provablyAll(NotNull(c), f)
+    // a NULL in the list makes NOT IN never TRUE (3VL), whatever the stats
+    case NotIn(c, vs) => !vs.contains(null) &&
+      vs.forall(v => !mayContain(Eq(c, v), f)) && provablyAll(NotNull(c), f)
     case StartsWith(c, s) =>
       identityValueReal(f, c).map(pv => pv != Transform.NullValue && pv.startsWith(s)).getOrElse {
         statsOf(f, c).exists(st => st.nullCount == 0 &&

@@ -173,14 +173,11 @@ object TableScan {
     * no per-scan split sizing — so in a session shared with non-graft
     * file reads this also gives THOSE reads Iceberg-style target-size
     * splits (a mid-size file that previously split one-sliver-per-core
-    * plans fewer, larger partitions). Set
-    * `spark.graft.read.tuneSplitPlanning=false` (or any explicit
-    * `minPartitionNum`) to keep Spark's default behavior. */
+    * plans fewer, larger partitions). Set `minPartitionNum` explicitly
+    * to keep Spark's default behavior. */
   private[graft] def ensureReadConf(spark: SparkSession): Unit = {
     val key = "spark.sql.files.minPartitionNum"
-    val optIn = spark.conf.getOption("spark.graft.read.tuneSplitPlanning")
-      .forall(_.toBoolean)
-    if (optIn && spark.conf.getOption(key).isEmpty) spark.conf.set(key, "1")
+    if (spark.conf.getOption(key).isEmpty) spark.conf.set(key, "1")
   }
 }
 

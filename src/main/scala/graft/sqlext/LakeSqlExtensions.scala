@@ -498,21 +498,9 @@ class ResolveLakeRelations(spark: SparkSession) extends Rule[LogicalPlan] {
   private def lastName(sql: String): String =
     stripQuotes(sql.split('.').last)
 
-  /** Execute an analyzed-on-demand plan into a DataFrame using only
-    * public API: executePlan -> InternalRow RDD -> encoder deserializer
-    * -> createDataFrame. (Dataset.ofRows is private[sql]; this bridge
-    * avoids both that and any class in Spark's namespace.) */
-  private def planToDF(query: LogicalPlan): org.apache.spark.sql.DataFrame = {
-    val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val qe = cs.sessionState.executePlan(query)
-    val schema = qe.analyzed.schema
-    val deser = org.apache.spark.sql.catalyst.encoders.ExpressionEncoder(
-      org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema))
-      .resolveAndBind(qe.analyzed.output)
-      .createDeserializer()
-    val rows = qe.toRdd.map(r => deser(r.copy()))
-    cs.createDataFrame(rows, schema)
-  }
+  private def planToDF(query: LogicalPlan): org.apache.spark.sql.DataFrame =
+    PlanBridge.toDF(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.executePlan(query))
 
   private def isLake(u: UnresolvedRelation): Boolean =
     u.multipartIdentifier.length == 2 &&
@@ -640,5 +628,22 @@ class ResolveLakeRelations(spark: SparkSession) extends Rule[LogicalPlan] {
       case other => throw new IllegalArgumentException(s"unknown time-travel suffix: $other")
     }
     (name, ref)
+  }
+}
+
+/** Execute a planned query into a DataFrame using only public API:
+  * InternalRow RDD -> encoder deserializer -> createDataFrame.
+  * (Dataset.ofRows is private[sql]; this bridge avoids both that and any
+  * class in Spark's namespace.) Shared by the SQL rewrites above and by
+  * the `graft-lake` stream sink, whose streaming-flagged batch must run
+  * through its own incremental execution. */
+private[graft] object PlanBridge {
+  def toDF(qe: org.apache.spark.sql.execution.QueryExecution): org.apache.spark.sql.DataFrame = {
+    val schema = qe.analyzed.schema
+    val deser = org.apache.spark.sql.catalyst.encoders.ExpressionEncoder(
+      org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema))
+      .resolveAndBind(qe.analyzed.output)
+      .createDeserializer()
+    qe.sparkSession.createDataFrame(qe.toRdd.map(r => deser(r.copy())), schema)
   }
 }

@@ -38,9 +38,7 @@ object LakeStreamSink {
   def lastCommittedBatch(table: LakeTable, queryKey: String): Option[Long] = {
     val m = table.metadata
     val fromProp = m.properties.get(HwmPropPrefix + queryKey).map(_.toLong)
-    val fromWalk = Iterator.iterate(m.currentSnapshot)(s =>
-        s.flatMap(_.parentId).flatMap(m.snapshotById))
-      .takeWhile(_.isDefined).flatten
+    val fromWalk = m.currentSnapshotId.iterator.flatMap(m.lineage)
       .find(_.summary.get(QueryKey).contains(queryKey))
       .flatMap(_.summary.get(BatchKey)).map(_.toLong)
     (fromProp ++ fromWalk).maxOption

@@ -93,14 +93,10 @@ class LakeSourceProvider extends TableProvider with DataSourceRegister
         // v1 sinks receive a streaming-flagged DataFrame that must run
         // through ITS OWN (incremental) query execution — re-planning via
         // .rdd is rejected. Rebind collect-free through the prepared
-        // plan's InternalRow RDD + the row deserializer (public API).
+        // plan's InternalRow RDD (public API).
         val qe = data.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
           .queryExecution
-        val deser = org.apache.spark.sql.catalyst.encoders.ExpressionEncoder(
-          org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(data.schema))
-          .resolveAndBind(qe.analyzed.output)
-          .createDeserializer()
-        val batch = spark.createDataFrame(qe.toRdd.map(r => deser(r.copy())), data.schema)
+        val batch = graft.sqlext.PlanBridge.toDF(qe)
         // the rebound LogicalRDD can't estimate its size (defaults to
         // "huge"), but the incremental execution's own optimized plan
         // can — pass it through so a small micro-batch takes the
@@ -833,13 +829,9 @@ final class LakeMicroBatchStream(location: String,
     val m = table.refresh().metadata
     // ascending chain (fromId, endCap]; any walk irregularity
     // (expired history) defers to the planner's own clean error
-    var chain = List.empty[graft.format.Snapshot]
-    var cur = m.snapshotById(endCap)
-    while (cur.isDefined && cur.get.id != fromId) {
-      chain = cur.get :: chain
-      cur = cur.get.parentId.flatMap(m.snapshotById)
-    }
-    if (cur.isEmpty && fromId != 0L) return LakeOffset(endCap)
+    val (range, rest) = m.lineage(endCap).span(_.id != fromId)
+    val chain = range.toList.reverse
+    if (!rest.hasNext && fromId != 0L) return LakeOffset(endCap)
     var files = 0L; var bytes = 0L
     var end = fromId
     var first = true
@@ -936,16 +928,14 @@ final class LakeChangesMicroBatchStream(location: String)
       // initial batch: current content as inserts, attributed to head
       planSide(endId, insert = true, LakeTable.changedFiles(table, None, to)._1)
     } else {
-      // ascending chain of snapshots in (fromId, endId]
-      var chain = List.empty[graft.format.Snapshot]
-      var cur: Option[graft.format.Snapshot] = Some(to)
-      while (cur.exists(_.id != fromId)) {
-        val s = cur.get
-        chain = s :: chain
-        cur = s.parentId.map(pid => m.snapshotById(pid).getOrElse(
-          throw new IllegalStateException(
-            s"snapshot $pid in unread range ($fromId, $endId] expired from $location")))
-        if (cur.isEmpty) throw new IllegalStateException(
+      // ascending chain of snapshots in (fromId, endId]; a walk that
+      // misses fromId ended at an expired parent or at the root
+      val (range, rest) = m.lineage(endId).span(_.id != fromId)
+      val chain = range.toList.reverse
+      if (!rest.hasNext) chain.head.parentId match {
+        case Some(pid) => throw new IllegalStateException(
+          s"snapshot $pid in unread range ($fromId, $endId] expired from $location")
+        case None => throw new IllegalStateException(
           s"offset snapshot $fromId is not an ancestor of $endId at $location " +
             "(history rewritten under a running stream)")
       }

@@ -95,12 +95,12 @@ class EdgeCasesSpec extends SparkSpec {
   test("SQL DDL: CREATE TABLE / CTAS with transforms / DROP TABLE") {
     spark.conf.set("spark.graft.warehouse", warehouse)
     spark.sql("""CREATE TABLE lake.ddl_t (id BIGINT, v STRING, ts TIMESTAMP_NTZ)
-      PARTITIONED BY (bucket(4, id), years(ts)) TBLPROPERTIES ('graft.manifest.codec'='gzip')""")
+      PARTITIONED BY (bucket(4, id), years(ts)) TBLPROPERTIES ('purpose'='etl')""")
     val t = engine.catalog.loadTable("ddl_t")
     assert(t.schema.fieldNames.toSeq === Seq("id", "v", "ts"))
     assert(t.metadata.partitionSpec.map(p => (p.sourceColumn, p.transform)) ===
       Seq(("id", "bucket[4]"), ("ts", "years".replace("years", "year"))))
-    assert(t.properties("graft.manifest.codec") === "gzip")
+    assert(t.properties("purpose") === "etl")
     spark.sql("INSERT INTO lake.ddl_t VALUES (1, 'a', TIMESTAMP_NTZ'2024-06-01 00:00:00')")
     assert(spark.sql("SELECT * FROM lake.ddl_t").count() === 1)
     // duplicate create errors; IF NOT EXISTS no-ops
@@ -135,9 +135,9 @@ class EdgeCasesSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getString(1), Option(r.get(2)))).toSeq
     // old file projects by field id: rename visible, added col NULL, id widened
     assert(got === Seq((1L, "a", None), (2L, "b", Some(0.5))))
-    spark.sql("ALTER TABLE lake.alter_t SET TBLPROPERTIES ('graft.manifest.codec'='gzip', 'team'='x')")
+    spark.sql("ALTER TABLE lake.alter_t SET TBLPROPERTIES ('purpose'='etl', 'team'='x')")
     val t = engine.catalog.loadTable("alter_t")
-    assert(t.properties("graft.manifest.codec") === "gzip" && t.properties("team") === "x")
+    assert(t.properties("purpose") === "etl" && t.properties("team") === "x")
     spark.sql("ALTER TABLE lake.alter_t UNSET TBLPROPERTIES ('team')")
     assert(!engine.catalog.loadTable("alter_t").properties.contains("team"))
     spark.sql("DROP TABLE lake.alter_t")

@@ -181,80 +181,15 @@ class ManifestSpec extends SparkSpec {
     assert(engine.scan(t).toDF().count() === slice(1995).count())
   }
 
-  test("gzip manifest codec round-trips; DML and compaction unchanged") {
-    val t = mkTable(Map("graft.manifest.codec" -> "gzip",
-      "graft.manifest.max-count" -> "4"))
-    (0 until 6).foreach(i => engine.insert(t, rows(i * 10 until i * 10 + 10)))
-    val s = t.metadata.currentSnapshot.get
-    assert(s.manifests.forall(_.path.endsWith(".json.gz")),
-      s"expected gz chunks, got ${s.manifests.map(_.path)}")
-    assert(engine.scan(t).toDF().count() === 60)
-    engine.delete(t, "id >= 50")
-    assert(engine.scan(t).toDF().count() === 50)
-    // cold-cache reload parses gz chunks from disk
-    ManifestCache.clear()
-    val t2 = LakeTable.load(t.location)
-    assert(t2.currentFiles().map(_.recordCount).sum === 50)
-    // unknown codec rejected at write time
-    val bad = mkTable(Map("graft.manifest.codec" -> "lz77"))
-    intercept[ValidationException] { engine.insert(bad, rows(0 until 3)) }
-  }
-
-  test("manifest codec switches on a live table; mixed chunks coexist") {
-    val t = mkTable()
-    engine.insert(t, rows(0 until 10))                    // json chunk
-    t.setProperties(Map("graft.manifest.codec" -> "gzip"))
-    engine.insert(t, rows(10 until 20))                   // gzip chunk
-    val s = t.metadata.currentSnapshot.get
-    assert(s.manifests.map(_.path.endsWith(".json.gz")) === Seq(false, true))
-    assert(engine.scan(t).toDF().count() === 20)
-    ManifestCache.clear()
-    assert(LakeTable.load(t.location).currentFiles().size === t.currentFiles().size)
-    intercept[ValidationException] {
-      t.setProperties(Map("graft.manifest.codec" -> "nope"))
-    }
-  }
-
-  test("binary manifest codec: exact round-trip incl. edge values; DML unchanged") {
-    // pure codec round-trip with every optionality edge
-    val entries = Seq(
+  test("JSON manifest chunks round-trip edge values exactly through a cold reload") {
+    // every optionality edge: unicode path, __NULL__ partition, Long.MaxValue,
+    // quotes and backslashes, -Infinity/NaN stats strings, absent stats
+    val edges = Seq(
       FileEntry("/data/ünïcode/p näme.parquet", Map("k" -> "__NULL__", "y" -> "1996"),
         0L, 0L, 1, Map("1" -> ColumnStats(None, None, 5L, Some(2L))), 3),
       FileEntry("/plain.parquet", Map.empty, Long.MaxValue, 123456789L, 2,
         Map("2" -> ColumnStats(Some("a\"b\\c"), Some(""), 0L, None),
           "7" -> ColumnStats(Some("-Infinity"), Some("NaN"), 1L, Some(0L))), 0))
-    assert(ManifestBinaryCodec.read(ManifestBinaryCodec.write(entries)) === entries)
-    assert(ManifestBinaryCodec.read(ManifestBinaryCodec.write(Seq.empty)) === Seq.empty)
-
-    // live table under the binary codec
-    val t = mkTable(Map("graft.manifest.codec" -> "binary",
-      "graft.manifest.max-count" -> "4"))
-    (0 until 6).foreach(i => engine.insert(t, rows(i * 10 until i * 10 + 10)))
-    assert(t.metadata.currentSnapshot.get.manifests.forall(_.path.endsWith(".gmf")))
-    assert(engine.scan(t).toDF().count() === 60)
-    engine.delete(t, "id >= 50")
-    assert(engine.scan(t).toDF().count() === 50)
-    ManifestCache.clear()
-    assert(LakeTable.load(t.location).currentFiles().map(_.recordCount).sum === 50)
-    // pruning still works off binary-decoded stats
-    assert(engine.scan(t, "id = 42").planFiles().size <
-      t.currentFiles().size)
-  }
-
-  test("parquet manifest codec: exact round-trip incl. edge values; DML unchanged") {
-    // pure codec round-trip with every optionality edge
-    val entries = Seq(
-      FileEntry("/data/ünïcode/p näme.parquet", Map("k" -> "__NULL__", "y" -> "1996"),
-        0L, 0L, 1, Map("1" -> ColumnStats(None, None, 5L, Some(2L))), 3),
-      FileEntry("/plain.parquet", Map.empty, Long.MaxValue, 123456789L, 2,
-        Map("2" -> ColumnStats(Some("a\"b\\c"), Some(""), 0L, None),
-          "7" -> ColumnStats(Some("-Infinity"), Some("NaN"), 1L, Some(0L))), 0))
-    assert(ManifestParquetCodec.read(ManifestParquetCodec.write(entries)) === entries)
-    assert(ManifestParquetCodec.read(ManifestParquetCodec.write(Seq.empty)) === Seq.empty)
-    // projected path-only read decodes a single column chunk
-    assert(ManifestParquetCodec.readPaths(ManifestParquetCodec.write(entries)) ===
-      entries.map(_.path))
-
     // deterministic pseudo-random fuzz across the full optionality space
     val rnd = new scala.util.Random(20260813L)
     def rs(): String = {
@@ -275,52 +210,50 @@ class ManifestSpec extends SparkSpec {
             if (rnd.nextBoolean()) Some(rnd.nextInt(10).toLong) else None)
         }.toMap, rnd.nextInt(3))
     }
-    assert(ManifestParquetCodec.read(ManifestParquetCodec.write(fuzz)) === fuzz)
-    assert(ManifestParquetCodec.readPaths(ManifestParquetCodec.write(fuzz)) === fuzz.map(_.path))
-
-    // live table under the parquet codec
-    val t = mkTable(Map("graft.manifest.codec" -> "parquet",
-      "graft.manifest.max-count" -> "4"))
-    (0 until 6).foreach(i => engine.insert(t, rows(i * 10 until i * 10 + 10)))
-    assert(t.metadata.currentSnapshot.get.manifests.forall(_.path.endsWith(".parquet")))
-    assert(engine.scan(t).toDF().count() === 60)
-    engine.delete(t, "id >= 50")
-    assert(engine.scan(t).toDF().count() === 50)
-    ManifestCache.clear()
-    assert(LakeTable.load(t.location).currentFiles().map(_.recordCount).sum === 50)
-    // pruning still works off parquet-decoded stats
-    assert(engine.scan(t, "id = 42").planFiles().size < t.currentFiles().size)
-  }
-
-  test("rewriteManifests migrates a table onto parquet manifests") {
+    // metadata-only commits write one chunk each; a cold load re-reads
+    // them from disk through the same decode every manifest read uses
     val t = mkTable()
-    (0 until 4).foreach(i => engine.insert(t, rows(i * 10 until i * 10 + 10)))
-    val before = engine.scan(t).toDF().collect().toSet
-    t.setProperties(Map("graft.manifest.codec" -> "parquet"))
-    // new commits use parquet chunks while old json chunks stay readable
-    engine.insert(t, rows(40 until 50))
-    val mixed = t.metadata.currentSnapshot.get.manifests.map(_.path)
-    assert(mixed.exists(_.endsWith(".json")) && mixed.exists(_.endsWith(".parquet")),
-      s"expected mixed codecs: $mixed")
-    Maintenance.rewriteManifests(t)
-    val s = t.metadata.currentSnapshot.get
-    assert(s.manifests.size === 1 && s.manifests.head.path.endsWith(".parquet"))
+    t.appendFiles(edges)
+    t.appendFiles(fuzz)
+    val chunks = t.metadata.currentSnapshot.get.manifests
+    assert(chunks.map(_.entryCount) === Seq(2L, 200L))
+    assert(chunks.forall(_.path.endsWith(".json")), chunks.map(_.path).toString)
     ManifestCache.clear()
-    assert(engine.scan(t).toDF().collect().toSet ===
-      before ++ rows(40 until 50).collect().toSet)
+    val cold = LakeTable.load(t.location)
+    assert(chunks.map(cold.readManifest) === Seq(edges, fuzz))
   }
 
-  test("rewriteManifests consolidates chunks and migrates the codec") {
+  test("a manifest chunk in a non-JSON encoding fails with an error naming it") {
+    val t = mkTable()
+    engine.insert(t, rows(0 until 10))
+    val metaDir = Paths.get(t.location, "metadata")
+    val json = t.metadata.currentSnapshot.get.manifests.head.path
+    Seq(".gmf", ".parquet").foreach { suffix =>
+      // the same bytes under a foreign suffix, published as the next version
+      val foreign = json.stripSuffix(".json") + suffix
+      Files.copy(metaDir.resolve(json), metaDir.resolve(foreign))
+      val v = LakeTable.currentVersion(t.location)
+      Files.writeString(metaDir.resolve(s"v${v + 1}.json"),
+        Files.readString(metaDir.resolve(s"v$v.json")).replace(json, foreign))
+      ManifestCache.clear()
+      val e = intercept[ValidationException] { LakeTable.load(t.location).currentFiles() }
+      assert(e.getMessage.contains(foreign), e.getMessage)
+      // restore the JSON chunk as head so the next suffix starts clean
+      Files.writeString(metaDir.resolve(s"v${v + 2}.json"),
+        Files.readString(metaDir.resolve(s"v$v.json")))
+    }
+    assert(engine.scan(LakeTable.load(t.location)).toDF().count() === 10)
+  }
+
+  test("rewriteManifests consolidates chunks") {
     val t = mkTable()
     (0 until 5).foreach(i => engine.insert(t, rows(i * 10 until i * 10 + 10)))
     assert(t.metadata.currentSnapshot.get.manifests.size === 5)
     val before = engine.scan(t).toDF().collect().toSet
 
-    t.setProperties(Map("graft.manifest.codec" -> "binary"))
     Maintenance.rewriteManifests(t)
     val s = t.metadata.currentSnapshot.get
     assert(s.manifests.size === 1, s"not consolidated: ${s.manifests.map(_.path)}")
-    assert(s.manifests.head.path.endsWith(".gmf"), "codec not migrated")
     assert(s.operation === "replace")
     assert(engine.scan(t).toDF().collect().toSet === before)
     // history still reads through the old chunks; time travel intact
@@ -360,8 +293,6 @@ class ManifestSpec extends SparkSpec {
       override def putIfAbsent(dir: java.nio.file.Path, name: String, content: String): Boolean = {
         puts.incrementAndGet(); LocalCommitStore.putIfAbsent(dir, name, content)
       }
-      override def publishHint(dir: java.nio.file.Path, v: Int): Unit =
-        LocalCommitStore.publishHint(dir, v)
     }
     val df = Seq((1L, "a")).toDF("id", "v")
     val loc = Paths.get(warehouse, freshName()).toString

@@ -29,9 +29,7 @@ class SwitchInventorySpec extends AnyFunSuite {
     "graft.cache.max.file.bytes" -> Deployment,
     "spark.graft.warehouse" -> Deployment,
     "spark.graft.checkpoint.dir" -> Deployment,
-    "spark.graft.read.tuneSplitPlanning" -> Deployment,
     "graft.compact.target-bytes" -> TableProperty,
-    "graft.manifest.codec" -> TableProperty,
     "graft.manifest.max-count" -> TableProperty,
     "graft.manifest.merge-min-entries" -> TableProperty,
     "graft.write.bloom-columns" -> TableProperty,

@@ -85,15 +85,36 @@ class PredPushdownSpec extends SparkSpec {
 
   test("DELETE on a never-true NOT(col = NULL) condition is a no-op, not a wipe") {
     import graft.format._
-    val dir = java.nio.file.Files.createTempDirectory("graft-nulllit-").toString
+    // NOT IN with a NULL in its list is never TRUE either: no file may
+    // count as fully matching, even one whose stats exclude every listed
+    // value (5000 is outside 0..999), or the delete rewrites it for nothing
+    Seq("NOT (k = NULL)", "k NOT IN (5000, NULL)").foreach { cond =>
+      val dir = java.nio.file.Files.createTempDirectory("graft-nulllit-").toString
+      val catalog = new LakeCatalog(dir)
+      val engine = new graft.commands.LakeEngine(spark, catalog)
+      val df = spark.range(0, 1000).select(col("id").as("k"), (col("id") % 3).as("v"))
+      val t = catalog.createTable("t", df.schema, sortOrder = Seq(SortField("k")))
+      engine.insert(t, df)
+      val snapshots = LakeTable.load(t.location).metadata.snapshots.size
+      engine.delete(t, cond)
+      val after = LakeTable.load(t.location)
+      assert(engine.scan(after).toDF().count() == 1000,
+        s"DELETE $cond must keep every row under 3VL")
+      assert(after.metadata.snapshots.size == snapshots, s"DELETE $cond added a snapshot")
+    }
+  }
+
+  test("insertOverwrite of an empty source on a never-true NOT IN (.., NULL) keeps every row") {
+    import graft.format._
+    val dir = java.nio.file.Files.createTempDirectory("graft-notinnull-").toString
     val catalog = new LakeCatalog(dir)
     val engine = new graft.commands.LakeEngine(spark, catalog)
-    val df = spark.range(0, 1000).select(col("id").as("k"), (col("id") % 3).as("v"))
+    val df = spark.range(10, 20).select(col("id").as("k"))
     val t = catalog.createTable("t", df.schema, sortOrder = Seq(SortField("k")))
     engine.insert(t, df)
-    engine.delete(t, "NOT (k = NULL)")
-    assert(engine.scan(LakeTable.load(t.location)).toDF().count() == 1000,
-      "DELETE NOT (k = NULL) must keep every row under 3VL")
+    engine.insertOverwrite(t, df.limit(0), "k NOT IN (5, NULL)")
+    assert(engine.scan(LakeTable.load(t.location)).toDF().count() == 10,
+      "an overwrite filter that is never TRUE must remove no file")
   }
 
   test("DELETE rebuild pushes the keep prefilter into the parquet scan") {
