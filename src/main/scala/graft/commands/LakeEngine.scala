@@ -224,18 +224,10 @@ final class LakeEngine(
       throw new ValidationException(s"no snapshot $toId"))
     val from = fromSnapshotId.map(id => m.snapshotById(id).getOrElse(
       throw new ValidationException(s"no snapshot $id")))
-    // ascending (from, to] commit chain, None when from isn't an ancestor
-    def chainFrom(f: Snapshot): Option[List[Snapshot]] = {
-      val (range, rest) = m.lineage(to.id).span(_.id != f.id)
-      val chain = range.toList.reverse
-      if (rest.hasNext) Some(chain) else None
-    }
     val pieces: Seq[(String, Long, Seq[FileEntry])] =
-      from.filter(f => f.id != to.id).flatMap(chainFrom) match {
-        case Some(chain) if chain.exists(_.operation == "replace") =>
-          chain.filterNot(_.operation == "replace").flatMap { s =>
-            val parent = s.parentId.flatMap(m.snapshotById)
-            val (add, rem) = LakeTable.changedFiles(table, parent, s)
+      from.map(f => m.snapshotsBetween(Some(f.id), to.id)) match {
+        case Some(Right(chain)) if chain.exists(_.operation == "replace") =>
+          LakeTable.changesBySnapshot(table, chain).flatMap { case (s, add, rem) =>
             Seq(("delete", s.id, rem), ("insert", s.id, add))
           }
         case _ =>

@@ -1517,7 +1517,7 @@ object MediaSynth {
     }
 
     // frames 2+: explicit per-MB te(v) ref_idx against a 2-entry list
-    def nalMRef(f: Int, refOf: Int => Int): Array[Byte] = {
+    def nalMRef(f: Int, refIdxOf: Int => Int): Array[Byte] = {
       val bw = new graft.extras.H264.BitWriter
       pHeader(bw, f, twoRefs = true)
       bw.se(0) // slice_qp_delta
@@ -1525,7 +1525,7 @@ object MediaSynth {
       while (mb < nMbs) {
         bw.ue(0) // mb_skip_run
         bw.ue(0) // mb_type P_L0_16x16
-        bw.u(1 - refOf(mb), 1) // ref_idx_l0 te(v), cMax 1: value = !bit
+        bw.u(1 - refIdxOf(mb), 1) // ref_idx_l0 te(v), cMax 1: value = !bit
         bw.se(0); bw.se(0) // mvd
         bw.ue(0) // coded_block_pattern: 0
         mb += 1
@@ -2149,7 +2149,7 @@ private[extras] object H264 {
     // seeing partition 0 of the same macroblock.
     @inline def avail(bx: Int, by: Int): Boolean =
       bx >= 0 && by >= 0 && bx < w4 && by < h4 && bref(by * w4 + bx) != BlkNA
-    @inline def refOf(bx: Int, by: Int): Int = bref(by * w4 + bx)
+    @inline def refIdxOf(bx: Int, by: Int): Int = bref(by * w4 + bx)
     @inline def mvOf(bx: Int, by: Int): (Int, Int) = {
       val i = by * w4 + bx
       if (bref(i) >= 0) (bmvx(i), bmvy(i)) else (0, 0) // intra -> (0,0)
@@ -2164,18 +2164,18 @@ private[extras] object H264 {
     // BEFORE the general process (each conditioned on that neighbor
     // carrying the partition's own reference)
     rule match {
-      case 1 if bAvail && refOf(x0, y0 - 1) == curRef => return mvOf(x0, y0 - 1)
-      case 2 if aAvail && refOf(x0 - 1, y0) == curRef => return mvOf(x0 - 1, y0)
-      case 3 if aAvail && refOf(x0 - 1, y0) == curRef => return mvOf(x0 - 1, y0)
-      case 4 if cAvail && refOf(cx, cy) == curRef => return mvOf(cx, cy)
+      case 1 if bAvail && refIdxOf(x0, y0 - 1) == curRef => return mvOf(x0, y0 - 1)
+      case 2 if aAvail && refIdxOf(x0 - 1, y0) == curRef => return mvOf(x0 - 1, y0)
+      case 3 if aAvail && refIdxOf(x0 - 1, y0) == curRef => return mvOf(x0 - 1, y0)
+      case 4 if cAvail && refIdxOf(cx, cy) == curRef => return mvOf(cx, cy)
       case _ => ()
     }
     // 8.4.1.3.1: B, C and D unavailable, A available -> mvA
     // (positional availability — an intra A yields (0,0) via mvOf)
     if (!bAvail && !cAvail && aAvail) return mvOf(x0 - 1, y0)
-    val aSame = aAvail && refOf(x0 - 1, y0) == curRef
-    val bSame = bAvail && refOf(x0, y0 - 1) == curRef
-    val cSame = cAvail && refOf(cx, cy) == curRef
+    val aSame = aAvail && refIdxOf(x0 - 1, y0) == curRef
+    val bSame = bAvail && refIdxOf(x0, y0 - 1) == curRef
+    val cSame = cAvail && refIdxOf(cx, cy) == curRef
     val nSame = (if (aSame) 1 else 0) + (if (bSame) 1 else 0) +
       (if (cSame) 1 else 0)
     if (nSame == 1) { // exactly one neighbor has refIdxN == refIdx

@@ -313,30 +313,15 @@ class LakeTable private (
       throw new ValidationException(s"no snapshot $toSnapshotId"))
     val from = fromSnapshotId.map(id => meta.snapshotById(id).getOrElse(
       throw new ValidationException(s"no snapshot $id")))
-    // walk to -> from, validating the chain is append-only and connected
-    val (range, rest) = meta.lineage(toSnapshotId).span(s => !fromSnapshotId.contains(s.id))
-    range.foreach { s =>
-      if (s.operation != "append")
-        throw new ValidationException(
-          s"incremental read crosses non-append snapshot ${s.id} (${s.operation})")
+    val range = meta.snapshotsBetween(fromSnapshotId, toSnapshotId)
+    range.merge.findLast(_.operation != "append").foreach { s =>
+      throw new ValidationException(
+        s"incremental read crosses non-append snapshot ${s.id} (${s.operation})")
     }
-    if (fromSnapshotId.isDefined && !rest.hasNext)
+    if (range.isLeft)
       throw new ValidationException(
         s"snapshot $fromSnapshotId is not an ancestor of $toSnapshotId")
-    val fromChunks = from.map(_.manifests.map(_.path).toSet).getOrElse(Set.empty)
-    // Paths needing filtering can only come from `from`-chunks ABSENT from
-    // `to`'s list (a list-compaction rewrote them into a fresh chunk that
-    // the non-shared filter below will read); shared chunks are skipped
-    // wholesale, so reading them to collect their paths would spend
-    // O(table) metadata for nothing.
-    val toChunks = to.manifests.map(_.path).toSet
-    val fromPaths = from.map(_.manifests
-        .filterNot(m => toChunks.contains(m.path))
-        .flatMap(readManifest).map(_.path).toSet)
-      .getOrElse(Set.empty[String])
-    to.manifests.filterNot(m => fromChunks.contains(m.path))
-      .flatMap(readManifest)
-      .filterNot(f => fromPaths.contains(f.path))
+    LakeTable.changedFiles(this, from, to)._1
   }
 
   // -------------------------------------------------------------------
@@ -797,6 +782,18 @@ object LakeTable {
     (toOnly.filterNot(f => fromOnlyPaths.contains(f.path)),
       fromOnly.filterNot(f => toOnlyPaths.contains(f.path)))
   }
+
+  /** Per-commit deltas along an ascending snapshot chain whose parents
+    * are all present: (snapshot, added, removed) for every commit except
+    * `replace` ones (compaction, manifest rewrite), which move files
+    * without changing logical rows. */
+  def changesBySnapshot(table: LakeTable,
+      chain: Seq[Snapshot]): Seq[(Snapshot, Seq[FileEntry], Seq[FileEntry])] =
+    chain.filterNot(_.operation == "replace").map { s =>
+      val (added, removed) =
+        changedFiles(table, s.parentId.flatMap(table.metadata.snapshotById), s)
+      (s, added, removed)
+    }
 
   def load(location: String, store: CommitStore = LocalCommitStore): LakeTable =
     new LakeTable(location, loadMeta(location, store), store)

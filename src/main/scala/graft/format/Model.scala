@@ -111,6 +111,16 @@ final case class TableMetadata(
     Iterator.iterate(snapshotById(id))(_.flatMap(_.parentId).flatMap(snapshotById))
       .takeWhile(_.isDefined).flatten
 
+  /** The snapshots in (`from`, `to`] oldest first; with no `from`, the
+    * whole lineage of `to`. Left holds the snapshots walked when the
+    * lineage ended without reaching `from`: the oldest one's parentId is
+    * Some when that parent expired, None when the walk hit the root. */
+  def snapshotsBetween(from: Option[Long], to: Long): Either[List[Snapshot], List[Snapshot]] = {
+    val (range, rest) = lineage(to).span(s => !from.contains(s.id))
+    val chain = range.toList.reverse
+    if (from.isEmpty || rest.hasNext) Right(chain) else Left(chain)
+  }
+
   def currentSnapshot: Option[Snapshot] = currentSnapshotId.flatMap(snapshotById)
 
   /** Time-travel resolution (mirrors reference SqlQueryProcessor.java:371-402). */
@@ -131,6 +141,46 @@ object TableRef {
   final case class AsOfTimestamp(tsMs: Long) extends TableRef
   final case class Branch(name: String) extends TableRef
   final case class Tag(name: String) extends TableRef
+
+  /** Time-travel read options: `snapshot-id` | `timestamp` | `branch` |
+    * `tag` (the first one set wins), else [[Head]]. */
+  def fromOptions(get: String => String): TableRef =
+    Seq("snapshot-id" -> "snapshot", "timestamp" -> "timestamp", "branch" -> "branch", "tag" -> "tag")
+      .collectFirst { case (opt, kind) if get(opt) != null => parse(kind, get(opt), s"option '$opt'") }
+      .getOrElse(Head)
+
+  /** `name$snapshot_<id>` / `name$timestamp_<ts>` / `name$branch_<b>` /
+    * `name$tag_<t>` -> (name, ref); a bare name reads the head. */
+  def fromSuffix(spec: String): (String, TableRef) = spec.indexOf('$') match {
+    case -1 => (spec, Head)
+    case idx =>
+      val suffix = spec.substring(idx + 1)
+      val kind = Seq("snapshot", "timestamp", "branch", "tag").find(k => suffix.startsWith(k + "_"))
+        .getOrElse(throw new IllegalArgumentException(s"unknown time-travel suffix: $suffix"))
+      (spec.substring(0, idx), parse(kind, suffix.stripPrefix(kind + "_"), s"suffix '$$${kind}_'"))
+  }
+
+  /** A timestamp is epoch millis or, as in the reference's suffix grammar
+    * (SqlQueryProcessor.java:386-388), an ISO local date or datetime read
+    * as UTC. `source` names the option or suffix in the error. */
+  private def parse(kind: String, v: String, source: String): TableRef = {
+    def bad(what: String) = new ValidationException(s"$source must be $what, got '$v'")
+    kind match {
+      case "snapshot" => SnapshotId(v.toLongOption.getOrElse(throw bad("a snapshot id")))
+      case "timestamp" => AsOfTimestamp(
+        try {
+          if (v.nonEmpty && v.forall(_.isDigit)) v.toLong
+          else (if (v.contains('T')) java.time.LocalDateTime.parse(v)
+            else java.time.LocalDate.parse(v).atStartOfDay())
+            .toInstant(java.time.ZoneOffset.UTC).toEpochMilli
+        } catch {
+          case _: NumberFormatException | _: java.time.format.DateTimeParseException =>
+            throw bad("epoch millis or an ISO local date or datetime")
+        })
+      case "branch" => Branch(v)
+      case "tag" => Tag(v)
+    }
+  }
 }
 
 final case class CommitMetrics(

@@ -63,7 +63,9 @@ object PredSql {
     case _ => None
   }
 
-  private def external(v: Any, dt: DataType): Any = (v, dt) match {
+  /** Catalyst-internal literal value -> the external value the pruner's
+    * literalKey understands; shared with the connector's v2 predicates. */
+  private[graft] def external(v: Any, dt: DataType): Any = (v, dt) match {
     case (null, _) => null
     case (s: UTF8String, _) => s.toString
     case (micros: Long, TimestampType) =>

@@ -569,7 +569,7 @@ class ResolveLakeRelations(spark: SparkSession) extends Rule[LogicalPlan] {
         new LakeCatalog(Paths.get(location).getParent.toString))
       Some(engine.readChanges(table, Some(fromId)).queryExecution.analyzed)
     } else {
-      val (_, ref) = parseRef(spec)
+      val (_, ref) = TableRef.fromSuffix(spec)
       Some(new TableScan(spark, table, ref = ref).toDF().queryExecution.analyzed)
     }
   }
@@ -599,35 +599,6 @@ class ResolveLakeRelations(spark: SparkSession) extends Rule[LogicalPlan] {
               records) }
           .toDF("spec_id", "partition", "record_count")
     }
-  }
-
-  /** `name$snapshot_<id>` / `name$timestamp_<epochMillis>` /
-    * `name$branch_<b>` / `name$tag_<t>` -> (name, TableRef). */
-  private def parseRef(spec: String): (String, TableRef) = {
-    val idx = spec.indexOf('$')
-    if (idx < 0) return (spec, TableRef.Head)
-    val (name, suffix) = (spec.substring(0, idx), spec.substring(idx + 1))
-    val ref = suffix match {
-      case s if s.startsWith("snapshot_")  => TableRef.SnapshotId(s.stripPrefix("snapshot_").toLong)
-      case s if s.startsWith("timestamp_") =>
-        val v = s.stripPrefix("timestamp_")
-        // reference parity: the suffix is a local-datetime string
-        // (SqlQueryProcessor.java:386-388, DateTimeUtil
-        // .parseLocalDateTimeToMicros); bare epoch millis also accepted
-        val ms =
-          if (v.nonEmpty && v.forall(_.isDigit)) v.toLong
-          else {
-            val ldt =
-              if (v.contains('T')) java.time.LocalDateTime.parse(v)
-              else java.time.LocalDate.parse(v).atStartOfDay()
-            ldt.toInstant(java.time.ZoneOffset.UTC).toEpochMilli
-          }
-        TableRef.AsOfTimestamp(ms)
-      case s if s.startsWith("branch_")    => TableRef.Branch(s.stripPrefix("branch_"))
-      case s if s.startsWith("tag_")       => TableRef.Tag(s.stripPrefix("tag_"))
-      case other => throw new IllegalArgumentException(s"unknown time-travel suffix: $other")
-    }
-    (name, ref)
   }
 }
 

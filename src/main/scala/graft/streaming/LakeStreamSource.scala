@@ -1,22 +1,25 @@
 package graft.streaming
 
 import graft.format.{FileEntry, LakeTable}
+import graft.scan.{AlwaysTrue, And, Eq, Ge, Gt, In, IsNull, Le, Lt, Ne, NotNull, Or, Pred, PredSql, StartsWith}
 import graft.scan.SchemaEvolve
 import java.util.{Map => JMap}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, BindReferences, Expression, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, BindReferences, BoundReference, Expression, GenericInternalRow, Literal, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.expressions.{Expression => V2Expression, Literal => V2Literal, NamedReference, Transform}
+import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.execution.datasources.{InMemoryFileIndex, PartitionSpec}
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder
 import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types.{Metadata, StructType}
+import org.apache.spark.sql.types.{DataType, LongType, Metadata, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Lake tables as a DataSource V2 connector — a MicroBatchStream SOURCE
   * (the mirror of [[LakeStreamSink]], closing the table-to-table
@@ -40,9 +43,13 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * batch path, bound once and applied per-row in the reader. No classes
   * live in Spark's namespace and no v1 `Source` shim is needed.
   *
+  * Batch reads, append streams and change streams share one planner, one
+  * partition type and one reader factory keyed by schema id.
+  *
   * Usage: `spark.readStream.format("graft-lake").option("path", loc).load()`
-  * (and `spark.read.format("graft-lake")` for a full-table batch read;
-  * [[graft.scan.TableScan]] remains the pruning batch read path).
+  * (and `spark.read.format("graft-lake")` for a batch read that prunes
+  * files on pushed and runtime filters from manifest stats; `lake.*` SQL
+  * reads go through [[graft.scan.TableScan]] and prune no files).
   */
 class LakeSourceProvider extends TableProvider with DataSourceRegister
     with org.apache.spark.sql.sources.StreamSinkProvider {
@@ -145,67 +152,58 @@ private[streaming] object LakeDsv2 {
       :+ org.apache.spark.sql.types.StructField(
       CommitSnapshotCol, org.apache.spark.sql.types.LongType, nullable = false))
 
-  /** Time-travel read options (batch read only):
-    * snapshot-id | timestamp (epoch millis) | branch | tag. */
-  def refOf(get: String => String): graft.format.TableRef = {
-    import graft.format.TableRef
-    Seq[(String, String => TableRef)](
-      "snapshot-id" -> (v => TableRef.SnapshotId(v.toLong)),
-      "timestamp"   -> (v => TableRef.AsOfTimestamp(v.toLong)),
-      "branch"      -> (v => TableRef.Branch(v)),
-      "tag"         -> (v => TableRef.Tag(v)))
-      .collectFirst { case (k, f) if get(k) != null => f(get(k)) }
-      .getOrElse(TableRef.Head)
-  }
-
-  /** DSv2 source filter -> pruning predicate. Unconvertible filters map
-    * to None and simply don't prune (Spark re-evaluates every filter on
-    * the returned rows, so pushdown here is pruning-only and always
-    * sound). */
-  def toPred(f: org.apache.spark.sql.sources.Filter): Option[graft.scan.Pred] = {
-    import org.apache.spark.sql.sources._
-    import graft.scan
-    def top(attr: String): Option[String] = if (attr.contains('.')) None else Some(attr)
-    f match {
-      case EqualTo(a, v) => top(a).map(scan.Eq(_, v))
-      case LessThan(a, v) => top(a).map(scan.Lt(_, v))
-      case LessThanOrEqual(a, v) => top(a).map(scan.Le(_, v))
-      case GreaterThan(a, v) => top(a).map(scan.Gt(_, v))
-      case GreaterThanOrEqual(a, v) => top(a).map(scan.Ge(_, v))
-      case In(a, vs) => top(a).map(scan.In(_, vs.toSeq))
-      case IsNull(a) => top(a).map(scan.IsNull(_))
-      case IsNotNull(a) => top(a).map(scan.NotNull(_))
-      case StringStartsWith(a, p) => top(a).map(scan.StartsWith(_, p))
-      case And(l, r) => (toPred(l), toPred(r)) match {
-        case (Some(a), Some(b)) => Some(scan.And(a, b))
-        case (a, b) => a.orElse(b) // AND may soundly keep the convertible side
-      }
-      case Or(l, r) => for { a <- toPred(l); b <- toPred(r) } yield scan.Or(a, b)
-      // negation pushed into the leaf (the Pred algebra has no Not node)
-      case Not(EqualTo(a, v)) => top(a).map(scan.Ne(_, v))
-      case Not(In(a, vs)) => top(a).map(scan.NotIn(_, vs.toSeq))
-      case Not(IsNull(a)) => top(a).map(scan.NotNull(_))
-      case Not(IsNotNull(a)) => top(a).map(scan.IsNull(_))
-      case Not(LessThan(a, v)) => top(a).map(scan.Ge(_, v))
-      case Not(LessThanOrEqual(a, v)) => top(a).map(scan.Gt(_, v))
-      case Not(GreaterThan(a, v)) => top(a).map(scan.Le(_, v))
-      case Not(GreaterThanOrEqual(a, v)) => top(a).map(scan.Lt(_, v))
+  /** Pushed or runtime v2 predicate -> pruning predicate. A predicate
+    * that does not convert maps to None and prunes nothing; Spark
+    * re-applies every predicate to the returned rows, so pushdown here
+    * only skips files and is always sound. AND may keep its convertible
+    * side, OR needs both, and NOT is pushed only into a leaf (the Pred
+    * algebra has no Not node). Dotted (nested) names do not convert. */
+  def predOf(p: Predicate): Option[Pred] = {
+    def column(e: V2Expression): Option[String] = e match {
+      case nr: NamedReference if nr.fieldNames.length == 1 && !nr.fieldNames()(0).contains('.') =>
+        Some(nr.fieldNames()(0))
       case _ => None
+    }
+    // catalyst-internal literal -> the external value the Pred layer's
+    // literalKey understands (UTF8String, timestamp micros, date days)
+    def value(e: V2Expression): Option[Any] = e match {
+      case l: V2Literal[_] => Some(PredSql.external(l.value, l.dataType))
+      case _ => None
+    }
+    def compare(op: String, c: String, v: Any): Pred = op match {
+      case "=" => Eq(c, v); case "<>" => Ne(c, v)
+      case "<" => Lt(c, v); case "<=" => Le(c, v)
+      case ">" => Gt(c, v); case ">=" => Ge(c, v)
+    }
+    val flipped = Map("=" -> "=", "<>" -> "<>", "<" -> ">", "<=" -> ">=", ">" -> "<", ">=" -> "<=")
+    def leaf(p: Predicate): Option[Pred] = (p.name, p.children.toSeq) match {
+      case (op, Seq(l, r)) if flipped.contains(op) =>
+        column(l).zip(value(r)).map { case (c, v) => compare(op, c, v) }
+          .orElse(column(r).zip(value(l)).map { case (c, v) => compare(flipped(op), c, v) })
+      case ("IN", c +: vs) =>
+        val values = vs.map(value)
+        column(c).filter(_ => values.forall(_.isDefined)).map(In(_, values.flatten))
+      case ("IS_NULL", Seq(c)) => column(c).map(IsNull(_))
+      case ("IS_NOT_NULL", Seq(c)) => column(c).map(NotNull(_))
+      case ("STARTS_WITH", Seq(c, prefix)) =>
+        column(c).zip(value(prefix)).map { case (n, v) => StartsWith(n, v.toString) }
+      case _ => None
+    }
+    (p.name, p.children.toSeq) match {
+      case ("AND", Seq(l: Predicate, r: Predicate)) => (predOf(l), predOf(r)) match {
+        case (Some(a), Some(b)) => Some(And(a, b))
+        case (a, b) => a.orElse(b)
+      }
+      case ("OR", Seq(l: Predicate, r: Predicate)) =>
+        predOf(l).zip(predOf(r)).map { case (a, b) => Or(a, b) }
+      case ("NOT", Seq(c: Predicate)) if c.name != "STARTS_WITH" => leaf(c).map(Pred.negate)
+      case _ => leaf(p)
     }
   }
 
   def clean(s: StructType): StructType =
     StructType(s.fields.map(f => f.copy(metadata = Metadata.empty)))
 
-  /** Plan `files` through Spark's parquet reader: one ParquetScanBuilder
-    * per written-schema group (partition inference suppressed — the lake
-    * layout's hive-style dirs are NOT DSv2 partition columns), partitions
-    * tagged with their group, one factory per group plus the bound
-    * field-id projection for groups not already on the current schema.
-    * `out` is the (possibly column-pruned) slice of the CURRENT schema
-    * the scan must produce: current-schema groups read exactly those
-    * columns from parquet; older-schema groups read their id-matched
-    * source columns and project. */
   /** Re-attach field ids to the pruned output slice (pruneColumns hands
     * back metadata-free columns; ids drive the evolution projection).
     * Fields that already carry an id (a stream's pinned schema) are kept
@@ -226,6 +224,8 @@ private[streaming] object LakeDsv2 {
       ids.contains(graft.format.FieldIds.of(f))))
   }
 
+  /** Spark's parquet scan over `files` (partition inference suppressed:
+    * the lake layout's hive-style dirs are NOT DSv2 partition columns). */
   private def parquetScanFor(spark: ClassicSession, readWritten: StructType,
       files: Seq[FileEntry]) = {
     val index = new InMemoryFileIndex(spark, files.map(f => new Path(f.path)),
@@ -234,58 +234,39 @@ private[streaming] object LakeDsv2 {
       new CaseInsensitiveStringMap(new java.util.HashMap[String, String]())).build()
   }
 
-  def plan(spark: ClassicSession, table: LakeTable, files: Seq[FileEntry],
-      out: StructType): (Array[InputPartition], PartitionReaderFactory) = {
-    if (files.isEmpty) return (Array.empty, EmptyReaderFactory)
-    val outIds = outWithIds(table, out)
-    val groups = files.groupBy(_.schemaId).toSeq.sortBy(_._1)
-    val parts = Vector.newBuilder[InputPartition]
-    val factories = Map.newBuilder[Int, PartitionReaderFactory]
-    val projections = Map.newBuilder[Int, Seq[Expression]]
-    groups.foreach { case (sid, fs) =>
-      val readWritten = readWrittenFor(table, sid, outIds)
-      val batch = parquetScanFor(spark, readWritten, fs).toBatch
-      batch.planInputPartitions().foreach(p => parts += SchemaGroupPartition(sid, p))
-      factories += sid -> batch.createReaderFactory()
-      if (clean(readWritten) != clean(outIds))
-        projections += sid -> boundEvolveExprs(spark, readWritten, outIds)
-    }
-    (parts.result().toArray, GroupReaderFactory(factories.result(), projections.result()))
-  }
-
-  /** Partitions only — used with [[readerFactory]] by the batch scan,
-    * where Spark may re-plan partitions after runtime filtering while
-    * keeping the factory built at physical planning. */
+  /** Plan `files` through Spark's parquet reader, one scan per
+    * written-schema group, each split tagged with its group and `change`.
+    * `out` is the (possibly column-pruned) slice of the CURRENT schema
+    * the read must produce: current-schema groups read exactly those
+    * columns; older-schema groups read their id-matched source columns
+    * and are projected by [[readerFactory]]. */
   def planPartitions(spark: ClassicSession, table: LakeTable, files: Seq[FileEntry],
-      out: StructType): Array[InputPartition] = {
-    if (files.isEmpty) return Array.empty
+      out: StructType, change: Option[(String, Long)] = None): Array[InputPartition] = {
     val outIds = outWithIds(table, out)
-    val parts = Vector.newBuilder[InputPartition]
-    files.groupBy(_.schemaId).toSeq.sortBy(_._1).foreach { case (sid, fs) =>
-      val batch = parquetScanFor(spark, readWrittenFor(table, sid, outIds), fs).toBatch
-      batch.planInputPartitions().foreach(p => parts += SchemaGroupPartition(sid, p))
-    }
-    parts.result().toArray
+    files.groupBy(_.schemaId).toSeq.sortBy(_._1).flatMap { case (sid, fs) =>
+      parquetScanFor(spark, readWrittenFor(table, sid, outIds), fs).toBatch
+        .planInputPartitions().map(p => LakePartition(sid, Right(p), change))
+    }.toArray
   }
 
-  /** Factory covering EVERY schema id the snapshot knows — built from
-    * an empty file index (the parquet reader factory derives from
-    * schema + conf, not from the planned files), so factory creation
-    * costs O(schemas), never O(files). Any file set planned from the
-    * same snapshot is a subset of these groups. */
-  def readerFactory(spark: ClassicSession, table: LakeTable,
-      out: StructType): PartitionReaderFactory = {
+  /** The factory for schema groups `schemaIds`, built from empty file
+    * indexes (the parquet reader factory derives from schema + conf, not
+    * from the planned files), so it costs O(schemas), never O(files).
+    * A batch scan covers every schema of its snapshot, so a re-plan after
+    * runtime filtering stays a subset; a stream covers its micro-batch. */
+  def readerFactory(spark: ClassicSession, table: LakeTable, out: StructType,
+      schemaIds: Iterable[Int]): LakeReaderFactory = {
     val outIds = outWithIds(table, out)
     val factories = Map.newBuilder[Int, PartitionReaderFactory]
     val projections = Map.newBuilder[Int, Seq[Expression]]
-    table.metadata.schemas.keys.map(_.toInt).toSeq.sorted.foreach { sid =>
+    schemaIds.toSeq.distinct.sorted.foreach { sid =>
       val readWritten = readWrittenFor(table, sid, outIds)
       factories += sid ->
         parquetScanFor(spark, readWritten, Seq.empty).toBatch.createReaderFactory()
       if (clean(readWritten) != clean(outIds))
         projections += sid -> boundEvolveExprs(spark, readWritten, outIds)
     }
-    GroupReaderFactory(factories.result(), projections.result())
+    LakeReaderFactory(factories.result(), projections.result(), out.fields.map(_.dataType).toSeq)
   }
 
   /** The [[SchemaEvolve]] column projection, analyzed against an empty
@@ -306,35 +287,56 @@ private[streaming] object LakeDsv2 {
   }
 }
 
-private[streaming] final case class SchemaGroupPartition(
-    schemaId: Int, inner: InputPartition) extends InputPartition {
-  override def preferredLocations(): Array[String] = inner.preferredLocations()
+/** The connector's one input partition: a parquet split of schema group
+  * `schemaId`, tagged (change type, commit snapshot id) when it feeds the
+  * change stream, or (Left) the single row of an aggregate answered from
+  * metadata (catalyst-internal, Serializable values). */
+private[streaming] final case class LakePartition(schemaId: Int,
+    split: Either[Seq[Any], InputPartition],
+    change: Option[(String, Long)] = None) extends InputPartition {
+  override def preferredLocations(): Array[String] =
+    split.fold(_ => Array.empty[String], _.preferredLocations())
 }
 
-private[streaming] case object EmptyReaderFactory extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    throw new IllegalStateException("empty scan has no partitions")
-}
-
-/** Routes each partition to its schema group's parquet factory and, for
-  * groups written under an older schema, applies the bound field-id
-  * projection per row (built lazily executor-side — UnsafeProjection
-  * itself is not serializable, the expressions are). */
-private[streaming] final case class GroupReaderFactory(
+/** The connector's one reader factory, keyed by schema id: a split reads
+  * through its group's parquet factory, then one projection applies the
+  * group's bound field-id evolution (when written under another schema)
+  * and appends the `_change_type` and `_commit_snapshot_id` literals
+  * (when change-tagged). The projection is built lazily executor-side:
+  * UnsafeProjection itself is not serializable, the expressions are. */
+private[streaming] final case class LakeReaderFactory(
     factories: Map[Int, PartitionReaderFactory],
-    projections: Map[Int, Seq[Expression]]) extends PartitionReaderFactory {
+    projections: Map[Int, Seq[Expression]],
+    outTypes: Seq[DataType]) extends PartitionReaderFactory {
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val sgp = p.asInstanceOf[SchemaGroupPartition]
-    val inner = factories(sgp.schemaId).createReader(sgp.inner)
-    projections.get(sgp.schemaId) match {
-      case None => inner
-      case Some(exprs) => new PartitionReader[InternalRow] {
-        private[this] val proj = UnsafeProjection.create(exprs)
-        override def next(): Boolean = inner.next()
-        override def get(): InternalRow = proj(inner.get())
-        override def close(): Unit = inner.close()
+    val lp = p.asInstanceOf[LakePartition]
+    lp.split match {
+      case Left(values) => new PartitionReader[InternalRow] {
+        private[this] val row = new GenericInternalRow(values.toArray)
+        private[this] var pending = true
+        override def next(): Boolean = { val n = pending; pending = false; n }
+        override def get(): InternalRow = row
+        override def close(): Unit = ()
       }
+      case Right(split) =>
+        val inner = factories.getOrElse(lp.schemaId, throw new IllegalStateException(
+          s"no reader for schema id ${lp.schemaId}")).createReader(split)
+        val tags = lp.change.toSeq.flatMap { case (kind, sid) =>
+          Seq(Literal(UTF8String.fromString(kind), StringType), Literal(sid, LongType))
+        }
+        val exprs = projections.get(lp.schemaId) match {
+          case Some(evolve) => evolve ++ tags
+          case None if tags.nonEmpty =>
+            outTypes.zipWithIndex.map { case (dt, i) => BoundReference(i, dt, nullable = true) } ++ tags
+          case None => return inner
+        }
+        new PartitionReader[InternalRow] {
+          private[this] val proj = UnsafeProjection.create(exprs)
+          override def next(): Boolean = inner.next()
+          override def get(): InternalRow = proj(inner.get())
+          override def close(): Unit = inner.close()
+        }
     }
   }
 }
@@ -355,7 +357,7 @@ private[streaming] final class LakeDsv2Table(location: String,
       TableCapability.TRUNCATE)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new LakeScan(location, schema(), LakeDsv2.refOf(options.get),
+    new LakeScan(location, schema(), graft.format.TableRef.fromOptions(options.get),
       changes = changes || LakeDsv2.changesMode(options.get),
       maxFilesPerTrigger = LakeDsv2.positiveOption(options, "maxFilesPerTrigger").map(_.toInt),
       maxBytesPerTrigger = LakeDsv2.positiveOption(options, "maxBytesPerTrigger"))
@@ -396,7 +398,7 @@ private[streaming] final class LakeScan(location: String, outSchema: StructType,
     maxFilesPerTrigger: Option[Int] = None,
     maxBytesPerTrigger: Option[Long] = None)
   extends ScanBuilder with Scan
-  with org.apache.spark.sql.connector.read.SupportsPushDownFilters
+  with org.apache.spark.sql.connector.read.SupportsPushDownV2Filters
   with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns
   with org.apache.spark.sql.connector.read.SupportsPushDownAggregates
   with org.apache.spark.sql.connector.read.SupportsReportStatistics
@@ -449,67 +451,22 @@ private[streaming] final class LakeScan(location: String, outSchema: StructType,
     * footer min/max make IN-set pruning sound (never wrong, possibly
     * conservative) on any other column. Runtime filters are
     * execution-time hints — rows are still re-filtered by the join. */
-  override def filterAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] =
+  override def filterAttributes(): Array[NamedReference] =
     if (changes) Array.empty
     // only columns the (possibly pruned) scan OUTPUT carries: Spark
     // resolves these against the scan's output attributes, and a
     // projected-away column fails analysis inside PartitionPruning.
     // Dotted names are skipped: Expressions.column PARSES dots into
     // nested paths, which would mis-resolve a literal "a.b" column
-    // (same guard as LakeDsv2.toPred's top()).
+    // (LakeDsv2.predOf does not convert dotted names either).
     else out.fields.filterNot(_.name.contains('.')).map(f =>
       org.apache.spark.sql.connector.expressions.Expressions.column(f.name))
 
-  override def filter(
-      filters: Array[org.apache.spark.sql.connector.expressions.filter.Predicate]): Unit = {
-    import org.apache.spark.sql.connector.expressions.NamedReference
-    import org.apache.spark.sql.types.{DateType, TimestampNTZType, TimestampType}
-    // catalyst-internal literal -> external value the Pred layer's
-    // literalKey understands (UTF8String -> String, micros/days -> the
-    // temporal classes toEpochMicros accepts)
-    def lit(e: org.apache.spark.sql.connector.expressions.Expression): Option[Any] = e match {
-      case l: org.apache.spark.sql.connector.expressions.Literal[_] =>
-        (l.dataType, l.value) match {
-        case (_, s: org.apache.spark.unsafe.types.UTF8String) => Some(s.toString)
-        case (TimestampType | TimestampNTZType, micros: java.lang.Long) =>
-          Some(java.time.Instant.ofEpochSecond(
-            java.lang.Math.floorDiv(micros, 1000000L),
-            java.lang.Math.floorMod(micros, 1000000L) * 1000L))
-        case (DateType, days: java.lang.Integer) =>
-          Some(java.time.LocalDate.ofEpochDay(days.longValue()))
-        case (_, v) => Some(v)
-      }
-      case _ => None
-    }
-    val preds = filters.toSeq.flatMap { p =>
-      p.name() match {
-        case "IN" => p.children().toSeq match {
-          case (nr: NamedReference) +: vals if nr.fieldNames.length == 1 =>
-            val vs = vals.map(lit)
-            if (vs.forall(_.isDefined))
-              Some(graft.scan.In(nr.fieldNames()(0), vs.flatten))
-            else None
-          case _ => None
-        }
-        case "=" => p.children().toSeq match {
-          case Seq(nr: NamedReference, v) if nr.fieldNames.length == 1 =>
-            lit(v).map(graft.scan.Eq(nr.fieldNames()(0), _))
-          case _ => None
-        }
-        case _ => None // unconvertible runtime filters are hints; skip
-      }
-    }
-    if (preds.nonEmpty)
-      pred = preds.foldLeft(pred)(graft.scan.And(_, _))
+  override def filter(filters: Array[Predicate]): Unit = {
+    val preds = filters.flatMap(LakeDsv2.predOf) // unconvertible runtime filters are hints
+    if (preds.nonEmpty) pred = preds.foldLeft(pred)(And(_, _))
   }
 
-  /** Accurate pre-execution statistics from the PRUNED file set —
-    * manifest record counts and byte sizes after partition/stats
-    * pruning, scaled by the projection's column fraction. Catalyst's
-    * join planning (broadcast-vs-shuffle, build-side choice) sees the
-    * post-pruning size instead of a blind default, so a selective
-    * lake read joins like the small relation it actually is. Planning
-    * cost is metadata-only (the same planFiles the read itself uses). */
   /** ONE table snapshot per scan: every planning surface (statistics,
     * metadata aggregation, partition planning — including the second
     * planInputPartitions pass Spark makes after runtime filters) reads
@@ -524,7 +481,8 @@ private[streaming] final class LakeScan(location: String, outSchema: StructType,
     * Spark may create (pre- and post-runtime-filter) hand out this same
     * factory. */
   private lazy val sharedFactory: PartitionReaderFactory =
-    LakeDsv2.readerFactory(ClassicSession.active, tableSnap, out)
+    LakeDsv2.readerFactory(ClassicSession.active, tableSnap, out,
+      if (aggRow.isDefined) Nil else tableSnap.metadata.schemas.keys.map(_.toInt))
 
   /** planFiles memoized per pred state: supportCompletePushDown /
     * pushAggregation / estimateStatistics / partition planning would
@@ -541,6 +499,13 @@ private[streaming] final class LakeScan(location: String, outSchema: StructType,
     }
   }
 
+  /** Accurate pre-execution statistics from the PRUNED file set —
+    * manifest record counts and byte sizes after partition/stats
+    * pruning, scaled by the projection's column fraction. Catalyst's
+    * join planning (broadcast-vs-shuffle, build-side choice) sees the
+    * post-pruning size instead of a blind default, so a selective
+    * lake read joins like the small relation it actually is. Planning
+    * cost is metadata-only (the same planFiles the read itself uses). */
   override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics = {
     import java.util.OptionalLong
     val files =
@@ -570,20 +535,18 @@ private[streaming] final class LakeScan(location: String, outSchema: StructType,
 
   // pruning-only pushdown: every filter stays residual (Spark re-applies
   // them all), the convertible conjunction drives metadata file pruning
-  private var pred: graft.scan.Pred = graft.scan.AlwaysTrue
-  private var pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty
+  private var pred: Pred = AlwaysTrue
+  private var pushed: Array[Predicate] = Array.empty
   // column pruning: the parquet readers then read only these columns
   private var out: StructType = outSchema
 
-  override def pushFilters(filters: Array[org.apache.spark.sql.sources.Filter]):
-      Array[org.apache.spark.sql.sources.Filter] = {
-    val convertible = filters.flatMap(f => LakeDsv2.toPred(f).map(f -> _))
+  override def pushPredicates(predicates: Array[Predicate]): Array[Predicate] = {
+    val convertible = predicates.flatMap(p => LakeDsv2.predOf(p).map(p -> _))
     pushed = convertible.map(_._1)
-    pred = convertible.map(_._2)
-      .reduceOption[graft.scan.Pred](graft.scan.And(_, _)).getOrElse(graft.scan.AlwaysTrue)
-    filters // all residual: pushdown only prunes files, rows re-filtered
+    pred = convertible.map(_._2).reduceOption[Pred](And(_, _)).getOrElse(AlwaysTrue)
+    predicates // all residual: pushdown only prunes files, rows re-filtered
   }
-  override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] = pushed
+  override def pushedPredicates(): Array[Predicate] = pushed
 
   // changes mode emits the full row + _change_type; Spark projects above
   override def pruneColumns(required: StructType): Unit =
@@ -641,7 +604,6 @@ private[streaming] final class LakeScan(location: String, outSchema: StructType,
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation):
       Option[(StructType, Seq[Any])] = {
     import org.apache.spark.sql.connector.expressions.aggregate.{CountStar, Max, Min}
-    import org.apache.spark.sql.connector.expressions.NamedReference
     import org.apache.spark.sql.types._
     if (changes || agg.groupByExpressions.nonEmpty || pred != graft.scan.AlwaysTrue)
       return None
@@ -718,27 +680,19 @@ private[streaming] final class LakeScan(location: String, outSchema: StructType,
       throw new IllegalArgumentException(
         "read-changes is a streaming option; for a batch change feed use " +
           "SQL lake.`t$changes_<fromSnapshot>` or LakeEngine.readChanges")
-    aggRow match {
-      case Some(row) => new Batch {
-        override def planInputPartitions(): Array[InputPartition] =
-          Array(LocalRowsPartition(Seq(row)))
-        override def createReaderFactory(): PartitionReaderFactory =
-          new LocalRowsReaderFactory
+    new Batch {
+      // Spark builds the reader factory at physical planning (before
+      // runtime filters exist) but may call planInputPartitions on a
+      // FRESH toBatch() after SupportsRuntimeV2Filtering.filter(). Both
+      // read the scan's one table snapshot and share its one factory,
+      // so the runtime-filtered file set is always a SUBSET of the
+      // factory's schema groups.
+      private val spark = ClassicSession.active
+      override def planInputPartitions(): Array[InputPartition] = aggRow match {
+        case Some(row) => Array(LakePartition(-1, Left(row)))
+        case None => LakeDsv2.planPartitions(spark, tableSnap, applyLimit(plannedFiles()), out)
       }
-      case None => new Batch {
-        // Spark builds the reader factory at physical planning (before
-        // runtime filters exist) but may call planInputPartitions on a
-        // FRESH toBatch() after SupportsRuntimeV2Filtering.filter().
-        // Both paths read the scan's single cached table snapshot, so
-        // the runtime-filtered file set is always a SUBSET of the
-        // factory's schema groups — and the factory is built from the
-        // UNFILTERED snapshot exactly once per scan (shared across
-        // toBatch instances via the factory cache below).
-        private val spark = ClassicSession.active
-        override def planInputPartitions(): Array[InputPartition] =
-          LakeDsv2.planPartitions(spark, tableSnap, applyLimit(plannedFiles()), out)
-        override def createReaderFactory(): PartitionReaderFactory = sharedFactory
-      }
+      override def createReaderFactory(): PartitionReaderFactory = sharedFactory
     }
   }
 
@@ -758,58 +712,53 @@ private[streaming] final class LakeScan(location: String, outSchema: StructType,
   }
 }
 
-/** Driver-computed rows shipped to one task — the carrier for
-  * metadata-answered aggregates (values are catalyst-internal and
-  * Serializable; the partition is a single bounded row). */
-private[streaming] final case class LocalRowsPartition(rows: Seq[Seq[Any]])
-  extends InputPartition
-
-private[streaming] final class LocalRowsReaderFactory extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val rows = p.asInstanceOf[LocalRowsPartition].rows
-    new PartitionReader[InternalRow] {
-      private val it = rows.iterator
-      private var cur: InternalRow = _
-      override def next(): Boolean =
-        if (it.hasNext) {
-          cur = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-            it.next().toArray)
-          true
-        } else false
-      override def get(): InternalRow = cur
-      override def close(): Unit = ()
-    }
-  }
-}
-
-final class LakeMicroBatchStream(location: String,
-    maxFilesPerTrigger: Option[Int] = None,
-    maxBytesPerTrigger: Option[Long] = None)
+/** What the append and change streams share. Offsets are snapshot ids
+  * (0 = before the first snapshot). The consumer's schema is fixed at
+  * stream start (inferSchema); every micro-batch must emit THIS layout
+  * even if the table evolves while the stream runs. It is kept with
+  * field-id metadata so files committed under a later schema are
+  * projected back by id (added columns drop, removed columns resurface
+  * as NULL) instead of leaking a different column count into the
+  * running plan. */
+private[streaming] sealed abstract class LakeStreamBase(location: String)
     extends MicroBatchStream with SupportsTriggerAvailableNow {
-  private val spark = ClassicSession.active
-  private val table = LakeTable.load(location)
-  // The consumer's schema is fixed at stream start (inferSchema); every
-  // micro-batch must emit THIS layout even if the table evolves while
-  // the stream runs. Kept with field-id metadata so files committed
-  // under a later schema are projected back by id (added columns drop,
-  // removed columns resurface as NULL) instead of leaking a different
-  // column count into the running plan.
-  private val pinnedSchema = table.schema
-  // AvailableNow pins the end offset at start; null = unbounded stream
+  protected val spark: ClassicSession = ClassicSession.active
+  protected val table: LakeTable = LakeTable.load(location)
+  protected val pinnedSchema: StructType = table.schema
+  // AvailableNow pins the end offset at start; None = unbounded stream
   @volatile private var availableEnd: Option[LakeOffset] = None
   // the factory matching the LAST planInputPartitions call (Spark builds
   // the factory right after planning each micro-batch)
-  @volatile private var lastFactory: PartitionReaderFactory = EmptyReaderFactory
+  @volatile private var lastFactory: PartitionReaderFactory =
+    LakeReaderFactory(Map.empty, Map.empty, Nil)
 
   private def head(): Option[Long] = table.refresh().metadata.currentSnapshotId
 
   override def prepareForTriggerAvailableNow(): Unit =
     availableEnd = Some(LakeOffset(head().getOrElse(0L)))
-
   override def initialOffset(): Offset = LakeOffset(0L)
-
   override def latestOffset(): Offset =
     availableEnd.getOrElse(LakeOffset(head().getOrElse(0L)))
+  override def deserializeOffset(json: String): Offset = LakeOffset(json.trim.toLong)
+
+  /** Partitions for the micro-batch's (files, change tag) sides, and a
+    * factory covering the schema groups present in them. */
+  protected def plan(sides: Seq[(Seq[FileEntry], Option[(String, Long)])]): Array[InputPartition] = {
+    lastFactory = LakeDsv2.readerFactory(spark, table, pinnedSchema,
+      sides.flatMap(_._1.map(_.schemaId)))
+    sides.flatMap { case (files, change) =>
+      LakeDsv2.planPartitions(spark, table, files, pinnedSchema, change)
+    }.toArray
+  }
+
+  override def createReaderFactory(): PartitionReaderFactory = lastFactory
+  override def commit(end: Offset): Unit = ()
+  override def stop(): Unit = ()
+}
+
+final class LakeMicroBatchStream(location: String,
+    maxFilesPerTrigger: Option[Int] = None,
+    maxBytesPerTrigger: Option[Long] = None) extends LakeStreamBase(location) {
 
   // SupportsAdmissionControl (via SupportsTriggerAvailableNow):
   // `option("maxFilesPerTrigger", n)` / `option("maxBytesPerTrigger", n)`
@@ -826,12 +775,10 @@ final class LakeMicroBatchStream(location: String,
     if (maxFilesPerTrigger.isEmpty && maxBytesPerTrigger.isEmpty) return LakeOffset(endCap)
     val fromId = start.asInstanceOf[LakeOffset].snapshotId
     if (endCap == 0L || fromId == endCap) return LakeOffset(endCap)
-    val m = table.refresh().metadata
-    // ascending chain (fromId, endCap]; any walk irregularity
-    // (expired history) defers to the planner's own clean error
-    val (range, rest) = m.lineage(endCap).span(_.id != fromId)
-    val chain = range.toList.reverse
-    if (!rest.hasNext && fromId != 0L) return LakeOffset(endCap)
+    // any walk irregularity (expired history) defers to the planner's
+    // own clean error
+    val chain = table.refresh().metadata.snapshotsBetween(Some(fromId).filter(_ != 0L), endCap)
+      .getOrElse(return LakeOffset(endCap))
     var files = 0L; var bytes = 0L
     var end = fromId
     var first = true
@@ -851,26 +798,14 @@ final class LakeMicroBatchStream(location: String,
     LakeOffset(end)
   }
 
-  override def deserializeOffset(json: String): Offset = LakeOffset(json.trim.toLong)
-
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val from = start.asInstanceOf[LakeOffset].snapshotId match {
-      case 0L => None
-      case id => Some(id)
-    }
+    val from = Some(start.asInstanceOf[LakeOffset].snapshotId).filter(_ != 0L)
     val endId = end.asInstanceOf[LakeOffset].snapshotId
     val files =
       if (endId == 0L || from.contains(endId)) Seq.empty
       else table.refresh().appendedFiles(from, endId)
-    val (parts, factory) = LakeDsv2.plan(spark, table, files, pinnedSchema)
-    lastFactory = factory
-    parts
+    plan(Seq(files -> None))
   }
-
-  override def createReaderFactory(): PartitionReaderFactory = lastFactory
-
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
 }
 
 /** Row-level CDC stream (Delta Change-Data-Feed shape): each micro-batch
@@ -881,113 +816,42 @@ final class LakeMicroBatchStream(location: String,
   * inside a single micro-batch (Delta CDF's _commit_version plays the
   * same role). Per-commit file sets come from the O(changed-chunks)
   * manifest diff against each snapshot's parent
-  * ([[LakeTable.changedFiles]]), so overwrites/deletes stream fine (the
-  * append-only stream errors on them by design). Pure rewrites
+  * ([[LakeTable.changesBySnapshot]]), so overwrites/deletes stream fine
+  * (the append-only stream errors on them by design). Pure rewrites
   * (`operation = "replace"`: compaction, manifest rewrite) change no
   * logical rows and are skipped outright instead of emitting
   * delete+insert churn for every untouched row. The first batch replays
   * the table's current content as inserts attributed to the head
   * snapshot. A snapshot expired out of an unread range fails the stream
   * cleanly rather than misattributing its changes. */
-final class LakeChangesMicroBatchStream(location: String)
-    extends MicroBatchStream with SupportsTriggerAvailableNow {
-  private val spark = ClassicSession.active
-  private val table = LakeTable.load(location)
-  private val pinnedSchema = table.schema // see LakeMicroBatchStream
-  @volatile private var availableEnd: Option[LakeOffset] = None
-  @volatile private var lastFactory: PartitionReaderFactory = EmptyReaderFactory
-
-  private def head(): Option[Long] = table.refresh().metadata.currentSnapshotId
-
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableEnd = Some(LakeOffset(head().getOrElse(0L)))
-  override def initialOffset(): Offset = LakeOffset(0L)
-  override def latestOffset(): Offset =
-    availableEnd.getOrElse(LakeOffset(head().getOrElse(0L)))
+final class LakeChangesMicroBatchStream(location: String) extends LakeStreamBase(location) {
   override def latestOffset(start: Offset, limit: org.apache.spark.sql.connector.read.streaming.ReadLimit): Offset =
     latestOffset()
-  override def deserializeOffset(json: String): Offset = LakeOffset(json.trim.toLong)
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val fromId = start.asInstanceOf[LakeOffset].snapshotId
     val endId = end.asInstanceOf[LakeOffset].snapshotId
-    if (endId == 0L || fromId == endId) { lastFactory = EmptyReaderFactory; return Array.empty }
+    if (endId == 0L || fromId == endId) return plan(Seq.empty)
     val m = table.refresh().metadata
     val to = m.snapshotById(endId).getOrElse(
       throw new IllegalStateException(s"offset snapshot $endId expired from $location"))
-
-    val parts = Vector.newBuilder[InputPartition]
-    val factories = Map.newBuilder[(Long, Boolean), PartitionReaderFactory]
-    def planSide(sid: Long, insert: Boolean, files: Seq[FileEntry]): Unit = {
-      val (p, f) = LakeDsv2.plan(spark, table, files, pinnedSchema)
-      factories += (sid, insert) -> f
-      p.foreach(ip => parts += ChangeSidePartition(insert, sid, ip))
-    }
-
-    if (fromId == 0L) {
+    val changes =
       // initial batch: current content as inserts, attributed to head
-      planSide(endId, insert = true, LakeTable.changedFiles(table, None, to)._1)
-    } else {
-      // ascending chain of snapshots in (fromId, endId]; a walk that
-      // misses fromId ended at an expired parent or at the root
-      val (range, rest) = m.lineage(endId).span(_.id != fromId)
-      val chain = range.toList.reverse
-      if (!rest.hasNext) chain.head.parentId match {
-        case Some(pid) => throw new IllegalStateException(
-          s"snapshot $pid in unread range ($fromId, $endId] expired from $location")
-        case None => throw new IllegalStateException(
-          s"offset snapshot $fromId is not an ancestor of $endId at $location " +
-            "(history rewritten under a running stream)")
-      }
-      chain.foreach { s =>
-        // "replace" rewrites files without changing logical rows — no CDC
-        if (s.operation != "replace") {
-          val parent = s.parentId.map(pid => m.snapshotById(pid).get) // resolved above
-          val (added, removed) = LakeTable.changedFiles(table, parent, s)
-          planSide(s.id, insert = true, added)
-          planSide(s.id, insert = false, removed)
+      if (fromId == 0L) Seq((to, LakeTable.changedFiles(table, None, to)._1, Seq.empty))
+      else m.snapshotsBetween(Some(fromId), endId) match {
+        case Right(chain) => LakeTable.changesBySnapshot(table, chain)
+        // the walk missed fromId: it ended at an expired parent or at the root
+        case Left(walked) => walked.head.parentId match {
+          case Some(pid) => throw new IllegalStateException(
+            s"snapshot $pid in unread range ($fromId, $endId] expired from $location")
+          case None => throw new IllegalStateException(
+            s"offset snapshot $fromId is not an ancestor of $endId at $location " +
+              "(history rewritten under a running stream)")
         }
       }
-    }
-    lastFactory = ChangesReaderFactory(factories.result(), pinnedSchema.fields.map(_.dataType))
-    parts.result().toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory = lastFactory
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
-}
-
-private[streaming] final case class ChangeSidePartition(
-    insert: Boolean, snapshotId: Long, inner: InputPartition) extends InputPartition {
-  override def preferredLocations(): Array[String] = inner.preferredLocations()
-}
-
-/** Routes a partition to its (snapshot, side) parquet factory and appends
-  * the `_change_type` and `_commit_snapshot_id` literal columns per row
-  * (projection built lazily executor-side from serializable
-  * BoundReference/Literal exprs). */
-private[streaming] final case class ChangesReaderFactory(
-    factories: Map[(Long, Boolean), PartitionReaderFactory],
-    baseTypes: Array[org.apache.spark.sql.types.DataType]) extends PartitionReaderFactory {
-  import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
-
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val cp = p.asInstanceOf[ChangeSidePartition]
-    val inner = factories((cp.snapshotId, cp.insert)).createReader(cp.inner)
-    val tag = if (cp.insert) "insert" else "delete"
-    new PartitionReader[InternalRow] {
-      private[this] val proj = UnsafeProjection.create(
-        baseTypes.zipWithIndex.map { case (dt, i) =>
-          BoundReference(i, dt, nullable = true): Expression
-        }.toIndexedSeq :+ (Literal(
-          org.apache.spark.unsafe.types.UTF8String.fromString(tag),
-          org.apache.spark.sql.types.StringType): Expression)
-          :+ (Literal(cp.snapshotId, org.apache.spark.sql.types.LongType): Expression))
-      override def next(): Boolean = inner.next()
-      override def get(): InternalRow = proj(inner.get())
-      override def close(): Unit = inner.close()
-    }
+    plan(changes.flatMap { case (s, added, removed) =>
+      Seq(added -> Some(("insert", s.id)), removed -> Some(("delete", s.id)))
+    })
   }
 }
 

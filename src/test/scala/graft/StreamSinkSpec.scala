@@ -315,6 +315,23 @@ class StreamSinkSpec extends SparkSpec {
     val old = spark.read.format("graft-lake").option("path", t.location)
       .option("snapshot-id", snap1.toString).load()
     assert(old.count() === slice(1995).count())
+    // the timestamp option takes an ISO local datetime (UTC), like the
+    // SQL `$timestamp_` suffix, and resolves to the same snapshot
+    val iso = java.time.LocalDateTime.ofInstant(java.time.Instant.ofEpochMilli(
+      t.metadata.snapshotById(snap1).get.timestampMs), java.time.ZoneOffset.UTC).toString
+    val byOption = spark.read.format("graft-lake").option("path", t.location)
+      .option("timestamp", iso).load()
+    spark.conf.set("spark.graft.warehouse", warehouse)
+    val tableName = java.nio.file.Paths.get(t.location).getFileName.toString
+    val bySql = spark.sql(s"SELECT * FROM lake.`$tableName$$timestamp_$iso`")
+    assert(byOption.count() === slice(1995).count())
+    assert(byOption.collect().toSet === bySql.collect().toSet)
+    // a malformed time-travel value fails naming its option
+    val bad = intercept[graft.format.ValidationException] {
+      spark.read.format("graft-lake").option("path", t.location)
+        .option("snapshot-id", "abc").load().collect()
+    }
+    assert(bad.getMessage.contains("snapshot-id"), bad.getMessage)
     // column pruning pushdown: the scan reads only the selected column
     val narrow = read.select("o_orderkey")
     val scanLine = narrow.queryExecution.executedPlan.toString
@@ -323,6 +340,35 @@ class StreamSinkSpec extends SparkSpec {
       .select("o_orderkey").distinct().count())
     val schemaShown = narrow.queryExecution.optimizedPlan.schema.fieldNames.toSeq
     assert(schemaShown === Seq("o_orderkey"), s"column pruning failed: $schemaShown / $scanLine")
+  }
+
+  test("connector option guards reject misplaced or malformed options") {
+    val t = engine.catalog.createTable(freshName(), Seq((1L, "a")).toDF("id", "v").schema)
+    engine.insert(t, Seq((1L, "a")).toDF("id", "v"))
+    def causes(x: Throwable): Seq[Throwable] =
+      if (x == null) Seq.empty else x +: causes(x.getCause)
+    def failsWith(msg: String)(body: => Unit): Unit = {
+      val e = intercept[Exception](body)
+      assert(causes(e).exists(c => Option(c.getMessage).exists(_.contains(msg))),
+        s"expected '$msg', got: $e")
+    }
+    def stream(opts: (String, String)*): Unit = {
+      val q = opts.foldLeft(spark.readStream.format("graft-lake")
+          .option("path", t.location)) { case (r, (k, v)) => r.option(k, v) }
+        .load().writeStream.format("memory")
+        .queryName(s"guard_${java.util.UUID.randomUUID().toString.take(8)}")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      try q.awaitTermination() finally q.stop()
+    }
+    failsWith("time-travel options are batch-read only")(stream("snapshot-id" -> "1"))
+    failsWith("read-changes is a streaming option") {
+      spark.read.format("graft-lake").option("path", t.location)
+        .option("read-changes", "true").load().collect()
+    }
+    failsWith("not supported with read-changes")(
+      stream("read-changes" -> "true", "maxFilesPerTrigger" -> "1"))
+    failsWith("must be a positive integer")(stream("maxFilesPerTrigger" -> "0"))
+    failsWith("must be a positive integer")(stream("maxFilesPerTrigger" -> "-3"))
   }
 
   test("writeStream.format(graft-lake): lake-to-lake without foreachBatch") {
