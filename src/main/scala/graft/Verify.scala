@@ -19,23 +19,37 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     // local-iteration filter: SPARK_GRAFT_VERIFY_ONLY=q1,q2 runs a subset
     // (the driver never sets it, so the gate always runs everything)
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    val gates = selectGates(sys.env.get("SPARK_GRAFT_VERIFY_ONLY"))
+    val queries = SparkEntry.queries
+    gates.foreach { name =>
       val t0 = System.nanoTime()
       try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         System.err.println(f"[verify] $name ok (${(System.nanoTime() - t0) / 1e9}%.1fs)")
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(gates))
+    spark.stop()
+  }
+
+  /** The gates one run covers, sorted by name: every registry gate, or
+    * only the names in the comma-separated `only` list. The run loop and
+    * oracle_sql.json both read this one selection, so a filtered run's
+    * oracle file names exactly the gates it ran. */
+  private[graft] def selectGates(only: Option[String]): Seq[String] = {
+    val keep = only.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    SparkEntry.queries.keys.toSeq.sorted.filter(n => keep.forall(_.contains(n)))
+  }
+
+  /** `{"gate": "oracle sql", ...}` for the selected gates that have an
+    * oracle. */
+  private[graft] def oracleJson(gates: Seq[String]): String = {
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
+    // — a tab or CR in an oracle's SQL would otherwise make json.load
+    // of the whole file fail, and with it every gate's compare.
     def q(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"
@@ -45,9 +59,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    val oracle = SparkEntry.oracleSql
+    gates.flatMap(g => oracle.get(g).map(sql => s"${q(g)}: ${q(sql)}"))
+      .mkString("{", ",", "}")
   }
 }

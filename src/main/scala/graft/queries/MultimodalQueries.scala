@@ -114,32 +114,6 @@ object MultimodalQueries {
       doc = "real MJPEG video decode: segment walk + per-frame ImageIO vs arithmetic oracle"),
 
     // ------------------------------------------------------------------
-    Q("multimodal_mp4_frames",
-      (s, d) => {
-        // the MP4/H.264 seam with a real pure-JVM codec behind it:
-        // per-id ISO-BMFF containers holding baseline I_PCM IDR frames
-        // (MediaSynth.mp4), decoded by JvmMp4Codec's box walk +
-        // Exp-Golomb SPS/PPS/slice parse + raw-macroblock pixel
-        // recovery. I_PCM is lossless, so the oracle pins the decoded
-        // first-frame LUMINANCE SUM arithmetically — a naive container
-        // sniff that never parses the bitstream cannot produce it.
-        Multimodal.mp4FrameFeatures(
-            Tables.documents(s, d).filter(col("doc_id") < 200), "doc_id")
-          .orderBy("doc_id")
-      },
-      oracle = Some("""
-        SELECT d.doc_id,
-          1 + d.doc_id % 3 AS n_frames,
-          16 * (1 + d.doc_id % 2) AS width,
-          16 AS height,
-          CAST(sum((d.doc_id + 3 * x.x + 5 * y.y) % 256) AS BIGINT) AS lum_sum,
-          (1 + d.doc_id % 3) * 16 * (1 + d.doc_id % 2) * 16 AS plane_bytes
-        FROM documents d, range(0, 32) x(x), range(0, 16) y(y)
-        WHERE d.doc_id < 200 AND x.x < 16 * (1 + d.doc_id % 2)
-        GROUP BY d.doc_id ORDER BY d.doc_id"""),
-      doc = "real MP4/H.264 decode: ISO-BMFF box walk + I_PCM bitstream parse vs exact pixel-sum oracle"),
-
-    // ------------------------------------------------------------------
     Q("multimodal_hist_similarity",
       (s, d) => {
         // the full multimodal RETRIEVAL pipeline in one gate: decode
@@ -248,344 +222,6 @@ object MultimodalQueries {
                 + 3 * ((x2 * (1 + doc_id % 8)) // 4)
                 + 5 * ((y2 * (1 + doc_id % 6)) // 3)) % 256)))) AS BIGINT) AS resized_sum
         FROM documents WHERE doc_id < 200 ORDER BY doc_id"""),
-      doc = "real image resize: decode + nearest-neighbor thumbnail resample vs arithmetic oracle"),
-
-    // ------------------------------------------------------------------
-    Q("multimodal_h264_cavlc",
-      (s, d) => {
-        // one real step past I_PCM (round 12): per-id MP4s whose IDR
-        // frames are ENTROPY-CODED — I_16x16/DC macroblocks carrying a
-        // CAVLC Intra16x16DCLevel block (coeff_token, trailing-one
-        // signs, level_prefix/suffix, total_zeros), reconstructed
-        // through the inverse 4x4 Hadamard, the 8.5.10 DC dequant and
-        // Intra_16x16 DC prediction. The coded DC level L makes every
-        // frame reconstruct flat at 128 + ((56L + 32) >> 6), so the
-        // decoded luma sum is a closed-form arithmetic fact — a decoder
-        // that skips any stage of the entropy/transform chain cannot
-        // produce it. Encoder and decoder share only bit primitives
-        // (separate tables), so a VLC error on either side fails here.
-        Multimodal.mp4CavlcFrameFeatures(
-            Tables.documents(s, d).filter(col("doc_id") < 200), "doc_id")
-          .orderBy("doc_id")
-      },
-      oracle = Some("""
-        SELECT doc_id,
-          1 + doc_id % 3 AS n_frames,
-          16 * (1 + doc_id % 2) AS width,
-          16 * (1 + (doc_id // 2) % 2) AS height,
-          CAST((16 * (1 + doc_id % 2)) * (16 * (1 + (doc_id // 2) % 2)) *
-            (128 + floor((56.0 * ((1 + doc_id % 8) *
-              (CASE WHEN doc_id % 3 = 0 THEN -1 ELSE 1 END)) + 32) / 64.0))
-            AS BIGINT) AS lum_sum,
-          (1 + doc_id % 3) * (16 * (1 + doc_id % 2)) * (16 * (1 + (doc_id // 2) % 2))
-            AS plane_bytes
-        FROM documents WHERE doc_id < 200 ORDER BY doc_id"""),
-      doc = "CAVLC I-frame decode: entropy-coded DC levels + inverse Hadamard + dequant + intra DC pred vs closed-form pixel oracle"),
-
-    // ------------------------------------------------------------------
-    Q("multimodal_h264_cavlc_ac",
-      (s, d) => {
-        // round-14 stretch: AC residuals. Every MB is I_16x16 / DC /
-        // cbpLuma 15, and the raster-LAST macroblock codes three AC
-        // blocks (TotalCoeff 1/1/2 with a level escape, a trailing-one
-        // sign, the tc=2 total_zeros column and a real run_before), so
-        // the decode exercises the general residual reader, the nC
-        // neighbor bookkeeping, per-position AC dequant and the full
-        // 4x4 inverse core transform. The coefficients are fixed, so
-        // the frame-0 luma sum is the DC closed form plus a floor-sum
-        // over the three blocks' fixed cell multisets — with the DC
-        // term D = 56L inside the rounding whenever the frame is a
-        // single MB (the last MB IS MB 0), else 0 (see
-        // MediaSynth.mp4CavlcAc's derivation).
-        Multimodal.mp4CavlcAcFrameFeatures(
-            Tables.documents(s, d).filter(col("doc_id") < 200), "doc_id")
-          .orderBy("doc_id")
-      },
-      oracle = Some("""
-        WITH p AS (
-          SELECT doc_id,
-            16 * (1 + doc_id % 2) AS width,
-            16 * (1 + (doc_id // 2) % 2) AS height,
-            1 + doc_id % 3 AS n_frames,
-            ((1 + doc_id % 8) * (CASE WHEN doc_id % 3 = 0 THEN -1 ELSE 1 END)) AS lvl,
-            CASE WHEN doc_id % 4 = 0
-              THEN 56 * ((1 + doc_id % 8) * (CASE WHEN doc_id % 3 = 0 THEN -1 ELSE 1 END))
-              ELSE 0 END AS dd
-          FROM documents WHERE doc_id < 200)
-        SELECT doc_id, CAST(n_frames AS BIGINT) AS n_frames,
-          CAST(width AS BIGINT) AS width, CAST(height AS BIGINT) AS height,
-          CAST(width * height * (128 + floor((56.0 * lvl + 32) / 64.0))
-            + 8 * floor((dd + 1152.0) / 64) + 8 * floor((dd - 1088.0) / 64)
-            + 12 * floor((dd + 256.0) / 64) + 12 * floor((dd - 192.0) / 64)
-            + 4 * floor((dd + 704.0) / 64) + 4 * floor((dd - 640.0) / 64)
-            - 48 * floor((dd + 32.0) / 64)
-            AS BIGINT) AS lum_sum,
-          CAST(n_frames * width * height AS BIGINT) AS plane_bytes
-        FROM p ORDER BY doc_id"""),
-      doc = "CAVLC AC residuals: general residual reader (run_before, tc=2 total_zeros, nC bookkeeping) + AC dequant + 4x4 inverse core transform vs closed-form floor-sum oracle"),
-
-    // ------------------------------------------------------------------
-    Q("multimodal_h264_pskip",
-      (s, d) => {
-        // round-15 stretch: the first INTER step. Frame 0 is a lossless
-        // I_PCM IDR; every later frame a non-IDR P slice made entirely
-        // of skipped macroblocks. The decoder parses the real P slice
-        // header, reads mb_skip_run, derives the P_Skip motion vector
-        // per spec 8.4.1.1 (zero for every MB of an all-skip frame) and
-        // motion-compensates from the previous frame — so each P frame
-        // reconstructs frame 0 exactly and the TOTAL luma sum across
-        // frames is the closed form n_frames * sum(frame 0).
-        Multimodal.mp4PSkipFrameFeatures(
-            Tables.documents(s, d).filter(col("doc_id") < 200), "doc_id")
-          .orderBy("doc_id")
-      },
-      oracle = Some("""
-        SELECT d.doc_id,
-          2 + d.doc_id % 3 AS n_frames,
-          16 * (1 + d.doc_id % 2) AS width,
-          16 * (1 + (d.doc_id // 2) % 2) AS height,
-          CAST((2 + d.doc_id % 3) *
-            sum((d.doc_id + 3 * x.x + 5 * y.y) % 256) AS BIGINT) AS lum_sum,
-          CAST((2 + d.doc_id % 3) * 16 * (1 + d.doc_id % 2)
-            * 16 * (1 + (d.doc_id // 2) % 2) AS BIGINT) AS plane_bytes
-        FROM documents d, range(0, 32) x(x), range(0, 32) y(y)
-        WHERE d.doc_id < 200
-          AND x.x < 16 * (1 + d.doc_id % 2)
-          AND y.y < 16 * (1 + (d.doc_id // 2) % 2)
-        GROUP BY d.doc_id ORDER BY d.doc_id"""),
-      doc = "H.264 inter decode: P_Skip slices (header parse, mb_skip_run, 8.4.1.1 zero-MV derivation, motion compensation with reference propagation) vs closed-form oracle"),
-
-    // ------------------------------------------------------------------
-    Q("multimodal_h264_pmv",
-      (s, d) => {
-        // round-16 stretch: coded inter motion. Frame 0 is an I_PCM
-        // vertical ramp (constant rows, base + 4*y); every later frame
-        // is a P slice of coded P_L0_16x16 MBs with real Exp-Golomb
-        // mvd_l0 pairs and zero residual. Odd P frames carry per-MB
-        // horizontal quarter/half-pel motion — constant rows make a
-        // CORRECT 6-tap interpolator reproduce the frame exactly (DC
-        // gain 32, (+16)>>5 rounding), so the sum pins the filter
-        // arithmetic. Even P frames shift the frame down k pels via ONE
-        // mvd on MB 0; every other MB's vector must be recovered by the
-        // 8.4.1.3 predictor (exactly-one-refIdx rule, B/C/D-unavail ->
-        // A rule, median with D substitution) or the ramp misaligns and
-        // the sum breaks. Cumulative shifts compose, so the total is
-        // the closed form in MediaSynth.mp4PMv's scaladoc.
-        Multimodal.mp4PMvFrameFeatures(
-            Tables.documents(s, d).filter(col("doc_id") < 200), "doc_id")
-          .orderBy("doc_id")
-      },
-      oracle = Some("""
-        WITH p AS (
-          SELECT doc_id,
-            16 * (1 + doc_id % 2) AS w,
-            16 * (1 + (doc_id // 2) % 2) AS h,
-            3 + doc_id % 3 AS nf,
-            20 + doc_id % 50 AS base,
-            1 + doc_id % 5 AS k
-          FROM documents WHERE doc_id < 200),
-        s AS (
-          SELECT doc_id, w, h, nf,
-            w * base * h + 4 * w * ((h * (h - 1)) // 2) AS s0,
-            w * base * h + 4 * w * ((h * (h - 1)) // 2
-              - (k * (k - 1)) // 2 + k * (h - 1)) AS s1,
-            w * base * h + 4 * w * ((h * (h - 1)) // 2
-              - (2 * k * (2 * k - 1)) // 2 + 2 * k * (h - 1)) AS s2
-          FROM p)
-        SELECT doc_id,
-          CAST(nf AS BIGINT) AS n_frames,
-          CAST(w AS BIGINT) AS width,
-          CAST(h AS BIGINT) AS height,
-          CAST(2 * s0 + s1 + CASE WHEN nf >= 4 THEN s1 ELSE 0 END
-            + CASE WHEN nf = 5 THEN s2 ELSE 0 END AS BIGINT) AS lum_sum,
-          CAST(nf * w * h AS BIGINT) AS plane_bytes
-        FROM s ORDER BY doc_id"""),
-      doc = "H.264 coded inter motion: P_L0_16x16 MBs (Exp-Golomb MVD, 8.4.1.3 median MV prediction, quarter-pel 6-tap luma interpolation) vs closed-form ramp oracle"),
-
-    // ------------------------------------------------------------------
-    Q("multimodal_h264_pintra",
-      (s, d) => {
-        // round-16 follow-up: intra-refresh MBs inside P slices — the
-        // shape every real encoder emits to stop error propagation.
-        // Frame 0 is a constant I_PCM IDR; each P frame codes MB 0 as
-        // INTRA I_16x16/DC with one CAVLC DC level (entropy decode,
-        // inverse Hadamard, 8.5.10 dequant, DC prediction AGAINST the
-        // P frame's reconstructed plane) and skips the rest. Skipped
-        // MBs copy in place, so the total luma sum is closed-form;
-        // the intra MB's neighbors are inter MBs, pinning the
-        // intra/inter handoff (refIdx -1 semantics, nC bookkeeping)
-        // that neither the pure-I nor the pure-P gates can reach.
-        Multimodal.mp4PIntraFrameFeatures(
-            Tables.documents(s, d).filter(col("doc_id") < 200), "doc_id")
-          .orderBy("doc_id")
-      },
-      oracle = Some("""
-        WITH p AS (
-          SELECT doc_id,
-            16 * (1 + doc_id % 2) AS w,
-            16 * (1 + (doc_id // 2) % 2) AS h,
-            2 + doc_id % 3 AS nf,
-            30 + doc_id % 180 AS v,
-            CASE WHEN doc_id % 3 = 0 THEN -1 ELSE 1 END AS sgn
-          FROM documents WHERE doc_id < 200),
-        m AS (
-          SELECT doc_id, w, h, nf, v,
-            128 + floor((56.0 * ((1 + (doc_id + 1) % 8) * sgn) + 32) / 64.0) AS m1,
-            128 + floor((56.0 * ((1 + (doc_id + 2) % 8) * sgn) + 32) / 64.0) AS m2,
-            128 + floor((56.0 * ((1 + (doc_id + 3) % 8) * sgn) + 32) / 64.0) AS m3
-          FROM p)
-        SELECT doc_id,
-          CAST(nf AS BIGINT) AS n_frames,
-          CAST(w AS BIGINT) AS width,
-          CAST(h AS BIGINT) AS height,
-          CAST(w * h * v
-            + (256 * m1 + (w * h - 256) * v)
-            + CASE WHEN nf >= 3 THEN 256 * m2 + (w * h - 256) * v ELSE 0 END
-            + CASE WHEN nf = 4 THEN 256 * m3 + (w * h - 256) * v ELSE 0 END
-            AS BIGINT) AS lum_sum,
-          CAST(nf * w * h AS BIGINT) AS plane_bytes
-        FROM m ORDER BY doc_id"""),
-      doc = "H.264 intra-refresh in P slices: I_16x16/DC MBs (CAVLC DC level, inverse Hadamard, dequant, DC prediction) mixed with P_Skip runs vs closed-form oracle"),
-
-    // ------------------------------------------------------------------
-    Q("multimodal_h264_pres",
-      (s, d) => {
-        // round-17 stretch: CODED INTER RESIDUALS. Frame 0 is a
-        // constant I_PCM IDR; every later frame is a P slice whose last
-        // MB is a coded P_L0_16x16 with CodedBlockPattern luma 15
-        // (inter me(v) mapping), mb_qp_delta, and CAVLC LumaLevel4x4
-        // residuals — 16-coefficient blocks where zigzag position 0 is
-        // a regular coefficient (the shape difference from intra AC),
-        // dequantized and added onto the motion-compensated prediction
-        // with per-block nC bookkeeping. Motion is zero so residuals
-        // accumulate across frames and the total stays closed-form.
-        Multimodal.mp4PResFrameFeatures(
-            Tables.documents(s, d).filter(col("doc_id") < 200), "doc_id")
-          .orderBy("doc_id")
-      },
-      oracle = Some("""
-        WITH p AS (
-          SELECT doc_id,
-            16 * (1 + doc_id % 2) AS w,
-            16 * (1 + (doc_id // 2) % 2) AS h,
-            2 + doc_id % 3 AS nf,
-            60 + doc_id % 120 AS v,
-            CASE doc_id % 5 WHEN 0 THEN 112 WHEN 1 THEN 176 WHEN 2 THEN 224
-              WHEN 3 THEN 288 ELSE 336 END AS s1
-          FROM documents WHERE doc_id < 200)
-        SELECT doc_id,
-          CAST(nf AS BIGINT) AS n_frames,
-          CAST(w AS BIGINT) AS width,
-          CAST(h AS BIGINT) AS height,
-          CAST(nf * w * h * v + (s1 + 4) * ((nf * (nf - 1)) // 2) AS BIGINT) AS lum_sum,
-          CAST(nf * w * h AS BIGINT) AS plane_bytes
-        FROM p ORDER BY doc_id"""),
-      doc = "H.264 coded inter residuals: P_L0_16x16 with cbp 15 (inter me(v) mapping, mb_qp_delta, 16-coeff CAVLC LumaLevel4x4, dequant + IDCT onto the MC prediction, nC bookkeeping) vs closed-form accumulation oracle"),
-
-    // ------------------------------------------------------------------
-    Q("multimodal_h264_mref",
-      (s, d) => {
-        // round-17 follow-up: MULTI-REFERENCE P slices. A frame
-        // sequence (I_PCM constant vA -> all-intra refresh to constant
-        // vB -> P slices overriding num_ref_idx_active to 2) whose MBs
-        // pick explicit te(v) reference indices against a sliding
-        // 2-frame decoded-picture buffer; the final frame re-selects
-        // ref 1 AFTER the buffer slid, so wrong DPB order, a dropped
-        // te(v) bit, or refIdx-blind compensation all move the sum.
-        Multimodal.mp4PMRefFrameFeatures(
-            Tables.documents(s, d).filter(col("doc_id") < 200), "doc_id")
-          .orderBy("doc_id")
-      },
-      oracle = Some("""
-        WITH p AS (
-          SELECT doc_id,
-            16 * (1 + doc_id % 2) AS w,
-            16 * (1 + (doc_id // 2) % 2) AS h,
-            3 + doc_id % 2 AS nf,
-            50 + doc_id % 100 AS va,
-            128 + floor((56.0 * ((1 + doc_id % 8) *
-              (CASE WHEN doc_id % 3 = 0 THEN -1 ELSE 1 END)) + 32) / 64.0) AS vb,
-            (1 + doc_id % 2) * (1 + (doc_id // 2) % 2) AS nmbs
-          FROM documents WHERE doc_id < 200)
-        SELECT doc_id,
-          CAST(nf AS BIGINT) AS n_frames,
-          CAST(w AS BIGINT) AS width,
-          CAST(h AS BIGINT) AS height,
-          CAST(w * h * va + w * h * vb
-            + 256 * (((nmbs + 1) // 2) * vb + (nmbs // 2) * va)
-            + CASE WHEN nf = 4 THEN w * h * vb ELSE 0 END AS BIGINT) AS lum_sum,
-          CAST(nf * w * h AS BIGINT) AS plane_bytes
-        FROM p ORDER BY doc_id"""),
-      doc = "H.264 multi-reference P slices: num_ref_idx override, te(v) ref_idx, sliding DPB, per-reference motion compensation vs closed-form oracle"),
-
-    // ------------------------------------------------------------------
-    Q("multimodal_h264_nonref",
-      (s, d) => {
-        // round-18 hardening (from the round-17 review): NON-REFERENCE
-        // frames. Frame 1 refreshes to constant vB but carries
-        // nal_ref_idc = 0, so it is OUTPUT yet must not enter the DPB
-        // (14496-10 §7.4.1) — the later all-skip P frames copy frame
-        // 0's vA. A decoder that pushes every frame into the DPB
-        // reconstructs vB in frames 2+ and moves the sum.
-        Multimodal.mp4PNonRefFrameFeatures(
-            Tables.documents(s, d).filter(col("doc_id") < 200), "doc_id")
-          .orderBy("doc_id")
-      },
-      oracle = Some("""
-        WITH p AS (
-          SELECT doc_id,
-            16 * (1 + doc_id % 2) AS w,
-            16 * (1 + (doc_id // 2) % 2) AS h,
-            3 + doc_id % 2 AS nf,
-            50 + doc_id % 100 AS va,
-            128 + floor((56.0 * ((1 + doc_id % 8) *
-              (CASE WHEN doc_id % 3 = 0 THEN -1 ELSE 1 END)) + 32) / 64.0) AS vb
-          FROM documents WHERE doc_id < 200)
-        SELECT doc_id,
-          CAST(nf AS BIGINT) AS n_frames,
-          CAST(w AS BIGINT) AS width,
-          CAST(h AS BIGINT) AS height,
-          CAST(w * h * (2 * va + vb)
-            + CASE WHEN nf = 4 THEN w * h * va ELSE 0 END AS BIGINT) AS lum_sum,
-          CAST(nf * w * h AS BIGINT) AS plane_bytes
-        FROM p ORDER BY doc_id"""),
-      doc = "H.264 non-reference frames: nal_ref_idc=0 pictures are output but excluded from the DPB, so later P_Skip frames compensate from the IDR vs closed-form oracle"),
-
-    // ------------------------------------------------------------------
-    Q("multimodal_h264_ppart",
-      (s, d) => {
-        // round-17 follow-up: PARTITIONED macroblocks. P slices of
-        // P_L0_L0_16x8 then P_L0_L0_8x16 MBs, each partition with its
-        // own te(v) reference (7.3.5.1 order: all ref_idx before all
-        // mvds) compensated independently — half-MB stripes whose sums
-        // break under whole-MB compensation, swapped partition order,
-        // or a misparsed ref/mvd interleave. The 8.4.1.3 directional
-        // predictor rules are pinned by H264PPartSpec's hand-derived
-        // nonzero-motion slices.
-        Multimodal.mp4PPartFrameFeatures(
-            Tables.documents(s, d).filter(col("doc_id") < 200), "doc_id")
-          .orderBy("doc_id")
-      },
-      oracle = Some("""
-        WITH p AS (
-          SELECT doc_id,
-            16 * (1 + doc_id % 2) AS w,
-            16 * (1 + (doc_id // 2) % 2) AS h,
-            3 + doc_id % 2 AS nf,
-            50 + doc_id % 100 AS va,
-            128 + floor((56.0 * ((1 + doc_id % 8) *
-              (CASE WHEN doc_id % 3 = 0 THEN -1 ELSE 1 END)) + 32) / 64.0) AS vb
-          FROM documents WHERE doc_id < 200)
-        SELECT doc_id,
-          CAST(nf AS BIGINT) AS n_frames,
-          CAST(w AS BIGINT) AS width,
-          CAST(h AS BIGINT) AS height,
-          CAST(w * h * (va + vb) + (w * h // 2) * (va + vb)
-            + CASE WHEN nf = 4
-                THEN (3 * w * h // 4) * vb + (w * h // 4) * va
-                ELSE 0 END AS BIGINT) AS lum_sum,
-          CAST(nf * w * h AS BIGINT) AS plane_bytes
-        FROM p ORDER BY doc_id"""),
-      doc = "H.264 partitioned macroblocks: P_L0_L0_16x8/8x16 (per-partition te(v) refs before mvds, independent compensation, block-granular MV state) vs closed-form stripe oracle")
+      doc = "real image resize: decode + nearest-neighbor thumbnail resample vs arithmetic oracle")
   )
 }

@@ -528,38 +528,46 @@ class ExtrasSpec extends SparkSpec {
     assert(MediaCodecs.forMime(cs, "video/x-motion-jpeg") eq JvmMjpegCodec)
     assert(MediaCodecs.forMime(cs, "image/png") eq JvmImageCodec)
     assert(MediaCodecs.forMime(cs, "audio/wav") eq graft.extras.JvmWavCodec)
-    assert(MediaCodecs.forMime(cs, "video/mp4") eq graft.extras.JvmMp4Codec)
+    assert(MediaCodecs.forMime(cs, "video/mp4") eq StubMediaCodec)
   }
 
-  test("MP4 codec: real box walk + I_PCM bitstream decode, exact pixels") {
-    import graft.extras.{JvmMp4Codec, MediaSynth, StubMediaCodec}
-    val id = 7L
-    val clip = MediaSynth.mp4(id)
-    val f = JvmMp4Codec.features(clip, "video/mp4")
-    val w = 16 * (1 + id % 2).toInt
-    assert(f(0) === (1 + id % 3), "frame count from stsz")
-    assert(f(1) === w && f(2) === 16L, "geometry parsed from SPS bits")
-    // I_PCM is lossless: every decoded pixel equals the synthesis formula
-    val frames = JvmMp4Codec.sampleFrames(clip, "video/mp4", f(0).toInt)
-    frames.zipWithIndex.foreach { case (luma, fi) =>
-      assert(luma.length === w * 16)
-      for (y <- 0 until 16; x <- 0 until w)
-        assert((luma(y * w + x) & 0xff) === ((id + 40 * fi + 3 * x + 5 * y) % 256).toInt,
-          s"pixel ($x,$y) frame $fi")
+  test("the whole codec registry absorbs junk and flipped media") {
+    import graft.extras.{MediaCodecs, MediaSynth, StubMediaCodec}
+    val rnd = new scala.util.Random(7)
+    val codecs = MediaCodecs.current
+    val fixtures: Seq[(String, Array[Byte])] = Seq(
+      "image/png" -> MediaSynth.png(3L),
+      "audio/wav" -> MediaSynth.wav(3L),
+      "video/mjpeg" -> MediaSynth.mjpeg(3L),
+      // no default codec accepts MP4: real MJPEG bytes under that mime
+      // must take the stub path, not the MJPEG decoder
+      "video/mp4" -> MediaSynth.mjpeg(3L))
+    fixtures.foreach { case (mime, good) =>
+      val codec = MediaCodecs.forMime(codecs, mime)
+      // junk of assorted sizes
+      (1 to 50).foreach { _ =>
+        val junk = Array.fill(1 + rnd.nextInt(300))(rnd.nextInt(256).toByte)
+        val f = codec.features(junk, mime)
+        assert(f != null && f.nonEmpty)
+        codec.sampleFrames(junk, mime, 2)
+      }
+      // flipped real fixtures
+      (1 to 40).foreach { _ =>
+        val bytes = good.clone()
+        val pos = rnd.nextInt(bytes.length)
+        bytes(pos) = (bytes(pos) ^ (1 << rnd.nextInt(8))).toByte
+        val f = codec.features(bytes, mime)
+        assert(f != null && f.nonEmpty, s"$mime flipped features")
+      }
     }
-    assert(f(3) === frames.head.map(_ & 0xff).map(_.toLong).sum, "luma sum")
-    // emulation-prevention round-trip: pixel value runs of 0,0,<=3 in
-    // the PCM bytes force 00 00 03 insertion; decode must strip it
-    // (id=0, frame 0 contains luma bytes 0,1,2,3 runs via the formula)
-    val clip0 = MediaSynth.mp4(0L)
-    val f0 = JvmMp4Codec.sampleFrames(clip0, "video/mp4", 1)
-    assert((f0.head(0) & 0xff) === 0 && (f0.head(3) & 0xff) === 9)
-    // corruption degrades to the stub, never throws: truncated moov,
-    // garbage bytes, empty payload
-    assert(JvmMp4Codec.features(clip.take(40), "video/mp4").length === 16)
-    assert(JvmMp4Codec.features("notanmp4".getBytes, "video/mp4").length === 16)
-    assert(JvmMp4Codec.features(Array.emptyByteArray, "video/mp4").toSeq ===
-      StubMediaCodec.features(Array.emptyByteArray, "video/mp4").toSeq)
+    val mp4 = MediaCodecs.forMime(codecs, "video/mp4")
+    assert(mp4 eq StubMediaCodec)
+    // stub features are a byte histogram over the whole payload, not
+    // decoded frame facts
+    val clip = MediaSynth.mjpeg(3L)
+    val f = mp4.features(clip, "video/mp4")
+    assert(f.length === 16 && f.sum === clip.length.toLong)
+    assert(mp4.sampleFrames(clip, "video/mp4", 4).forall(_.length === 16))
   }
 
   test("streaming session windows match batch gap-sessionization") {

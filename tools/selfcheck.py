@@ -2,6 +2,8 @@
 """Local stand-in for the driver's correctness gate: run each oracle SQL
 in DuckDB over the sfDir parquet tables, load the Spark result parquet,
 and compare (columns sorted by name, rows sorted, values stringified).
+Writes the per-gate outcome to <verifyOutDir>/correctness.json in the
+CORRECTNESS_r*.json shape (one top-level key per gate).
 Usage: selfcheck.py <sfDir> <verifyOutDir>
 """
 import sys, json, glob, os
@@ -22,31 +24,49 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
         df[c] = df[c].map(lambda v: repr(v))
     return df.sort_values(by=list(df.columns)).reset_index(drop=True)
 
-fails = 0
-for name, sql in sorted(oracle.items()):
+def entry(rows_match=False, schema_match=False, hash_match=False,
+          spark_rows=None, oracle_rows=None, err=None):
+    return {"rows_match": rows_match, "schema_match": schema_match,
+            "hash_match": hash_match, "spark_rows": spark_rows,
+            "oracle_rows": oracle_rows, "err": err}
+
+def compare(name, sql):
+    """(failure message or None, correctness entry) for one oracle gate."""
     try:
         exp = con.execute(sql).fetchdf()
     except Exception as e:
-        print(f"FAIL {name}: oracle error: {e}"); fails += 1; continue
+        return f"oracle error: {e}", entry(err=f"oracle error: {e}")
     files = glob.glob(f"{out}/{name}/*.parquet")
     if not files:
-        print(f"FAIL {name}: no spark output"); fails += 1; continue
+        return "no spark output", entry(oracle_rows=len(exp), err="no spark output")
     got = pd.concat([pd.read_parquet(f) for f in files], ignore_index=True)
-    if sorted(got.columns) != sorted(exp.columns):
-        print(f"FAIL {name}: cols spark={sorted(got.columns)} oracle={sorted(exp.columns)}")
-        fails += 1; continue
-    cg, ce = canon(got), canon(exp)
-    if len(cg) != len(ce):
-        print(f"FAIL {name}: rows spark={len(cg)} oracle={len(ce)}"); fails += 1; continue
-    if not cg.equals(ce):
+    e = entry(len(got) == len(exp), sorted(got.columns) == sorted(exp.columns),
+              spark_rows=len(got), oracle_rows=len(exp))
+    if not e["schema_match"]:
+        msg = f"cols spark={sorted(got.columns)} oracle={sorted(exp.columns)}"
+    elif not e["rows_match"]:
+        msg = f"rows spark={len(got)} oracle={len(exp)}"
+    else:
+        cg, ce = canon(got), canon(exp)
+        if cg.equals(ce):
+            e["hash_match"] = True
+            return None, e
         diff = (cg != ce).any(axis=1)
         idx = diff[diff].index[:3]
-        print(f"FAIL {name}: value mismatch at rows {list(idx)}")
+        msg = f"value mismatch at rows {list(idx)}"
         for i in idx:
-            print(f"  spark : {cg.loc[i].to_dict()}")
-            print(f"  oracle: {ce.loc[i].to_dict()}")
-        fails += 1; continue
-    print(f"OK   {name} ({len(cg)} rows)")
+            msg += f"\n  spark : {cg.loc[i].to_dict()}\n  oracle: {ce.loc[i].to_dict()}"
+    e["err"] = msg.splitlines()[0]
+    return msg, e
+
+record = {}
+fails = 0
+for name, sql in sorted(oracle.items()):
+    msg, record[name] = compare(name, sql)
+    if msg is None:
+        print(f"OK   {name} ({record[name]['spark_rows']} rows)")
+    else:
+        print(f"FAIL {name}: {msg}"); fails += 1
 # queries without oracle: rows-only check
 for d in sorted(glob.glob(f"{out}/*/")):
     name = os.path.basename(d.rstrip('/'))
@@ -54,5 +74,8 @@ for d in sorted(glob.glob(f"{out}/*/")):
         files = glob.glob(f"{d}/*.parquet")
         n = sum(len(pd.read_parquet(f)) for f in files) if files else 0
         print(f"ROWS {name}: {n}")
+        record[name] = entry(None, None, None, spark_rows=n, err="no_oracle")
+with open(f"{out}/correctness.json", "w") as f:
+    json.dump(dict(sorted(record.items())), f, indent=2)
 print(f"\n{fails} failures / {len(oracle)} oracle queries")
 sys.exit(1 if fails else 0)
