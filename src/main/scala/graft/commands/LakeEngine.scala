@@ -2,6 +2,7 @@ package graft.commands
 
 import graft.format._
 import graft.scan._
+import graft.streaming.LakeDsv2
 import graft.write.LakeWriter
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -69,10 +70,8 @@ final class LakeEngine(
     val provenByRows: Seq[String] =
       if (unproven.isEmpty) Seq.empty
       else {
-        val probeScan = new TableScan(spark, table,
-          explicitFiles = Some(unproven), withFileColumns = true)
-        val probe = probeScan.toDF()
-          .groupBy(col(probeScan.FileCol).as("f"))
+        val probe = new TableScan(spark, table, explicitFiles = Some(unproven), withFileColumns = true)
+          .toDF().groupBy(col(LakeDsv2.FileCol).as("f"))
           .agg(
             sum(when(coalesce(cond, lit(false)), 1L).otherwise(0L)).as("inMatch"),
             sum(when(!coalesce(cond, lit(false)), 1L).otherwise(0L)).as("outMatch"))
@@ -224,31 +223,19 @@ final class LakeEngine(
       throw new ValidationException(s"no snapshot $toId"))
     val from = fromSnapshotId.map(id => m.snapshotById(id).getOrElse(
       throw new ValidationException(s"no snapshot $id")))
-    val pieces: Seq[(String, Long, Seq[FileEntry])] =
+    val commits: Seq[(Long, Seq[FileEntry], Seq[FileEntry])] =
       from.map(f => m.snapshotsBetween(Some(f.id), to.id)) match {
         case Some(Right(chain)) if chain.exists(_.operation == "replace") =>
-          LakeTable.changesBySnapshot(table, chain).flatMap { case (s, add, rem) =>
-            Seq(("delete", s.id, rem), ("insert", s.id, add))
-          }
+          LakeTable.changesBySnapshot(table, chain).map { case (s, add, rem) => (s.id, add, rem) }
         case _ =>
           val (add, rem) = LakeTable.changedFiles(table, from, to)
-          Seq(("delete", to.id, rem), ("insert", to.id, add))
+          Seq((to.id, add, rem))
       }
-    def tagged(files: Seq[FileEntry], kind: String, sid: Long): Option[DataFrame] =
-      if (files.isEmpty) None
-      else Some(new TableScan(spark, table, explicitFiles = Some(files)).toDF()
-        .withColumn("_change_type", lit(kind))
-        .withColumn("_commit_snapshot_id", lit(sid)))
-    val frames = pieces.flatMap { case (kind, sid, files) => tagged(files, kind, sid) }
-    if (frames.nonEmpty) frames.reduce(_.unionByName(_))
-    else {
-      val schema = org.apache.spark.sql.types.StructType(table.schema.fields :+
-        org.apache.spark.sql.types.StructField("_change_type",
-          org.apache.spark.sql.types.StringType) :+
-        org.apache.spark.sql.types.StructField("_commit_snapshot_id",
-          org.apache.spark.sql.types.LongType))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    }
+    // the connector's change-tagged partitions: the same reader the
+    // streaming change feed uses
+    LakeDsv2.frame(spark, LakeDsv2.relation(spark, table, sides = Some(commits.flatMap {
+      case (sid, add, rem) => Seq(rem -> Some(("delete", sid)), add -> Some(("insert", sid)))
+    }), changes = true))
   }
 
   // ------------------------------------------------------------- D5–D8
@@ -295,8 +282,8 @@ final class LakeEngine(
     * @param modifiedCols columns the rebuild may change — when none of
     *   them is a sort column (DELETE changes none; most UPDATEs touch
     *   value columns only) and the table is unpartitioned, the rewrite
-    *   takes the PASSTHROUGH path: scan the touched files in a
-    *   [[LakeEngine.perFileSession]] (no split ever mixes two files),
+    *   takes the PASSTHROUGH path: scan the touched files in
+    *   [[LakeEngine.perFileSplitBytes]] splits (no split mixes two files),
     *   rebuild, and write with the partitioning preserved — zero
     *   exchange, zero sort, each task rewriting a slice of one file
     *   whose rows are already in the file's own sort order. This is the
@@ -360,31 +347,19 @@ final class LakeEngine(
     val probed =
       if (ambiguous.isEmpty) Set.empty[String]
       else timed("dml.rowProbe")(rowProbe(table, ambiguous, pred, cond))
-    // intersect on the CANONICAL rendering: manifest paths and
-    // runtime file strings may disagree on URI form for non-file
-    // schemes ("gcache:///x" vs "gcache:/x") even when they name the
-    // same object
-    val touched = (sureByFile ++ sureByGroup).map(f => LakeEngine.canonFile(f.path)).toSet ++ probed
+    // `_file` is the manifest path verbatim, so paths compare as strings
+    val touched = (sureByFile ++ sureByGroup).map(_.path).toSet ++ probed
     if (touched.isEmpty)
       return CommitMetrics(fromSnapshot.getOrElse(0L), 0, 0, 0, 0, 0)
-    val touchedEntries =
-      candidates.filter(f => touched.contains(LakeEngine.canonFile(f.path)))
-    // a probe string that names NO manifest entry is file-identity
-    // drift — silently rewriting a smaller set would leave matching
-    // rows behind, so fail loudly instead
-    if (touchedEntries.size < touched.size)
-      throw new IllegalStateException(
-        "DML probe returned file identities absent from the manifest " +
-          s"(probe ${touched.size}, matched ${touchedEntries.size}): " +
-          touched.diff(touchedEntries.map(f => LakeEngine.canonFile(f.path)).toSet)
-            .take(3).mkString(", "))
+    val touchedEntries = candidates.filter(f => touched.contains(f.path))
     val passthrough = table.metadata.partitionSpec.isEmpty &&
       !table.metadata.sortOrder.exists(sf => modifiedCols.contains(sf.column)) &&
       touchedEntries.forall(_.sizeBytes > 0)
-    val session = if (passthrough) LakeEngine.perFileSession(spark, touchedEntries) else spark
-    val rebuilt = rebuild(new TableScan(session, table, explicitFiles = Some(touchedEntries)).toDF(), cond)
+    val rebuilt = rebuild(LakeDsv2.frame(spark, LakeDsv2.relation(spark, table,
+      sides = Some(Seq(touchedEntries -> None)),
+      splitBytes = Some(LakeEngine.perFileSplitBytes(spark, touchedEntries)).filter(_ => passthrough))), cond)
     val newFiles = timed("dml.rewrite") {
-      if (passthrough) LakeWriter.write(session, table, rebuilt, preserveDistribution = true)
+      if (passthrough) LakeWriter.write(spark, table, rebuilt, preserveDistribution = true)
       else LakeWriter.write(spark, table, rebuilt,
         clusterBounds = LakeWriter.clusterBoundsOf(table, touchedEntries))
     }
@@ -393,28 +368,25 @@ final class LakeEngine(
       conflictFilter = Some(pred), removeHints = touchedEntries)))
   }
 
-  /** Canonical paths of the `files` holding at least one row matching
+  /** Manifest paths of the `files` holding at least one row matching
     * `cond`. A redundant pushable prefilter ([[graft.scan.Pred.mayTrue]],
     * implied by the exact condition) runs ahead of the exact 3VL match:
     * the coalesce wrapper alone reaches parquet as NO filter, so without
     * it the probe decodes every row of every file; with it, parquet's
     * row-group stats and page indexes skip the non-matching ranges. The
-    * probe needs FILE identity only — it scans without the metadata
-    * columns (no row_index generation), reads the file via
-    * input_file_name(), and normalizes the URI form on the DRIVER over
-    * the <= #files collected strings (Exp26: the per-row file-column
-    * assembly was ~0.2 s of the 0.71 s sf10 probe). */
+    * probe needs FILE identity only: it selects `_file` without `_pos`,
+    * so no row index is generated. */
   private def rowProbe(table: LakeTable, files: Seq[FileEntry], pred: Pred,
       cond: Column): Set[String] = {
-    val probeDf = new TableScan(spark, table, explicitFiles = Some(files)).toDF()
-      .filter(Pred.toColumn(Pred.mayTrue(pred)))
+    val probeDf = new TableScan(spark, table, explicitFiles = Some(files), withFileColumns = true)
+      .toDF().filter(Pred.toColumn(Pred.mayTrue(pred)))
       .filter(coalesce(cond, lit(false)))
-      .select(input_file_name().as("_f"))
+      .select(col(LakeDsv2.FileCol))
     // single-stage distinct: a `.distinct()` would add an exchange +
     // final-agg stage just to dedupe <= #files strings — instead each
-    // task dedupes its own run (input_file_name is constant per file
-    // chunk, so a last-seen check does almost all the work) and the
-    // driver unions the <= #files results. One stage, no shuffle.
+    // task dedupes its own run (`_file` is constant per file chunk, so
+    // a last-seen check does almost all the work) and the driver unions
+    // the <= #files results. One stage, no shuffle.
     probeDf.queryExecution.toRdd.mapPartitions { it =>
       val seen = scala.collection.mutable.LinkedHashSet.empty[String]
       var last: String = null
@@ -423,53 +395,24 @@ final class LakeEngine(
         if (f != last) { seen += f; last = f }
       }
       seen.iterator
-    }.collect().map(LakeEngine.canonFile).toSet
+    }.collect().toSet
   }
 }
 
 object LakeEngine {
-  /** Canonical rendering of a data-file identity string, applied to
-    * BOTH manifest paths and runtime `input_file_name`/
-    * `_metadata.file_path` values before comparison. Hadoop's Path
-    * constructor collapses URI-form differences ("scheme:///p" vs
-    * "scheme:/p"); the file scheme then strips to the plain local path
-    * (the form the writer records in manifests). */
-  private[commands] def canonFile(s: String): String = {
-    val norm =
-      try new org.apache.hadoop.fs.Path(s).toString
-      catch { case scala.util.control.NonFatal(_) => s }
-    if (norm.startsWith("file:")) norm.replaceFirst("^file:/+", "/") else norm
-  }
-
-  /** Scan/write session for a copy-on-write rewrite that keeps each
-    * input file's rows together: tasks must never MIX files (each output
-    * file inherits one input's sort run). One task per FILE starves the
-    * cluster when a rewrite touches fewer files than there are cores
-    * (round 13: a sf10 delete ran 3 tasks on 32 threads), so a touched
-    * file splits at row-group boundaries — each slice is a consecutive,
-    * sorted, stats-tight run of one file. maxPartitionBytes targets
-    * cores/files splits per file (8 MB slice floor so small files keep
-    * single-task rewrites), while openCostInBytes pinned to the SPLIT
-    * SIZE makes any cross-file packing overflow the bin, so splits stay
-    * single-file whatever the file sizes. When a rewrite touches >=
-    * cores files this is exactly one task per file. */
-  private[commands] def perFileSession(spark: SparkSession,
-      entries: Seq[FileEntry]): SparkSession = {
-    val s2 = spark.newSession()
-    // newSession() starts from defaults, NOT the parent's runtime conf —
-    // without this copy the rewrite could run under different settings
-    // (session timezone, legacy parquet flags, caller overrides) than the
-    // planning scans that decided which rows to keep
-    spark.conf.getAll.foreach { case (k, v) =>
-      if (s2.conf.isModifiable(k) && s2.conf.getOption(k) != Some(v))
-        s2.conf.set(k, v)
-    }
-    val splitsPerFile =
-      math.max(1L, spark.sparkContext.defaultParallelism.toLong / entries.size)
-    val split = math.max(entries.map(_.sizeBytes).max / splitsPerFile + 1L, 8L << 20)
-    s2.conf.set("spark.sql.files.maxPartitionBytes", split.toString)
-    s2.conf.set("spark.sql.files.openCostInBytes", split.toString)
-    s2
+  /** Split size for a copy-on-write rewrite that keeps each input
+    * file's rows together: tasks must never MIX files (each output file
+    * inherits one input's sort run), so every split of such a scan holds
+    * a slice of one file. One task per FILE starves the cluster when a
+    * rewrite touches fewer files than there are cores (round 13: a sf10
+    * delete ran 3 tasks on 32 threads), so a touched file splits at
+    * row-group boundaries — each slice is a consecutive, sorted,
+    * stats-tight run of one file. The size targets cores/files splits
+    * per file, with an 8 MB slice floor so small files keep single-task
+    * rewrites; a rewrite touching >= cores files gets one task per file. */
+  private[commands] def perFileSplitBytes(spark: SparkSession, entries: Seq[FileEntry]): Long = {
+    val splitsPerFile = math.max(1L, spark.sparkContext.defaultParallelism.toLong / entries.size)
+    math.max(entries.map(_.sizeBytes).max / splitsPerFile + 1L, 8L << 20)
   }
 
   /** Phase timer for the copy-on-write commands: with GRAFT_MERGE_TIMING

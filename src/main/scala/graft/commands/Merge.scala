@@ -2,6 +2,7 @@ package graft.commands
 
 import graft.format._
 import graft.scan._
+import graft.streaming.LakeDsv2
 import graft.write.LakeWriter
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -774,7 +775,7 @@ object Merge {
     * Split rewrite (round 15): with the actioned keys BROADCAST, the
     * rebuild is a map-side join over the modified files' scan —
     * partitioning and intra-file order survive, so those full-width rows
-    * are written back PER FILE ([[LakeEngine.perFileSession]]) with zero
+    * are written back PER FILE ([[LakeEngine.perFileSplitBytes]]) with zero
     * exchange and zero sort, while the batch-proportional added rows
     * cluster separately. This is the reference's own flow: rewrite the
     * touched files, append the new data as its own files. Ineligible
@@ -787,8 +788,9 @@ object Merge {
   private def rewriteFiles(spark: SparkSession, table: LakeTable, entries: Seq[FileEntry],
       keysBroadcast: Boolean, modifiedCols: Set[String], rebuild: DataFrame => DataFrame,
       added: Option[DataFrame], label: String): Seq[FileEntry] = {
-    def rebuilt(session: SparkSession): DataFrame = rebuild(new TableScan(session, table,
-      explicitFiles = Some(entries), withFileColumns = true).toDF())
+    def rebuilt(splitBytes: Option[Long]): DataFrame = rebuild(LakeDsv2.frame(spark,
+      LakeDsv2.relation(spark, table, sides = Some(Seq(entries -> None)), fileColumns = true,
+        splitBytes = splitBytes)))
     val bounds = LakeWriter.clusterBoundsOf(table, entries)
     val split = keysBroadcast && entries.nonEmpty &&
       table.metadata.partitionSpec.isEmpty &&
@@ -796,14 +798,13 @@ object Merge {
       entries.map(_.sizeBytes).sum >= splitRewriteMinBytes &&
       !table.metadata.sortOrder.exists(sf => modifiedCols.contains(sf.column))
     if (split) {
-      val s2 = LakeEngine.perFileSession(spark, entries)
-      val kept = LakeEngine.timed(s"$label.rewrite.rebuilt")(
-        LakeWriter.write(s2, table, rebuilt(s2), preserveDistribution = true))
+      val kept = LakeEngine.timed(s"$label.rewrite.rebuilt")(LakeWriter.write(spark, table,
+        rebuilt(Some(LakeEngine.perFileSplitBytes(spark, entries))), preserveDistribution = true))
       val appended = added.filterNot(_.isEmpty).map(d => LakeEngine.timed(s"$label.rewrite.appended")(
         LakeWriter.write(spark, table, d, clusterBounds = bounds)))
       kept ++ appended.getOrElse(Seq.empty)
     } else {
-      val pieces = (if (entries.isEmpty) None else Some(rebuilt(spark))).toSeq ++ added
+      val pieces = (if (entries.isEmpty) None else Some(rebuilt(None))).toSeq ++ added
       if (pieces.isEmpty) Seq.empty
       else LakeWriter.write(spark, table, pieces.reduce(_.unionByName(_)), clusterBounds = bounds)
     }

@@ -285,6 +285,11 @@ class LakeTable private (
 
   def refresh(): LakeTable = { meta = LakeTable.loadMeta(location, store); this }
 
+  /** A copy holding this table's metadata as it is now: a later
+    * [[refresh]] or commit through `this` does not move it. Scans built
+    * on it keep reading the snapshot they were planned against. */
+  def pinned: LakeTable = new LakeTable(location, meta, store)
+
   def snapshot(ref: TableRef): Option[Snapshot] = meta.resolve(ref)
 
   def manifest(s: Snapshot): Seq[FileEntry] = s.manifests.flatMap(readManifest)

@@ -21,9 +21,9 @@ import org.apache.hadoop.util.Progressable
   * gives every executor its OWN local-disk cache with zero changes to
   * the scan/write code — the scale-correct shape for 1000 executors,
   * where a driver-side cache would serve nothing. Tables created at
-  * `gcache://...` locations keep that scheme in their manifests, so
-  * file-identity code (`_metadata.file_path` vs manifest paths) is
-  * untouched.
+  * `gcache://...` locations keep that scheme in their manifests, and
+  * scans report each row's file as its manifest path verbatim (`_file`),
+  * so file identity never depends on how a reader renders the URI.
   *
   * Usage: set `fs.gcache.impl=graft.io.CachingFileSystem` and
   * `graft.cache.inner.scheme=<s3a|slowfs|...>` in the Hadoop conf; a

@@ -63,21 +63,6 @@ object StatsCodec {
     case _ => s
   }
 
-  /** Canonical string for a literal, matching what the writer harvests. */
-  def literalToStats(dt: DataType, v: Any): String = dt match {
-    case BinaryType => v match {
-      case bs: Array[Byte] => hexKey(bs)
-      case other => other.toString
-    }
-    case TimestampType | TimestampNTZType => graft.transforms.Transform.toEpochMicros(v).toString
-    case DateType => (v match {
-      case d: java.sql.Date => d.toLocalDate.toEpochDay
-      case d: java.time.LocalDate => d.toEpochDay
-      case n: Number => n.longValue()
-    }).toString
-    case _ => v.toString
-  }
-
   private def rank(a: Any): Int = a match {
     case NegInfKey => 0
     case _: BigDecimal => 1

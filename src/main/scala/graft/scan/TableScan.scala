@@ -1,6 +1,7 @@
 package graft.scan
 
 import graft.format.{FileEntry, LakeTable, TableRef}
+import graft.streaming.LakeDsv2
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -8,15 +9,17 @@ import org.apache.spark.sql.types._
 class FullTableScanException(msg: String) extends RuntimeException(msg)
 class ScanSizeLimitException(msg: String) extends RuntimeException(msg)
 
-/** Pruning scan: predicate -> (partition + stats) file pruning -> DataFrame
-  * assembly with schema-evolution projection and residual filter.
+/** Pruning scan: predicate -> (partition + stats) file pruning -> the
+  * planned files as a DataFrame over the `graft-lake` connector.
   *
   * Spark rebuild of the reference read path (SURVEY §3.1 steps 2–5):
   * SqlQueryProcessor/IcebergScanExecutor collapse into [[planFiles]], and
-  * SchemaEvolution.getSelectSQLForDataFiles (S4) into [[toDF]] — per-schema
-  * file groups, field-id projection casting/renaming/NULL-filling, then
-  * unionByName. Everything after that is Catalyst: the residual predicate
-  * is a plain Column, so pushdown/codegen apply.
+  * SchemaEvolution.getSelectSQLForDataFiles (S4) into the connector's
+  * reader — per-schema file groups, field-id projection
+  * casting/renaming/NULL-filling ([[SchemaEvolve]]). `lake.*` SQL reads
+  * the same relation, so reads and DML share one read path. Everything
+  * above the relation is Catalyst: the residual predicate is a plain
+  * Column, so pushdown/codegen apply.
   */
 final class TableScan(
     spark: SparkSession,
@@ -29,9 +32,6 @@ final class TableScan(
     // scan exactly these files (no file pruning); `pred` still applies as
     // the row residual, AlwaysTrue for rebuild scans that keep every row
     explicitFiles: Option[Seq[FileEntry]] = None) {
-
-  val FileCol = "_file"
-  val PosCol = "_pos"
 
   private lazy val evaluator = new StatsEvaluator(table.schema, table.metadata.specsById)
 
@@ -103,90 +103,29 @@ final class TableScan(
     matched
   }
 
+  /** The planned files as a DataFrame over the `graft-lake` connector's
+    * relation, pinned to this table's current metadata: a commit after
+    * this call does not change what the DataFrame reads. Schema groups,
+    * field-id evolution and `_file`/`_pos` are the connector's work; a
+    * filter placed on the result prunes the pinned files from their
+    * stats and skips parquet row groups. A non-trivial `pred` is also
+    * applied as the row residual (round 21: the changes-mode merge diff
+    * scans its candidate files with the source-key ranges as residual,
+    * so row groups outside them are skipped). */
   def toDF(): DataFrame = {
-    TableScan.ensureReadConf(spark)
-    val files = planFiles()
-    val cur = table.schema
-    if (files.isEmpty) return emptyDF(cur)
-    val groups = files.groupBy(_.schemaId)
-    val parts = groups.toSeq.sortBy(_._1).map { case (sid, fs) =>
-      val written = table.schemaFor(sid)
-      val clean = StructType(written.fields.map(f => f.copy(metadata = Metadata.empty)))
-      val base = spark.read.schema(clean).parquet(fs.map(_.path): _*)
-      val projected = project(base, written, cur)
-      if (withFileColumns)
-        // normalize to the manifest rendering: file:/ URIs strip to
-        // plain paths; other schemes collapse the URI's EMPTY-authority
-        // form ("gcache:///p") to Hadoop's canonical "gcache:/p" — a
-        // real authority ("s3a://bucket/p", exactly two slashes) is
-        // meaningful and passes through untouched
-        projected.withColumn(FileCol,
-            regexp_replace(
-              regexp_replace(col("_metadata.file_path"), "^file:/+", "/"),
-              "^([a-zA-Z][a-zA-Z0-9+.-]*):/{3,}", "$1:/"))
-          .withColumn(PosCol, col("_metadata.row_index"))
-      else projected
-    }
-    val unioned = parts.reduce(_.unionByName(_))
-    // explicitFiles + pred (round 21): the changes-mode merge diff scans
-    // its candidate files WITH the source-key prune predicate as the
-    // residual, so it reaches the parquet scan as PushedFilters and
-    // row-group stats skip the non-overlapping groups inside candidate
-    // files — rows outside the ranges cannot match any source key, and
-    // unmatched target rows are dropped by the diff anyway. Every other
-    // explicitFiles caller passes AlwaysTrue (rebuild scans must keep
-    // every row) and is unchanged.
-    if (Pred.isTrue(pred)) unioned
-    else unioned.filter(Pred.toColumn(pred))
-  }
-
-  private def emptyDF(cur: StructType): DataFrame = {
-    val schema =
-      if (!withFileColumns) cur
-      else StructType(cur.fields :+ StructField(FileCol, StringType) :+ StructField(PosCol, LongType))
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
-
-  private def project(df: DataFrame, written: StructType, cur: StructType): DataFrame =
-    df.select(SchemaEvolve.columns(written, cur): _*)
-}
-
-object TableScan {
-
-  /** Split bin-packing (Iceberg `read.split.target-size` semantics,
-    * spec §Scan Planning): splits are sized by the target split size
-    * (`spark.sql.files.maxPartitionBytes`) and file-open cost ONLY —
-    * never divided down by core count. Spark's default leaves
-    * `spark.sql.files.minPartitionNum` at `defaultParallelism`, which
-    * force-splits a small table into one sliver per core: a 2.7 MB
-    * table on 32 cores plans ~31 scan tasks of ~87 KB each, so
-    * per-task fixed cost (vectorized-reader setup, codegen
-    * instantiation) dominates — and a large table of many small files
-    * (exactly what streaming ingest + copy-on-write DML produce)
-    * over-parallelizes at EVERY scale. With `minPartitionNum=1`,
-    * Spark's own `FilePartition` packer bin-packs small files into
-    * target-size splits, which is the Iceberg-planner behavior.
-    *
-    * Applied lazily on first read, and only when the user has not set
-    * the conf themselves (a read-only engine must not clobber an
-    * explicit user choice). NOTE the conf is session-scoped — Spark has
-    * no per-scan split sizing — so in a session shared with non-graft
-    * file reads this also gives THOSE reads Iceberg-style target-size
-    * splits (a mid-size file that previously split one-sliver-per-core
-    * plans fewer, larger partitions). Set `minPartitionNum` explicitly
-    * to keep Spark's default behavior. */
-  private[graft] def ensureReadConf(spark: SparkSession): Unit = {
-    val key = "spark.sql.files.minPartitionNum"
-    if (spark.conf.getOption(key).isEmpty) spark.conf.set(key, "1")
+    val df = LakeDsv2.frame(spark, LakeDsv2.relation(spark, table, ref,
+      Some(Seq(planFiles() -> None)), withFileColumns))
+    if (Pred.isTrue(pred)) df else df.filter(Pred.toColumn(pred))
   }
 }
 
 /** Field-id based projection from a written schema to the current one:
   * rename via id match, cast widened types, NULL-fill added columns —
   * recursing into structs and arrays-of-struct (S4;
-  * reference sql/SchemaEvolution.java:328-457). Shared by the batch
-  * read path ([[TableScan]]) and the DSv2 streaming source (which binds
-  * the same projection to raw parquet reader output). */
+  * reference sql/SchemaEvolution.java:328-457). The `graft-lake`
+  * connector binds it to raw parquet reader output for every file
+  * written under an older schema, so batch, SQL, DML and stream reads
+  * all evolve through it. */
 private[graft] object SchemaEvolve {
 
   def columns(written: StructType, cur: StructType): Seq[Column] = {

@@ -2,8 +2,9 @@ package graft.sqlext
 
 import graft.format.{LakeCatalog, LakeTable, TableRef, ValidationException}
 import graft.scan.TableScan
+import graft.streaming.LakeDsv2
 import java.nio.file.Paths
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{DataFrame, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
 import org.apache.spark.sql.catalyst.expressions.AttributeReference
@@ -22,12 +23,15 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *   SELECT * FROM lake.`orders$branch_dev` / lake.`orders$tag_v1`
   *   SELECT * FROM lake.`orders$snapshots` / `orders$files` / `orders$history`
   *
-  * resolve to [[TableScan]] plans over every file of the referenced
+  * resolve to the `graft-lake` connector's relation over the referenced
   * snapshot, time travel included (reference suffix grammar:
   * SqlQueryProcessor.java:371-402), plus Iceberg-style metadata
-  * introspection relations. The relation carries no predicate, so a
-  * query's WHERE clause prunes no files from its manifest stats; it
-  * reaches only the parquet reader's row-group and page filters.
+  * introspection relations. It is the relation the engine's own scans
+  * read ([[graft.scan.TableScan]]), pinned to the table's metadata at
+  * analysis, so a query's WHERE clause reaches it by DataSource V2
+  * pushdown: files prune on their manifest stats and parquet skips row
+  * groups; join keys prune at runtime, and COUNT/MIN/MAX can be
+  * answered from metadata.
   *
   * SQL DML routes to the engine's copy-on-write commands:
   *
@@ -498,9 +502,9 @@ class ResolveLakeRelations(spark: SparkSession) extends Rule[LogicalPlan] {
   private def lastName(sql: String): String =
     stripQuotes(sql.split('.').last)
 
-  private def planToDF(query: LogicalPlan): org.apache.spark.sql.DataFrame =
-    PlanBridge.toDF(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.executePlan(query))
+  /** `query` as a DataFrame over its analyzed plan (nothing executes). */
+  private def planToDF(query: LogicalPlan): DataFrame = LakeDsv2.frame(spark,
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.executePlan(query).analyzed)
 
   private def isLake(u: UnresolvedRelation): Boolean =
     u.multipartIdentifier.length == 2 &&
@@ -568,10 +572,7 @@ class ResolveLakeRelations(spark: SparkSession) extends Rule[LogicalPlan] {
       val engine = new graft.commands.LakeEngine(spark,
         new LakeCatalog(Paths.get(location).getParent.toString))
       Some(engine.readChanges(table, Some(fromId)).queryExecution.analyzed)
-    } else {
-      val (_, ref) = TableRef.fromSuffix(spec)
-      Some(new TableScan(spark, table, ref = ref).toDF().queryExecution.analyzed)
-    }
+    } else Some(LakeDsv2.relation(spark, table, TableRef.fromSuffix(spec)._2))
   }
 
   private def metadataDF(table: LakeTable, kind: String) = {
@@ -599,22 +600,5 @@ class ResolveLakeRelations(spark: SparkSession) extends Rule[LogicalPlan] {
               records) }
           .toDF("spec_id", "partition", "record_count")
     }
-  }
-}
-
-/** Execute a planned query into a DataFrame using only public API:
-  * InternalRow RDD -> encoder deserializer -> createDataFrame.
-  * (Dataset.ofRows is private[sql]; this bridge avoids both that and any
-  * class in Spark's namespace.) Shared by the SQL rewrites above and by
-  * the `graft-lake` stream sink, whose streaming-flagged batch must run
-  * through its own incremental execution. */
-private[graft] object PlanBridge {
-  def toDF(qe: org.apache.spark.sql.execution.QueryExecution): org.apache.spark.sql.DataFrame = {
-    val schema = qe.analyzed.schema
-    val deser = org.apache.spark.sql.catalyst.encoders.ExpressionEncoder(
-      org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema))
-      .resolveAndBind(qe.analyzed.output)
-      .createDeserializer()
-    qe.sparkSession.createDataFrame(qe.toRdd.map(r => deser(r.copy())), schema)
   }
 }

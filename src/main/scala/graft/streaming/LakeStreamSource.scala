@@ -1,24 +1,29 @@
 package graft.streaming
 
-import graft.format.{FileEntry, LakeTable}
-import graft.scan.{AlwaysTrue, And, Eq, Ge, Gt, In, IsNull, Le, Lt, Ne, NotNull, Or, Pred, PredSql, StartsWith}
-import graft.scan.SchemaEvolve
+import graft.format.{FieldIds, FileEntry, LakeTable, TableRef}
+import graft.scan.{AlwaysTrue, And, Eq, Ge, Gt, In, IsNull, Le, Lt, Ne, NotNull, Or, Pred, PredSql, SchemaEvolve, StartsWith, StatsEvaluator}
 import java.util.{Map => JMap}
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => ClassicSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, BindReferences, BoundReference, Expression, GenericInternalRow, Literal, UnsafeProjection}
-import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.{Expression => V2Expression, Literal => V2Literal, NamedReference, Transform}
+import org.apache.spark.sql.connector.expressions.{Expression => V2Expression, Expressions, Literal => V2Literal, NamedReference, Transform}
 import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, SupportsTriggerAvailableNow}
-import org.apache.spark.sql.execution.datasources.{InMemoryFileIndex, PartitionSpec}
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder
-import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types.{DataType, LongType, Metadata, StringType, StructType}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
+import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
+import org.apache.spark.sql.{sources => v1}
+import org.apache.spark.sql.types.{DataType, LongType, Metadata, StringType, StructField, StructType, TimestampType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.vectorized.ColumnarBatch
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Lake tables as a DataSource V2 connector — a MicroBatchStream SOURCE
@@ -35,30 +40,30 @@ import org.apache.spark.unsafe.types.UTF8String
   * delete inside an unread range fails the stream rather than replaying
   * rewritten rows.
   *
-  * Execution delegates to Spark's own vectorized parquet machinery: each
-  * batch plans its files through a [[ParquetScanBuilder]] (one per
-  * written-schema group) and reuses the resulting FilePartitions and
-  * reader factory; files written under an older schema are projected to
-  * the current schema by the same field-id [[SchemaEvolve]] rules as the
-  * batch path, bound once and applied per-row in the reader. No classes
-  * live in Spark's namespace and no v1 `Source` shim is needed.
+  * Execution delegates to Spark's own parquet reader: splits are planned
+  * from manifest file sizes with Spark's split sizing (no listing), and
+  * each written-schema group reads through one parquet reader factory;
+  * files written under an older schema are projected to the current
+  * schema by the field-id [[SchemaEvolve]] rules, bound once and applied
+  * per row in the reader. No classes live in Spark's namespace and no
+  * v1 `Source` shim is needed.
   *
   * Batch reads, append streams and change streams share one planner, one
   * partition type and one reader factory keyed by schema id.
   *
   * Usage: `spark.readStream.format("graft-lake").option("path", loc).load()`
   * (and `spark.read.format("graft-lake")` for a batch read that prunes
-  * files on pushed and runtime filters from manifest stats; `lake.*` SQL
-  * reads go through [[graft.scan.TableScan]] and prune no files).
+  * files on pushed and runtime filters from manifest stats). The same
+  * relation backs every other lake read: `lake.*` SQL, and the engine's
+  * own scans ([[graft.scan.TableScan.toDF]], which pins the files it
+  * planned and can add the `_file`/`_pos` row-identity columns).
   */
 class LakeSourceProvider extends TableProvider with DataSourceRegister
     with org.apache.spark.sql.sources.StreamSinkProvider {
   override def shortName(): String = "graft-lake"
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val base = LakeDsv2.clean(LakeTable.load(LakeDsv2.path(options)).schema)
-    if (LakeDsv2.changesMode(options.get _)) LakeDsv2.withChangeType(base) else base
-  }
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
+    new LakeDsv2Table(LakeDsv2.path(options), LakeDsv2.changesMode(options.get _)).schema()
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: JMap[String, String]): Table =
@@ -97,13 +102,13 @@ class LakeSourceProvider extends TableProvider with DataSourceRegister
         val warehouse = java.nio.file.Paths.get(location).getParent.toString
         val engine = new graft.commands.LakeEngine(spark,
           new graft.format.LakeCatalog(warehouse))
-        // v1 sinks receive a streaming-flagged DataFrame that must run
-        // through ITS OWN (incremental) query execution — re-planning via
-        // .rdd is rejected. Rebind collect-free through the prepared
-        // plan's InternalRow RDD (public API).
-        val qe = data.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
-          .queryExecution
-        val batch = graft.sqlext.PlanBridge.toDF(qe)
+        // the batch is streaming-flagged and must run through its own
+        // incremental execution: planning its logical plan again as a
+        // batch query is rejected. So the rows of its prepared plan are
+        // wrapped as a plain relation.
+        val qe = data.asInstanceOf[ClassicDataset[Row]].queryExecution
+        val batch = LakeDsv2.frame(spark, LogicalRDD(
+          qe.analyzed.output.map(_.newInstance()), qe.toRdd)(qe.sparkSession))
         // the rebound LogicalRDD can't estimate its size (defaults to
         // "huge"), but the incremental execution's own optimized plan
         // can — pass it through so a small micro-batch takes the
@@ -116,9 +121,43 @@ class LakeSourceProvider extends TableProvider with DataSourceRegister
   }
 }
 
-private[streaming] object LakeDsv2 {
+private[graft] object LakeDsv2 {
   val ChangeTypeCol = "_change_type"
   val CommitSnapshotCol = "_commit_snapshot_id"
+  /** Row identity of an engine scan: the manifest path of the row's
+    * file, verbatim, and the row's ordinal in that file. */
+  val FileCol = "_file"
+  val PosCol = "_pos"
+  // parquet reader column that carries each row's index in its file
+  private val RowIndexCol = ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME
+
+  /** Files of one scan side, with the (change type, commit snapshot id)
+    * tag its rows carry in a change feed. */
+  type Side = (Seq[FileEntry], Option[(String, Long)])
+
+  /** An engine scan's input, fixed when its DataFrame is built: the
+    * session its splits plan in, a [[LakeTable.pinned]] copy of the table
+    * (so a later commit cannot move the read), the ref it reads, the
+    * files already planned (None: plan from the ref and the pushed
+    * filters, as `lake.*` SQL does), whether rows carry
+    * [[FileCol]]/[[PosCol]], and a copy-on-write rewrite's split size
+    * (every split then holds a slice of one file). Not reachable through
+    * read options. */
+  final case class Pin(session: ClassicSession, table: LakeTable, ref: TableRef,
+      sides: Option[Seq[Side]], fileColumns: Boolean, splitBytes: Option[Long])
+
+  /** The connector relation for an engine scan of `table` as it is now. */
+  def relation(spark: SparkSession, table: LakeTable, ref: TableRef = TableRef.Head,
+      sides: Option[Seq[Side]] = None, fileColumns: Boolean = false,
+      changes: Boolean = false, splitBytes: Option[Long] = None): DataSourceV2Relation =
+    DataSourceV2Relation.create(
+      new LakeDsv2Table(table.location, changes, Some(Pin(
+        spark.asInstanceOf[ClassicSession], table.pinned, ref, sides, fileColumns, splitBytes))),
+      None, None, CaseInsensitiveStringMap.empty())
+
+  /** An analyzed plan as a DataFrame; nothing in it is analyzed again. */
+  def frame(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    new ClassicDataset[Row](spark.asInstanceOf[ClassicSession], plan, Encoders.row(plan.schema))
 
   def path(options: CaseInsensitiveStringMap): String =
     Option(options.get("path")).getOrElse(
@@ -224,59 +263,136 @@ private[streaming] object LakeDsv2 {
       ids.contains(graft.format.FieldIds.of(f))))
   }
 
-  /** Spark's parquet scan over `files` (partition inference suppressed:
-    * the lake layout's hive-style dirs are NOT DSv2 partition columns). */
-  private def parquetScanFor(spark: ClassicSession, readWritten: StructType,
-      files: Seq[FileEntry]) = {
-    val index = new InMemoryFileIndex(spark, files.map(f => new Path(f.path)),
-      Map.empty, Some(clean(readWritten)), userSpecifiedPartitionSpec = Some(PartitionSpec.emptySpec))
-    ParquetScanBuilder(spark, index, clean(readWritten), clean(readWritten),
-      new CaseInsensitiveStringMap(new java.util.HashMap[String, String]())).build()
+  /** Splits for `files` with the sizing of Spark's own file scans —
+    * split target `maxPartitionBytes`, per-file `openCostInBytes`, and
+    * the bytes-per-core floor divided by `minPartitionNum` — except that
+    * an unset `minPartitionNum` counts as 1, not the core count: small
+    * tables and many small files (what streaming ingest and copy-on-write
+    * produce) pack into target-size splits instead of one sliver per core
+    * (Iceberg `read.split.target-size` semantics). Sizes come from the
+    * manifest, so nothing is listed; each file carries its manifest path
+    * for [[FileCol]]. A rewrite's `perFile` size gives each split of
+    * each file its own partition. */
+  private def splits(spark: ClassicSession, files: Seq[FileEntry],
+      perFile: Option[Long]): Seq[FilePartition] = {
+    val conf = spark.sessionState.conf
+    val openCost = conf.filesOpenCostInBytes
+    val total = files.map(_.sizeBytes + openCost).sum
+    val maxSplit = perFile.getOrElse(math.min(conf.filesMaxPartitionBytes,
+      math.max(openCost, total / conf.filesMinPartitionNum.getOrElse(1))))
+    val pieces = files.flatMap { f =>
+      val (path, size) = (SparkPath.fromPathString(f.path), f.sizeBytes)
+      (0L until size by maxSplit).map(off => PartitionedFile(InternalRow.empty, path, off,
+        math.min(maxSplit, size - off), Array.empty, 0L, size, Map(FileCol -> f.path)))
+    }.sortBy(-_.length)
+    if (perFile.isDefined) pieces.zipWithIndex.map { case (p, i) => FilePartition(i, Array(p)) }
+    else FilePartition.getFilePartitions(spark, pieces, maxSplit)
   }
 
-  /** Plan `files` through Spark's parquet reader, one scan per
-    * written-schema group, each split tagged with its group and `change`.
-    * `out` is the (possibly column-pruned) slice of the CURRENT schema
-    * the read must produce: current-schema groups read exactly those
-    * columns; older-schema groups read their id-matched source columns
-    * and are projected by [[readerFactory]]. */
-  def planPartitions(spark: ClassicSession, table: LakeTable, files: Seq[FileEntry],
-      out: StructType, change: Option[(String, Long)] = None): Array[InputPartition] = {
-    val outIds = outWithIds(table, out)
-    files.groupBy(_.schemaId).toSeq.sortBy(_._1).flatMap { case (sid, fs) =>
-      parquetScanFor(spark, readWrittenFor(table, sid, outIds), fs).toBatch
-        .planInputPartitions().map(p => LakePartition(sid, Right(p), change))
+  /** Plan each side's files into splits, one planning pass per
+    * written-schema group, each split tagged with its group and the
+    * side's change tag. */
+  def planPartitions(spark: ClassicSession, sides: Seq[Side],
+      perFile: Option[Long] = None): Array[InputPartition] =
+    sides.flatMap { case (files, change) =>
+      files.groupBy(_.schemaId).toSeq.sortBy(_._1).flatMap { case (sid, fs) =>
+        splits(spark, fs, perFile).map(p => LakePartition(sid, Right(p), change))
+      }
     }.toArray
+
+  /** One schema group of a read: its parquet reader factory, its bound
+    * evolution projection (None when written under the read schema), and
+    * how many data columns it reads (the row index follows them). */
+  final case class Group(factory: PartitionReaderFactory, evolve: Option[Seq[Expression]],
+      width: Int)
+
+  /** The factory for schema groups `schemaIds`. `data` is the (possibly
+    * column-pruned) slice of the CURRENT schema the read produces:
+    * current-schema groups read exactly those columns; older-schema
+    * groups read their id-matched source columns and are projected by
+    * [[LakeReaderFactory]]. `pred` reaches each group's parquet reader,
+    * renamed to its written names, to skip row groups. Built from schema,
+    * filters and conf alone, so it costs O(schemas), never O(files). A
+    * batch scan covers every schema of its snapshot, so a re-plan after
+    * runtime filtering stays a subset; a stream covers its micro-batch. */
+  def readerFactory(spark: ClassicSession, table: LakeTable, data: StructType,
+      schemaIds: Iterable[Int], pred: Pred = AlwaysTrue,
+      fileCol: Boolean = false, posCol: Boolean = false): LakeReaderFactory = {
+    val outIds = outWithIds(table, data)
+    val groups = schemaIds.toSeq.distinct.sorted.map { sid =>
+      val readWritten = readWrittenFor(table, sid, outIds)
+      val read =
+        if (posCol) StructType(readWritten.fields :+ StructField(RowIndexCol, LongType))
+        else readWritten
+      sid -> Group(
+        parquetFactory(spark, read, rowGroupFilter(table, sid, pred).toArray),
+        if (clean(readWritten) == clean(outIds)) None
+        else Some(boundEvolveExprs(spark, readWritten, outIds)),
+        readWritten.length)
+    }.toMap
+    LakeReaderFactory(groups, data.fields.map(_.dataType).toSeq, fileCol, posCol)
   }
 
-  /** The factory for schema groups `schemaIds`, built from empty file
-    * indexes (the parquet reader factory derives from schema + conf, not
-    * from the planned files), so it costs O(schemas), never O(files).
-    * A batch scan covers every schema of its snapshot, so a re-plan after
-    * runtime filtering stays a subset; a stream covers its micro-batch. */
-  def readerFactory(spark: ClassicSession, table: LakeTable, out: StructType,
-      schemaIds: Iterable[Int]): LakeReaderFactory = {
-    val outIds = outWithIds(table, out)
-    val factories = Map.newBuilder[Int, PartitionReaderFactory]
-    val projections = Map.newBuilder[Int, Seq[Expression]]
-    schemaIds.toSeq.distinct.sorted.foreach { sid =>
-      val readWritten = readWrittenFor(table, sid, outIds)
-      factories += sid ->
-        parquetScanFor(spark, readWritten, Seq.empty).toBatch.createReaderFactory()
-      if (clean(readWritten) != clean(outIds))
-        projections += sid -> boundEvolveExprs(spark, readWritten, outIds)
-    }
-    LakeReaderFactory(factories.result(), projections.result(), out.fields.map(_.dataType).toSeq)
+  /** Spark's parquet reader factory for `read`, with `filters` for
+    * row-group skipping. Read as nullable, like any file source. The
+    * factory derives from the schemas, the filters and the session conf;
+    * the scan is never asked for files, so it is given no file index. */
+  private def parquetFactory(spark: ClassicSession, read: StructType,
+      filters: Array[Filter]): PartitionReaderFactory = {
+    val schema = nullable(clean(read))
+    ParquetScan(spark, spark.sessionState.newHadoopConf(), null, schema, schema,
+      new StructType(), filters, CaseInsensitiveStringMap.empty()).createReaderFactory()
   }
+
+  /** The pushed predicate as a parquet filter on written schema `sid`,
+    * for row-group skipping: columns renamed by field id to their
+    * written names, and only columns whose written type is the current
+    * type. Like file pruning, an AND keeps what converts (Pred negates
+    * only leaves, so a dropped conjunct only widens the filter); Spark
+    * still applies every predicate above the scan. Values take the types
+    * parquet filters expect. */
+  def rowGroupFilter(table: LakeTable, sid: Int, pred: Pred): Option[Filter] = {
+    val written = table.schemaFor(sid).fields.map(f => FieldIds.of(f) -> f).toMap
+    val column = table.schema.fields.flatMap(f => written.get(FieldIds.of(f))
+      .filter(_.dataType == f.dataType).map(w => f.name -> w)).toMap
+    def leaf(c: String, make: String => Filter) = column.get(c).map(w => make(w.name))
+    def value(c: String, v: Any): Any = (column.get(c).map(_.dataType), v) match {
+      case (Some(TimestampType), t: java.time.LocalDateTime) => t.toInstant(java.time.ZoneOffset.UTC)
+      case (_, d: BigDecimal) => d.bigDecimal
+      case _ => v
+    }
+    def go(p: Pred): Option[Filter] = p match {
+      case And(l, r) => (go(l), go(r)) match {
+        case (Some(a), Some(b)) => Some(v1.And(a, b))
+        case (a, b) => a.orElse(b)
+      }
+      case Or(l, r) => go(l).zip(go(r)).map { case (a, b) => v1.Or(a, b) }
+      case Eq(c, v) => leaf(c, v1.EqualTo(_, value(c, v)))
+      case Ne(c, v) => leaf(c, n => v1.Not(v1.EqualTo(n, value(c, v))))
+      case Lt(c, v) => leaf(c, v1.LessThan(_, value(c, v)))
+      case Le(c, v) => leaf(c, v1.LessThanOrEqual(_, value(c, v)))
+      case Gt(c, v) => leaf(c, v1.GreaterThan(_, value(c, v)))
+      case Ge(c, v) => leaf(c, v1.GreaterThanOrEqual(_, value(c, v)))
+      case In(c, vs) => leaf(c, v1.In(_, vs.map(value(c, _)).toArray))
+      case IsNull(c) => leaf(c, v1.IsNull(_))
+      case NotNull(c) => leaf(c, v1.IsNotNull(_))
+      case StartsWith(c, prefix) => leaf(c, v1.StringStartsWith(_, prefix))
+      case _ => None
+    }
+    go(pred)
+  }
+
+  /** `s` with every column nullable, as a file source reads it (a write
+    * casts nested values to the table's own types). */
+  def nullable(s: StructType): StructType = StructType(s.fields.map(_.copy(nullable = true)))
 
   /** The [[SchemaEvolve]] column projection, analyzed against an empty
-    * relation of the written schema and bound to its output order — i.e.
-    * exactly the expressions the batch path would run, ready to apply to
-    * raw parquet reader rows on executors. */
+    * relation of the written schema and bound to its output order, ready
+    * to apply to raw parquet reader rows on executors. */
   private def boundEvolveExprs(spark: ClassicSession, written: StructType,
       cur: StructType): Seq[Expression] = {
     val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], clean(written))
+      spark.sparkContext.emptyRDD[Row], nullable(clean(written)))
     val analyzed = empty.select(SchemaEvolve.columns(written, cur): _*)
       .queryExecution.analyzed
     val project = analyzed.collectFirst { case p: Project => p }.getOrElse(
@@ -287,12 +403,12 @@ private[streaming] object LakeDsv2 {
   }
 }
 
-/** The connector's one input partition: a parquet split of schema group
-  * `schemaId`, tagged (change type, commit snapshot id) when it feeds the
-  * change stream, or (Left) the single row of an aggregate answered from
+/** The connector's one input partition: a split of schema group
+  * `schemaId`, tagged (change type, commit snapshot id) when it feeds a
+  * change feed, or (Left) the single row of an aggregate answered from
   * metadata (catalyst-internal, Serializable values). */
 private[streaming] final case class LakePartition(schemaId: Int,
-    split: Either[Seq[Any], InputPartition],
+    split: Either[Seq[Any], FilePartition],
     change: Option[(String, Long)] = None) extends InputPartition {
   override def preferredLocations(): Array[String] =
     split.fold(_ => Array.empty[String], _.preferredLocations())
@@ -300,14 +416,18 @@ private[streaming] final case class LakePartition(schemaId: Int,
 
 /** The connector's one reader factory, keyed by schema id: a split reads
   * through its group's parquet factory, then one projection applies the
-  * group's bound field-id evolution (when written under another schema)
-  * and appends the `_change_type` and `_commit_snapshot_id` literals
-  * (when change-tagged). The projection is built lazily executor-side:
-  * UnsafeProjection itself is not serializable, the expressions are. */
+  * group's bound field-id evolution (when written under another schema),
+  * appends [[LakeDsv2.FileCol]] and [[LakeDsv2.PosCol]] (when asked for)
+  * and the `_change_type` and `_commit_snapshot_id` literals (when
+  * change-tagged). With `_file` every file of a split gets its own
+  * reader, so the path is one literal per file. The projection is built
+  * lazily executor-side: UnsafeProjection itself is not serializable,
+  * the expressions are. */
 private[streaming] final case class LakeReaderFactory(
-    factories: Map[Int, PartitionReaderFactory],
-    projections: Map[Int, Seq[Expression]],
-    outTypes: Seq[DataType]) extends PartitionReaderFactory {
+    groups: Map[Int, LakeDsv2.Group],
+    outTypes: Seq[DataType],
+    fileCol: Boolean = false,
+    posCol: Boolean = false) extends PartitionReaderFactory {
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val lp = p.asInstanceOf[LakePartition]
@@ -320,36 +440,78 @@ private[streaming] final case class LakeReaderFactory(
         override def close(): Unit = ()
       }
       case Right(split) =>
-        val inner = factories.getOrElse(lp.schemaId, throw new IllegalStateException(
-          s"no reader for schema id ${lp.schemaId}")).createReader(split)
-        val tags = lp.change.toSeq.flatMap { case (kind, sid) =>
-          Seq(Literal(UTF8String.fromString(kind), StringType), Literal(sid, LongType))
-        }
-        val exprs = projections.get(lp.schemaId) match {
-          case Some(evolve) => evolve ++ tags
-          case None if tags.nonEmpty =>
-            outTypes.zipWithIndex.map { case (dt, i) => BoundReference(i, dt, nullable = true) } ++ tags
-          case None => return inner
-        }
-        new PartitionReader[InternalRow] {
-          private[this] val proj = UnsafeProjection.create(exprs)
-          override def next(): Boolean = inner.next()
-          override def get(): InternalRow = proj(inner.get())
-          override def close(): Unit = inner.close()
+        val g = groups.getOrElse(lp.schemaId, throw new IllegalStateException(
+          s"no reader for schema id ${lp.schemaId}"))
+        val data = g.evolve.getOrElse(
+          outTypes.zipWithIndex.map { case (dt, i) => BoundReference(i, dt, nullable = true) })
+        val tail = (if (posCol) Seq(BoundReference(g.width, LongType, nullable = false)) else Nil) ++
+          lp.change.toSeq.flatMap { case (kind, sid) =>
+            Seq(Literal(UTF8String.fromString(kind), StringType), Literal(sid, LongType)) }
+        if (!fileCol) {
+          val inner = g.factory.createReader(split)
+          if (g.evolve.isEmpty && tail.isEmpty) inner else projected(inner, data ++ tail)
+        } else new PartitionReader[InternalRow] {
+          private[this] val readers = split.files.iterator.map { f =>
+            val path = f.otherConstantMetadataColumnValues(LakeDsv2.FileCol).toString
+            projected(g.factory.createReader(FilePartition(split.index, Array(f))),
+              (data :+ Literal(UTF8String.fromString(path), StringType)) ++ tail)
+          }
+          private[this] var cur: PartitionReader[InternalRow] = null
+          override def next(): Boolean = {
+            while (cur == null || !cur.next()) {
+              close()
+              if (!readers.hasNext) return false
+              cur = readers.next()
+            }
+            true
+          }
+          override def get(): InternalRow = cur.get()
+          override def close(): Unit = if (cur != null) { cur.close(); cur = null }
         }
     }
   }
+
+  // a read with no projection in any group takes parquet's columnar
+  // batches as they are: every split then reads the same way, as Spark
+  // requires of one scan
+  private val columnar = !fileCol && !posCol && groups.values.forall(_.evolve.isEmpty)
+  override def supportColumnarReads(p: InputPartition): Boolean = p match {
+    case LakePartition(sid, Right(split), None) =>
+      columnar && groups(sid).factory.supportColumnarReads(split)
+    case _ => false
+  }
+  override def createColumnarReader(p: InputPartition): PartitionReader[ColumnarBatch] = {
+    val lp = p.asInstanceOf[LakePartition]
+    groups(lp.schemaId).factory.createColumnarReader(lp.split.toOption.get)
+  }
+
+  private def projected(inner: PartitionReader[InternalRow],
+      exprs: Seq[Expression]): PartitionReader[InternalRow] = new PartitionReader[InternalRow] {
+    private[this] val proj = UnsafeProjection.create(exprs)
+    override def next(): Boolean = inner.next()
+    override def get(): InternalRow = proj(inner.get())
+    override def close(): Unit = inner.close()
+  }
 }
 
-private[streaming] final class LakeDsv2Table(location: String,
-    changes: Boolean = false) extends Table
+/** The connector's table. `pin` is set for an engine scan (see
+  * [[LakeDsv2.Pin]]); its columns are then all nullable, like any file
+  * source read, so a rewrite writes the same parquet schema whatever
+  * the source's declared nullability. */
+private[graft] final class LakeDsv2Table(location: String,
+    changes: Boolean = false, val pin: Option[LakeDsv2.Pin] = None) extends Table
     with SupportsRead with org.apache.spark.sql.connector.catalog.SupportsWrite {
-  private val table = LakeTable.load(location)
+  private val table = pin.map(_.table).getOrElse(LakeTable.load(location))
 
   override def name(): String = s"graft-lake:$location"
   override def schema(): StructType = {
     val base = LakeDsv2.clean(table.schema)
-    if (changes) LakeDsv2.withChangeType(base) else base
+    val read = if (pin.isDefined) LakeDsv2.nullable(base) else base
+    if (changes) LakeDsv2.withChangeType(read)
+    else if (pin.exists(_.fileColumns)) StructType(read.fields
+      :+ StructField(LakeDsv2.FileCol, StringType, nullable = false)
+      :+ StructField(LakeDsv2.PosCol, LongType, nullable = false))
+    else read
   }
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.MICRO_BATCH_READ, TableCapability.BATCH_READ,
@@ -357,10 +519,10 @@ private[streaming] final class LakeDsv2Table(location: String,
       TableCapability.TRUNCATE)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new LakeScan(location, schema(), graft.format.TableRef.fromOptions(options.get),
+    new LakeScan(location, schema(), pin.map(_.ref).getOrElse(TableRef.fromOptions(options.get)),
       changes = changes || LakeDsv2.changesMode(options.get),
       maxFilesPerTrigger = LakeDsv2.positiveOption(options, "maxFilesPerTrigger").map(_.toInt),
-      maxBytesPerTrigger = LakeDsv2.positiveOption(options, "maxBytesPerTrigger"))
+      maxBytesPerTrigger = LakeDsv2.positiveOption(options, "maxBytesPerTrigger"), pin = pin)
 
   /** Batch write via the V1Write fallback: the DataFrame-level insert
     * reuses the transactional LakeWriter/commit path (per-task footer
@@ -394,9 +556,10 @@ private[streaming] final class LakeDsv2Table(location: String,
 }
 
 private[streaming] final class LakeScan(location: String, outSchema: StructType,
-    ref: graft.format.TableRef, changes: Boolean = false,
+    ref: TableRef, changes: Boolean = false,
     maxFilesPerTrigger: Option[Int] = None,
-    maxBytesPerTrigger: Option[Long] = None)
+    maxBytesPerTrigger: Option[Long] = None,
+    pin: Option[LakeDsv2.Pin] = None)
   extends ScanBuilder with Scan
   with org.apache.spark.sql.connector.read.SupportsPushDownV2Filters
   with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns
@@ -452,15 +615,21 @@ private[streaming] final class LakeScan(location: String, outSchema: StructType,
     * conservative) on any other column. Runtime filters are
     * execution-time hints — rows are still re-filtered by the join. */
   override def filterAttributes(): Array[NamedReference] =
-    if (changes) Array.empty
+    // an engine scan's pinned files were already key-pruned by its
+    // command: a runtime filter there prunes nothing further and only
+    // adds the filter's own pass and the plan state it keeps alive. A
+    // SQL scan within one split cannot shed a task, so it skips the
+    // filter's planning and build-side pass too
+    if (changes || pin.exists(p => p.sides.isDefined ||
+        plannedFiles().map(_.sizeBytes).sum <= spark.sessionState.conf.filesMaxPartitionBytes))
+      Array.empty
     // only columns the (possibly pruned) scan OUTPUT carries: Spark
     // resolves these against the scan's output attributes, and a
     // projected-away column fails analysis inside PartitionPruning.
     // Dotted names are skipped: Expressions.column PARSES dots into
     // nested paths, which would mis-resolve a literal "a.b" column
     // (LakeDsv2.predOf does not convert dotted names either).
-    else out.fields.filterNot(_.name.contains('.')).map(f =>
-      org.apache.spark.sql.connector.expressions.Expressions.column(f.name))
+    else dataOut.fields.filterNot(_.name.contains('.')).map(f => Expressions.column(f.name))
 
   override def filter(filters: Array[Predicate]): Unit = {
     val preds = filters.flatMap(LakeDsv2.predOf) // unconvertible runtime filters are hints
@@ -474,30 +643,49 @@ private[streaming] final class LakeScan(location: String, outSchema: StructType,
     * planning and execution could hand the runtime-filtered pass files
     * from a newer snapshot whose schema groups the already-built reader
     * factory has never seen. */
-  private lazy val tableSnap: LakeTable = LakeTable.load(location)
+  private lazy val tableSnap: LakeTable = pin.map(_.table).getOrElse(LakeTable.load(location))
+  // an engine scan plans in its own session (a rewrite's per-file split
+  // sizing lives there), every other read in the active one
+  private lazy val spark: ClassicSession = pin.map(_.session).getOrElse(ClassicSession.active)
+
+  // columns the relation adds to the table's (row identity, change tags)
+  private lazy val added = Set(LakeDsv2.ChangeTypeCol, LakeDsv2.CommitSnapshotCol,
+    LakeDsv2.FileCol, LakeDsv2.PosCol) -- tableSnap.schema.fieldNames
+  private def dataOut: StructType = StructType(out.fields.filterNot(f => added(f.name)))
 
   /** One factory per scan, covering every schema group of the snapshot
     * (O(schemas) to build — no file planning); both toBatch instances
     * Spark may create (pre- and post-runtime-filter) hand out this same
     * factory. */
-  private lazy val sharedFactory: PartitionReaderFactory =
-    LakeDsv2.readerFactory(ClassicSession.active, tableSnap, out,
-      if (aggRow.isDefined) Nil else tableSnap.metadata.schemas.keys.map(_.toInt))
+  private lazy val sharedFactory: PartitionReaderFactory = {
+    def reads(c: String) = added(c) && out.fieldNames.contains(c)
+    LakeDsv2.readerFactory(spark, tableSnap, dataOut,
+      if (aggRow.isDefined) Nil else tableSnap.metadata.schemas.keys.map(_.toInt),
+      pred, reads(LakeDsv2.FileCol), reads(LakeDsv2.PosCol))
+  }
 
-  /** planFiles memoized per pred state: supportCompletePushDown /
-    * pushAggregation / estimateStatistics / partition planning would
-    * otherwise each re-walk the manifests during one query's planning. */
-  @volatile private var planCache: Option[(graft.scan.Pred, Seq[FileEntry])] = None
-  private def plannedFiles(): Seq[FileEntry] = {
+  /** The scan's sides with files planned for the current pred, memoized
+    * per pred state: supportCompletePushDown / pushAggregation /
+    * estimateStatistics / partition planning would otherwise each re-walk
+    * the manifests during one query's planning. Pinned files are pruned
+    * by the pushed filters from their stats; otherwise the ref's
+    * snapshot is planned. */
+  @volatile private var planCache: Option[(Pred, Seq[LakeDsv2.Side])] = None
+  private def plannedSides(): Seq[LakeDsv2.Side] = {
     val p = pred
     planCache match {
-      case Some((cp, fs)) if cp == p => fs
+      case Some((cp, sides)) if cp == p => sides
       case _ =>
-        val fs = new graft.scan.TableScan(ClassicSession.active, tableSnap, p, ref).planFiles()
-        planCache = Some((p, fs))
-        fs
+        lazy val evaluator = new StatsEvaluator(tableSnap.schema, tableSnap.metadata.specsById)
+        val sides = pin.flatMap(_.sides) match {
+          case Some(pinned) => pinned.map { case (fs, tag) => (fs.filter(evaluator.mayContain(p, _)), tag) }
+          case None => Seq(new graft.scan.TableScan(spark, tableSnap, p, ref).planFiles() -> None)
+        }
+        planCache = Some((p, sides))
+        sides
     }
   }
+  private def plannedFiles(): Seq[FileEntry] = plannedSides().flatMap(_._1)
 
   /** Accurate pre-execution statistics from the PRUNED file set —
     * manifest record counts and byte sizes after partition/stats
@@ -533,8 +721,9 @@ private[streaming] final class LakeScan(location: String, outSchema: StructType,
     }
   }
 
-  // pruning-only pushdown: every filter stays residual (Spark re-applies
-  // them all), the convertible conjunction drives metadata file pruning
+  // every filter stays residual (Spark re-applies them all): the
+  // convertible conjunction drives metadata file pruning and, as a
+  // parquet filter, row-group skipping
   private var pred: Pred = AlwaysTrue
   private var pushed: Array[Predicate] = Array.empty
   // column pruning: the parquet readers then read only these columns
@@ -544,7 +733,7 @@ private[streaming] final class LakeScan(location: String, outSchema: StructType,
     val convertible = predicates.flatMap(p => LakeDsv2.predOf(p).map(p -> _))
     pushed = convertible.map(_._1)
     pred = convertible.map(_._2).reduceOption[Pred](And(_, _)).getOrElse(AlwaysTrue)
-    predicates // all residual: pushdown only prunes files, rows re-filtered
+    predicates // all residual: pushdown only skips files and row groups
   }
   override def pushedPredicates(): Array[Predicate] = pushed
 
@@ -556,7 +745,8 @@ private[streaming] final class LakeScan(location: String, outSchema: StructType,
   override def readSchema(): StructType = out
   override def description(): String =
     if (aggRow.isDefined) s"graft-lake $location metadata-aggregated"
-    else s"graft-lake $location pruned-by: ${pred}"
+    else s"graft-lake $location pruned-by: $pred PushedFilters: [${
+      LakeDsv2.rowGroupFilter(tableSnap, tableSnap.metadata.currentSchemaId, pred).mkString}]"
 
   // ---- aggregate pushdown: COUNT(*)/MIN/MAX answered from manifests —
   // zero data files read (Iceberg-style metadata aggregation). Complete
@@ -676,7 +866,7 @@ private[streaming] final class LakeScan(location: String, outSchema: StructType,
   }
 
   override def toBatch: Batch = {
-    if (changes)
+    if (changes && pin.flatMap(_.sides).isEmpty)
       throw new IllegalArgumentException(
         "read-changes is a streaming option; for a batch change feed use " +
           "SQL lake.`t$changes_<fromSnapshot>` or LakeEngine.readChanges")
@@ -687,17 +877,17 @@ private[streaming] final class LakeScan(location: String, outSchema: StructType,
       // read the scan's one table snapshot and share its one factory,
       // so the runtime-filtered file set is always a SUBSET of the
       // factory's schema groups.
-      private val spark = ClassicSession.active
       override def planInputPartitions(): Array[InputPartition] = aggRow match {
         case Some(row) => Array(LakePartition(-1, Left(row)))
-        case None => LakeDsv2.planPartitions(spark, tableSnap, applyLimit(plannedFiles()), out)
+        case None => LakeDsv2.planPartitions(spark,
+          plannedSides().map { case (files, tag) => (applyLimit(files), tag) }, pin.flatMap(_.splitBytes))
       }
       override def createReaderFactory(): PartitionReaderFactory = sharedFactory
     }
   }
 
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
-    if (ref != graft.format.TableRef.Head)
+    if (ref != TableRef.Head)
       throw new IllegalArgumentException(
         "time-travel options are batch-read only; streams consume the live table")
     if (changes) {
@@ -730,7 +920,7 @@ private[streaming] sealed abstract class LakeStreamBase(location: String)
   // the factory matching the LAST planInputPartitions call (Spark builds
   // the factory right after planning each micro-batch)
   @volatile private var lastFactory: PartitionReaderFactory =
-    LakeReaderFactory(Map.empty, Map.empty, Nil)
+    LakeReaderFactory(Map.empty, Nil)
 
   private def head(): Option[Long] = table.refresh().metadata.currentSnapshotId
 
@@ -746,9 +936,7 @@ private[streaming] sealed abstract class LakeStreamBase(location: String)
   protected def plan(sides: Seq[(Seq[FileEntry], Option[(String, Long)])]): Array[InputPartition] = {
     lastFactory = LakeDsv2.readerFactory(spark, table, pinnedSchema,
       sides.flatMap(_._1.map(_.schemaId)))
-    sides.flatMap { case (files, change) =>
-      LakeDsv2.planPartitions(spark, table, files, pinnedSchema, change)
-    }.toArray
+    LakeDsv2.planPartitions(spark, sides)
   }
 
   override def createReaderFactory(): PartitionReaderFactory = lastFactory

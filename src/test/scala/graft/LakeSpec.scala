@@ -45,19 +45,26 @@ class LakeSpec extends SparkSpec {
       engine.insert(t, Seq((i.toLong, s"v$i")).toDF("id", "v").coalesce(1))
     }
     assert(t.currentFiles().size === 24)
-    val scan = engine.scan(t).toDF()
-    val parts = scan.rdd.getNumPartitions
-    // 24 files x ~1 KB + 4 MB openCost each bin-pack well inside one
-    // 128 MB split; without ensureReadConf Spark plans one per core
-    assert(parts <= 2, s"24 tiny files planned $parts scan partitions — not bin-packed")
-    assert(scan.count() === 24)
-    // an explicit user choice is never clobbered
-    assert(spark.conf.get("spark.sql.files.minPartitionNum") === "1")
-    spark.conf.set("spark.sql.files.minPartitionNum", "3")
+    val key = "spark.sql.files.minPartitionNum"
+    val prev = spark.conf.getOption(key)
+    spark.conf.unset(key)
     try {
-      graft.scan.TableScan.ensureReadConf(spark)
-      assert(spark.conf.get("spark.sql.files.minPartitionNum") === "3")
-    } finally spark.conf.set("spark.sql.files.minPartitionNum", "1")
+      val scan = engine.scan(t).toDF()
+      val parts = scan.rdd.getNumPartitions
+      // 24 files x ~1 KB + 4 MB openCost each bin-pack well inside one
+      // 128 MB split; Spark's own default would plan one per core
+      assert(parts <= 2, s"24 tiny files planned $parts scan partitions — not bin-packed")
+      assert(scan.count() === 24)
+      // split sizing is per scan: reading sets no session conf
+      assert(spark.conf.getOption(key).isEmpty, s"a read set $key")
+      // an explicit user choice still drives the split count
+      spark.conf.set(key, "3")
+      val parts3 = engine.scan(t).toDF().rdd.getNumPartitions
+      assert(parts3 > parts, s"minPartitionNum=3 planned $parts3 partitions, unset planned $parts")
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 
   test("partition pruning + stats pruning skip files; results still exact") {

@@ -14,9 +14,9 @@ import org.apache.spark.sql.functions._
   * through the round-16 `gcache://` caching FileSystem over an
   * instrumented inner store. This is the pin behind the cache's
   * "tables at gcache:// locations keep manifest path identity" claim
-  * — the DML probe compares `input_file_name()` against manifest
-  * paths, so any scheme-normalization drift between the write and
-  * read sides fails here. */
+  * — the DML probe matches each row's `_file` against manifest paths,
+  * so any drift between the path the writer records and the path the
+  * reader reports fails here. */
 class HadoopLakeSpec extends SparkSpec {
 
   private def freshEnv(tag: String): (LakeEngine, String, String) = {
@@ -56,8 +56,8 @@ class HadoopLakeSpec extends SparkSpec {
       assert(engine.scan(t).toDF().count() === n)
       assert(CountingFs.opens.get() == before,
         "warm lake scan must not touch the inner store")
-      // CoW DML: the file-identity probe (input_file_name vs manifest
-      // paths) must agree across the gcache scheme
+      // CoW DML: the file-identity probe (`_file` vs manifest paths)
+      // must agree across the gcache scheme
       val tsAfterInsert = System.currentTimeMillis()
       Thread.sleep(5)
       val del = orders.filter(col("o_orderkey") % 7 === 0).count()
