@@ -29,9 +29,9 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * introspection relations. It is the relation the engine's own scans
   * read ([[graft.scan.TableScan]]), pinned to the table's metadata at
   * analysis, so a query's WHERE clause reaches it by DataSource V2
-  * pushdown: files prune on their manifest stats and parquet skips row
-  * groups; join keys prune at runtime, and COUNT/MIN/MAX can be
-  * answered from metadata.
+  * pushdown: files prune on their manifest stats, parquet skips row
+  * groups, and COUNT/MIN/MAX can be answered from metadata. Join keys
+  * do not prune it at runtime (see `LakeScan.filterAttributes`).
   *
   * SQL DML routes to the engine's copy-on-write commands:
   *

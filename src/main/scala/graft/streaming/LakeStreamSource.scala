@@ -142,9 +142,14 @@ private[graft] object LakeDsv2 {
     * filters, as `lake.*` SQL does), whether rows carry
     * [[FileCol]]/[[PosCol]], and a copy-on-write rewrite's split size
     * (every split then holds a slice of one file). Not reachable through
-    * read options. */
+    * read options. Relations and scans compare pins by [[Pin.key]]: what
+    * they read, not their session or the copy holding the metadata, as
+    * a file source compares by its files; Spark's cache lookup and
+    * exchange reuse then match two resolutions of one read. */
   final case class Pin(session: ClassicSession, table: LakeTable, ref: TableRef,
-      sides: Option[Seq[Side]], fileColumns: Boolean, splitBytes: Option[Long])
+      sides: Option[Seq[Side]], fileColumns: Boolean, splitBytes: Option[Long]) {
+    def key: Any = (table.location, table.metadata, ref, sides, fileColumns, splitBytes)
+  }
 
   /** The connector relation for an engine scan of `table` as it is now. */
   def relation(spark: SparkSession, table: LakeTable, ref: TableRef = TableRef.Head,
@@ -312,9 +317,7 @@ private[graft] object LakeDsv2 {
     * groups read their id-matched source columns and are projected by
     * [[LakeReaderFactory]]. `pred` reaches each group's parquet reader,
     * renamed to its written names, to skip row groups. Built from schema,
-    * filters and conf alone, so it costs O(schemas), never O(files). A
-    * batch scan covers every schema of its snapshot, so a re-plan after
-    * runtime filtering stays a subset; a stream covers its micro-batch. */
+    * filters and conf alone, so it costs O(schemas), never O(files). */
   def readerFactory(spark: ClassicSession, table: LakeTable, data: StructType,
       schemaIds: Iterable[Int], pred: Pred = AlwaysTrue,
       fileCol: Boolean = false, posCol: Boolean = false): LakeReaderFactory = {
@@ -494,19 +497,26 @@ private[streaming] final case class LakeReaderFactory(
   }
 }
 
-/** The connector's table. `pin` is set for an engine scan (see
-  * [[LakeDsv2.Pin]]); its columns are then all nullable, like any file
-  * source read, so a rewrite writes the same parquet schema whatever
-  * the source's declared nullability. */
+/** The connector's table. `pin` is set for an engine or SQL scan (see
+  * [[LakeDsv2.Pin]]); a pinned table compares equal to another with an
+  * equal pin, the public one only to itself. Data columns are all
+  * nullable, like any file source read, so a rewrite writes the same
+  * parquet schema whatever the source's declared nullability. */
 private[graft] final class LakeDsv2Table(location: String,
-    changes: Boolean = false, val pin: Option[LakeDsv2.Pin] = None) extends Table
+    val changes: Boolean = false, val pin: Option[LakeDsv2.Pin] = None) extends Table
     with SupportsRead with org.apache.spark.sql.connector.catalog.SupportsWrite {
   private val table = pin.map(_.table).getOrElse(LakeTable.load(location))
 
+  private def key = (changes, pin.map(_.key))
+  override def equals(o: Any): Boolean = o match {
+    case t: LakeDsv2Table => (this eq t) || pin.isDefined && key == t.key
+    case _ => false
+  }
+  override def hashCode: Int = if (pin.isEmpty) System.identityHashCode(this) else key.##
+
   override def name(): String = s"graft-lake:$location"
   override def schema(): StructType = {
-    val base = LakeDsv2.clean(table.schema)
-    val read = if (pin.isDefined) LakeDsv2.nullable(base) else base
+    val read = LakeDsv2.nullable(LakeDsv2.clean(table.schema))
     if (changes) LakeDsv2.withChangeType(read)
     else if (pin.exists(_.fileColumns)) StructType(read.fields
       :+ StructField(LakeDsv2.FileCol, StringType, nullable = false)
@@ -560,7 +570,7 @@ private[streaming] final class LakeScan(location: String, outSchema: StructType,
     maxFilesPerTrigger: Option[Int] = None,
     maxBytesPerTrigger: Option[Long] = None,
     pin: Option[LakeDsv2.Pin] = None)
-  extends ScanBuilder with Scan
+  extends ScanBuilder with Scan with Batch
   with org.apache.spark.sql.connector.read.SupportsPushDownV2Filters
   with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns
   with org.apache.spark.sql.connector.read.SupportsPushDownAggregates
@@ -615,14 +625,11 @@ private[streaming] final class LakeScan(location: String, outSchema: StructType,
     * conservative) on any other column. Runtime filters are
     * execution-time hints — rows are still re-filtered by the join. */
   override def filterAttributes(): Array[NamedReference] =
-    // an engine scan's pinned files were already key-pruned by its
-    // command: a runtime filter there prunes nothing further and only
-    // adds the filter's own pass and the plan state it keeps alive. A
-    // SQL scan within one split cannot shed a task, so it skips the
-    // filter's planning and build-side pass too
-    if (changes || pin.exists(p => p.sides.isDefined ||
-        plannedFiles().map(_.sizeBytes).sum <= spark.sessionState.conf.filesMaxPartitionBytes))
-      Array.empty
+    // the public read only. A pinned scan's files are final once
+    // planned: an engine scan's were already key-pruned by its command,
+    // and on `lake.*` SQL joins (the `lake_read` q5 trace) the filter's
+    // planning and build-side pass cost more than the files it skipped
+    if (changes || pin.isDefined) Array.empty
     // only columns the (possibly pruned) scan OUTPUT carries: Spark
     // resolves these against the scan's output attributes, and a
     // projected-away column fails analysis inside PartitionPruning.
@@ -644,8 +651,7 @@ private[streaming] final class LakeScan(location: String, outSchema: StructType,
     * from a newer snapshot whose schema groups the already-built reader
     * factory has never seen. */
   private lazy val tableSnap: LakeTable = pin.map(_.table).getOrElse(LakeTable.load(location))
-  // an engine scan plans in its own session (a rewrite's per-file split
-  // sizing lives there), every other read in the active one
+  // a pinned scan plans in the session its relation was built in
   private lazy val spark: ClassicSession = pin.map(_.session).getOrElse(ClassicSession.active)
 
   // columns the relation adds to the table's (row identity, change tags)
@@ -653,14 +659,15 @@ private[streaming] final class LakeScan(location: String, outSchema: StructType,
     LakeDsv2.FileCol, LakeDsv2.PosCol) -- tableSnap.schema.fieldNames
   private def dataOut: StructType = StructType(out.fields.filterNot(f => added(f.name)))
 
-  /** One factory per scan, covering every schema group of the snapshot
-    * (O(schemas) to build — no file planning); both toBatch instances
-    * Spark may create (pre- and post-runtime-filter) hand out this same
-    * factory. */
+  /** One factory per scan. A pinned scan's covers the schema groups of
+    * its planned files; the public read's covers every schema of the
+    * snapshot, so a re-plan after runtime filtering stays a subset. */
   private lazy val sharedFactory: PartitionReaderFactory = {
     def reads(c: String) = added(c) && out.fieldNames.contains(c)
     LakeDsv2.readerFactory(spark, tableSnap, dataOut,
-      if (aggRow.isDefined) Nil else tableSnap.metadata.schemas.keys.map(_.toInt),
+      if (aggRow.isDefined) Nil
+      else if (pin.isDefined) plannedFiles().map(_.schemaId)
+      else tableSnap.metadata.schemas.keys.map(_.toInt),
       pred, reads(LakeDsv2.FileCol), reads(LakeDsv2.PosCol))
   }
 
@@ -865,26 +872,32 @@ private[streaming] final class LakeScan(location: String, outSchema: StructType,
     }
   }
 
+  /** The scan is its own batch, as Spark's file scans are: Spark
+    * compares batch scans by their batch. Partitions are planned when
+    * asked for, after any runtime filter, from the scan's one table
+    * snapshot, so they always fall within the factory's schema groups. */
   override def toBatch: Batch = {
     if (changes && pin.flatMap(_.sides).isEmpty)
       throw new IllegalArgumentException(
         "read-changes is a streaming option; for a batch change feed use " +
           "SQL lake.`t$changes_<fromSnapshot>` or LakeEngine.readChanges")
-    new Batch {
-      // Spark builds the reader factory at physical planning (before
-      // runtime filters exist) but may call planInputPartitions on a
-      // FRESH toBatch() after SupportsRuntimeV2Filtering.filter(). Both
-      // read the scan's one table snapshot and share its one factory,
-      // so the runtime-filtered file set is always a SUBSET of the
-      // factory's schema groups.
-      override def planInputPartitions(): Array[InputPartition] = aggRow match {
-        case Some(row) => Array(LakePartition(-1, Left(row)))
-        case None => LakeDsv2.planPartitions(spark,
-          plannedSides().map { case (files, tag) => (applyLimit(files), tag) }, pin.flatMap(_.splitBytes))
-      }
-      override def createReaderFactory(): PartitionReaderFactory = sharedFactory
-    }
+    this
   }
+  override def planInputPartitions(): Array[InputPartition] = aggRow match {
+    case Some(row) => Array(LakePartition(-1, Left(row)))
+    case None => LakeDsv2.planPartitions(spark,
+      plannedSides().map { case (files, tag) => (applyLimit(files), tag) }, pin.flatMap(_.splitBytes))
+  }
+  override def createReaderFactory(): PartitionReaderFactory = sharedFactory
+
+  // a pinned scan is final once built (it takes no runtime filter), so
+  // it compares by what it reads; the public read only to itself
+  private def key = (pin.map(_.key), changes, pred, out, aggRow, limitRows)
+  override def equals(o: Any): Boolean = o match {
+    case s: LakeScan => (this eq s) || pin.isDefined && key == s.key
+    case _ => false
+  }
+  override def hashCode: Int = if (pin.isEmpty) System.identityHashCode(this) else key.##
 
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
     if (ref != TableRef.Head)

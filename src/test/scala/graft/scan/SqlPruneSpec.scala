@@ -5,6 +5,7 @@ import graft.commands.LakeEngine
 import graft.format._
 import graft.metrics.{MetricCollector, MetricCollectors, ScanEvent}
 import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -12,7 +13,9 @@ import org.apache.spark.sql.types.LongType
 /** `lake.*` SQL reads resolve to the `graft-lake` connector's relation,
   * so a WHERE clause prunes files from manifest stats exactly like an
   * engine scan does: on the live table and on a time-travel ref read
-  * through a later rename and widening. */
+  * through a later rename and widening. Two resolutions of one table
+  * state compare equal, so a self-join reuses its exchange and a cached
+  * read is found again until a commit moves the table. */
 class SqlPruneSpec extends SparkSpec {
 
   private def scansOf(location: String)(body: => Unit): Seq[ScanEvent] = {
@@ -67,5 +70,31 @@ class SqlPruneSpec extends SparkSpec {
     }
     assert(ttScans.exists(e => e.totalFiles == 10 && e.matchedFiles < e.totalFiles),
       s"no pruned time-travel scan: $ttScans")
+  }
+
+  test("two resolutions of lake.t compare equal: self-join exchange reuse and cache lookup") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-sqlreuse-").toString
+    val catalog = new LakeCatalog(dir)
+    val engine = new LakeEngine(spark, catalog)
+    val df = spark.range(0, 2000).select(col("id").cast("int").as("k"), (col("id") % 7).as("g"))
+    val t = catalog.createTable("t", df.schema)
+    engine.insert(t, df)
+    spark.conf.set("spark.graft.warehouse", dir)
+
+    val side = "SELECT g, count(*) AS c FROM lake.t GROUP BY g"
+    val joined = spark.sql(s"SELECT a.g, a.c, b.c FROM ($side) a JOIN ($side) b ON a.g = b.g")
+    assert(joined.collect().forall(r => r.getLong(1) == r.getLong(2)))
+    val plan = joined.queryExecution.executedPlan.toString
+    assert(plan.contains("ReusedExchange"), s"self-join did not reuse its exchange:\n$plan")
+
+    def cached(q: String) = spark.sql(q).queryExecution.withCachedData
+      .collectFirst { case r: InMemoryRelation => r }.isDefined
+    val all = spark.sql("SELECT * FROM lake.t").cache()
+    try {
+      assert(cached("SELECT * FROM lake.t"), "a second resolution missed the cached read")
+      engine.insert(t, df.limit(10))
+      assert(!cached("SELECT * FROM lake.t"), "a read after a commit hit the cache of the old snapshot")
+      assert(spark.sql("SELECT * FROM lake.t").count() == 2010)
+    } finally all.unpersist(blocking = true)
   }
 }
