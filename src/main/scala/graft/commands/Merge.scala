@@ -25,8 +25,10 @@ class OutOfOrderMergeException(msg: String) extends RuntimeException(msg)
   *    rebuilt; rebuild preserves untouched rows (history rows and rows
   *    outside the boundary filter) via an anti-join on (_file, _pos)
   *
-  * All joins/aggregations shuffle on the merge keys; the only driver-side
-  * collect is the modified-file path list (metadata-bounded).
+  * All joins shuffle on the merge keys. The driver collects only bounded
+  * results: the source-key prune summary (per-partition range summaries
+  * merged to at most [[MaxPruneRanges]] ranges, or a capped key list) and
+  * the probe's one row per candidate file (metadata-bounded).
   */
 object Merge {
 
@@ -155,15 +157,16 @@ object Merge {
     // boundary scan per merge. Survivors get the same predicate as a
     // pushable row-group prefilter ahead of the exact 3VL check.
     val violationPred = Or(Ge(startC, effTs), Ge(endC, effTs))
+    // With every file pruned the guard starts no Spark job at all.
     LakeEngine.timed("scd2.orderGuard") {
       val guardFiles = new TableScan(spark, table,
         And(boundaryPred, violationPred), withFileColumns = true).planFiles()
-      val outOfOrder = new TableScan(spark, table,
+      def outOfOrder = new TableScan(spark, table,
         explicitFiles = Some(guardFiles), withFileColumns = true).toDF()
         .filter(col(startC) >= effLit ||
           (col(endC).isNotNull && col(endC) >= effLit)) // pushable: skips clean groups
         .filter(coalesce(expr(opts.tableFilterSql), lit(false)))
-      if (!outOfOrder.isEmpty)
+      if (guardFiles.nonEmpty && !outOfOrder.isEmpty)
         throw new OutOfOrderMergeException(
           s"target has rows with $startC/$endC >= effective timestamp $effTs; " +
             "apply changes in chronological order")
@@ -627,11 +630,92 @@ object Merge {
     if (withNull) Or(base, IsNull(k)) else base
   }
 
-  /** Bucket count for the distributed range compaction: fine enough to
-    * find every gap wider than span/4096, coarse enough that the
-    * per-bucket (min, max) collect stays a few-thousand-row metadata
-    * fetch at any source size. */
-  private val PruneBuckets = 4096L
+  /** Resolution of the final range compaction: gaps narrower than
+    * span/4096 are absorbed, so a densely sampled key window stays one
+    * range however many keys it skips. */
+  private val PruneResolution = 4096L
+
+  /** Range cap of one partition's [[KeyRanges]] summary (and of the
+    * merged summary); its buffers (32 KB) ship once per partition. */
+  private val PruneSummaryRanges = 1024
+
+  /** Bounded, mergeable summary of a set of integral keys: disjoint
+    * [lo, hi] ranges whose union covers every key added, plus whether a
+    * NULL was seen. It holds at most `2 * cap` ranges. A full buffer is
+    * compacted: ranges are unioned (adjacent ones too), then the
+    * smallest gaps are closed until at most `cap` ranges remain. Closing
+    * a gap only widens coverage, so the summary stays a superset of the
+    * keys. Keys arriving in ascending order extend the last range in
+    * place and never fill the buffer while they stay contiguous. */
+  private[commands] final class KeyRanges(cap: Int) extends Serializable {
+    var hasNull = false
+    private val lo = new Array[Long](2 * cap)
+    private val hi = new Array[Long](2 * cap)
+    private var n = 0
+
+    def add(k: Long): Unit =
+      if (n > 0 && k >= lo(n - 1) && k <= hi(n - 1)) ()
+      else if (n > 0 && k - 1 == hi(n - 1) && k != Long.MinValue) hi(n - 1) = k
+      else append(k, k)
+
+    private def append(a: Long, b: Long): Unit = {
+      if (n == lo.length) compact()
+      lo(n) = a; hi(n) = b; n += 1
+    }
+
+    def merge(o: KeyRanges): KeyRanges = {
+      hasNull ||= o.hasNull
+      var i = 0
+      while (i < o.n) { append(o.lo(i), o.hi(i)); i += 1 }
+      this
+    }
+
+    /** The compacted ranges, ascending. */
+    def ranges: Seq[(Long, Long)] = { compact(); (0 until n).map(i => (lo(i), hi(i))) }
+
+    private def compact(): Unit = {
+      // Union by a sweep over the separately sorted starts and ends: the
+      // open count is starts taken minus ends taken, and a start at or
+      // before the next end + 1 joins the open range.
+      java.util.Arrays.sort(lo, 0, n)
+      java.util.Arrays.sort(hi, 0, n)
+      var i = 0
+      var j = 0
+      var m = 0
+      var open = 0L
+      while (j < n) {
+        if (i < n && (i == j || lo(i) <= hi(j) || lo(i) - 1 == hi(j))) {
+          if (i == j) open = lo(i)
+          i += 1
+        } else {
+          j += 1
+          if (i == j) { lo(m) = open; hi(m) = hi(j - 1); m += 1 }
+        }
+      }
+      n = m
+      if (n > cap) {
+        // keep the cap-1 widest gaps (the first of equal ones), close the rest
+        val gaps = Array.tabulate(n - 1)(g => gapOf(g))
+        val sorted = gaps.clone(); java.util.Arrays.sort(sorted)
+        val cut = sorted(sorted.length - (cap - 1))
+        var equalLeft = (cap - 1) - gaps.count(_ > cut)
+        m = 1
+        var g = 0
+        while (g < n - 1) {
+          val keep = gaps(g) > cut || (gaps(g) == cut && equalLeft > 0)
+          if (gaps(g) == cut && keep) equalLeft -= 1
+          if (keep) { lo(m) = lo(g + 1); hi(m) = hi(g + 1); m += 1 }
+          else hi(m - 1) = hi(g + 1)
+          g += 1
+        }
+        n = m
+      }
+    }
+
+    /** Width of the gap after range `g`, saturating past the Long range. */
+    private def gapOf(g: Int): Long =
+      try Math.subtractExact(lo(g + 1), hi(g)) catch { case _: ArithmeticException => Long.MaxValue }
+  }
 
   /** J2 for changes-mode SCD merges (round 12): in changes mode a target
     * row whose key matches no source row is left untouched (op N/NS), so
@@ -647,62 +731,50 @@ object Merge {
     * its footer stats prove no source key can be inside).
     *
     * Key-set shape: a single integral key column compacts into at most
-    * [[MaxPruneRanges]] contiguous ranges via a DISTRIBUTED bucket
-    * aggregation ([[PruneBuckets]] cells over [min, max]; runs of
-    * adjacent non-empty buckets merge, the largest inter-run gaps
-    * split) — O(ranges) stats work per file at ANY key count, exactly
+    * [[MaxPruneRanges]] contiguous ranges in ONE Spark job over the
+    * pinned source: every partition folds its keys into a bounded
+    * [[KeyRanges]] summary, and the driver merges the summaries as the
+    * tasks finish. The driver then absorbs gaps narrower than
+    * span/[[PruneResolution]] and keeps the [[MaxPruneRanges]]-1 widest
+    * gaps — O(ranges) stats work per file at ANY key count, exactly
     * right for the common "update a clustered window + append new keys"
-    * batch. Other key shapes fall back to per-column In-lists capped at
-    * [[MaxPruneKeys]] tuples; beyond their cap, full scan. */
+    * batch. Every step only widens ranges, so the result covers every
+    * source key. Other key shapes fall back to per-column In-lists capped
+    * at [[MaxPruneKeys]] tuples; beyond their cap, full scan. */
   private[commands] def scdKeyPrunePred(source: DataFrame, keyCols: Seq[String],
       schema: org.apache.spark.sql.types.StructType): Pred = {
     import org.apache.spark.sql.types._
     val integral: Set[DataType] = Set(ByteType, ShortType, IntegerType, LongType)
     if (keyCols.size == 1 && integral(schema(keyCols.head).dataType)) {
-      // Round 21 (diffProbe attack): the range compaction is now
-      // DISTRIBUTED — keys bucket into <= PruneBuckets cells over the
-      // observed [min, max] and only per-bucket (bucket, min, max) rows
-      // are collected, so the driver work is bounded at ANY key count.
-      // The previous shape collected up to 1M distinct keys (0.9 s at
-      // sf50) and silently fell to AlwaysTrue — a FULL-table diff scan —
-      // the moment the batch crossed the cap, which is exactly what the
-      // sf50 bench batch (1.31M keys) did. Runs of adjacent non-empty
-      // buckets merge into one range (per-bucket min/max keep the range
-      // ends exact); interior gaps smaller than a bucket are absorbed —
-      // a superset of the key set either way, so pruning stays sound.
+      // The summary is bounded at ANY key count: a capped distinct-key
+      // collect would fall to AlwaysTrue (a FULL-table diff scan) past its
+      // cap, which the sf50 bench batch (1.31M keys) crosses.
       val k = keyCols.head
-      val mm = source.agg(
-        min(col(k)).as("mn"), max(col(k)).as("mx"),
-        max(when(col(k).isNull, 1).otherwise(0)).as("hasNull")).head()
-      val hasNull = !mm.isNullAt(2) && mm.getInt(2) == 1
-      if (mm.isNullAt(0)) // empty source or all-null keys
-        return rangesPred(k, Seq.empty, hasNull)
-      val (mn, mx) = (longOf(mm.get(0)), longOf(mm.get(1)))
-      val span = try Math.subtractExact(mx, mn) catch {
+      val typed: Long => Any = schema(k).dataType match {
+        case ByteType => _.toByte
+        case ShortType => _.toShort
+        case IntegerType => _.toInt
+        case _ => identity
+      }
+      val summary = source.select(col(k).cast(LongType)).queryExecution.toRdd
+        .aggregate(new KeyRanges(PruneSummaryRanges))(
+          (s, r) => { if (r.isNullAt(0)) s.hasNull = true else s.add(r.getLong(0)); s },
+          _ merge _)
+      val rs = summary.ranges
+      if (rs.isEmpty) // empty source or all-null keys
+        return rangesPred(k, Seq.empty, summary.hasNull)
+      val span = try Math.subtractExact(rs.last._2, rs.head._1) catch {
         case _: ArithmeticException => return AlwaysTrue // > Long range: rare, keep full scan
       }
-      if (span <= 0) return rangesPred(k, Seq((mm.get(0), mm.get(0))), hasNull)
-      // bucket width: ceil(span+1 / PruneBuckets), >= 1
-      val width = math.max(span / PruneBuckets + 1L, 1L)
-      // floor of the double division is monotone in the key (double
-      // rounding preserves order), so bucket ranges never interleave
-      // even past 2^53 where the quotient loses precision
-      val buckets = source.filter(col(k).isNotNull)
-        .groupBy(floor((col(k) - lit(mn)).cast(LongType).cast(DoubleType) / lit(width.toDouble))
-          .cast(LongType).as("__b"))
-        .agg(min(col(k)).as("mn"), max(col(k)).as("mx"))
-        .collect()
-        .sortBy(_.getLong(0))
-      // merge runs of adjacent buckets, then keep only the
-      // MaxPruneRanges-1 largest inter-run gaps (merge the rest)
-      val runs = scala.collection.mutable.ArrayBuffer.empty[(Long, Any, Any)] // (lastBucket, mn, mx)
-      buckets.foreach { r =>
-        val (b, bmn, bmx) = (r.getLong(0), r.get(1), r.get(2))
-        if (runs.nonEmpty && runs.last._1 + 1 >= b)
-          runs(runs.length - 1) = (b, runs.last._2, bmx)
-        else runs += ((b, bmn, bmx))
+      // gaps up to span/PruneResolution close; no gap overflows once the span fits
+      val width = span / PruneResolution + 1L
+      val runs = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+      rs.foreach { case (a, b) =>
+        if (runs.nonEmpty && a - runs.last._2 <= width) runs(runs.length - 1) = (runs.last._1, b)
+        else runs += ((a, b))
       }
-      rangesPred(k, coarsen(runs.toSeq.map { case (_, a, b) => (a, b) }, MaxPruneRanges), hasNull)
+      rangesPred(k, coarsen(runs.toSeq.map { case (a, b) => (typed(a), typed(b)) }, MaxPruneRanges),
+        summary.hasNull)
     } else {
       val rows = source.select(keyCols.map(col): _*).distinct()
         .limit(MaxPruneKeys + 1).collect()
@@ -716,20 +788,23 @@ object Merge {
     }
   }
 
-  /** Fused commit probe — ONE job over the materialized diff answers
+  /** Fused commit probe — ONE query over the materialized diff answers
     * both questions the previous two-job flow asked separately: the J4
     * cardinality guard (reference dao/common.xml:21-30 — a target row
     * matched by more than one source row aborts) and the modified-file
     * set (the files containing actioned rows, i.e. the only files the
-    * CoW rewrite touches). The inner grouping on (_file, _pos) is the
-    * same shuffle the old cardinality check paid on its own; the outer
-    * per-file rollup replaces the old second job's distinct. The collect
-    * returns one row per candidate FILE — metadata-bounded, like every
-    * driver collect on this path. */
+    * CoW rewrite touches). The diff is hash-partitioned on the file
+    * column ONCE: that partitioning clusters every (_file, _pos) group
+    * too, so the cardinality grouping and the per-file rollup both run
+    * on it without a second exchange, and every row of a target row
+    * identity still meets in one group (J4 sees all its matches). The
+    * collect returns one row per candidate FILE — metadata-bounded, like
+    * every driver collect on this path. */
   private def probeCardinalityAndModified(diff: DataFrame, tPresent: Column,
       sPresent: Column, fileCol: String, posCol: String,
       modifiedCond: Column): ProbeResult = {
     val rows = diff.filter(tPresent)
+      .repartition(col(fileCol))
       .groupBy(col(fileCol), col(posCol))
       .agg(
         sum(when(sPresent, 1L).otherwise(0L)).as("__matches"),
@@ -762,10 +837,10 @@ object Merge {
 
   /** Rebuilt-bytes floor of the split rewrite. The split saves the
     * retained rows' cluster EXCHANGE + sort at the price of a second
-    * write job and a forked scan session — fixed costs that dominate
-    * when the rebuilt volume is tiny (measured at sf0.1: scd walls +60%
-    * with the split always-on, -19% at sf10). Lowered only by specs that
-    * pin the split's file layout on test-sized tables. */
+    * write job — a fixed cost that dominates when the rebuilt volume is
+    * tiny (measured at sf0.1: scd walls +60% with the split always-on,
+    * -19% at sf10). Lowered only by specs that pin the split's file
+    * layout on test-sized tables. */
   @volatile private[commands] var splitRewriteMinBytes: Long = 64L << 20
 
   /** Writes the rewrite of `entries` — `rebuild` over their full scan

@@ -128,16 +128,29 @@ object Dedup {
       size(array_intersect(a, b)).cast(DoubleType) / size(array_union(a, b)))
       .otherwise(lit(0.0))
 
+  /** All (i < j) pairs within a sorted member array. */
+  private def comboPairs(ids: Column): Column =
+    flatten(transform(ids, (x, i) =>
+      transform(slice(ids, i + lit(2), size(ids)),
+        y => struct(x.as("a"), y.as("b")))))
+
   /** MinHash-LSH near-dup pairs: shingle -> minhash -> band -> bucket
     * grouping -> exact Jaccard verification. Returns (id_a, id_b,
     * jaccard) with id_a < id_b and jaccard >= threshold.
     *
-    * Candidate generation groups bucket members with collect_list and
-    * emits in-bucket pairs directly — one shuffle on (band, bh) —
-    * instead of self-joining the bucket table (two shuffles + a
-    * distinct). Shingles and signature come from one fused byte-scan,
-    * lazily checkpointed so the bucket pipeline and both verification
-    * joins share a single computation inside the consuming job.
+    * Identical texts collapse first: one representative (the min id) per
+    * distinct text runs through LSH, and its signature row carries the
+    * sorted member list of its text group. Candidate generation groups
+    * bucket members and emits in-bucket pairs directly — one shuffle on
+    * (band, bh) — instead of self-joining the bucket table (two shuffles
+    * + a distinct). The verify joins attach both representatives'
+    * shingle hashes AND member lists, so a verified representative pair
+    * expands by exploding the two lists (every member of group a with
+    * every member of group b, at the representatives' Jaccard), and the
+    * in-group pairs (Jaccard 1.0) come from the same signature rows: no
+    * membership join. The signature rows are lazily checkpointed, so the
+    * bucket pipeline, both verification joins and the in-group pairs
+    * share one computation inside the consuming job.
     *
     * `maxBucketSize` bounds the quadratic blow-up of a degenerate bucket
     * (m members -> m^2/2 pairs AND an m-element collected list): over-cap
@@ -147,13 +160,8 @@ object Dedup {
     * pair collides in many bands, so a capped bucket's pairs almost
     * surely re-surface in a less-loaded band; the cap trades a sliver of
     * recall for a hard bound on worst-case memory — the standard LSH
-    * skew guard at corpus scale. */
-  /** All (i < j) pairs within a sorted member array. */
-  private def comboPairs(ids: Column): Column =
-    flatten(transform(ids, (x, i) =>
-      transform(slice(ids, i + lit(2), size(ids)),
-        y => struct(x.as("a"), y.as("b")))))
-
+    * skew guard at corpus scale. A member list is bounded by the same
+    * cap. */
   def minhashPairs(
       df: DataFrame, idCol: String, textCol: String,
       shingleSize: Int = 3, numHashes: Int = 64, bands: Int = 16,
@@ -170,12 +178,11 @@ object Dedup {
     // texts, groups of 120-240 copies) that waste was 87% of the whole
     // bench's wall. So: group by md5(text) in ONE bounded aggregation
     // (exact count + capped sorted member list, the [[cappedBuckets]]
-    // buffer bound), run the LSH pipeline on one representative per
-    // distinct text, emit in-group pairs directly at jaccard 1.0, and
-    // expand cross-group rep pairs through the membership lists. Groups
-    // past `maxBucketSize` are dropped whole — the same observable rule
-    // as a capped bucket (today such a group saturates every bucket it
-    // touches), recorded through the same monitor.
+    // buffer bound) and run the LSH pipeline on one representative per
+    // distinct text. Groups past `maxBucketSize` are dropped whole — the
+    // same observable rule as a capped bucket (today such a group
+    // saturates every bucket it touches), recorded through the same
+    // monitor.
     graft.functions.GraftFunctions.register(spark)
     val keyed = df.filter(col(idCol).isNotNull)
       .select(col(idCol).as("id"), col(textCol).as("text"), md5(col(textCol)).as("tkey"))
@@ -188,13 +195,15 @@ object Dedup {
     }).asNondeterministic()
     // one shuffle over (unique-per-partition) texts: map-side partials
     // already collapse same-partition copies, so the exchange carries
-    // roughly the distinct corpus, not the raw one
-    val kept = keyed.groupBy("tkey")
+    // roughly the distinct corpus, not the raw one. `members` is the
+    // group's sorted id list (a singleton group is just its rep).
+    val groups = keyed.groupBy("tkey")
       .agg(min(col("id")).as("rep_id"), first(col("text")).as("text"),
         call_function("graft_bounded_sorted_set", col("id"), lit(maxBucketSize)).as("bs"))
       .filter(record(col("bs.n")))
       .where(col("bs.n") <= maxBucketSize)
-      .localCheckpoint(eager = false) // feeds reps, membership, in-group pairs
+      .select(col("rep_id").as("id"), col("text"),
+        coalesce(col("bs.ids"), array(col("rep_id"))).as("members"))
     // -------- LSH on representatives only --------
     // shingle HASHES, not strings ([[signatureIndex]] is the shared
     // derivation): the verify join compares sorted distinct longs with
@@ -204,12 +213,13 @@ object Dedup {
     // verify was ~90% of the whole pipeline's work.
     //
     // One fused byte-scan produces shingles AND signature; the result
-    // feeds the bucket pipeline and both verification joins, so pin it
-    // behind a (lazy) checkpoint — branches would otherwise re-derive
-    // the whole hash tree. eager=false keeps the materialization inside
-    // the first consuming job instead of a separate build-time barrier.
-    val base = signatureIndex(kept.select(col("rep_id").as("id"), col("text")),
-        "id", "text", shingleSize, numHashes, bands)
+    // feeds the bucket pipeline, both verification joins and the
+    // in-group pairs, so pin it behind a (lazy) checkpoint — branches
+    // would otherwise re-derive the whole hash tree. eager=false keeps
+    // the materialization inside the first consuming job instead of a
+    // separate build-time barrier.
+    val base = signatureRows(groups, "id", "text", Seq("members"),
+        shingleSize, numHashes, bands)
       .localCheckpoint(eager = false)
     val buckets = base
       .select(col("id"), posexplode(col("bands")).as(Seq("band", "bh")))
@@ -218,35 +228,31 @@ object Dedup {
       col("id"), maxBucketSize,
       "graft.dedup.skew.minhash", monitor)
       .withColumnRenamed("ms", "ids")
-    // all (i < j) pairs within a bucket, then global pair-dedup
+    // all (i < j) pairs within a bucket, then global pair-dedup. The
+    // dedup shuffles on id_a alone: that partitioning also serves the
+    // verify's id_a join, so the pair list crosses ONE exchange. (A
+    // map-side partial dedup would save little: a pair's copies come
+    // from different band buckets, hence mostly different partitions.)
     val cand = grouped.select(explode(comboPairs(col("ids"))).as("p"))
       .select(col("p.a").as("id_a"), col("p.b").as("id_b"))
+      .repartition(col("id_a"))
       .distinct()
-    val repPairs = verifyJaccard(cand, base.select(col("id"), col("shh")), threshold,
-      broadcastPairs = false)
+    val repPairs = verifyJaccard(cand, base.select(col("id"), col("shh"), col("members")),
+      threshold, broadcastPairs = false)
     // -------- expand back to document ids --------
-    // membership (rep_id, m): singleton groups are just their rep; the
-    // member list came back in the SAME grouped row, so no corpus-wide
-    // join is needed to recover it
-    val mem = kept.select(col("rep_id"),
-      explode(coalesce(col("bs.ids"), array(col("rep_id")))).as("m"))
     // cross-group pairs: every member of group a pairs with every member
-    // of group b at the REPS' jaccard (identical texts per group). The
-    // pair side is narrow and small relative to the corpus — build it
-    // shuffled-hash, nothing sorts.
-    val expanded = repPairs.hint("shuffle_hash")
-      .join(mem.select(col("rep_id").as("id_a"), col("m").as("m_a")), "id_a")
-      .hint("shuffle_hash")
-      .join(mem.select(col("rep_id").as("id_b"), col("m").as("m_b")), "id_b")
+    // of group b at the REPS' jaccard (identical texts per group); the
+    // groups are disjoint, so no pair repeats
+    val expanded = repPairs
+      .select(explode(col("members_a")).as("m_a"), col("members_b"), col("jaccard"))
+      .select(col("m_a"), explode(col("members_b")).as("m_b"), col("jaccard"))
       .select(least(col("m_a"), col("m_b")).as("id_a"),
         greatest(col("m_a"), col("m_b")).as("id_b"), col("jaccard"))
     // in-group pairs: jaccard exactly 1.0, no verify. Groups whose text
-    // yields an EMPTY shingle set never pair (matching signatureIndex's
-    // exclusion and the exact-Jaccard oracle's 0/0 -> no-pair), hence
-    // the semi-join against the surviving representatives.
-    val internal = kept.where(col("bs.ids").isNotNull)
-      .join(base.select(col("id").as("rep_id")), Seq("rep_id"), "left_semi")
-      .select(explode(comboPairs(col("bs.ids"))).as("p"))
+    // yields an EMPTY shingle set never pair (matching the exact-Jaccard
+    // oracle's 0/0 -> no-pair): signatureRows already dropped their rows.
+    val internal = base.where(size(col("members")) > 1)
+      .select(explode(comboPairs(col("members"))).as("p"))
       .select(col("p.a").as("id_a"), col("p.b").as("id_b"),
         lit(1.0).as("jaccard"))
       .where(lit(1.0) >= lit(threshold))
@@ -254,7 +260,9 @@ object Dedup {
   }
 
   /** Shared exact-Jaccard verification of a candidate pair list against
-    * an (id, shh) table. `broadcastPairs = false` (full dedup): the
+    * an (id, shh, ...) table; every further column of `shh` is attached
+    * to both sides too and returned suffixed `_a` / `_b`.
+    * `broadcastPairs = false` (full dedup): the
     * BARE pair list (16 bytes/row) joins shuffle-hash as build side for
     * the first array attach — a bounded hash table at any corpus size —
     * and the second attach is a SORT-MERGE join: after the first join
@@ -271,6 +279,9 @@ object Dedup {
   private def verifyJaccard(
       cand: DataFrame, shh: DataFrame, threshold: Double,
       broadcastPairs: Boolean): DataFrame = {
+    val attached = shh.columns.filterNot(_ == "id").toSeq
+    def side(s: String): DataFrame =
+      shh.select(col("id").as(s"id_$s") +: attached.map(c => col(c).as(s"${c}_$s")): _*)
     val withSh = if (broadcastPairs) {
       // Broadcast ONLY the bare (id_a, id_b) list — never a join result
       // carrying shingle arrays (pairs x multi-KB arrays would blow the
@@ -280,19 +291,16 @@ object Dedup {
       // the two batch-proportional halves with a batch-proportional
       // shuffle — nothing corpus-sized ever shuffles or broadcasts.
       val bare = broadcast(cand)
-      val ja = shh.select(col("id").as("id_a"), col("shh").as("shh_a"))
-        .join(bare, "id_a")
-      val jb = shh.select(col("id").as("id_b"), col("shh").as("shh_b"))
-        .join(bare, "id_b")
+      val ja = side("a").join(bare, "id_a")
+      val jb = side("b").join(bare, "id_b")
       ja.hint("merge").join(jb, Seq("id_a", "id_b"))
     } else {
-      cand.hint("shuffle_hash")
-        .join(shh.select(col("id").as("id_a"), col("shh").as("shh_a")), "id_a")
-        .hint("merge")
-        .join(shh.select(col("id").as("id_b"), col("shh").as("shh_b")), "id_b")
+      cand.hint("shuffle_hash").join(side("a"), "id_a")
+        .hint("merge").join(side("b"), "id_b")
     }
-    withSh.select(col("id_a"), col("id_b"),
-        TextAnalysis.jaccardHashes(col("shh_a"), col("shh_b")).as("jaccard"))
+    val carried = attached.filterNot(_ == "shh").flatMap(c => Seq(col(s"${c}_a"), col(s"${c}_b")))
+    withSh.select(Seq(col("id_a"), col("id_b"),
+        TextAnalysis.jaccardHashes(col("shh_a"), col("shh_b")).as("jaccard")) ++ carried: _*)
       .filter(col("jaccard") >= threshold)
   }
 
@@ -309,12 +317,20 @@ object Dedup {
     * excluded (they can never pair). */
   def signatureIndex(
       df: DataFrame, idCol: String, textCol: String,
-      shingleSize: Int = 3, numHashes: Int = 64, bands: Int = 16): DataFrame = {
+      shingleSize: Int = 3, numHashes: Int = 64, bands: Int = 16): DataFrame =
+    signatureRows(df, idCol, textCol, Seq.empty, shingleSize, numHashes, bands)
+
+  /** [[signatureIndex]] rows that also carry the `carry` columns of `df`
+    * (after `shh`, before `bands`). */
+  private def signatureRows(
+      df: DataFrame, idCol: String, textCol: String, carry: Seq[String],
+      shingleSize: Int, numHashes: Int, bands: Int): DataFrame = {
     val rows = numHashes / bands
-    df.select(
-        col(idCol).as("id"),
-        TextAnalysis.shinglesWithMinhashHashed(col(textCol), shingleSize, numHashes).as("smh"))
-      .select(col("id"), col("smh.shh").as("shh"), col("smh.sig").as("sig"))
+    df.select(Seq(col(idCol).as("id"),
+        TextAnalysis.shinglesWithMinhashHashed(col(textCol), shingleSize, numHashes).as("smh")) ++
+        carry.map(col): _*)
+      .select(Seq(col("id"), col("smh.shh").as("shh"), col("smh.sig").as("sig")) ++
+        carry.map(col): _*)
       .filter(size(col("shh")) > 0 && col("id").isNotNull)
       .withColumn("bands", TextAnalysis.bandHashes(col("sig"), bands, rows))
       .withColumn("sig_params", lit(s"$shingleSize:$numHashes:$bands"))

@@ -90,6 +90,31 @@ class ScdPruneSpec extends SparkSpec {
     assert(rs.contains((100000000L, 100000000L + 599999 * 2)))
   }
 
+  test("key summary: shuffled keys in merged partitions stay covered within the cap") {
+    // a small cap forces many compactions; keys arrive in random order,
+    // split across partitions whose summaries merge like the driver's
+    val rnd = new scala.util.Random(17)
+    val keys = (Seq.fill(5000)(rnd.nextLong()) ++ (0L until 3000L) ++
+      Seq(Long.MinValue, Long.MinValue + 1, Long.MaxValue - 1, Long.MaxValue, -1L)).distinct
+    val parts = rnd.shuffle(keys).grouped(700).map { ks =>
+      val s = new Merge.KeyRanges(8)
+      ks.foreach(s.add)
+      s
+    }.toSeq
+    val merged = parts.reduce(_ merge _)
+    val rs = merged.ranges
+    assert(rs.nonEmpty && rs.length <= 8, rs)
+    assert(rs.zip(rs.tail).forall { case ((_, b), (c, _)) => b < c && c - 1 != b }, s"not disjoint: $rs")
+    assert(rs.forall { case (a, b) => a <= b })
+    keys.foreach(k => assert(rs.exists { case (a, b) => k >= a && k <= b }, s"key $k not covered"))
+    assert(rs.head._1 == Long.MinValue && rs.last._2 == Long.MaxValue)
+    assert(!merged.hasNull)
+    // contiguous ascending keys extend one range and never compact
+    val run = new Merge.KeyRanges(2)
+    (100L until 100000L).foreach(run.add)
+    assert(run.ranges == Seq((100L, 99999L)))
+  }
+
   test("residualOf caps the per-row range count, coverage only widens (round 21)") {
     // 100 single-key ranges with uniform gaps: residualOf must merge
     // down to <= 4 ranges whose union still covers every key
